@@ -496,8 +496,8 @@ def _sweep(spark, sf_dir, runs, only, probe, stream_blob) -> None:
         # "real": repeatable regression — inspect the plan), plus the
         # median and p90 of the per-query second-best/best spread.
         "drift": drift_counts,
-        # per-query drift verdicts are added AFTER the query list under
-        # the byte budget (below); full maps in BENCH_FULL.json
+        # per-query drift verdicts fill their own sub-budget of the
+        # line (_tail_line); full maps in BENCH_FULL.json
         "tail_drift": {},
         # r7's two real-adjudicated drifts on untouched code were
         # plan-diffed against the r6 checkout: plans IDENTICAL (env
@@ -510,38 +510,62 @@ def _sweep(spark, sf_dir, runs, only, probe, stream_blob) -> None:
             noise_vals[int(len(noise_vals) * 0.9)] if noise_vals else None
         ),
     }
-    budget = 1600  # hard cap well under the 2000-char tail buffer
-    # r12 measurement fix: the QUERY LIST owns the budget first. A
-    # degraded session can adjudicate dozens of drifts; building
-    # tail_drift into the base before picking queries (the pre-r12
-    # order) squeezed the query map to EMPTY — the one field the
-    # round-over-round comparison cannot live without. Queries are
-    # picked first (headline, then slowest); drift verdicts fill the
-    # remaining bytes, "real" first ("noise"/"session-noise" entries
-    # are self-explaining from the counts in `drift`); anything cut is
-    # counted in tail_drift_omitted and fully recorded in
-    # BENCH_FULL.json.
+    print(_tail_line(base, order, timings, drift))
+
+
+#: drift verdicts, "real" first ("noise"/"session-noise" entries are
+#: self-explaining from the counts in ``drift``)
+_DRIFT_SEVERITY = {"real": 0, "noisy-query": 1, "session-noise": 2, "noise": 3}
+
+#: the tail line's byte cap, well under the 2000-char tail buffer
+_TAIL_BUDGET = 1600
+
+#: bytes of the line reserved for per-query drift verdicts. A verdict
+#: entry averages ~30 bytes in the recorded rounds (BENCH_r08-r11),
+#: so 300 bytes hold ~8 of them next to the omitted count: every
+#: "real" verdict of rounds r07-r11 (at most 5, <=126 bytes) plus some
+#: noise ones. A degraded session (r12: 30 "real") cannot fit its
+#: verdicts into any share that leaves the query map room; those are
+#: counted in ``tail_drift_omitted`` and kept in BENCH_FULL.json.
+_DRIFT_BUDGET = 300
+
+
+def _tail_line(
+    base: dict,
+    order: list[str],
+    timings: dict[str, float],
+    drift: dict[str, dict],
+) -> str:
+    """The final JSON line, at most ``_TAIL_BUDGET`` bytes. Per-query
+    drift verdicts get the reserved ``_DRIFT_BUDGET`` share, "real"
+    first, with ``tail_drift_omitted`` counting what was cut; the query
+    list (headline, then slowest) fills the rest. Queries filling the
+    whole line left no room for any verdict; drifts filling it squeezed
+    the query map — the one field the round-over-round comparison
+    cannot live without — to empty. Everything cut is recorded in
+    BENCH_FULL.json."""
+    base = dict(base)
+    td: dict[str, str] = {}
+    for n, d in sorted(
+        drift.items(),
+        key=lambda kv: (_DRIFT_SEVERITY.get(kv[1]["verdict"], 9), kv[0]),
+    ):
+        trial = {**td, n: d["verdict"]}
+        part = {"tail_drift": trial, "tail_drift_omitted": len(drift) - len(trial)}
+        if len(json.dumps(part, separators=(",", ":"))) > _DRIFT_BUDGET:
+            break
+        td = trial
+    base["tail_drift"] = td
+    if len(td) < len(drift):
+        base["tail_drift_omitted"] = len(drift) - len(td)
     picked: dict[str, float] = {}
     for q in order:
-        trial = dict(base)
-        trial["queries"] = {**picked, q: round(timings[q], 2)}
-        if len(json.dumps(trial, separators=(",", ":"))) > budget:
+        trial = {**base, "queries": {**picked, q: round(timings[q], 2)}}
+        if len(json.dumps(trial, separators=(",", ":"))) > _TAIL_BUDGET:
             break
         picked[q] = round(timings[q], 2)
     base["queries"] = picked
-    sev = {"real": 0, "noisy-query": 1, "session-noise": 2, "noise": 3}
-    td: dict[str, str] = {}
-    for n, d in sorted(
-        drift.items(), key=lambda kv: (sev.get(kv[1]["verdict"], 9), kv[0])
-    ):
-        trial = dict(base)
-        trial["tail_drift"] = {**td, n: d["verdict"]}
-        if len(json.dumps(trial, separators=(",", ":"))) > budget:
-            base["tail_drift_omitted"] = len(drift) - len(td)
-            break
-        td[n] = d["verdict"]
-    base["tail_drift"] = td
-    print(json.dumps(base, separators=(",", ":")))
+    return json.dumps(base, separators=(",", ":"))
 
 
 if __name__ == "__main__":

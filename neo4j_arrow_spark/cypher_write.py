@@ -87,6 +87,112 @@ def _render_literal(v) -> str:
     )
 
 
+#: a string literal's UNION ALL promotion next to literals of other
+#: kinds, which an inline table refuses. These are ANSI
+#: ``stringPromotion`` rules (Spark 4's default); with ANSI off, UNION
+#: ALL promoted such a mix to STRING and the CAST would turn a
+#: non-numeric string into NULL, so :func:`_values_frame` refuses it.
+_STR_PROMOTION = {
+    frozenset({"int"}): "BIGINT",
+    frozenset({"num"}): "DOUBLE",
+    frozenset({"int", "num"}): "DOUBLE",
+    frozenset({"bool"}): "BOOLEAN",
+}
+_LITERAL_KINDS = [
+    ("null", r"NULL"),
+    ("bool", r"TRUE|FALSE"),
+    ("int", r"-?\d+"),
+    ("num", r"-?(\d+\.?\d*|\.\d+)([eE][+-]?\d+)?"),
+    ("str", r"'(?:[^'\\]|\\.|'')*'"),
+]
+_NONDET = re.compile(r"\brand\s*\(", re.IGNORECASE)
+
+
+def _literal_kind(sql: str) -> str:
+    """The literal class of one SQL cell text, "expr" if none."""
+    return next(
+        (k for k, rx in _LITERAL_KINDS if re.fullmatch(rx, sql.strip(), re.I)),
+        "expr",
+    )
+
+
+def _values_frame(spark, names: list[str], rows: list[list[str]]) -> DataFrame:
+    """A literal frame as ONE inline table, ``SELECT … FROM VALUES
+    (…), (…) AS __b(…)`` over per-row SQL cell texts. Spark resolves
+    it to a single LocalRelation, so analysis cost stays flat in the
+    row count and there is no parse limit on batch size (a per-row
+    SELECT UNION ALL gives Catalyst one Union child per row and stops
+    parsing near 1,000 rows). Two cell kinds keep the typing that
+    UNION ALL gives them: a string literal among number/boolean
+    literals is CAST to the type UNION ALL promotes it to (an inline
+    table refuses the mix; refused here when ANSI mode is off, see
+    ``_STR_PROMOTION``), and a nondeterministic cell (``rand()``,
+    which an inline table cannot evaluate) is projected per row over
+    the table."""
+    ansi = spark.conf.get("spark.sql.ansi.enabled", "true").lower() == "true"
+    rows = [list(r) for r in rows]
+    sel = list(names)
+    for j, name in enumerate(names):
+        kinds = [_literal_kind(r[j]) for r in rows]
+        promo = _STR_PROMOTION.get(frozenset(kinds) - {"null", "str"})
+        if promo and "str" in kinds and not ansi:
+            raise CypherUnsupported(
+                f"write values for '{name.removeprefix('__b_')}' mix "
+                "strings with numbers or booleans, which needs "
+                "spark.sql.ansi.enabled=true"
+            )
+        nondet: dict[str, list[str]] = {}
+        for i, (r, kind) in enumerate(zip(rows, kinds)):
+            if promo and kind == "str":
+                r[j] = f"CAST({r[j]} AS {promo})"
+            elif kind == "expr" and _search_outside_strings(_NONDET, r[j]):
+                nondet.setdefault(r[j], []).append(str(i))
+                r[j] = "NULL"
+        if nondet:
+            sel[j] = "CASE " + " ".join(
+                f"WHEN __vrow IN ({', '.join(ix)}) THEN {e}"
+                for e, ix in nondet.items()
+            ) + f" ELSE {name} END AS {name}"
+    if sel != names:
+        names = [*names, "__vrow"]
+        rows = [[*r, str(i)] for i, r in enumerate(rows)]
+    return spark.sql(
+        f"SELECT {', '.join(sel)} FROM VALUES\n"
+        + ",\n".join("(" + ", ".join(r) + ")" for r in rows)
+        + f"\nAS __b({', '.join(names)})"
+    )
+
+
+def _batch_rows(batch, keys_used, what: str):
+    """The UNWIND batch as inline-table ``(names, rows)``: ``__ix``
+    (the element's position) plus a ``__b_<key>`` column per
+    referenced key (a missing key is NULL)."""
+    for i, elem in enumerate(batch):
+        if not isinstance(elem, dict):
+            raise CypherUnsupported(f"{what} element {i} is not a map")
+    keys = sorted(keys_used)
+    return (
+        ["__ix", *(f"__b_{k}" for k in keys)],
+        [
+            [f"{i}L", *(_render_literal(e.get(k)) for k in keys)]
+            for i, e in enumerate(batch)
+        ],
+    )
+
+
+def _batch_param(params, pname: str, alias: str) -> list:
+    """The bound UNWIND batch list, or a targeted refusal."""
+    if params is None or pname not in params:
+        raise CypherUnsupported(
+            f"UNWIND batch write references unbound parameter '${pname}'"
+        )
+    if not isinstance(params[pname], (list, tuple)):
+        raise CypherUnsupported(
+            f"UNWIND ${pname} AS {alias}: the parameter must be a list"
+        )
+    return params[pname]
+
+
 def _sub_outside_strings(pattern: str, repl, text: str) -> str:
     """``re.sub`` that leaves single-quoted string literals untouched:
     the text splits on the tokenizer's string-literal regex and only
@@ -213,6 +319,54 @@ def _render_tokens(toks) -> str:
     return " ".join(t[2] if len(t) > 2 else t[1] for t in toks)
 
 
+class _TokCursor:
+    """Token cursor of the pipeline and UNWIND-batch write parsers;
+    ``what`` names the statement form in their syntax errors."""
+
+    def __init__(self, toks: list, what: str, pos: int = 0):
+        self.toks, self.what, self.pos = toks, what, pos
+
+    def peek(self):
+        return self.toks[self.pos]
+
+    def nxt(self):
+        self.pos += 1
+        return self.toks[self.pos - 1]
+
+    def expect(self, text: str) -> None:
+        t = self.nxt()
+        if t[1] != text:
+            raise CypherSyntaxError(
+                f"{self.what}: expected {text!r}, got {t[1]!r}"
+            )
+
+    def expr_tokens(self, stop) -> list:
+        """Raw token run up to a depth-0 closer, a depth-0 token
+        ``stop(kind, text)`` accepts, or eof. A token directly after
+        '.' is a PROPERTY ACCESS (``row.on``), never a break — the
+        prev-token guard is_cypher_write uses."""
+        out, depth = [], 0
+        while True:
+            kind, text = self.toks[self.pos][0], self.toks[self.pos][1]
+            if kind == "eof":
+                break
+            if text in ("(", "[", "{"):
+                depth += 1
+            elif text in (")", "]", "}"):
+                if depth == 0:
+                    break
+                depth -= 1
+            elif depth == 0 and not (out and out[-1][1] == ".") and stop(
+                kind, text
+            ):
+                break
+            out.append(self.toks[self.pos])
+            self.pos += 1
+        if not out:
+            raise CypherSyntaxError(f"{self.what}: empty value expression")
+        return out
+
+
 def parse_pipeline_write(query: str):
     """``MATCH … WITH <pipeline> SET n.p = expr`` / ``… DELETE n`` /
     ``… CREATE (:L {p: expr})`` — a write clause driven by a READ
@@ -263,45 +417,11 @@ def parse_pipeline_write(query: str):
             "supported pipeline writes: SET, [DETACH] DELETE, CREATE"
         )
     prefix = _render_tokens(toks[:verb_at])
-    pos = verb_at
-
-    def peek():
-        return toks[pos]
-
-    def nxt():
-        nonlocal pos
-        t = toks[pos]
-        pos += 1
-        return t
-
-    def expect(text):
-        t = nxt()
-        if t[1] != text:
-            raise CypherSyntaxError(
-                f"pipeline write: expected {text!r}, got {t[1]!r}"
-            )
+    cur = _TokCursor(toks, "pipeline write", verb_at)
+    peek, nxt, expect = cur.peek, cur.nxt, cur.expect
 
     def expr_tokens() -> list:
-        nonlocal pos
-        out, d = [], 0
-        while True:
-            kind, text = toks[pos][0], toks[pos][1]
-            if kind == "eof":
-                break
-            prev_dot = bool(out) and out[-1][1] == "."
-            if text in ("(", "[", "{"):
-                d += 1
-            elif text in (")", "]", "}"):
-                if d == 0:
-                    break
-                d -= 1
-            elif d == 0 and not prev_dot and text == ",":
-                break
-            out.append(toks[pos])
-            pos += 1
-        if not out:
-            raise CypherSyntaxError("pipeline write: empty value")
-        return out
+        return cur.expr_tokens(lambda kind, text: text == ",")
 
     if verb == "SET":
         nxt()
@@ -632,8 +752,9 @@ def expand_unwind_batch(
     group is instantiated with ``row.key`` references replaced by the
     element's literal values and every pattern variable uniquified
     (``n`` → ``n_u3``), all groups comma-joined under a single CREATE.
-    Downstream this builds one literal-rows frame and one union — a
-    single write job regardless of batch size, not |batch| statements.
+    Downstream this builds one literal-rows frame (one inline table,
+    no parse limit on batch size) and one union — a single write job
+    regardless of batch size, not |batch| statements.
     (For genuinely large loads use the K3 bulk-import path; literal
     SQL text grows linearly with the batch.)
 
@@ -653,15 +774,7 @@ def expand_unwind_batch(
         return query, False
     pname, alias = m.group(1), m.group(2)
     rest = query[m.end():]
-    if params is None or pname not in params:
-        raise CypherUnsupported(
-            f"UNWIND batch write references unbound parameter '${pname}'"
-        )
-    batch = params[pname]
-    if not isinstance(batch, (list, tuple)):
-        raise CypherUnsupported(
-            f"UNWIND ${pname} AS {alias}: the parameter must be a list"
-        )
+    batch = _batch_param(params, pname, alias)
     # tokenize the remainder once, keeping offsets and raw spellings
     toks: list[tuple[str, str, int, int]] = []
     i = 0
@@ -896,7 +1009,10 @@ def parse_unwind_merge(query: str, params: dict | None):
     properties. Self-referential ON MATCH values (a per-key fold,
     e.g. ``n.hits = coalesce(n.hits, 0) + 1``) are refused with a
     targeted error. NULL merge-key values are refused (Neo4j parity:
-    'cannot merge using null property value')."""
+    'cannot merge using null property value').
+
+    The batch is ONE inline-table frame (:func:`_batch_rows`), so there
+    is no parse limit on batch size."""
     m = re.match(
         r"\s*UNWIND\s+\$([A-Za-z_]\w*)\s+AS\s+([A-Za-z_]\w*)\s+MERGE\b",
         query,
@@ -905,72 +1021,28 @@ def parse_unwind_merge(query: str, params: dict | None):
     if not m:
         return None
     pname, alias = m.group(1), m.group(2)
-    if params is None or pname not in params:
-        raise CypherUnsupported(
-            f"UNWIND batch write references unbound parameter '${pname}'"
-        )
-    batch = params[pname]
-    if not isinstance(batch, (list, tuple)):
-        raise CypherUnsupported(
-            f"UNWIND ${pname} AS {alias}: the parameter must be a list"
-        )
+    batch = _batch_param(params, pname, alias)
     toks = _tokenize(query[m.end():])
-    pos = 0
-
-    def peek():
-        return toks[pos]
-
-    def nxt():
-        nonlocal pos
-        t = toks[pos]
-        pos += 1
-        return t
-
-    def expect(text):
-        t = nxt()
-        if t[1] != text:
-            raise CypherSyntaxError(
-                f"batch MERGE: expected {text!r}, got {t[1]!r}"
-            )
+    cur = _TokCursor(toks, "batch MERGE")
+    peek, nxt, expect = cur.peek, cur.nxt, cur.expect
 
     def expr_tokens(stop_at_comma: bool) -> list:
         """Raw token run up to a depth-0 ',' (when asked), a depth-0
-        closer, an ON keyword, or eof. A clause keyword directly after
-        '.' is a PROPERTY ACCESS (``row.on``), never a clause break —
-        same prev-token guard is_cypher_write uses (r10 ADVICE)."""
-        nonlocal pos
-        out, depth = [], 0
-        while True:
-            kind, text = toks[pos][0], toks[pos][1]
-            if kind == "eof":
-                break
-            prev_dot = bool(out) and out[-1][1] == "."
-            if text in ("(", "[", "{"):
-                depth += 1
-            elif text in (")", "]", "}"):
-                if depth == 0:
-                    break
-                depth -= 1
-            elif depth == 0 and not prev_dot and (
-                (stop_at_comma and text == ",")
-                or (kind == "name" and text.upper() == "ON")
-                or (kind == "kw" and text == "RETURN")
-            ):
-                break
-            out.append(toks[pos])
-            pos += 1
-        if not out:
-            raise CypherSyntaxError("batch MERGE: empty value expression")
-        return out
+        closer, an ON keyword, or eof."""
+        return cur.expr_tokens(
+            lambda kind, text: (stop_at_comma and text == ",")
+            or (kind == "name" and text.upper() == "ON")
+            or (kind == "kw" and text == "RETURN")
+        )
 
     expect("(")
     var = None
-    if peek()[0] == "name" and toks[pos + 1][1] in (":", "{"):
+    if peek()[0] == "name" and toks[cur.pos + 1][1] in (":", "{"):
         var = nxt()[1]
     labels: list[str] = []
     while peek()[1] == ":":
         nxt()
-        k, t = nxt()[0], toks[pos - 1]
+        k, t = nxt()[0], toks[cur.pos - 1]
         if k not in ("name", "kw"):
             raise CypherSyntaxError("batch MERGE: expected label name")
         labels.append(t[2] if len(t) > 2 else t[1])
@@ -1120,27 +1192,13 @@ def parse_unwind_merge(query: str, params: dict | None):
     # (they define the merge identity — single-MERGE parity)
     oc_sqls = [(p, s) for p, s in oc_sqls if p not in key_names]
 
-    # literal batch frame: one SELECT per element over the referenced
-    # keys (missing key → NULL, same rule as the CREATE batch form)
-    for i, elem in enumerate(batch):
-        if not isinstance(elem, dict):
-            raise CypherUnsupported(
-                f"batch MERGE element {i} is not a map"
-            )
-    selects = []
-    for i, elem in enumerate(batch):
-        cols = [f"CAST({i} AS BIGINT) AS __ix"] + [
-            f"{_render_literal(elem.get(k))} AS __b_{k}"
-            for k in sorted(keys_used)
-        ]
-        selects.append("SELECT " + ", ".join(cols))
     return {
         "labels": labels,
         "var": var,
         "keys": key_sqls,
         "on_create": oc_sqls,
         "on_match": om_entries,
-        "b_sql": "\nUNION ALL\n".join(selects) if batch else None,
+        "b_rows": _batch_rows(batch, keys_used, "batch MERGE"),
         "n_rows": len(batch),
     }
 
@@ -1261,7 +1319,7 @@ def execute_unwind_merge(
     fields = {f.name: f.dataType.simpleString() for f in nodes.schema.fields}
     kprops = spec["keys"]
     kcols = [f"__k{i}" for i in range(len(kprops))]
-    B = spark.sql(spec["b_sql"])
+    B = _values_frame(spark, *spec["b_rows"])
     Bk = B.select(
         "__ix",
         *[
@@ -1505,7 +1563,8 @@ def parse_unwind_rel(query: str, params: dict | None):
     with the LAST batch row's property values winning per pair; MERGE
     additionally skips pairs whose (endpoints, type, pattern props)
     already exist. ON CREATE/ON MATCH SET and trailing RETURN are v1
-    refusals here."""
+    refusals here. The batch is ONE inline-table frame
+    (:func:`_batch_rows`), so there is no parse limit on batch size."""
     m = re.match(
         r"\s*UNWIND\s+\$([A-Za-z_]\w*)\s+AS\s+([A-Za-z_]\w*)\s+MATCH\b",
         query,
@@ -1539,55 +1598,12 @@ def parse_unwind_rel(query: str, params: dict | None):
         prev_tx = tx
     if not is_rel_shape:
         return None
-    if params is None or pname not in params:
-        raise CypherUnsupported(
-            f"UNWIND batch write references unbound parameter '${pname}'"
-        )
-    batch = params[pname]
-    if not isinstance(batch, (list, tuple)):
-        raise CypherUnsupported(
-            f"UNWIND ${pname} AS {alias}: the parameter must be a list"
-        )
-    pos = 0
-
-    def peek():
-        return toks[pos]
-
-    def nxt():
-        nonlocal pos
-        t = toks[pos]
-        pos += 1
-        return t
-
-    def expect(text):
-        t = nxt()
-        if t[1] != text:
-            raise CypherSyntaxError(
-                f"batch rel write: expected {text!r}, got {t[1]!r}"
-            )
+    batch = _batch_param(params, pname, alias)
+    cur = _TokCursor(toks, "batch rel write")
+    peek, nxt, expect = cur.peek, cur.nxt, cur.expect
 
     def expr_tokens() -> list:
-        nonlocal pos
-        out, depth = [], 0
-        while True:
-            kind, text = toks[pos][0], toks[pos][1]
-            if kind == "eof":
-                break
-            if text in ("(", "[", "{"):
-                depth += 1
-            elif text in (")", "]", "}"):
-                if depth == 0:
-                    break
-                depth -= 1
-            elif depth == 0 and text == ",":
-                break
-            out.append(toks[pos])
-            pos += 1
-        if not out:
-            raise CypherSyntaxError(
-                "batch rel write: empty value expression"
-            )
-        return out
+        return cur.expr_tokens(lambda kind, text: text == ",")
 
     def anchor():
         expect("(")
@@ -1681,7 +1697,7 @@ def parse_unwind_rel(query: str, params: dict | None):
         raise CypherSyntaxError("expected a relationship pattern")
     expect("[")
     rvar = None
-    if peek()[0] == "name" and toks[pos + 1][1] == ":":
+    if peek()[0] == "name" and toks[cur.pos + 1][1] == ":":
         rvar = nxt()[1]
     expect(":")
     tt = nxt()
@@ -1891,18 +1907,6 @@ def parse_unwind_rel(query: str, params: dict | None):
             extra_bound=frozenset(f"__w{s}_{p}" for s, p in wprops),
         )
         where_sql = wrewrite(wtrans, "batch rel WHERE")
-    for i, elem in enumerate(batch):
-        if not isinstance(elem, dict):
-            raise CypherUnsupported(
-                f"batch rel write element {i} is not a map"
-            )
-    selects = []
-    for i, elem in enumerate(batch):
-        cols = [f"CAST({i} AS BIGINT) AS __ix"] + [
-            f"{_render_literal(elem.get(k))} AS __b_{k}"
-            for k in sorted(keys_used)
-        ]
-        selects.append("SELECT " + ", ".join(cols))
     return {
         "op": "create_rel" if verb == "CREATE" else "merge_rel",
         "anchors": anchors,  # [src, dst] in edge direction
@@ -1913,7 +1917,7 @@ def parse_unwind_rel(query: str, params: dict | None):
         "on_match": rom_sqls,
         "where": where_sql,
         "wprops": wprops,  # [(side, prop)] the WHERE references
-        "b_sql": "\nUNION ALL\n".join(selects) if batch else None,
+        "b_rows": _batch_rows(batch, keys_used, "batch rel write"),
         "n_rows": len(batch),
     }
 
@@ -1931,7 +1935,8 @@ def parse_unwind_node_write(query: str, params: dict | None):
     MATCH semantics); for SET the LAST batch row's values win per key
     (sequential-equivalent for non-self-referential values —
     self-references refuse); DELETE removes every matched node, DETACH
-    dropping incident edges first."""
+    dropping incident edges first. The batch is ONE inline-table frame
+    (:func:`_batch_rows`), so there is no parse limit on batch size."""
     m = re.match(
         r"\s*UNWIND\s+\$([A-Za-z_]\w*)\s+AS\s+([A-Za-z_]\w*)\s+MATCH\b",
         query,
@@ -1966,58 +1971,15 @@ def parse_unwind_node_write(query: str, params: dict | None):
         prev_tx = tx
     if verb_at is None:
         return None
-    if params is None or pname not in params:
-        raise CypherUnsupported(
-            f"UNWIND batch write references unbound parameter '${pname}'"
-        )
-    batch = params[pname]
-    if not isinstance(batch, (list, tuple)):
-        raise CypherUnsupported(
-            f"UNWIND ${pname} AS {alias}: the parameter must be a list"
-        )
-    pos = 0
-
-    def peek():
-        return toks[pos]
-
-    def nxt():
-        nonlocal pos
-        t = toks[pos]
-        pos += 1
-        return t
-
-    def expect(text):
-        t = nxt()
-        if t[1] != text:
-            raise CypherSyntaxError(
-                f"batch node write: expected {text!r}, got {t[1]!r}"
-            )
+    batch = _batch_param(params, pname, alias)
+    cur = _TokCursor(toks, "batch node write")
+    peek, nxt, expect = cur.peek, cur.nxt, cur.expect
 
     def expr_tokens() -> list:
-        nonlocal pos
-        out, depth = [], 0
-        while True:
-            kind, text = toks[pos][0], toks[pos][1]
-            if kind == "eof":
-                break
-            prev_dot = bool(out) and out[-1][1] == "."
-            if text in ("(", "[", "{"):
-                depth += 1
-            elif text in (")", "]", "}"):
-                if depth == 0:
-                    break
-                depth -= 1
-            elif depth == 0 and not prev_dot and (
-                text == "," or (kind == "kw" and text == "RETURN")
-            ):
-                break
-            out.append(toks[pos])
-            pos += 1
-        if not out:
-            raise CypherSyntaxError(
-                "batch node write: empty value expression"
-            )
-        return out
+        return cur.expr_tokens(
+            lambda kind, text: text == ","
+            or (kind == "kw" and text == "RETURN")
+        )
 
     expect("(")
     vt = nxt()
@@ -2203,18 +2165,6 @@ def parse_unwind_node_write(query: str, params: dict | None):
             mode="expr",
         )
         where_sql = wrewrite(where_run, "batch WHERE")
-    for i, elem in enumerate(batch):
-        if not isinstance(elem, dict):
-            raise CypherUnsupported(
-                f"batch node write element {i} is not a map"
-            )
-    selects = []
-    for i, elem in enumerate(batch):
-        cols = [f"CAST({i} AS BIGINT) AS __ix"] + [
-            f"{_render_literal(elem.get(k))} AS __b_{k}"
-            for k in sorted(keys_used)
-        ]
-        selects.append("SELECT " + ", ".join(cols))
     return {
         "op": verb.lower(),
         "var": var,
@@ -2224,7 +2174,7 @@ def parse_unwind_node_write(query: str, params: dict | None):
         "where": where_sql,
         "detach": detach,
         "return_text": return_text,
-        "b_sql": "\nUNION ALL\n".join(selects) if batch else None,
+        "b_rows": _batch_rows(batch, keys_used, "batch node write"),
         "n_rows": len(batch),
     }
 
@@ -2261,7 +2211,7 @@ def execute_unwind_node_write(
     nfields = {f.name: f.dataType.simpleString() for f in nodes.schema.fields}
     kprops = spec["keys"]
     kcols = [f"__k{i}" for i in range(len(kprops))]
-    B = spark.sql(spec["b_sql"])
+    B = _values_frame(spark, *spec["b_rows"])
     Bk = B.select(
         "__ix",
         *[
@@ -2427,7 +2377,7 @@ def execute_unwind_rel(
             ret_out["rels"] = rels.limit(0)
         return rels, summary()
     nfields = {f.name: f.dataType.simpleString() for f in nodes.schema.fields}
-    B = spark.sql(spec["b_sql"])
+    B = _values_frame(spark, *spec["b_rows"])
     # per-anchor key columns, cast to the node column's type
     sides = []
     sel = ["__ix"] + [c for c in B.columns if c != "__ix"]
@@ -3532,11 +3482,12 @@ def _read_ast(nodes, rels, where, items, chains=None, rel_id=False) -> dict:
 def _literal_rows(
     spark: SparkSession, nodes: DataFrame, patterns
 ) -> DataFrame:
-    """One literal SELECT per created node, conformed to the node
-    frame's schema (missing properties NULL, values cast to the
-    column's type). Properties not yet in the schema WIDEN it (Neo4j
-    is schema-free — ``CREATE (n {newprop: 1})`` is bread-and-butter
-    Cypher): the created rows carry the new columns and the caller's
+    """The created nodes as one literal row each (one inline table,
+    :func:`_values_frame`), conformed to the node frame's schema
+    (missing properties NULL, values cast to the column's type).
+    Properties not yet in the schema WIDEN it (Neo4j is schema-free —
+    ``CREATE (n {newprop: 1})`` is bread-and-butter Cypher): the
+    created rows carry the new columns and the caller's
     ``unionByName(allowMissingColumns=True)`` backfills NULL onto
     every pre-existing node. Returns ``(rows_df, id_sqls)``: the
     per-pattern id expressions let a CREATE chain wire its
@@ -3561,7 +3512,7 @@ def _literal_rows(
             if lit is not None and lit.lstrip("-").isdigit():
                 base_id = max(base_id, int(lit))
         base_id += 1
-    selects = []
+    rows = []
     id_sqls: list[str] = []
     for p in patterns:
         props = dict(p.props)
@@ -3570,26 +3521,20 @@ def _literal_rows(
         else:
             id_sql = f"CAST({base_id} AS BIGINT)"
             base_id += 1
-        # (id_sqls collected below so a CREATE chain can wire its
-        # relationship endpoints to the assigned node ids)
         labels_sql = "array(" + ", ".join(
             "'" + lb.replace("'", "''") + "'" for lb in p.labels
         ) + ")"
-        cols = [f"{id_sql} AS {NodeField.ID}", f"{labels_sql} AS {NodeField.LABELS}"]
-        for c in prop_cols:
-            v = props.get(c, "NULL")
-            cols.append(f"CAST({v} AS {fields[c]}) AS {c}")
-        for c in new_props:
-            # untyped NULL for the patterns that don't set this new
-            # property — Spark's UNION ALL coercion resolves the
-            # column type from the setting pattern's literal
-            cols.append(f"{props.get(c, 'NULL')} AS {c}")
-        selects.append("SELECT " + ", ".join(cols))
+        rows.append(
+            [id_sql, labels_sql]
+            + [f"CAST({props.get(c, 'NULL')} AS {fields[c]})" for c in prop_cols]
+            # untyped NULL for the patterns that don't set a new
+            # property — the inline table's coercion resolves the
+            # column type from the setting patterns' literals
+            + [props.get(c, "NULL") for c in new_props]
+        )
         id_sqls.append(id_sql)
-    return (
-        _decimals_to_double(spark.sql("\nUNION ALL\n".join(selects))),
-        id_sqls,
-    )
+    names = [NodeField.ID, NodeField.LABELS, *prop_cols, *new_props]
+    return _decimals_to_double(_values_frame(spark, names, rows)), id_sqls
 
 
 _UNSET = object()
@@ -3851,11 +3796,10 @@ def _trailing_return_result(
                 s for v, s in var_ids.items() if pat.match(v)
             ]
         if batch_inst_sqls:
-            ids = spark.sql(
-                "\nUNION ALL\n".join(
-                    f"SELECT CAST(({s}) AS BIGINT) AS __rid"
-                    for s in batch_inst_sqls
-                )
+            ids = _values_frame(
+                spark,
+                ["__rid"],
+                [[f"CAST(({s}) AS BIGINT)"] for s in batch_inst_sqls],
             )
         elif (
             batch_var is None
@@ -4054,26 +3998,26 @@ def _execute_write(
             for f in rels.schema.fields
             if f.name not in RelField.RESERVED
         ]
-        rselects = []
         rnew_props = sorted(
             {k for _, _, r in chain for k in dict(r.props)} - set(rfields)
         )
+        rrows = []
         for si, ti, r in chain:
             props = dict(r.props)
             ty = r.rtypes[0].replace("'", "''")
-            cols = [
-                f"{id_sqls[si]} AS {RelField.START_ID}",
-                f"{id_sqls[ti]} AS {RelField.END_ID}",
-                f"'{ty}' AS {RelField.TYPE}",
-            ]
-            for c in rprop_cols:
-                v = props.get(c, "NULL")
-                cols.append(f"CAST({v} AS {rfields[c]}) AS {c}")
-            for c in rnew_props:
+            rrows.append(
+                [id_sqls[si], id_sqls[ti], f"'{ty}'"]
+                + [
+                    f"CAST({props.get(c, 'NULL')} AS {rfields[c]})"
+                    for c in rprop_cols
+                ]
                 # schema-widening rel property — see _literal_rows
-                cols.append(f"{props.get(c, 'NULL')} AS {c}")
-            rselects.append("SELECT " + ", ".join(cols))
-        rrows = _decimals_to_double(spark.sql("\nUNION ALL\n".join(rselects)))
+                + [props.get(c, "NULL") for c in rnew_props]
+            )
+        rnames = [RelField.START_ID, RelField.END_ID, RelField.TYPE]
+        rrows = _decimals_to_double(
+            _values_frame(spark, rnames + rprop_cols + rnew_props, rrows)
+        )
         n_map_props += sum(_map_props(r.props) for _, _, r in chain)
         return (
             new_nodes,

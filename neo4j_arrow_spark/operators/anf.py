@@ -54,6 +54,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from neo4j_arrow_spark.operators.dedup import _intermediates_of, _with_intermediates
+
 M = 32  # number of HLL registers (2^5); rel std error ~ 1.04/sqrt(32) ~ 18%
 BUCKET_BITS = 5
 RHO_CAP = 44  # cap on register rank used in the estimate (supports 2^44 nodes)
@@ -287,9 +289,7 @@ def anf_sketch_by_hop(
     # already materialized). The handle rides on every returned frame;
     # the public operators propagate it to their outputs so consumers
     # release it via dedup.unpersist_intermediates once done.
-    for f in per_hop:
-        f._persisted_intermediates = [und]  # type: ignore[attr-defined]
-    return per_hop
+    return [_with_intermediates(f, [und]) for f in per_hop]
 
 
 def harmonic_anf(edges: DataFrame, max_hops: int = 3, seed: int = 0) -> DataFrame:
@@ -324,8 +324,7 @@ def harmonic_anf(edges: DataFrame, max_hops: int = 3, seed: int = 0) -> DataFram
         F.expr(harmonic).cast("long").alias("harmonic_est_q"),
         F.expr(total).cast("long").alias("total_hops_est_q"),
     )
-    res._persisted_intermediates = per_hop[0]._persisted_intermediates  # type: ignore[attr-defined]
-    return res
+    return _with_intermediates(res, _intermediates_of(per_hop[0]))
 
 
 def anf_curve(edges: DataFrame, max_hops: int = 3, seed: int = 0) -> DataFrame:
@@ -343,8 +342,7 @@ def anf_curve(edges: DataFrame, max_hops: int = 3, seed: int = 0) -> DataFrame:
     out = curves[0]
     for c in curves[1:]:
         out = out.unionByName(c)
-    out._persisted_intermediates = per_hop[0]._persisted_intermediates  # type: ignore[attr-defined]
-    return out
+    return _with_intermediates(out, _intermediates_of(per_hop[0]))
 
 
 def effective_diameter_hops(
@@ -389,10 +387,7 @@ def effective_diameter_hops(
             F.col("nf_est_q").alias("nf_at_eff_q"),
         )
     )
-    out._persisted_intermediates = getattr(  # type: ignore[attr-defined]
-        curve, "_persisted_intermediates", []
-    )
-    return out
+    return _with_intermediates(out, _intermediates_of(curve))
 
 
 # --------------------------------------------------------------------------

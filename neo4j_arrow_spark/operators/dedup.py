@@ -35,6 +35,13 @@ def _with_intermediates(out: DataFrame, frames: list[DataFrame]) -> DataFrame:
     return out
 
 
+def _intermediates_of(df: DataFrame) -> list[DataFrame]:
+    """The persisted frames recorded on ``df`` (empty if none) — what a
+    projection of ``df`` hands to :func:`_with_intermediates` so the
+    release handle survives it."""
+    return list(getattr(df, "_persisted_intermediates", ()))
+
+
 def unpersist_intermediates(df: DataFrame, blocking: bool = False) -> None:
     """Release the cached partitions behind a result of
     ``minhash_lsh_pairs`` / ``simhash_pairs`` / ``ngram_jaccard_pairs``.
@@ -44,7 +51,7 @@ def unpersist_intermediates(df: DataFrame, blocking: bool = False) -> None:
     them after fully consuming (or writing out) the result — re-running
     the result's plan after release recomputes them silently. No-op for
     DataFrames without recorded intermediates."""
-    for frame in getattr(df, "_persisted_intermediates", ()):  # type: ignore[attr-defined]
+    for frame in _intermediates_of(df):
         frame.unpersist(blocking)
 
 
@@ -133,12 +140,24 @@ def minhash_signatures(
     exact verification (the LSH pair generators) pass its own persisted
     ``shingle_table`` output, so the tokenize + explode + n-gram window
     + dedup derivation runs once per query instead of once per
-    consumer (guide §1.2 — don't compute things twice).
+    consumer (guide §1.2 — don't compute things twice). When given, it
+    TAKES PRECEDENCE: ``df``, ``id_col``, ``text_col`` and
+    ``shingle_n`` are not read, so it must already be the
+    ``(doc, shingle)`` table of the intended source and n; a frame
+    without those columns raises ``ValueError``.
 
     Hash family: Kirsch-Mitzenmacher double hashing — h_i = h1 + i·h2
     from TWO 28-bit md5-derived bases (two md5 calls per shingle, not
     ``num_hashes``; 28-bit bases keep h1 + 15·h2 < 2³² so the oracle's
     BIGINT arithmetic can't overflow)."""
+    if shingles is not None:
+        missing = {"doc", "shingle"} - set(shingles.columns)
+        if missing:
+            raise ValueError(
+                "minhash_signatures(shingles=...) expects a shingle_table "
+                f"(doc, shingle) frame; missing column(s) {sorted(missing)} "
+                f"in {shingles.columns}"
+            )
     sh = (
         shingles
         if shingles is not None

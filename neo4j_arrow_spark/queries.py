@@ -5323,18 +5323,20 @@ def anf_effective_diameter(spark: SparkSession, sf_dir: str) -> DataFrame:
         anf_curve,
         effective_diameter_hops,
     )
+    from neo4j_arrow_spark.operators.dedup import (
+        _intermediates_of,
+        _with_intermediates,
+    )
 
     _, rels = _graph(spark, sf_dir)
     edges = rels.filter(F.col("TYPE") == "BUYS_FROM").select(
         F.col("START_ID").alias("u"), F.col("END_ID").alias("v")
     )
     out = effective_diameter_hops(anf_curve(edges, max_hops=3))
-    res = out.select("eff_hops", "plateau_nf_q")
     # propagate the persisted-undirected handle through the projection
-    res._persisted_intermediates = getattr(
-        out, "_persisted_intermediates", []
+    return _with_intermediates(
+        out.select("eff_hops", "plateau_nf_q"), _intermediates_of(out)
     )
-    return res
 
 
 @query(

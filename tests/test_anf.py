@@ -188,3 +188,23 @@ def test_effective_diameter_no_bigint_overflow(spark):
         [(0, need - 1), (1, need), (2, p2)], "hop int, nf_est_q long"
     )
     assert effective_diameter_hops(curve2, 90).collect()[0].eff_hops == 1
+
+
+def test_persisted_handle_propagates_and_releases(spark):
+    """The persisted undirected edge frame rides from the per-hop
+    sketches onto every public ANF output (through dedup's one
+    intermediates contract), and unpersist_intermediates releases it."""
+    from neo4j_arrow_spark.operators import dedup
+
+    edf = spark.createDataFrame(_fixture_edges(), "u long, v long")
+    curve = anf.anf_curve(edf, max_hops=2)
+    outs = [
+        anf.harmonic_anf(edf, max_hops=2),
+        curve,
+        anf.effective_diameter_hops(curve),
+    ]
+    for out in outs:
+        (und,) = dedup._intermediates_of(out)
+        assert und.is_cached
+    dedup.unpersist_intermediates(outs[2], blocking=True)
+    assert not dedup._intermediates_of(curve)[0].is_cached

@@ -47,6 +47,22 @@ def test_minhash_finds_planted_pairs(docs):
     assert all(a < b for a, b in pairs)
 
 
+def test_minhash_signatures_shingles_precedence_and_schema(docs):
+    """A passed shingle table takes precedence over df/text_col/shingle_n
+    (the signature equals the one derived from that table), and a frame
+    without the (doc, shingle) columns is refused, not silently hashed."""
+    sh = dedup.shingle_table(docs, "doc_id", "text", 3)
+    own = dedup.minhash_signatures(docs, "doc_id", "text", num_hashes=4)
+    # text_col/shingle_n name nothing usable: ignored when shingles= is set
+    passed = dedup.minhash_signatures(
+        docs, "doc_id", "no_such_col", num_hashes=4, shingle_n=7, shingles=sh
+    )
+    assert sorted(map(tuple, passed.collect())) == sorted(map(tuple, own.collect()))
+    wrong = docs.select(F.col("doc_id").alias("doc"), F.col("text"))
+    with pytest.raises(ValueError, match=r"\(doc, shingle\).*'shingle'"):
+        dedup.minhash_signatures(docs, "doc_id", "text", shingles=wrong)
+
+
 def test_ngram_jaccard_exact(docs):
     pairs = {(r.id_a, r.id_b): r.jaccard for r in
              dedup.ngram_jaccard_pairs(docs, "doc_id", "text", threshold=0.3).collect()}

@@ -1017,3 +1017,242 @@ def test_batch_set_fold_on_match_key_refused(nsapi):
             graph="nset",
             params={"b": [{"sku": "a"}]},
         )
+
+
+# -- large batches: one inline-table frame, no parse limit ----------------
+#
+# Each batch (and each CREATE's literal rows) is ONE ``VALUES`` table.
+# The per-row ``SELECT … UNION ALL`` form it replaced failed to parse
+# near 1,000 rows (FAILED_TO_PARSE_TOO_COMPLEX), so every test below
+# also pins that the size ceiling is gone.
+
+
+@pytest.fixture()
+def bigapi(spark):
+    api = Neo4jArrowSpark(spark)
+    nodes = spark.createDataFrame(
+        [(i, ["P"], f"k{i}", float(i)) for i in range(1, 1001)],
+        "ID long, LABELS array<string>, sku string, price double",
+    )
+    rels = spark.createDataFrame(
+        [], "START_ID long, END_ID long, TYPE string"
+    )
+    api.catalog.register("big", nodes, rels, overwrite=True)
+    return api
+
+
+def _read(api, q):
+    return api.cypher(q, graph="big").result(300).collect()
+
+
+def test_batch_merge_2000_rows(bigapi):
+    # keys k501..k2500: 500 pre-existing (ON MATCH), 1,500 new (ON CREATE)
+    batch = [{"sku": f"k{i}", "p": i * 0.5} for i in range(501, 2501)]
+    s = (
+        bigapi.cypher(
+            "UNWIND $batch AS row MERGE (n:P {sku: row.sku}) "
+            "ON CREATE SET n.price = row.p, n.fresh = true "
+            "ON MATCH SET n.price = row.p * 10",
+            graph="big",
+            params={"batch": batch},
+        )
+        .result(300)
+        .collect()[0]
+    )
+    assert (s.op, s.nodes_created, s.props_set) == ("merge", 1500, 3500)
+    rows = _read(
+        bigapi,
+        "MATCH (n:P) RETURN count(*) AS n, sum(n.price) AS total, "
+        "count(n.fresh) AS fresh",
+    )[0]
+    assert (rows.n, rows.fresh) == (2500, 1500)
+    expect = (
+        sum(float(i) for i in range(1, 501))  # untouched
+        + sum(i * 0.5 * 10 for i in range(501, 1001))  # ON MATCH
+        + sum(i * 0.5 for i in range(1001, 2501))  # ON CREATE
+    )
+    assert rows.total == pytest.approx(expect)
+    (one,) = _read(
+        bigapi, "MATCH (n:P {sku: 'k2500'}) RETURN n.price AS p, n.fresh AS f"
+    )
+    assert (one.p, one.f) == (1250.0, True)
+
+
+def test_batch_rel_create_1000_rows(bigapi):
+    batch = [{"x": f"k{i}", "y": f"k{i % 1000 + 1}"} for i in range(1, 1001)]
+    s = (
+        bigapi.cypher(
+            "UNWIND $b AS row MATCH (a:P {sku: row.x}), (b:P {sku: row.y}) "
+            "CREATE (a)-[:T]->(b)",
+            graph="big",
+            params={"b": batch},
+        )
+        .result(300)
+        .collect()[0]
+    )
+    assert s.rels_created == 1000
+    rows = _read(
+        bigapi,
+        "MATCH (a:P)-[:T]->(b:P) RETURN count(*) AS n, "
+        "sum(b.ID - a.ID) AS d",
+    )[0]
+    # a ring: 999 steps of +1 and one wrap-around step of -999
+    assert (rows.n, rows.d) == (1000, 0)
+
+
+def test_batch_set_1000_rows(bigapi):
+    batch = [{"k": f"k{i}", "p": -i, "t": f"t{i % 3}"} for i in range(1, 1001)]
+    s = (
+        bigapi.cypher(
+            "UNWIND $b AS row MATCH (n:P {sku: row.k}) "
+            "SET n.price = row.p, n.tier = row.t",
+            graph="big",
+            params={"b": batch},
+        )
+        .result(300)
+        .collect()[0]
+    )
+    assert (s.op, s.props_set) == ("set", 2000)
+    rows = _read(
+        bigapi,
+        "MATCH (n:P) RETURN n.tier AS t, count(*) AS n, sum(n.price) AS p "
+        "ORDER BY t",
+    )
+    assert [(r.t, r.n, r.p) for r in rows] == [
+        (f"t{j}", len(ids), -float(sum(ids)))
+        for j in range(3)
+        for ids in [[i for i in range(1, 1001) if i % 3 == j]]
+    ]
+
+
+def test_batch_create_1000_rows(bigapi):
+    batch = [{"i": 5000 + i, "name": f"n{i}", "w": i} for i in range(1000)]
+    s = (
+        bigapi.cypher(
+            "UNWIND $batch AS row CREATE (n:L {ID: row.i, name: row.name, "
+            "w: row.w})",
+            graph="big",
+            params={"batch": batch},
+        )
+        .result(300)
+        .collect()[0]
+    )
+    assert (s.op, s.nodes_created, s.props_set) == ("create", 1000, 2000)
+    rows = _read(
+        bigapi,
+        "MATCH (n:L) RETURN count(*) AS n, sum(n.w) AS w, "
+        "min(n.ID) AS lo, max(n.ID) AS hi, count(DISTINCT n.name) AS names",
+    )[0]
+    assert tuple(rows) == (1000, sum(range(1000)), 5000, 5999, 1000)
+
+
+# -- type parity: the inline table types values as UNION ALL did ----------
+
+#: one batch covering every coercion case: ``v`` mixes int and float,
+#: is NULL on one row and missing on another; ``note`` carries ``'``
+#: and ``\``; ``w`` mixes int and string literals (the one case where
+#: an inline table's own coercion refuses what UNION ALL promoted);
+#: ``extra`` is a new property only one row sets. Every property but
+#: ``sku`` widens the node schema.
+_PARITY_BATCH = [
+    {"sku": "a", "v": 1, "note": "it's", "w": 1, "extra": 7},
+    {"sku": "b", "v": 2.5, "note": "back\\slash", "w": "2"},
+    {"sku": "c", "v": None, "note": "both ' and \\ here", "w": 3},
+    {"sku": "d", "note": None, "extra": None},
+]
+
+#: what the per-row UNION ALL frames stored for that batch
+_PARITY_TYPES = "struct<sku:string,v:double,note:string,w:bigint,extra:int>"
+_PARITY_ROWS = [
+    ("a", 1.0, "it's", 1, 7),
+    ("b", 2.5, "back\\slash", 2, None),
+    ("c", None, "both ' and \\ here", 3, None),
+    ("d", None, None, None, None),
+    ("k1", None, None, None, None),
+]
+
+
+def _parity_state(api):
+    df = api.cypher(
+        "MATCH (n:P) RETURN n.sku AS sku, n.v AS v, n.note AS note, "
+        "n.w AS w, n.extra AS extra ORDER BY sku",
+        graph="um",
+    ).result(120)
+    return df.schema.simpleString(), [tuple(r) for r in df.collect()]
+
+
+def test_inline_table_type_parity_merge(mapi):
+    s = (
+        mapi.cypher(
+            "UNWIND $b AS row MERGE (n:P {sku: row.sku}) "
+            "ON CREATE SET n.v = row.v, n.note = row.note, n.w = row.w, "
+            "n.extra = row.extra",
+            graph="um",
+            params={"b": _PARITY_BATCH},
+        )
+        .result(120)
+        .collect()[0]
+    )
+    assert (s.nodes_created, s.props_set) == (4, 16)
+    assert _parity_state(mapi) == (_PARITY_TYPES, _PARITY_ROWS)
+
+
+def test_inline_table_type_parity_create(mapi):
+    # the CREATE expansion refuses backslashes in string literals (no
+    # dialect-neutral form), so this form carries quotes only
+    batch = [dict(e) for e in _PARITY_BATCH]
+    batch[1]["note"], batch[2]["note"] = "plain", "quote ' only"
+    s = (
+        mapi.cypher(
+            "UNWIND $b AS row CREATE (n:P {sku: row.sku, v: row.v, "
+            "note: row.note, w: row.w, extra: row.extra})",
+            graph="um",
+            params={"b": batch},
+        )
+        .result(120)
+        .collect()[0]
+    )
+    assert (s.nodes_created, s.props_set) == (4, 13)
+    rows = list(_PARITY_ROWS)
+    rows[1] = ("b", 2.5, "plain", 2, None)
+    rows[2] = ("c", None, "quote ' only", 3, None)
+    assert _parity_state(mapi) == (_PARITY_TYPES, rows)
+
+
+def test_inline_table_string_number_mix_refused_without_ansi(mapi, spark):
+    # without ANSI, UNION ALL stored the mix as STRING; the inline
+    # table's CAST would store NULL for "x", so the write refuses
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        with pytest.raises(RuntimeError, match="'w' mix strings"):
+            mapi.cypher(
+                "UNWIND $b AS row MERGE (n:P {sku: row.sku}) "
+                "ON CREATE SET n.w = row.w",
+                graph="um",
+                params={"b": [{"sku": "a", "w": 1}, {"sku": "b", "w": "x"}]},
+            ).result(120)
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+    assert "a" not in [r[0] for r in _state(mapi)]
+
+
+def test_inline_table_keeps_nondeterministic_values(mapi):
+    # rand() cannot live in an inline table: it is evaluated per row
+    # over it, so each created node still draws its own value
+    s = (
+        mapi.cypher(
+            "CREATE (a:R {r: rand()}), (b:R {r: rand(), s: 1}), (c:R {s: 2})",
+            graph="um",
+        )
+        .result(120)
+        .collect()[0]
+    )
+    assert s.nodes_created == 3
+    rows = mapi.cypher(
+        "MATCH (n:R) RETURN n.r AS r, n.s AS s ORDER BY s", graph="um"
+    ).result(120).collect()
+    rs = [r.r for r in rows if r.r is not None]
+    assert len(rs) == 2 and len(set(rs)) == 2
+    assert all(0.0 <= r < 1.0 for r in rs)
+    assert sorted((r.s for r in rows), key=str) == [1, 2, None]
