@@ -14,7 +14,6 @@ Arrow hop to Python is Spark's native Arrow path (``toPandas`` /
 
 from __future__ import annotations
 
-import re
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -26,22 +25,17 @@ from neo4j_arrow_spark.operators import ingest, node_scan, rel_scan
 from neo4j_arrow_spark.operators.khop import DEFAULT_LIST_SIZE
 from neo4j_arrow_spark.operators.khop import khop as khop_fn
 
-#: Statement-commit snapshots use a LAZY localCheckpoint (guide §5.3):
-#: lineage is still truncated at re-registration and the frame still
-#: materializes AT MOST once (the first consumer's job fills the
-#: checkpoint blocks; later consumers read them), but the dedicated
-#: eager-materialization job per write statement — measured at ~0.35s
-#: of scheduling + a full-frame pass at sf0.1 — disappears: the work
-#: rides the next statement's / read's own job. A snapshot no consumer
-#: ever touches (e.g. the node frame across a rels-only statement
-#: chain) is never computed at all. Tests flip this to True to A/B.
-_SNAPSHOT_EAGER = False
-
 
 def _snapshot(df: DataFrame) -> DataFrame:
     """Commit snapshot of an updated graph frame before
-    re-registration — see ``_SNAPSHOT_EAGER``."""
-    return df.localCheckpoint(eager=_SNAPSHOT_EAGER)
+    re-registration: a LAZY localCheckpoint (guide §5.3). Lineage is
+    still truncated at re-registration and the frame materializes AT
+    MOST once (the first consumer's job fills the checkpoint blocks;
+    later consumers read them), but no write pays a dedicated
+    materialization job: the work rides the next statement's / read's
+    own job, and a snapshot no consumer ever touches is never
+    computed."""
+    return df.localCheckpoint(eager=False)
 
 
 class Neo4jArrowSpark:
@@ -285,401 +279,60 @@ class Neo4jArrowSpark:
         self, query: str, db: str, graph: str | None, params: dict | None
     ) -> Job:
         """Apply a Cypher write statement to the named graph. The
-        updated frames are localCheckpointed before re-registration:
-        each write commits eagerly, reads submitted afterwards see the
-        new state, and lineage doesn't stack across writes."""
-        from neo4j_arrow_spark.cypher import CypherUnsupported
+        statement parses at submit (:func:`~neo4j_arrow_spark.
+        cypher_write.parse_write`); the job runs its write form and
+        commits once: the frames the write changed are snapshotted
+        (``_snapshot``, a lazy localCheckpoint) and the graph
+        re-registers, so reads submitted afterwards see the new state
+        and lineage doesn't stack across writes. A write that changes
+        nothing registers nothing."""
         from neo4j_arrow_spark.cypher_write import (
-            _WriteParser,
-            execute_cypher_write,
+            guard_write_analysis,
+            parse_write,
         )
 
-        from neo4j_arrow_spark.cypher_write import (
-            _reject_aggregates_in_ast,
-            execute_unwind_merge,
-            expand_unwind_batch,
-            guard_batch_analysis,
-            parse_unwind_merge,
-            project_batch_return,
-            render_write_params,
-            split_trailing_return,
-            validate_trailing_return,
+        graph = self._resolve_graph(db, graph)
+        g = self.catalog.get(graph, db, self.username)
+        # writes operate on the identity-minted frame/view so any
+        # multi-rel-slot read part keeps true openCypher edge identity;
+        # a changed rel frame (pre-minted) re-registers without a
+        # second minting pass
+        eid = g.rels_eid is not None
+        rels_in = g.rels_eid if eid else g.rels
+        form = parse_write(
+            query,
+            params,
+            (f"{graph}_nodes", f"{graph}_rels" + ("_eid" if eid else "")),
+            lambda q: self._compile_read(q, graph, g),
         )
 
-        # split a trailing RETURN off FIRST: the batch expansions must
-        # never instantiate the RETURN clause per element, and the
-        # batch paths project it over the written nodes afterwards
-        head_text, return_text = split_trailing_return(query)
-
-        # UNWIND $batch AS row MERGE … — the bulk UPSERT idiom (r10):
-        # one set-based pass (window-dedup + anti-join + conditional
-        # projection), no per-row existence probes
-        um_spec = parse_unwind_merge(head_text, params)
-        if um_spec is not None:
-            if return_text is not None and not um_spec["var"]:
-                raise CypherUnsupported(
-                    "RETURN after a batch MERGE needs a named node "
-                    "variable"
-                )
-            graph = self._resolve_graph(db, graph)
-            g = self.catalog.get(graph, db, self.username)
-
-            def run_um() -> DataFrame:
-                ret_out: dict | None = (
-                    {} if return_text is not None else None
-                )
-                new_nodes, summary = execute_unwind_merge(
-                    self.spark, g.nodes, um_spec, ret_out=ret_out
-                )
-                if new_nodes is not g.nodes:
-                    new_nodes = _snapshot(new_nodes)
-                    self.catalog.register(
-                        graph,
-                        new_nodes,
-                        g.rels,
-                        database=db,
-                        username=self.username,
-                        overwrite=True,
-                    )
-                if return_text is not None and um_spec["n_rows"] > 0:
-                    return project_batch_return(
-                        self.spark, new_nodes, ret_out["ids"],
-                        um_spec["var"], return_text,
-                    ).localCheckpoint()
-                if return_text is not None:
-                    # empty batch: zero merges, zero RETURN rows
-                    return project_batch_return(
-                        self.spark,
-                        g.nodes,
-                        self.spark.createDataFrame([], "__rid long"),
-                        um_spec["var"],
-                        return_text,
-                    )
-                return summary
-
-            return self.registry.submit(
-                "cypher.write", guard_batch_analysis(run_um)
+        def run() -> DataFrame:
+            nodes, rels, summary, ret = form(self.spark, g.nodes, rels_in)
+            if nodes is not g.nodes:
+                nodes = _snapshot(nodes)
+            if rels is not rels_in:
+                rels = _snapshot(rels)
+            # a trailing RETURN projects over the committed frames (its
+            # job fills their snapshots) and runs before the commit, so
+            # a RETURN that fails leaves the graph unchanged
+            result = (
+                summary if ret is None else ret(nodes, rels).localCheckpoint()
             )
-
-        # UNWIND $batch AS row MATCH …, … CREATE/MERGE (a)-[:T]->(b) —
-        # the bulk EDGE-load idiom (r10): anchors resolve with one
-        # equi-join per side, edges dedupe per endpoint pair, MERGE
-        # anti-joins the TYPE-filtered existing frame
-        from neo4j_arrow_spark.cypher_write import (
-            execute_unwind_rel,
-            parse_unwind_rel,
-        )
-
-        ur_spec = parse_unwind_rel(head_text, params)
-        if ur_spec is not None:
-            if return_text is not None:
-                from neo4j_arrow_spark.cypher_write import (
-                    validate_batch_rel_return,
-                )
-
-                validate_batch_rel_return(ur_spec["rvar"], return_text)
-            graph = self._resolve_graph(db, graph)
-            g = self.catalog.get(graph, db, self.username)
-
-            def run_ur() -> DataFrame:
-                from neo4j_arrow_spark.cypher_write import (
-                    project_batch_rel_return,
-                )
-
-                ret_out: dict | None = (
-                    {} if return_text is not None else None
-                )
-                rels_in = g.rels_eid if g.rels_eid is not None else g.rels
-                new_rels, summary = execute_unwind_rel(
-                    self.spark, g.nodes, rels_in, ur_spec, ret_out=ret_out
-                )
-                if new_rels is not rels_in:
-                    new_rels = _snapshot(new_rels)
-                    self.catalog.register(
-                        graph,
-                        g.nodes,
-                        new_rels,
-                        database=db,
-                        username=self.username,
-                        overwrite=True,
-                    )
-                if return_text is not None:
-                    return project_batch_rel_return(
-                        self.spark,
-                        g.nodes,
-                        ret_out["rels"],
-                        ur_spec["rvar"],
-                        return_text,
-                    ).localCheckpoint()
-                return summary
-
-            return self.registry.submit(
-                "cypher.write", guard_batch_analysis(run_ur)
-            )
-
-        # UNWIND $batch AS row MATCH (n {k: row.k}) SET …/[DETACH]
-        # DELETE n — the batch UPDATE / DELETE-by-key idioms (r10)
-        from neo4j_arrow_spark.cypher_write import (
-            execute_unwind_node_write,
-            parse_unwind_node_write,
-        )
-
-        un_spec = parse_unwind_node_write(head_text, params)
-        if un_spec is not None:
-            graph = self._resolve_graph(db, graph)
-            g = self.catalog.get(graph, db, self.username)
-
-            def run_un() -> DataFrame:
-                ret_out: dict | None = (
-                    {} if return_text is not None else None
-                )
-                rels_in = g.rels_eid if g.rels_eid is not None else g.rels
-                new_nodes, new_rels, summary = execute_unwind_node_write(
-                    self.spark, g.nodes, rels_in, un_spec, ret_out=ret_out
-                )
-                pre_nodes = g.nodes
-                changed = new_nodes is not g.nodes or new_rels is not rels_in
-                if changed:
-                    if new_nodes is not g.nodes:
-                        new_nodes = _snapshot(new_nodes)
-                    if new_rels is not None and new_rels is not rels_in:
-                        new_rels = _snapshot(new_rels)
-                    self.catalog.register(
-                        graph,
-                        new_nodes,
-                        new_rels,
-                        database=db,
-                        username=self.username,
-                        overwrite=True,
-                    )
-                if return_text is not None:
-                    # SET projects post-update values; DELETE projects
-                    # the PRE-delete snapshot (openCypher)
-                    frame = (
-                        pre_nodes
-                        if un_spec["op"] == "delete"
-                        else new_nodes
-                    )
-                    return project_batch_return(
-                        self.spark,
-                        frame,
-                        ret_out["ids"],
-                        un_spec["var"],
-                        return_text,
-                    ).localCheckpoint()
-                return summary
-
-            return self.registry.submit(
-                "cypher.write", guard_batch_analysis(run_un)
-            )
-
-        # MATCH … WITH <pipeline> SET/DELETE/CREATE — a write clause
-        # driven by a READ PIPELINE (r11: update-the-top-k /
-        # materialize-an-aggregate). The pipeline compiles through the
-        # read transpiler with synthesized RETURN items (ids + each
-        # value in pipeline scope); the write is one set-based frame
-        # op over the resulting frame.
-        from neo4j_arrow_spark.cypher_write import (
-            execute_pipeline_create,
-            execute_pipeline_delete,
-            execute_pipeline_set,
-            parse_pipeline_write,
-        )
-
-        pw_spec = parse_pipeline_write(head_text)
-        if pw_spec is not None:
-            graph = self._resolve_graph(db, graph)
-            g = self.catalog.get(graph, db, self.username)
-            if pw_spec["kind"] == "set":
-                items = [f"{pw_spec['var']}.ID AS __wid"] + [
-                    f"({e}) AS __v{i}"
-                    for i, (_p, e) in enumerate(pw_spec["sets"])
-                ]
-            elif pw_spec["kind"] == "delete":
-                items = [f"{pw_spec['var']}.ID AS __wid"]
-            else:  # create
-                items = [
-                    f"({e}) AS __v{i}"
-                    for i, (_p, e) in enumerate(pw_spec["props"])
-                ] or ["1 AS __one"]
-            read_q = pw_spec["prefix"] + " RETURN " + ", ".join(items)
-            if params:
-                # write-path binding rule: $params inline as literals
-                read_q = render_write_params(read_q, params)
-            frame_sql = self._compile_read(read_q, graph, g)
-            if return_text is not None and pw_spec["kind"] != "delete":
-                ret_var = pw_spec["var"]
-                if not ret_var:
-                    raise CypherUnsupported(
-                        "RETURN after a pipeline CREATE needs a named "
-                        "node variable"
-                    )
-
-            def run_pw() -> DataFrame:
-                ret_out: dict | None = (
-                    {} if return_text is not None else None
-                )
-                frame = self.spark.sql(frame_sql)
-                pre_nodes, new_rels = g.nodes, g.rels
-                rels_in = g.rels_eid if g.rels_eid is not None else g.rels
-                if pw_spec["kind"] == "set":
-                    new_nodes, summary = execute_pipeline_set(
-                        self.spark, g.nodes, frame, pw_spec["sets"],
-                        ret_out=ret_out,
-                    )
-                    new_rels = rels_in
-                elif pw_spec["kind"] == "delete":
-                    new_nodes, new_rels, summary = execute_pipeline_delete(
-                        self.spark, g.nodes, rels_in, frame,
-                        pw_spec["detach"], ret_out=ret_out,
-                    )
-                else:
-                    new_nodes, summary = execute_pipeline_create(
-                        self.spark, g.nodes, frame, pw_spec["labels"],
-                        pw_spec["props"], ret_out=ret_out,
-                    )
-                    new_rels = rels_in
-                new_nodes = _snapshot(new_nodes)
-                if new_rels is not None and new_rels is not rels_in:
-                    new_rels = _snapshot(new_rels)
+            if nodes is not g.nodes or rels is not rels_in:
+                # unchanged rels keep the plain frame: registering the
+                # minted one would make every identity-free read of
+                # `<graph>_rels` pay the minting shuffle
                 self.catalog.register(
                     graph,
-                    new_nodes,
-                    new_rels,
+                    nodes,
+                    g.rels if rels is rels_in else rels,
                     database=db,
                     username=self.username,
                     overwrite=True,
                 )
-                if return_text is not None:
-                    frame_out = (
-                        pre_nodes
-                        if pw_spec["kind"] == "delete"
-                        else new_nodes
-                    )
-                    return project_batch_return(
-                        self.spark,
-                        frame_out,
-                        ret_out["ids"],
-                        pw_spec["var"],
-                        return_text,
-                    ).localCheckpoint()
-                return summary
+            return result
 
-            return self.registry.submit(
-                "cypher.write", guard_batch_analysis(run_pw)
-            )
-
-        # UNWIND $batch AS row CREATE … — the bulk-write idiom expands
-        # to ONE multi-pattern CREATE (a single literal-rows frame and
-        # union, not |batch| statements); an empty batch is a no-op
-        batch_var: str | None = None
-        expanded, batch_handled = expand_unwind_batch(head_text, params)
-        if batch_handled:
-            # the RETURN (if any) references the PRE-uniquify pattern
-            # variable — capture it before the expansion renames
-            m_bv = re.search(
-                r"CREATE\s*\(\s*([A-Za-z_]\w*)\s*[:{]", head_text,
-                re.IGNORECASE,
-            )
-            batch_var = m_bv.group(1) if m_bv else None
-            if return_text is not None and batch_var is None:
-                raise CypherUnsupported(
-                    "RETURN after a batch CREATE needs a named node "
-                    "variable"
-                )
-        if batch_handled and expanded is None:
-            # empty batch
-            if return_text is not None:
-                graph = self._resolve_graph(db, graph)
-                g = self.catalog.get(graph, db, self.username)
-                return self.registry.submit(
-                    "cypher.write",
-                    lambda: project_batch_return(
-                        self.spark,
-                        g.nodes,
-                        self.spark.createDataFrame([], "__rid long"),
-                        batch_var,
-                        return_text,
-                    ),
-                )
-            return self.registry.submit(
-                "cypher.write",
-                lambda: self.spark.createDataFrame(
-                    [("create", 0, 0, 0, 0, 0)],
-                    "op string, nodes_created long, props_set long, "
-                    "nodes_deleted long, rels_deleted long, "
-                    "rels_created long",
-                ),
-            )
-        query = expanded
-        # (after a batch expansion the consumed $batch marker is gone
-        # from the text; render_write_params only acts on markers that
-        # remain, so leftover params are harmless)
-        if params:
-            # write clauses bind $params by literal inlining (reads
-            # bind through Spark's named-parameter channel, but the
-            # write path builds frames, not one SQL statement). Values
-            # render through the same literal rules as the oracle
-            # inliner; token-level so $n never clobbers $name and
-            # string-literal '$…' text survives.
-            query = render_write_params(query, params)
-            if return_text is not None:
-                return_text = render_write_params(return_text, params)
-        # parse-as-validation at submit (CypherMessage.java:36-52
-        # parity): syntax errors, aggregate-valued writes, and
-        # op-incompatible trailing RETURNs all raise HERE, not inside
-        # the job thread (the RETURN's items still compile in the job
-        # through the read transpiler)
-        _w_ast = _WriteParser(query).parse_write()
-        _reject_aggregates_in_ast(_w_ast)
-        if return_text is not None:
-            validate_trailing_return(
-                _w_ast, batch_var=batch_var, return_text=return_text
-            )
-        graph = self._resolve_graph(db, graph)
-        g = self.catalog.get(graph, db, self.username)
-
-        def run() -> DataFrame:
-            # writes operate on the identity-minted frame/view so any
-            # multi-rel-slot read part keeps true openCypher edge
-            # identity; the result (pre-minted) re-registers without a
-            # second minting pass
-            new_nodes, new_rels, summary, result = execute_cypher_write(
-                self.spark,
-                g.nodes,
-                g.rels_eid if g.rels_eid is not None else g.rels,
-                query,
-                f"{graph}_nodes",
-                f"{graph}_rels_eid" if g.rels_eid is not None else f"{graph}_rels",
-                return_text=return_text,
-                batch_var=batch_var,
-            )
-            if new_nodes is not g.nodes:
-                new_nodes = _snapshot(new_nodes)
-            if (
-                new_rels is not None
-                and new_rels is not g.rels
-                and new_rels is not g.rels_eid
-            ):
-                new_rels = _snapshot(new_rels)
-            self.catalog.register(
-                graph,
-                new_nodes,
-                new_rels,
-                database=db,
-                username=self.username,
-                overwrite=True,
-            )
-            # a write with a trailing RETURN streams the projection
-            # over the affected entities (Neo4j semantics); a bare
-            # write streams the one-row counters summary
-            if result is not None:
-                # materialize before the summary's views get replaced
-                # by later writes (the projection reads temp views)
-                return result.localCheckpoint()
-            return summary
-
-        return self.registry.submit("cypher.write", run)
+        return self.registry.submit("cypher.write", guard_write_analysis(run))
 
     def _tune(self, df: DataFrame, partitions: int | None, batch_size: int | None) -> DataFrame:
         """The reference's per-job ``partitions``/``batch_size`` message

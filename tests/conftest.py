@@ -25,13 +25,25 @@ def fuzz_examples(full_count: int, quick_count: int = 25) -> int:
     return full_count if PROFILE == "full" else min(full_count, quick_count)
 
 
+def _driver_mem(jvms: int) -> str:
+    """One driver heap per JVM a test run starts: the machine's memory
+    split evenly over them, capped at 8g. The full suite starts up to
+    five local-mode JVMs (this session, three shard sessions, the
+    oracle subprocess); at 8g each they overrun a 16 GB machine."""
+    with open("/proc/meminfo") as f:
+        kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    return f"{min(8 * 1024, kb // 1024 // jvms)}m"
+
+
 @pytest.fixture(scope="session")
 def spark():
     spark = get_session(
         app_name="neo4j_arrow_spark-tests",
         extra_conf={
             "spark.sql.shuffle.partitions": "8",
-            "spark.driver.memory": "8g",
+            # set at collection (pytest_collection_modifyitems) and
+            # inherited by the shard and oracle subprocesses
+            "spark.driver.memory": os.environ["SPARK_GRAFT_DRIVER_MEM"],
         },
     )
     yield spark
@@ -56,16 +68,18 @@ _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 _ORACLE_SF = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
 
 
+def _oracle_runs(items) -> bool:
+    """Whether this run starts the full-oracle subprocess."""
+    return (
+        any("test_full_oracle" in item.nodeid for item in items)
+        and os.environ.get("SPARK_GRAFT_SKIP_FULL_ORACLE") != "1"
+        and os.path.isdir(_ORACLE_SF)
+    )
+
+
 @pytest.fixture(scope="session", autouse=True)
 def full_oracle_background(request):
-    selected = any(
-        "test_full_oracle" in item.nodeid for item in request.session.items
-    )
-    if (
-        not selected
-        or os.environ.get("SPARK_GRAFT_SKIP_FULL_ORACLE") == "1"
-        or not os.path.isdir(_ORACLE_SF)
-    ):
+    if not _oracle_runs(request.session.items):
         yield None
         return
     proc = subprocess.Popen(
@@ -132,11 +146,6 @@ _SHARD = {"procs": [], "files": _SHARD_FILES}
 
 
 def pytest_collection_modifyitems(config, items):
-    if (
-        os.environ.get("SPARK_GRAFT_SHARD") == "1"
-        or os.environ.get("SPARK_GRAFT_NO_SHARD") == "1"
-    ):
-        return
     shard = [
         i for i in items if any(f in i.nodeid for f in _SHARD_FILES)
     ]
@@ -150,7 +159,24 @@ def pytest_collection_modifyitems(config, items):
     # (r9: `pytest tests/test_cypher_write.py tests/test_cypher.py`
     # used to orphan the write suite this way)
     joiner_selected = any("test_zshard_join" in i.nodeid for i in items)
-    if not shard or len(rest) < 50 or not joiner_selected:
+    sharded = (
+        os.environ.get("SPARK_GRAFT_SHARD") != "1"
+        and os.environ.get("SPARK_GRAFT_NO_SHARD") != "1"
+        and shard
+        and len(rest) >= 50
+        and joiner_selected
+    )
+    groups = []
+    for group in _SHARD_GROUPS if sharded else ():
+        sel = [f for f in group if any(f in i.nodeid for i in shard)]
+        if sel:
+            groups.append(sel)
+    # a shard subprocess inherits its parent's value
+    os.environ.setdefault(
+        "SPARK_GRAFT_DRIVER_MEM",
+        _driver_mem(1 + len(groups) + _oracle_runs(items)),
+    )
+    if not groups:
         return
     # shard sessions run 7-row-fixture, latency-bound suites — 8 local
     # threads each is plenty and 5 concurrent local[32] JVMs would
@@ -161,10 +187,7 @@ def pytest_collection_modifyitems(config, items):
         SPARK_GRAFT_SHARD="1",
         SPARK_GRAFT_CPUS=os.environ.get("SPARK_GRAFT_SHARD_CPUS", "8"),
     )
-    for group in _SHARD_GROUPS:
-        sel = [f for f in group if any(f in i.nodeid for i in shard)]
-        if not sel:
-            continue
+    for sel in groups:
         _SHARD["procs"].append((sel, subprocess.Popen(
             [
                 sys.executable, "-m", "pytest", "-q",

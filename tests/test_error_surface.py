@@ -99,6 +99,10 @@ NEGATIVES: list[tuple[str, dict | None]] = [
     ("CREATE (n:P {ID: 78, age: $missing})", {"other": 1}),  # unbound param
     # -- write path: job-time (frame-op / analysis validation) --------------
     ("MATCH (n:P) SET n.x = nosuchfn(n.age)", None),    # analysis error, wrapped
+    (
+        "UNWIND $b AS row MATCH (n:P {ID: row.k}) SET n.x = size(row.v)",
+        {"b": [{"k": 1, "v": 2}]},
+    ),  # batch-form analysis error (size of an int), wrapped the same way
     ("CREATE (n:P {ID: 1})", None),                     # id collision
     ("MATCH (n:P) WHERE n.ID = 1 DELETE n", None),      # has rels, needs DETACH
 ]
