@@ -26,13 +26,19 @@ def fuzz_examples(full_count: int, quick_count: int = 25) -> int:
 
 
 def _driver_mem(jvms: int) -> str:
-    """One driver heap per JVM a test run starts: the machine's memory
-    split evenly over them, capped at 8g. The full suite starts up to
-    five local-mode JVMs (this session, three shard sessions, the
-    oracle subprocess); at 8g each they overrun a 16 GB machine."""
+    """One driver heap per JVM a test run starts: half the machine's
+    memory split evenly over them, capped at 8g. The full suite starts
+    up to five local-mode JVMs (this session, three shard sessions, the
+    oracle subprocess); at 8g each they overrun a 16 GB machine. The
+    other half is for what the heaps do not count: each JVM's off-heap
+    memory, the Python workers, the pytest processes and the page
+    cache. Splitting ALL of it over the heaps leaves none, and with no
+    swap the kernel then evicts the JVMs' own mapped code and jars and
+    the run crawls (measured on a 4-core 16 GB machine: the main
+    session at ~half its items when the 2,670 s timeout hit)."""
     with open("/proc/meminfo") as f:
         kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
-    return f"{min(8 * 1024, kb // 1024 // jvms)}m"
+    return f"{min(8 * 1024, kb // 1024 // 2 // jvms)}m"
 
 
 @pytest.fixture(scope="session")
@@ -182,10 +188,14 @@ def pytest_collection_modifyitems(config, items):
     # threads each is plenty and 5 concurrent local[32] JVMs would
     # serialize on scheduler/GC churn instead (r9 measurement: the
     # 3-group local[32] layout was SLOWER than 2 groups, 18m34 vs 17m23)
+    # — and never more threads than the run's own core count: on a
+    # 4-core machine, local[8] shards doubled the task threads and
+    # Python workers each one started
+    cpus = min(8, int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
     env = dict(
         os.environ,
         SPARK_GRAFT_SHARD="1",
-        SPARK_GRAFT_CPUS=os.environ.get("SPARK_GRAFT_SHARD_CPUS", "8"),
+        SPARK_GRAFT_CPUS=os.environ.get("SPARK_GRAFT_SHARD_CPUS", str(cpus)),
     )
     for sel in groups:
         _SHARD["procs"].append((sel, subprocess.Popen(
