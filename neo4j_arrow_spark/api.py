@@ -124,7 +124,7 @@ class Neo4jArrowSpark:
           SORTED comma-joined string (cross-engine determinism);
           postfix indexing / reduce / comprehensions see the true
           ARRAY form."""
-        from neo4j_arrow_spark.cypher import cypher_to_sql, is_cypher
+        from neo4j_arrow_spark.cypher import is_cypher
         from neo4j_arrow_spark.cypher_write import is_cypher_write
 
         if is_cypher_write(query):
@@ -136,37 +136,7 @@ class Neo4jArrowSpark:
             graph = self._resolve_graph(db, graph)
             g = self.catalog.get(graph, db, self.username)
             needed: set = set()
-            sql = cypher_to_sql(
-                query,
-                f"{graph}_nodes",
-                f"{graph}_rels",
-                params_out=needed,
-                # keys()/properties() need the node schema — everything
-                # except the reserved id/label columns
-                node_props=[
-                    c for c in g.nodes.columns if c not in ("ID", "LABELS")
-                ],
-                # RETURN r (bare rel projection) needs the rel property
-                # schema the same way
-                rel_props=None if g.rels is None else [
-                    c for c in g.rels.columns if c not in RelField.RESERVED
-                ],
-                # registration mints (REL_ID, REL_ID2) into the
-                # companion `<graph>_rels_eid` view (catalog.register),
-                # giving true openCypher edge identity; the transpiler
-                # reads the eid view ONLY when the query references
-                # edge identity, so identity-free queries never pay the
-                # minting shuffle. Frames with no eid view fall back to
-                # (START_ID, END_ID, TYPE) triple mode.
-                rel_id=g.rels_eid is not None,
-                rels_eid_view=f"{graph}_rels_eid",
-                # property-column → Spark type map: lets
-                # type-polymorphic emissions (isEmpty) dispatch on the
-                # registered type; a name carried by BOTH frames with
-                # conflicting types stays out (ambiguous → the
-                # transpiler's targeted refusal)
-                prop_types=self._prop_types(g),
-            )
+            sql = self._compile_read(query, graph, g, params_out=needed)
             missing = needed - set(params or {})
             if missing:
                 raise ValueError(
@@ -212,26 +182,45 @@ class Neo4jArrowSpark:
             )
         return self.registry.submit("cypher.read", lambda: self.spark.sql(query))
 
-    def _compile_read(self, query: str, graph: str, g) -> str:
-        """Transpile a read-pipeline Cypher text over the named
-        graph's views — the same options the read path uses (schema
-        for keys()/properties(), eid view for edge identity, prop
-        types for polymorphic dispatch). Used by the pipeline-write
-        dispatcher to evaluate target ids and values in READ scope."""
+    def _compile_read(
+        self, query: str, graph: str, g, params_out: set | None = None
+    ) -> str:
+        """Transpile a read Cypher text over the named graph's views —
+        the one set of read-compile options, shared by reads and by the
+        pipeline-write parser (which evaluates target ids and values in
+        READ scope). ``params_out`` receives the ``$params`` the query
+        references."""
         from neo4j_arrow_spark.cypher import cypher_to_sql
 
         return cypher_to_sql(
             query,
             f"{graph}_nodes",
             f"{graph}_rels",
+            params_out=params_out,
+            # keys()/properties() need the node schema — everything
+            # except the reserved id/label columns
             node_props=[
                 c for c in g.nodes.columns if c not in ("ID", "LABELS")
             ],
+            # RETURN r (bare rel projection) needs the rel property
+            # schema the same way
             rel_props=None if g.rels is None else [
                 c for c in g.rels.columns if c not in RelField.RESERVED
             ],
+            # registration mints (REL_ID, REL_ID2) into the
+            # companion `<graph>_rels_eid` view (catalog.register),
+            # giving true openCypher edge identity; the transpiler
+            # reads the eid view ONLY when the query references
+            # edge identity, so identity-free queries never pay the
+            # minting shuffle. Frames with no eid view fall back to
+            # (START_ID, END_ID, TYPE) triple mode.
             rel_id=g.rels_eid is not None,
             rels_eid_view=f"{graph}_rels_eid",
+            # property-column → Spark type map: lets
+            # type-polymorphic emissions (isEmpty) dispatch on the
+            # registered type; a name carried by BOTH frames with
+            # conflicting types stays out (ambiguous → the
+            # transpiler's targeted refusal)
             prop_types=self._prop_types(g),
         )
 

@@ -16,15 +16,23 @@ capability the reference left on the table, expressed Spark-first:
   the node (and, for DETACH, relationship) frames. Plain DELETE on a
   node with incident relationships fails, mirroring Neo4j semantics.
 
-Every write form (``_FORMS``) parses at submit and returns the same
-``(new_nodes, new_rels, summary, ret)``; the API layer commits it in
-one place, lazily localCheckpointing the frames the write changed
-before re-registering the graph, so lineage doesn't stack across
-writes.
+A statement is tokenized and its clauses scanned once
+(:func:`parse_write`). The clause rule: a keyword (CREATE, MERGE, SET,
+DELETE, DETACH, REMOVE, FOREACH, MATCH, WHERE, WITH, RETURN, UNWIND,
+ON) is a clause only at bracket depth 0 — not inside ``()``, ``[]`` or
+``{}`` — and not right after ``.``, ``:`` or ``AS``, where it is a
+property, label, type, alias or map key. So ``MATCH (n:Create) RETURN
+n.set AS delete`` is a read. An ``UNWIND $param AS alias`` head is
+parsed once and the verb after it picks the batch form; every form
+(:func:`_form`) parses at submit and returns the same ``(new_nodes,
+new_rels, summary, ret)``; the API layer commits it in one place,
+lazily localCheckpointing the frames the write changed before
+re-registering the graph, so lineage doesn't stack across writes.
 """
 
 from __future__ import annotations
 
+import dataclasses
 import math
 import re
 from typing import Callable, NamedTuple
@@ -46,7 +54,12 @@ from neo4j_arrow_spark.graph import NodeField, RelField
 
 __all__ = ["is_cypher_write", "parse_write"]
 
-_WRITE_WORDS = {"SET", "DELETE", "DETACH", "CREATE", "MERGE", "REMOVE"}
+#: the clause keywords that make a statement a write
+_WRITE_VERBS = frozenset(
+    {"CREATE", "MERGE", "SET", "DELETE", "DETACH", "REMOVE", "FOREACH"}
+)
+#: every clause keyword the write grammar splits a statement on
+_CLAUSES = _WRITE_VERBS | {"MATCH", "WHERE", "WITH", "RETURN", "UNWIND", "ON"}
 
 #: the Neo4j-style counters row every write reports
 _SUMMARY_SCHEMA = (
@@ -74,9 +87,12 @@ def _summary(
 
 
 class WriteStatement(NamedTuple):
-    """A write statement as every form's parse sees it."""
+    """A write statement as every form's parse sees it: tokenized once,
+    its clauses scanned once (:func:`_scan`)."""
 
-    head: str  # the write clauses, trailing RETURN split off
+    head: list  # the write clauses' tokens, trailing RETURN split off
+    clauses: list  # (index, KEYWORD) of head's clause keywords
+    unwind: tuple[str, str] | None  # (param, alias) of an UNWIND head
     ret: str | None  # the trailing RETURN clause, keyword included
     params: dict | None
     views: tuple[str, str]  # the graph's (nodes, rels) view names
@@ -253,36 +269,27 @@ def _search_outside_strings(pattern, text: str):
     return None
 
 
-def render_write_params(query: str, params: dict) -> str:
-    """Bind ``$name`` parameters in a WRITE statement by inlining
-    SQL-safe literals (ints, floats, bools, strings, flat lists).
-    Reads bind through Spark's named-parameter channel; the write path
+def _bind_params(toks: list, params: dict | None) -> list:
+    """Bind ``$name`` parameter tokens of a WRITE statement by inlining
+    SQL-safe literals (ints, floats, bools, strings, flat lists). Reads
+    bind through Spark's named-parameter channel; the write path
     compiles to frame operations where no binding channel exists, so
-    inlining is the honest equivalent. Substitution is TOKEN-level: the
-    query is re-scanned with the Cypher tokenizer's regex so a ``$``
-    sequence inside a string literal is data (never substituted), a
-    bound ``$n`` cannot clobber the prefix of a distinct ``$nx``
-    marker, and any param token with no binding raises."""
-    lit = _render_literal
-    out, i = [], 0
-    while i < len(query):
-        m = _TOKEN_RE.match(query, i)
-        if not m:
-            raise CypherSyntaxError(
-                f"cannot tokenize at: {query[i:i+20]!r}"
+    inlining is the honest equivalent. Binding is TOKEN-level: a ``$``
+    sequence inside a string literal is data, a bound ``$n`` cannot
+    clobber a distinct ``$nx``, and any param token with no binding
+    raises — whether ``params`` is None, empty or lacks the name."""
+    out = []
+    for t in toks:
+        if t[0] != "param":
+            out.append(t)
+            continue
+        name = t[1][1:]
+        if name not in (params or {}):
+            raise CypherUnsupported(
+                f"write statement references unbound parameter '${name}'"
             )
-        if m.lastgroup == "param":
-            name = m.group()[1:]
-            if name not in params:
-                raise CypherUnsupported(
-                    "write statement references unbound parameter "
-                    f"'${name}'"
-                )
-            out.append(lit(params[name]))
-        else:
-            out.append(m.group())
-        i = m.end()
-    return "".join(out)
+        out.extend(_tokenize(_render_literal(params[name]))[:-1])
+    return out
 
 
 def _match_additive_fold(prop: str, run: list, var: str):
@@ -356,6 +363,50 @@ def _render_tokens(toks) -> str:
     return " ".join(t[2] if len(t) > 2 else t[1] for t in toks)
 
 
+def _scan(toks: list, start: int = 0, stops=_CLAUSES):
+    """Yield ``(index, WORD)`` for each clause keyword in ``stops`` from
+    ``toks[start]`` on, then the token that ends the scan: eof, or a
+    closer of a bracket opened before ``start``.
+
+    The clause rule of the write path: a keyword is a clause only at
+    bracket depth 0 (not inside ``()``, ``[]`` or ``{}``) and not right
+    after ``.``, ``:`` or ``AS``, where it is a property, label, type,
+    alias or map key (``n.set``, ``(n:Create)``, ``[:SET]``,
+    ``{delete: 1}``, ``AS set``). A ``","`` in ``stops`` matches
+    depth-0 commas."""
+    depth, prev = 0, ""
+    for i in range(start, len(toks)):
+        kind, text = toks[i][0], toks[i][1]
+        if kind == "eof" or (depth == 0 and text in (")", "]", "}")):
+            yield i, text
+            return
+        if text in ("(", "[", "{"):
+            depth += 1
+        elif text in (")", "]", "}"):
+            depth -= 1
+        elif (
+            depth == 0
+            and text.upper() in stops
+            and (kind not in ("name", "kw") or prev not in (".", ":", "AS"))
+        ):
+            yield i, text.upper()
+        prev = text
+
+
+def _unwind_head(toks: list) -> tuple[str, str] | None:
+    """``(param, alias)`` of an ``UNWIND $param AS alias`` head (the
+    bulk-write idiom; its verb is ``toks[4]``), or None."""
+    if (
+        len(toks) > 4
+        and toks[0][1].upper() == "UNWIND"
+        and toks[1][0] == "param"
+        and toks[2][1].upper() == "AS"
+        and toks[3][0] == "name"
+    ):
+        return toks[1][1][1:], toks[3][1]
+    return None
+
+
 class _TokCursor:
     """Token cursor of the pipeline and UNWIND-batch write parsers;
     ``what`` names the statement form in their syntax errors."""
@@ -370,250 +421,184 @@ class _TokCursor:
         self.pos += 1
         return self.toks[self.pos - 1]
 
+    def at(self, word: str) -> bool:
+        """Whether the next token is the keyword ``word``."""
+        t = self.peek()
+        return t[0] in ("name", "kw") and t[1].upper() == word
+
     def expect(self, text: str) -> None:
         t = self.nxt()
-        if t[1] != text:
+        if t[1] != text and not (t[0] == "name" and t[1].upper() == text):
             raise CypherSyntaxError(
                 f"{self.what}: expected {text!r}, got {t[1]!r}"
             )
 
-    def expr_tokens(self, stop) -> list:
-        """Raw token run up to a depth-0 closer, a depth-0 token
-        ``stop(kind, text)`` accepts, or eof. A token directly after
-        '.' is a PROPERTY ACCESS (``row.on``), never a break — the
-        prev-token guard is_cypher_write uses."""
-        out, depth = [], 0
+    def name(self, kind: str) -> str:
+        """A label / type / property name; keyword spellings allowed."""
+        t = self.nxt()
+        if t[0] not in ("name", "kw"):
+            raise CypherSyntaxError(
+                f"{self.what}: expected {kind}, got {t[1]!r}"
+            )
+        return t[2] if len(t) > 2 else t[1]
+
+    def end(self) -> None:
+        if self.peek()[0] != "eof":
+            raise CypherSyntaxError(
+                f"{self.what}: unexpected trailing input: {self.peek()[1]!r}"
+            )
+
+    def expr_tokens(self) -> list:
+        """Raw token run of one expression: up to a depth-0 ``,``, a
+        clause keyword (:func:`_scan`), a closer or eof."""
+        end = next(_scan(self.toks, self.pos, _CLAUSES | {","}))[0]
+        if end == self.pos:
+            raise CypherSyntaxError(f"{self.what}: empty expression")
+        run, self.pos = self.toks[self.pos:end], end
+        return run
+
+    def prop_map(self) -> list:
+        """``{k: expr, …}`` as ``[(key, run)]``; ``[]`` when absent."""
+        props: list = []
+        if self.peek()[1] != "{":
+            return props
+        self.nxt()
         while True:
-            kind, text = self.toks[self.pos][0], self.toks[self.pos][1]
-            if kind == "eof":
+            key = self.name("property name")
+            self.expect(":")
+            props.append((key, self.expr_tokens()))
+            if self.peek()[1] != ",":
                 break
-            if text in ("(", "[", "{"):
-                depth += 1
-            elif text in (")", "]", "}"):
-                if depth == 0:
-                    break
-                depth -= 1
-            elif depth == 0 and not (out and out[-1][1] == ".") and stop(
-                kind, text
-            ):
-                break
-            out.append(self.toks[self.pos])
-            self.pos += 1
-        if not out:
-            raise CypherSyntaxError(f"{self.what}: empty value expression")
-        return out
+            self.nxt()
+        self.expect("}")
+        return props
+
+    def node_pattern(self):
+        """``(var:L1:L2 {k: expr, …})`` as ``(var | None, labels,
+        [(key, run)])``."""
+        self.expect("(")
+        var = self.nxt()[1] if self.peek()[0] == "name" else None
+        labels = []
+        while self.peek()[1] == ":":
+            self.nxt()
+            labels.append(self.name("label name"))
+        props = self.prop_map()
+        self.expect(")")
+        return var, labels, props
+
+    def set_items(self, var: str, role: str, immutable=()) -> list:
+        """``var.p = expr, …`` as ``[(p, run)]``: every item targets
+        ``var`` (the form's ``role`` variable), none an ``immutable``
+        column."""
+        items = []
+        while True:
+            v = self.nxt()
+            if v[0] != "name" or v[1] != var:
+                raise CypherUnsupported(
+                    f"{self.what}: SET targets ONE {role} variable, "
+                    f"{var!r} (got {v[1]!r})"
+                )
+            self.expect(".")
+            prop = self.name("property name")
+            if prop in immutable:
+                raise CypherUnsupported(
+                    f"SET {var}.{prop}: the {prop} column is immutable"
+                )
+            self.expect("=")
+            items.append((prop, self.expr_tokens()))
+            if self.peek()[1] != ",":
+                return items
+            self.nxt()
+
+    def on_sets(self, var: str, role: str, immutable=()):
+        """MERGE's ``ON CREATE SET …`` / ``ON MATCH SET …`` sub-clauses
+        as ``(on_create, on_match)`` item lists."""
+        out: dict[str, list] = {"CREATE": [], "MATCH": []}
+        while self.at("ON"):
+            self.nxt()
+            which = self.nxt()[1].upper()
+            if which not in out:
+                raise CypherSyntaxError(
+                    f"{self.what}: expected CREATE or MATCH after ON, "
+                    f"got {which!r}"
+                )
+            self.expect("SET")
+            out[which] += self.set_items(var, role, immutable)
+        return out["CREATE"], out["MATCH"]
 
 
 def parse_pipeline_write(stmt: WriteStatement):
     """``MATCH … WITH <pipeline> SET n.p = expr`` / ``… DELETE n`` /
     ``… CREATE (:L {p: expr})`` — a write clause driven by a READ
     PIPELINE (r11): the canonical update-the-top-k / materialize-an-
-    aggregate idioms. Returns a spec for :func:`execute_pipeline_write`
-    or None when the statement has no depth-0 WITH before its first
-    depth-0 write verb (the plain write parser owns those).
+    aggregate idioms. Returns a spec for :func:`execute_pipeline_write`.
 
     The pipeline compiles here, at submit, through the graph's read
-    transpiler with synthesized RETURN items: the target ids and each
-    value in pipeline scope."""
-    spec = _pipeline_spec(stmt.head)
-    if spec is None:
-        return None
-    var = spec["var"]
-    if spec["kind"] == "set":
-        items = [f"{var}.ID AS __wid"] + [
-            f"({e}) AS __v{i}" for i, (_p, e) in enumerate(spec["sets"])
-        ]
-    elif spec["kind"] == "delete":
-        items = [f"{var}.ID AS __wid"]
-    else:
-        if stmt.ret is not None and not var:
-            raise CypherUnsupported(
-                "RETURN after a pipeline CREATE needs a named node variable"
-            )
-        items = [
-            f"({e}) AS __v{i}" for i, (_p, e) in enumerate(spec["props"])
-        ] or ["1 AS __one"]
-    read_q = spec["prefix"] + " RETURN " + ", ".join(items)
-    if stmt.params:
-        # write-path binding rule: $params inline as literals
-        read_q = render_write_params(read_q, stmt.params)
-    return {**spec, "frame_sql": stmt.compile_read(read_q), "ret": stmt.ret}
-
-
-def _pipeline_spec(query: str):
-    """The pipeline-write shape of :func:`parse_pipeline_write`, or
-    None.
-
-    The pipeline compiles through the READ transpiler with synthesized
-    RETURN items (the target ids and each value expression evaluated
-    in pipeline scope — aliases, aggregates, the carried node's own
-    properties all work), and the write applies as ONE set-based frame
-    op over the resulting id/value frame. Value expressions see the
-    PRE-statement state; a target id produced twice with differing
-    values takes an arbitrary row (documented — pipelines normally end
-    in per-node aggregation, which dedupes by construction)."""
-    toks = _tokenize(query)
-    if not (
-        toks
-        and toks[0][0] in ("name", "kw")
-        and toks[0][1].upper() == "MATCH"
-    ):
-        return None
-    depth, saw_with, verb_at, verb = 0, False, None, None
-    prev_tx = ""
-    for i, t in enumerate(toks):
-        tx = t[1]
-        if tx in ("(", "[", "{"):
-            depth += 1
-        elif tx in (")", "]", "}"):
-            depth -= 1
-        elif depth == 0 and prev_tx != "." and t[0] in ("name", "kw"):
-            up = tx.upper()
-            if up == "WITH":
-                saw_with = True
-            elif up in (
-                "SET", "DELETE", "DETACH", "CREATE", "MERGE", "REMOVE",
-                "FOREACH",
-            ):
-                verb_at, verb = i, up
-                break
-        prev_tx = tx
-    if verb_at is None or not saw_with:
-        return None
+    transpiler with synthesized RETURN items (the target ids and each
+    value expression evaluated in pipeline scope — aliases, aggregates,
+    the carried node's own properties all work), and the write applies
+    as ONE set-based frame op over the resulting id/value frame. Value
+    expressions see the PRE-statement state; a target id produced twice
+    with differing values takes an arbitrary row (documented —
+    pipelines normally end in per-node aggregation, which dedupes by
+    construction)."""
+    verb_at, verb = next(
+        (i, w) for i, w in stmt.clauses if w in _WRITE_VERBS
+    )
     if verb in ("MERGE", "REMOVE", "FOREACH"):
         raise CypherUnsupported(
             f"{verb} after a WITH pipeline is not supported (v1) — "
             "supported pipeline writes: SET, [DETACH] DELETE, CREATE"
         )
-    prefix = _render_tokens(toks[:verb_at])
-    cur = _TokCursor(toks, "pipeline write", verb_at)
-    peek, nxt, expect = cur.peek, cur.nxt, cur.expect
+    cur = _TokCursor(stmt.head, "pipeline write", verb_at + 1)
 
-    def expr_tokens() -> list:
-        return cur.expr_tokens(lambda kind, text: text == ",")
+    def text(run: list) -> str:
+        return _render_tokens(_bind_params(run, stmt.params))
 
     if verb == "SET":
-        nxt()
-        var, sets = None, []
-        while True:
-            v = nxt()
-            if v[0] != "name":
-                raise CypherSyntaxError(
-                    f"pipeline SET: expected a variable, got {v[1]!r}"
-                )
-            if var is None:
-                var = v[1]
-            elif v[1] != var:
-                raise CypherUnsupported(
-                    "pipeline SET targets ONE carried variable per "
-                    f"statement (got {var!r} and {v[1]!r})"
-                )
-            expect(".")
-            pt = nxt()
-            if pt[0] not in ("name", "kw"):
-                raise CypherSyntaxError("expected property name after '.'")
-            prop = pt[2] if len(pt) > 2 else pt[1]
-            if prop in ("ID", "LABELS"):
-                raise CypherUnsupported(
-                    f"SET {var}.{prop}: node identity/label columns "
-                    "are immutable"
-                )
-            expect("=")
-            run = expr_tokens()
-            _reject_aggregates(
-                _render_tokens(run), f"pipeline SET {var}.{prop}"
-            )
-            sets.append((prop, _render_tokens(run)))
-            if peek()[1] == ",":
-                nxt()
-                continue
-            break
-        if peek()[0] != "eof":
-            raise CypherSyntaxError(
-                f"pipeline write: unexpected trailing input: {peek()[1]!r}"
-            )
-        return {
-            "kind": "set",
-            "prefix": prefix,
-            "var": var,
-            "sets": sets,
-        }
-    if verb in ("DELETE", "DETACH"):
-        detach = verb == "DETACH"
-        nxt()
-        if detach:
-            t = nxt()
-            if not (t[0] in ("name", "kw") and t[1].upper() == "DELETE"):
-                raise CypherSyntaxError(
-                    f"expected DELETE after DETACH, got {t[1]!r}"
-                )
-        v = nxt()
+        var = cur.peek()[1]
+        sets = [
+            (p, text(run))
+            for p, run in cur.set_items(var, "carried", NodeField.RESERVED)
+        ]
+        for p, e in sets:
+            _reject_aggregates(e, f"pipeline SET {var}.{p}")
+        spec = {"kind": "set", "var": var, "sets": sets}
+        items = [f"{var}.ID AS __wid"] + [
+            f"({e}) AS __v{i}" for i, (_p, e) in enumerate(sets)
+        ]
+    elif verb in ("DELETE", "DETACH"):
+        if verb == "DETACH":
+            cur.expect("DELETE")
+        v = cur.nxt()
         if v[0] != "name":
             raise CypherSyntaxError(
                 f"pipeline DELETE: expected a variable, got {v[1]!r}"
             )
-        if peek()[0] != "eof":
-            raise CypherSyntaxError(
-                f"pipeline write: unexpected trailing input: {peek()[1]!r}"
+        spec = {"kind": "delete", "var": v[1], "detach": verb == "DETACH"}
+        items = [f"{v[1]}.ID AS __wid"]
+    else:  # CREATE: one node pattern per pipeline row
+        var, labels, props = cur.node_pattern()
+        if not labels:
+            raise CypherUnsupported("pipeline CREATE needs at least one label")
+        if cur.peek()[1] == ",":
+            raise CypherUnsupported(
+                "pipeline CREATE supports one node pattern per row (v1)"
             )
-        return {
-            "kind": "delete",
-            "prefix": prefix,
-            "var": v[1],
-            "detach": detach,
-        }
-    # CREATE: one node pattern per pipeline row
-    nxt()
-    expect("(")
-    cvar = None
-    if peek()[0] == "name":
-        cvar = nxt()[1]
-    labels = []
-    while peek()[1] == ":":
-        nxt()
-        lt = nxt()
-        if lt[0] not in ("name", "kw"):
-            raise CypherSyntaxError("expected label name")
-        labels.append(lt[2] if len(lt) > 2 else lt[1])
-    if not labels:
-        raise CypherUnsupported(
-            "pipeline CREATE needs at least one label"
-        )
-    props = []
-    if peek()[1] == "{":
-        nxt()
-        while True:
-            kt = nxt()
-            if kt[0] not in ("name", "kw"):
-                raise CypherSyntaxError("expected property name")
-            prop = kt[2] if len(kt) > 2 else kt[1]
-            expect(":")
-            run = expr_tokens()
-            _reject_aggregates(
-                _render_tokens(run), f"pipeline CREATE property {prop}"
+        if stmt.ret is not None and not var:
+            raise CypherUnsupported(
+                "RETURN after a pipeline CREATE needs a named node variable"
             )
-            props.append((prop, _render_tokens(run)))
-            if peek()[1] == ",":
-                nxt()
-                continue
-            break
-        expect("}")
-    expect(")")
-    if peek()[1] == ",":
-        raise CypherUnsupported(
-            "pipeline CREATE supports one node pattern per row (v1)"
-        )
-    if peek()[0] != "eof":
-        raise CypherSyntaxError(
-            f"pipeline write: unexpected trailing input: {peek()[1]!r}"
-        )
-    return {
-        "kind": "create",
-        "prefix": prefix,
-        "var": cvar,
-        "labels": labels,
-        "props": props,
-    }
+        props = [(p, text(run)) for p, run in props]
+        for p, e in props:
+            _reject_aggregates(e, f"pipeline CREATE property {p}")
+        spec = {"kind": "create", "var": var, "labels": labels, "props": props}
+        items = [
+            f"({e}) AS __v{i}" for i, (_p, e) in enumerate(props)
+        ] or ["1 AS __one"]
+    cur.end()
+    read_q = text(stmt.head[:verb_at]) + " RETURN " + ", ".join(items)
+    return {**spec, "frame_sql": stmt.compile_read(read_q), "ret": stmt.ret}
 
 
 def execute_pipeline_write(
@@ -805,37 +790,32 @@ def expand_unwind_batch(
     Returns ``(expanded_query, handled)``: ``handled`` False means the
     statement is not this shape (caller proceeds unchanged); an empty
     batch returns ``(None, True)`` — a no-op write. Node-rel chains
-    per row are supported (edge batches); MERGE per row is not (each
-    MERGE is its own existence probe — batch it client-side or use
-    CREATE + dedup)."""
-    m = re.match(
-        r"\s*UNWIND\s+\$([A-Za-z_][A-Za-z0-9_]*)\s+AS\s+"
-        r"([A-Za-z_][A-Za-z0-9_]*)\b",
-        query,
-        re.IGNORECASE,
-    )
-    if not m:
-        return query, False
-    pname, alias = m.group(1), m.group(2)
-    rest = query[m.end():]
-    batch = _batch_param(params, pname, alias)
-    # tokenize the remainder once, keeping offsets and raw spellings
-    toks: list[tuple[str, str, int, int]] = []
+    per row are supported (edge batches); an UNWIND head with another
+    verb raises (the batch MERGE / MATCH forms parse elsewhere)."""
+    # lex with whitespace kept: each instance re-emits the raw text
+    toks: list[tuple[str, str]] = []
     i = 0
-    while i < len(rest):
-        tm = _TOKEN_RE.match(rest, i)
+    while i < len(query):
+        tm = _TOKEN_RE.match(query, i)
         if not tm:
-            raise CypherSyntaxError(f"cannot tokenize at: {rest[i:i+20]!r}")
-        toks.append((tm.lastgroup, tm.group(), tm.start(), tm.end()))
+            raise CypherSyntaxError(f"cannot tokenize at: {query[i:i+20]!r}")
+        toks.append((tm.lastgroup, tm.group()))
         i = tm.end()
-    sig = [t for t in toks if t[0] != "ws"]
-    if not sig or sig[0][1].upper() != "CREATE":
-        verb = sig[0][1].upper() if sig else "<empty>"
+    sig_at = [j for j, t in enumerate(toks) if t[0] != "ws"]
+    head = _unwind_head([toks[j] for j in sig_at[:5]])
+    if head is None:
+        return query, False
+    pname, alias = head
+    batch = _batch_param(params, pname, alias)
+    verb = toks[sig_at[4]][1].upper()
+    if verb != "CREATE":
         raise CypherUnsupported(
-            f"UNWIND ${pname} AS {alias} {verb} …: only the CREATE "
-            "batch form is supported (per-row MERGE is an existence "
-            "probe each — dedup client-side or CREATE + dedup after)"
+            f"UNWIND ${pname} AS {alias} {verb} …: not a batch write "
+            "form (UNWIND … CREATE, UNWIND … MERGE (n:L {k: …}), UNWIND "
+            "… MATCH (…) SET / [DETACH] DELETE / CREATE / MERGE)"
         )
+    toks = toks[sig_at[3] + 1:]
+    sig = [t for t in toks if t[0] != "ws"]
     # pattern variables: a name right after '(' or '[' that is followed
     # by ':' / '{' / the closing bracket — uniquified per instance
     pat_vars: set[str] = set()
@@ -860,7 +840,7 @@ def expand_unwind_batch(
     next_sig_at: list[str] = [""] * len(toks)
     bdepth_at: list[int] = [0] * len(toks)
     prev, depth = "", 0
-    for j, (kind, text, _s, _e) in enumerate(toks):
+    for j, (kind, text) in enumerate(toks):
         bdepth_at[j] = depth
         prev_sig_at[j] = prev
         if kind != "ws":
@@ -875,11 +855,18 @@ def expand_unwind_batch(
         if toks[j][0] != "ws":
             nxt = toks[j][1]
 
+    def sig_after(j: int) -> int:
+        """Index of the first non-whitespace token after ``j``."""
+        j += 1
+        while j < len(toks) - 1 and toks[j][0] == "ws":
+            j += 1
+        return j
+
     def instance(elem, n: int, strip_create: bool) -> str:
         out: list[str] = []
         j = 0
         while j < len(toks):
-            kind, text, _s, _e = toks[j]
+            kind, text = toks[j]
             if strip_create and kind != "ws":
                 # drop this group's leading CREATE keyword (groups
                 # after the first join the head CREATE's pattern list)
@@ -897,22 +884,21 @@ def expand_unwind_batch(
             ):
                 # alias.key → the element's value; bare alias → the
                 # element itself (scalar batches)
-                k = j + 1
-                while k < len(toks) and toks[k][0] == "ws":
-                    k += 1
+                k = sig_after(j)
                 if (
                     k + 1 < len(toks)
                     and toks[k][1] == "."
-                    and toks[k + 1][0] in ("name", "kw")
+                    and toks[sig_after(k)][0] in ("name", "kw")
                 ):
-                    key = toks[k + 1][1]
+                    k = sig_after(k)
+                    key = toks[k][1]
                     if not isinstance(elem, dict):
                         raise CypherUnsupported(
                             f"{alias}.{key}: batch element {n} is not "
                             "a map"
                         )
                     out.append(_render_literal(elem.get(key)))
-                    j = k + 2
+                    j = k + 1
                     continue
                 if isinstance(elem, dict):
                     raise CypherUnsupported(
@@ -1005,16 +991,8 @@ def _batch_rewriter(
                     f"{ctx}: " + forbid_msg.replace("{var!r}", repr(text))
                 )
             if kind == "param":
-                # non-batch $params inline as literals (the write
-                # path's binding rule), token-level like
-                # render_write_params
-                name = text[1:]
-                if name not in params:
-                    raise CypherUnsupported(
-                        "write statement references unbound parameter "
-                        f"'${name}'"
-                    )
-                out.extend(_tokenize(_render_literal(params[name]))[:-1])
+                # non-batch $params inline as literals
+                out.extend(_bind_params(run[i:i + 1], params))
                 i += 1
                 continue
             out.append(run[i])
@@ -1039,8 +1017,7 @@ def parse_unwind_merge(stmt: WriteStatement):
     """``UNWIND $batch AS row MERGE (n:L {key: row.k, …}) [ON CREATE
     SET n.p = expr] [ON MATCH SET n.q = expr]`` — THE canonical Neo4j
     bulk-upsert idiom (r9 verdict #2). Returns a spec dict for
-    :func:`execute_unwind_merge`, or ``None`` when the statement is
-    not this shape (a CREATE batch, or not an UNWIND write at all).
+    :func:`execute_unwind_merge`.
 
     SET-BASED SEMANTICS (documented divergence from row-at-a-time
     Cypher, equal to it in every non-self-referential case): per
@@ -1057,111 +1034,34 @@ def parse_unwind_merge(stmt: WriteStatement):
 
     The batch is ONE inline-table frame (:func:`_batch_rows`), so there
     is no parse limit on batch size."""
-    query, params = stmt.head, stmt.params
-    m = re.match(
-        r"\s*UNWIND\s+\$([A-Za-z_]\w*)\s+AS\s+([A-Za-z_]\w*)\s+MERGE\b",
-        query,
-        re.IGNORECASE,
-    )
-    if not m:
-        return None
-    pname, alias = m.group(1), m.group(2)
-    batch = _batch_param(params, pname, alias)
-    toks = _tokenize(query[m.end():])
-    cur = _TokCursor(toks, "batch MERGE")
-    peek, nxt, expect = cur.peek, cur.nxt, cur.expect
-
-    def expr_tokens(stop_at_comma: bool) -> list:
-        """Raw token run up to a depth-0 ',' (when asked), a depth-0
-        closer, an ON keyword, or eof."""
-        return cur.expr_tokens(
-            lambda kind, text: (stop_at_comma and text == ",")
-            or (kind == "name" and text.upper() == "ON")
-        )
-
-    expect("(")
-    var = None
-    if peek()[0] == "name" and toks[cur.pos + 1][1] in (":", "{"):
-        var = nxt()[1]
-    labels: list[str] = []
-    while peek()[1] == ":":
-        nxt()
-        k, t = nxt()[0], toks[cur.pos - 1]
-        if k not in ("name", "kw"):
-            raise CypherSyntaxError("batch MERGE: expected label name")
-        labels.append(t[2] if len(t) > 2 else t[1])
+    batch = _batch_param(stmt.params, *stmt.unwind)
+    cur = _TokCursor(stmt.head, "batch MERGE", 5)
+    var, labels, key_props = cur.node_pattern()
     if not labels:
         raise CypherUnsupported("batch MERGE node needs at least one label")
-    key_props: list[tuple[str, list]] = []
-    if peek()[1] == "{":
-        nxt()
-        while True:
-            kt = nxt()
-            if kt[0] not in ("name", "kw"):
-                raise CypherSyntaxError("batch MERGE: expected property name")
-            prop = kt[2] if len(kt) > 2 else kt[1]
-            expect(":")
-            key_props.append((prop, expr_tokens(stop_at_comma=True)))
-            if peek()[1] == ",":
-                nxt()
-                continue
-            break
-        expect("}")
-    expect(")")
     if not key_props:
         raise CypherUnsupported(
             "batch MERGE needs at least one merge-key property "
             "(MERGE (n:L {key: row.k}))"
         )
-    if peek()[1] in ("-", "<-"):
+    if cur.peek()[1] in ("-", "<-"):
         raise CypherUnsupported(
             "batch relationship MERGE is not supported (v1) — merge the "
             "nodes in one batch, then CREATE/MERGE the edges per pair"
         )
-    on_create: list[tuple[str, list]] = []
-    on_match: list[tuple[str, list]] = []
-    while peek()[0] == "name" and peek()[1].upper() == "ON":
-        nxt()
-        which = nxt()[1].upper()
-        if which not in ("CREATE", "MATCH"):
-            raise CypherSyntaxError(
-                f"expected CREATE or MATCH after ON, got {which!r}"
-            )
-        expect("SET")
-        tgt = on_create if which == "CREATE" else on_match
-        while True:
-            v = nxt()
-            if v[0] != "name" or (var is not None and v[1] != var):
-                raise CypherUnsupported(
-                    f"ON {which} SET targets the merge variable "
-                    f"{var!r}, got {v[1]!r}"
-                )
-            if var is None:
-                raise CypherUnsupported(
-                    "name the merged node to use ON CREATE/ON MATCH SET"
-                )
-            expect(".")
-            pt = nxt()
-            if pt[0] not in ("name", "kw"):
-                raise CypherSyntaxError("expected property name after '.'")
-            prop = pt[2] if len(pt) > 2 else pt[1]
-            expect("=")
-            tgt.append((prop, expr_tokens(stop_at_comma=True)))
-            if peek()[1] == ",":
-                nxt()
-                continue
-            break
-    if peek()[0] != "eof":
-        raise CypherSyntaxError(
-            f"batch MERGE: unexpected trailing input: {peek()[1]!r}"
+    if cur.at("ON") and var is None:
+        raise CypherUnsupported(
+            "name the merged node to use ON CREATE/ON MATCH SET"
         )
+    on_create, on_match = cur.on_sets(var, "merge")
+    cur.end()
 
     # rewrite alias.key → __b_<key> across every expression, collecting
     # the referenced batch keys; bare alias / self-references checked
     keys_used: set[str] = set()
     rewrite = _batch_rewriter(
-        alias,
-        params,
+        stmt.unwind[1],
+        stmt.params,
         keys_used,
         forbidden=frozenset([var]) if var else frozenset(),
         forbid_msg=(
@@ -1180,56 +1080,17 @@ def parse_unwind_merge(stmt: WriteStatement):
         (p, rewrite(run, f"ON CREATE SET {var}.{p}"))
         for p, run in on_create
     ]
-    # ON MATCH values: plain (last-row-wins) or ADDITIVE FOLD
-    # (n.c = n.c + expr — r10 verdict #3: the canonical counter-upsert;
-    # sequential-equivalent as base + SUM(expr) per key)
-    om_entries: list[dict] = []
-    for p, run in on_match:
-        if var is not None and any(
-            t[0] == "name" and t[1] == var for t in run
-        ):
-            fold = _match_additive_fold(p, run, var)
-            if fold is None:
-                raise CypherUnsupported(
-                    f"ON MATCH SET {var}.{p}: only ADDITIVE "
-                    f"self-referencing folds ({var}.{p} = {var}.{p} + "
-                    f"expr, or coalesce({var}.{p}, init) + expr) are "
-                    "supported in the batch form; run a MATCH…SET "
-                    "after the batch for other shapes"
-                )
-            if p in key_names:
-                raise CypherUnsupported(
-                    f"ON MATCH SET {var}.{p}: a fold on a MERGE-KEY "
-                    "property would change the match identity "
-                    "mid-batch (later duplicate rows would CREATE in "
-                    "sequential Cypher) — not supported in the batch "
-                    "form"
-                )
-            init_run, sign, rest = fold
-            om_entries.append(
-                {
-                    "prop": p,
-                    "kind": "fold",
-                    "sign": sign,
-                    "init": (
-                        rewrite(init_run, f"ON MATCH SET {var}.{p} init")
-                        if init_run
-                        else None
-                    ),
-                    "rest": rewrite(rest, f"ON MATCH SET {var}.{p}"),
-                }
-            )
-        else:
-            om_entries.append(
-                {
-                    "prop": p,
-                    "kind": "value",
-                    "sql": rewrite(run, f"ON MATCH SET {var}.{p}"),
-                }
-            )
     # pattern keys win over ON CREATE values of the same property
     # (they define the merge identity — single-MERGE parity)
     oc_sqls = [(p, s) for p, s in oc_sqls if p not in key_names]
+    # ON MATCH values: plain (last-row-wins) or ADDITIVE FOLD
+    # (n.c = n.c + expr — r10 verdict #3: the canonical counter-upsert;
+    # sequential-equivalent as base + SUM(expr) per key)
+    om_entries = [
+        _set_entry(p, run, var, key_names, "MERGE-KEY", rewrite,
+                   f"ON MATCH SET {var}.{p}")
+        for p, run in on_match
+    ]
     if stmt.ret is not None and not var:
         raise CypherUnsupported(
             "RETURN after a batch MERGE needs a named node variable"
@@ -1243,6 +1104,37 @@ def parse_unwind_merge(stmt: WriteStatement):
         "on_match": om_entries,
         "b_rows": _batch_rows(batch, keys_used, "batch MERGE"),
         "n_rows": len(batch),
+    }
+
+
+def _set_entry(prop, run, var, key_names, key_kind, rewrite, ctx) -> dict:
+    """One batch ``SET`` / ``ON MATCH SET`` item as an executor entry:
+    a plain value (the last row per node wins) or, when the value reads
+    ``var``, an ADDITIVE self-referencing fold (``n.c = n.c + expr`` or
+    ``coalesce(n.c, init) + expr``, applied as base + SUM(expr) — the
+    rows' additions commute, so this equals row-by-row application)."""
+    if not any(t[0] == "name" and t[1] == var for t in run):
+        return {"prop": prop, "kind": "value", "sql": rewrite(run, ctx)}
+    fold = _match_additive_fold(prop, run, var)
+    if fold is None:
+        raise CypherUnsupported(
+            f"{ctx}: only ADDITIVE self-referencing folds ({var}.{prop} "
+            f"= {var}.{prop} + expr, or coalesce({var}.{prop}, init) + "
+            "expr) are supported in the batch form; run a plain "
+            "MATCH…SET for other shapes"
+        )
+    if prop in key_names:
+        raise CypherUnsupported(
+            f"{ctx}: a fold on a {key_kind} property would change the "
+            "match identity mid-batch — not supported in the batch form"
+        )
+    init_run, sign, rest = fold
+    return {
+        "prop": prop,
+        "kind": "fold",
+        "sign": sign,
+        "init": rewrite(init_run, f"{ctx} init") if init_run else None,
+        "rest": rewrite(rest, ctx),
     }
 
 
@@ -1296,22 +1188,21 @@ def _ids_return(spark, spec, ids=None, frame=None):
     )
 
 
-def validate_batch_rel_return(rvar: str | None, return_text: str) -> None:
-    """Submit-time contract for RETURN after a batch relationship
-    write (r10 verdict #4): a NAMED rel variable, and every property
-    access references it — same rule as the single-statement rel
-    RETURN."""
+def validate_rel_return(rvar: str | None, return_text: str) -> None:
+    """The contract of a RETURN after a relationship write (r10 verdict
+    #4): a NAMED rel variable, and every property access references it
+    — the affected-edge projection binds nothing else."""
     if not rvar:
         raise CypherUnsupported(
-            "RETURN after a batch relationship write needs a named "
-            "rel variable ((a)-[r:T]->(b) … RETURN r.prop)"
+            "RETURN after a relationship write needs a named rel "
+            "variable ((a)-[r:T]->(b) … RETURN r.prop)"
         )
     prev = ("", "")
     for t in _tokenize(return_text):
         if t[1] == "." and prev[0] in ("name", "kw") and prev[1] != rvar:
             raise CypherUnsupported(
-                "trailing RETURN items after a batch relationship "
-                f"write must reference only the rel variable {rvar!r} "
+                "trailing RETURN items after a relationship write must "
+                f"reference only the affected rel variable {rvar!r} "
                 f"(got {prev[1]!r})"
             )
         prev = (t[0], t[1])
@@ -1350,6 +1241,56 @@ def project_batch_rel_return(
             f"must reference only the rel variable {rvar!r}"
         )
     return spark.sql(ret_sql)
+
+
+def _entry_aggs(entries: list) -> list:
+    """The per-node aggregates of batch SET / ON MATCH entries
+    (:func:`_set_entry`) over their application rows: ``__v{i}``, a
+    plain value's LAST row (max_by over ``__ix`` — sequential parity)
+    or a fold's SUM of its per-row expr, and per fold ``__vn{i}``, 1
+    when any row's expr is NULL (NULL + x stays NULL in the sequential
+    run)."""
+    aggs = []
+    for i, e in enumerate(entries):
+        if e["kind"] == "value":
+            aggs.append(
+                F.max_by(F.expr(e["sql"]), F.col("__ix")).alias(f"__v{i}")
+            )
+            continue
+        rest = F.expr(e["rest"])
+        signed = -rest if e["sign"] == "-" else rest
+        aggs.append(F.sum(signed).alias(f"__v{i}"))
+        aggs.append(F.max(rest.isNull().cast("int")).alias(f"__vn{i}"))
+    return aggs
+
+
+def _apply_entries(joined: DataFrame, entries: list, fields: dict, matched):
+    """Write the aggregated entries (:func:`_entry_aggs`, joined onto
+    the node frame) into the ``matched`` rows: a value as is, a fold
+    as base + SUM (its ``init`` covering a NULL base); a property the
+    schema lacks widens it. Drops the aggregate columns."""
+    for i, e in enumerate(entries):
+        p = e["prop"]
+        if e["kind"] == "value":
+            val = F.col(f"__v{i}")
+        else:
+            base = F.col(p) if p in fields else F.lit(None)
+            if e["init"] is not None:
+                base = F.coalesce(base, F.expr(e["init"]))
+            val = F.when(F.col(f"__vn{i}") == 1, F.lit(None)).otherwise(
+                base + F.col(f"__v{i}")
+            )
+        if p in fields:
+            val = val.cast(fields[p])
+            joined = joined.withColumn(
+                p, F.when(matched, val).otherwise(F.col(p))
+            )
+        else:  # schema-widening SET
+            joined = joined.withColumn(p, F.when(matched, val))
+    return joined.drop(
+        *[f"__v{i}" for i in range(len(entries))],
+        *[f"__vn{i}" for i in range(len(entries))],
+    )
 
 
 def execute_unwind_merge(
@@ -1533,26 +1474,7 @@ def execute_unwind_merge(
         # A NULL expr on any application row nulls the fold result
         # (NULL + x = NULL forever in the sequential run).
         apps = Bk.join(creates.select("__ix"), "__ix", "left_anti")
-        aggs, fold_flags = [], []
-        for i, e in enumerate(om):
-            if e["kind"] == "value":
-                aggs.append(
-                    F.max_by(F.expr(e["sql"]), F.col("__ix")).alias(
-                        f"__v{i}"
-                    )
-                )
-            else:
-                rest = F.expr(e["rest"])
-                if e["sign"] == "-":
-                    rest = -rest
-                aggs.append(F.sum(rest).alias(f"__v{i}"))
-                aggs.append(
-                    F.max(
-                        F.expr(e["rest"]).isNull().cast("int")
-                    ).alias(f"__vn{i}")
-                )
-                fold_flags.append(f"__vn{i}")
-        upd = apps.groupBy(*kcols).agg(*aggs)
+        upd = apps.groupBy(*kcols).agg(*_entry_aggs(om))
         upd = _decimals_to_double(upd).localCheckpoint()
         n_upd = upd.count()
         if n_upd:
@@ -1569,31 +1491,8 @@ def execute_unwind_merge(
                     cond = F.lit(False)
             joined = tagged.join(upd, cond, "left")
             matched = F.col(kcols[0]).isNotNull()
-            for i, e in enumerate(om):
-                p = e["prop"]
-                if e["kind"] == "value":
-                    val = F.col(f"__v{i}")
-                else:
-                    base = (
-                        F.col(p) if p in nfields else F.lit(None)
-                    )
-                    if e["init"] is not None:
-                        base = F.coalesce(base, F.expr(e["init"]))
-                    val = F.when(
-                        F.col(f"__vn{i}") == 1, F.lit(None)
-                    ).otherwise(base + F.col(f"__v{i}"))
-                if p in nfields:
-                    val = val.cast(nfields[p])
-                    joined = joined.withColumn(
-                        p, F.when(matched, val).otherwise(F.col(p))
-                    )
-                else:  # widening ON MATCH prop
-                    joined = joined.withColumn(p, F.when(matched, val))
-            new_nodes = joined.drop(
-                "__lbl",
-                *kcols,
-                *[f"__v{i}" for i in range(len(om))],
-                *fold_flags,
+            new_nodes = _apply_entries(joined, om, nfields, matched).drop(
+                "__lbl", *kcols
             )
             n_props += n_upd * len(om)
     return (
@@ -1608,8 +1507,7 @@ def parse_unwind_rel(stmt: WriteStatement):
     """``UNWIND $batch AS row MATCH (a:L1 {k: row.x}), (b:L2 {k:
     row.y}) CREATE/MERGE (a)-[r:T {w: row.w}]->(b)`` — the canonical
     Neo4j bulk EDGE-load idiom, set-based. Returns a spec for
-    :func:`execute_unwind_rel`, or None when the statement is not this
-    shape.
+    :func:`execute_unwind_rel`.
 
     Semantics (documented): per batch row, each anchor resolves by
     label + property equality (a row matching several nodes on a side
@@ -1621,76 +1519,15 @@ def parse_unwind_rel(stmt: WriteStatement):
     already exist. ON CREATE/ON MATCH SET and trailing RETURN are v1
     refusals here. The batch is ONE inline-table frame
     (:func:`_batch_rows`), so there is no parse limit on batch size."""
-    query, params = stmt.head, stmt.params
-    m = re.match(
-        r"\s*UNWIND\s+\$([A-Za-z_]\w*)\s+AS\s+([A-Za-z_]\w*)\s+MATCH\b",
-        query,
-        re.IGNORECASE,
-    )
-    if not m:
-        return None
-    pname, alias = m.group(1), m.group(2)
-    toks = _tokenize(query[m.end():])
-    # cheap shape test BEFORE any param validation: the statement is
-    # ours only if a depth-0 CREATE/MERGE clause token follows the
-    # MATCH (batch SET/DELETE belongs to parse_unwind_node_write)
-    depth, is_rel_shape = 0, False
-    prev_tx = ""
-    for t in toks:
-        tx = t[1]
-        if tx in ("(", "[", "{"):
-            depth += 1
-        elif tx in (")", "]", "}"):
-            depth -= 1
-        elif (
-            depth == 0
-            and t[0] == "name"
-            and prev_tx not in (".", "AS", ":")
-            and tx.upper() in ("CREATE", "MERGE")
-        ):
-            is_rel_shape = True
-            break
-        prev_tx = tx
-    if not is_rel_shape:
-        return None
-    batch = _batch_param(params, pname, alias)
-    cur = _TokCursor(toks, "batch rel write")
-    peek, nxt, expect = cur.peek, cur.nxt, cur.expect
-
-    def expr_tokens() -> list:
-        return cur.expr_tokens(lambda kind, text: text == ",")
+    batch = _batch_param(stmt.params, *stmt.unwind)
+    cur = _TokCursor(stmt.head, "batch rel write", 5)
 
     def anchor():
-        expect("(")
-        vt = nxt()
-        if vt[0] != "name":
+        var, labels, props = cur.node_pattern()
+        if var is None:
             raise CypherSyntaxError(
                 "batch rel write: anchor patterns need a variable"
             )
-        var = vt[1]
-        labels = []
-        while peek()[1] == ":":
-            nxt()
-            lt = nxt()
-            if lt[0] not in ("name", "kw"):
-                raise CypherSyntaxError("expected label name")
-            labels.append(lt[2] if len(lt) > 2 else lt[1])
-        props = []
-        if peek()[1] == "{":
-            nxt()
-            while True:
-                kt = nxt()
-                if kt[0] not in ("name", "kw"):
-                    raise CypherSyntaxError("expected property name")
-                prop = kt[2] if len(kt) > 2 else kt[1]
-                expect(":")
-                props.append((prop, expr_tokens()))
-                if peek()[1] == ",":
-                    nxt()
-                    continue
-                break
-            expect("}")
-        expect(")")
         if not props:
             raise CypherUnsupported(
                 f"batch rel write: anchor ({var}…) needs at least one "
@@ -1699,86 +1536,47 @@ def parse_unwind_rel(stmt: WriteStatement):
         return var, labels, props
 
     a = anchor()
-    if peek()[0] == "kw" and peek()[1] == "WHERE":
+    if cur.at("WHERE"):
         raise CypherSyntaxError(
             "batch rel write: WHERE goes after the LAST anchor "
             "pattern (MATCH (a {…}), (b {…}) WHERE …)"
         )
-    expect(",")
+    cur.expect(",")
     b = anchor()
-    if peek()[1] == ",":
+    if cur.peek()[1] == ",":
         raise CypherUnsupported(
             "batch rel write supports exactly two anchor patterns (v1)"
         )
     where_run: list | None = None
-    if peek()[0] == "kw" and peek()[1] == "WHERE":
+    if cur.at("WHERE"):
         # r10 verdict #4: WHERE over the anchors' properties and/or
         # batch values — evaluated on the joined (batch row × a-match
         # × b-match) frame, before the edge write (Cypher order)
-        nxt()
-        where_run = []
-        wdepth = 0
-        while True:
-            kind, text = peek()[0], peek()[1]
-            if kind == "eof":
-                break
-            prev_dot = bool(where_run) and where_run[-1][1] == "."
-            if (
-                wdepth == 0
-                and not prev_dot
-                and kind == "name"
-                and text.upper() in ("CREATE", "MERGE")
-            ):
-                break
-            if text in ("(", "[", "{"):
-                wdepth += 1
-            elif text in (")", "]", "}"):
-                wdepth -= 1
-            where_run.append(nxt())
-            continue
-        if not where_run:
-            raise CypherSyntaxError("batch rel write: empty WHERE")
-    vt = nxt()
-    verb = vt[1].upper() if vt[0] in ("name", "kw") else ""
+        cur.nxt()
+        where_run = cur.expr_tokens()
+    verb = cur.nxt()[1].upper()
     if verb not in ("CREATE", "MERGE"):
         raise CypherSyntaxError(
-            f"batch rel write: expected CREATE or MERGE, got {vt[1]!r}"
+            f"batch rel write: expected CREATE or MERGE, got {verb!r}"
         )
-    expect("(")
-    e1 = nxt()[1]
-    expect(")")
-    d1 = nxt()[1]
+    cur.expect("(")
+    e1 = cur.nxt()[1]
+    cur.expect(")")
+    d1 = cur.nxt()[1]
     if d1 not in ("-", "<-"):
         raise CypherSyntaxError("expected a relationship pattern")
-    expect("[")
+    cur.expect("[")
     rvar = None
-    if peek()[0] == "name" and toks[cur.pos + 1][1] == ":":
-        rvar = nxt()[1]
-    expect(":")
-    tt = nxt()
-    if tt[0] not in ("name", "kw"):
-        raise CypherSyntaxError("expected relationship type")
-    rtype = tt[2] if len(tt) > 2 else tt[1]
-    rprops = []
-    if peek()[1] == "{":
-        nxt()
-        while True:
-            kt = nxt()
-            if kt[0] not in ("name", "kw"):
-                raise CypherSyntaxError("expected property name")
-            prop = kt[2] if len(kt) > 2 else kt[1]
-            expect(":")
-            rprops.append((prop, expr_tokens()))
-            if peek()[1] == ",":
-                nxt()
-                continue
-            break
-        expect("}")
-    expect("]")
-    d2 = nxt()[1]
-    expect("(")
-    e2 = nxt()[1]
-    expect(")")
+    if cur.peek()[0] == "name":
+        rvar = cur.nxt()[1]
+    cur.expect(":")
+    rtype = cur.name("relationship type")
+    rprops = cur.prop_map()
+    cur.expect("]")
+    d2 = cur.nxt()[1]
+    cur.expect("(")
+    e2 = cur.nxt()[1]
+    cur.expect(")")
     if d1 == "-" and d2 == "->":
         src_var, dst_var = e1, e2
     elif d1 == "<-" and d2 == "-":
@@ -1800,89 +1598,26 @@ def parse_unwind_rel(stmt: WriteStatement):
     # set-based: ON CREATE folds into the created rows (last row per
     # pair wins, like the pattern props), ON MATCH is one conditional
     # projection over the matched identities.
-    r_on_create: list[tuple[str, list]] = []
-    r_on_match: list[tuple[str, list]] = []
-    while peek()[0] == "name" and peek()[1].upper() == "ON":
-        if verb != "MERGE":
-            raise CypherSyntaxError(
-                "ON CREATE/ON MATCH SET is only valid after MERGE"
-            )
-        if rvar is None:
-            raise CypherUnsupported(
-                "name the merged relationship to use ON CREATE/ON "
-                "MATCH SET ((a)-[r:T]->(b) …)"
-            )
-        nxt()
-        wt = nxt()
-        which = wt[1].upper() if wt[0] in ("name", "kw") else ""
-        if which not in ("CREATE", "MATCH"):
-            raise CypherSyntaxError(
-                f"expected CREATE or MATCH after ON, got {wt[1]!r}"
-            )
-        st = nxt()
-        if not (st[0] in ("name", "kw") and st[1].upper() == "SET"):
-            raise CypherSyntaxError(
-                f"expected SET after ON {which}, got {st[1]!r}"
-            )
-        tgt = r_on_create if which == "CREATE" else r_on_match
-        while True:
-            v2 = nxt()
-            if v2[0] != "name" or v2[1] != rvar:
-                raise CypherUnsupported(
-                    f"ON {which} SET targets the merged rel variable "
-                    f"{rvar!r}, got {v2[1]!r}"
-                )
-            expect(".")
-            pt = nxt()
-            if pt[0] not in ("name", "kw"):
-                raise CypherSyntaxError("expected property name after '.'")
-            prop = pt[2] if len(pt) > 2 else pt[1]
-            if prop in RelField.RESERVED:
-                raise CypherUnsupported(
-                    f"ON {which} SET cannot modify the immutable "
-                    f"column {prop!r}"
-                )
-            expect("=")
-            run = []
-            depth = 0
-            while True:
-                kind, text = peek()[0], peek()[1]
-                if kind == "eof":
-                    break
-                prev_dot = bool(run) and run[-1][1] == "."
-                if text in ("(", "[", "{"):
-                    depth += 1
-                elif text in (")", "]", "}"):
-                    if depth == 0:
-                        break
-                    depth -= 1
-                elif depth == 0 and not prev_dot and (
-                    text == ","
-                    or (kind == "name" and text.upper() == "ON")
-                ):
-                    break
-                run.append(nxt())
-                continue
-            if not run:
-                raise CypherSyntaxError(
-                    f"ON {which} SET {rvar}.{prop}: empty value"
-                )
-            tgt.append((prop, run))
-            if peek()[1] == ",":
-                nxt()
-                continue
-            break
-    if peek()[0] != "eof":
+    if cur.at("ON") and verb != "MERGE":
         raise CypherSyntaxError(
-            f"batch rel write: unexpected trailing input: {peek()[1]!r}"
+            "ON CREATE/ON MATCH SET is only valid after MERGE"
         )
+    if cur.at("ON") and rvar is None:
+        raise CypherUnsupported(
+            "name the merged relationship to use ON CREATE/ON "
+            "MATCH SET ((a)-[r:T]->(b) …)"
+        )
+    r_on_create, r_on_match = cur.on_sets(
+        rvar, "merged rel", RelField.RESERVED
+    )
+    cur.end()
     keys_used: set[str] = set()
     forbidden = frozenset(
         v for v in (a[0], b[0], rvar) if v
     )
     rewrite = _batch_rewriter(
-        alias,
-        params,
+        stmt.unwind[1],
+        stmt.params,
         keys_used,
         forbidden=forbidden,
         forbid_msg=(
@@ -1944,8 +1679,8 @@ def parse_unwind_rel(stmt: WriteStatement):
             i += 1
         wprops = sorted(wseen)
         wrewrite = _batch_rewriter(
-            alias,
-            params,
+            stmt.unwind[1],
+            stmt.params,
             keys_used,
             forbidden=forbidden,
             forbid_msg=(
@@ -1957,7 +1692,7 @@ def parse_unwind_rel(stmt: WriteStatement):
         )
         where_sql = wrewrite(wtrans, "batch rel WHERE")
     if stmt.ret is not None:
-        validate_batch_rel_return(rvar, stmt.ret)
+        validate_rel_return(rvar, stmt.ret)
     return {
         "ret": stmt.ret,
         "op": "create_rel" if verb == "CREATE" else "merge_rel",
@@ -1978,9 +1713,7 @@ def parse_unwind_node_write(stmt: WriteStatement):
     """``UNWIND $batch AS row MATCH (n:L {k: row.k}) SET n.p = expr[,
     …]`` and ``… [DETACH] DELETE n`` — the batch UPDATE / DELETE-by-key
     idioms, set-based. Returns a spec for
-    :func:`execute_unwind_node_write`, or None when the statement is
-    not this shape (notably: a second anchor or a CREATE/MERGE verb —
-    those belong to the batch-rel path).
+    :func:`execute_unwind_node_write`.
 
     Semantics (documented): per batch row the anchor resolves by
     label + property equality (rows matching nothing drop silently —
@@ -1989,116 +1722,34 @@ def parse_unwind_node_write(stmt: WriteStatement):
     self-references refuse); DELETE removes every matched node, DETACH
     dropping incident edges first. The batch is ONE inline-table frame
     (:func:`_batch_rows`), so there is no parse limit on batch size."""
-    query, params = stmt.head, stmt.params
-    m = re.match(
-        r"\s*UNWIND\s+\$([A-Za-z_]\w*)\s+AS\s+([A-Za-z_]\w*)\s+MATCH\b",
-        query,
-        re.IGNORECASE,
-    )
-    if not m:
-        return None
-    pname, alias = m.group(1), m.group(2)
-    toks = _tokenize(query[m.end():])
-    # cheap shape test BEFORE any param validation: a single anchor
-    # followed by SET / [DETACH] DELETE at depth 0 — anything else
-    # (two anchors, CREATE/MERGE) is not ours
-    depth, verb_at, prev_tx = 0, None, ""
-    for i, t in enumerate(toks):
-        tx = t[1]
-        if tx in ("(", "[", "{"):
-            depth += 1
-        elif tx in (")", "]", "}"):
-            depth -= 1
-        elif (
-            depth == 0
-            and prev_tx != "."  # `n.set` is a property, not a verb
-            and t[0] == "name"
-            and tx.upper() in ("SET", "DELETE", "DETACH")
-        ):
-            verb_at = i
-            break
-        elif depth == 0 and prev_tx != "." and (
-            tx == "," or (t[0] == "name" and tx.upper() in ("CREATE", "MERGE"))
-        ):
-            return None
-        prev_tx = tx
-    if verb_at is None:
-        return None
-    batch = _batch_param(params, pname, alias)
-    cur = _TokCursor(toks, "batch node write")
-    peek, nxt, expect = cur.peek, cur.nxt, cur.expect
-
-    def expr_tokens() -> list:
-        return cur.expr_tokens(lambda kind, text: text == ",")
-
-    expect("(")
-    vt = nxt()
-    if vt[0] != "name":
+    batch = _batch_param(stmt.params, *stmt.unwind)
+    cur = _TokCursor(stmt.head, "batch node write", 5)
+    var, labels, props = cur.node_pattern()
+    if var is None:
         raise CypherSyntaxError("batch node write: anchor needs a variable")
-    var = vt[1]
-    labels = []
-    while peek()[1] == ":":
-        nxt()
-        lt = nxt()
-        if lt[0] not in ("name", "kw"):
-            raise CypherSyntaxError("expected label name")
-        labels.append(lt[2] if len(lt) > 2 else lt[1])
-    props = []
-    if peek()[1] == "{":
-        nxt()
-        while True:
-            kt = nxt()
-            if kt[0] not in ("name", "kw"):
-                raise CypherSyntaxError("expected property name")
-            prop = kt[2] if len(kt) > 2 else kt[1]
-            expect(":")
-            props.append((prop, expr_tokens()))
-            if peek()[1] == ",":
-                nxt()
-                continue
-            break
-        expect("}")
-    expect(")")
     if not props:
         raise CypherUnsupported(
             "batch node write: the anchor needs at least one key "
             "property to resolve against the batch"
         )
+    if cur.peek()[1] == ",":
+        raise CypherUnsupported(
+            "batch SET/DELETE supports exactly one anchor pattern (v1)"
+        )
     where_run = None
-    if peek()[0] == "kw" and peek()[1] == "WHERE":
+    if cur.at("WHERE"):
         # r10: WHERE over the anchor's properties and/or batch values —
         # evaluated on the joined (batch row × matched node) frame
-        nxt()
-        where_run = []
-        wdepth = 0
-        while True:
-            kind, text = peek()[0], peek()[1]
-            if kind == "eof":
-                break
-            # a clause keyword directly after '.' is a PROPERTY
-            # (``WHERE n.set = 9``), never the verb (r10 ADVICE)
-            prev_dot = bool(where_run) and where_run[-1][1] == "."
-            if wdepth == 0 and not prev_dot and (
-                kind == "name" and text.upper() in ("SET", "DELETE", "DETACH")
-            ):
-                break
-            if text in ("(", "[", "{"):
-                wdepth += 1
-            elif text in (")", "]", "}"):
-                wdepth -= 1
-            where_run.append(nxt())
-        if not where_run:
-            raise CypherSyntaxError("batch node write: empty WHERE")
-    vt = nxt()
-    verb = vt[1].upper()
-    detach = False
-    if verb == "DETACH":
-        detach = True
-        verb = nxt()[1].upper()
+        cur.nxt()
+        where_run = cur.expr_tokens()
+    verb = cur.nxt()[1].upper()
+    detach = verb == "DETACH"
+    if detach:
+        verb = cur.nxt()[1].upper()
     keys_used: set[str] = set()
     rewrite = _batch_rewriter(
-        alias,
-        params,
+        stmt.unwind[1],
+        stmt.params,
         keys_used,
         forbidden=frozenset([var]),
         forbid_msg=(
@@ -2107,76 +1758,16 @@ def parse_unwind_node_write(stmt: WriteStatement):
             "run a plain MATCH…SET instead"
         ),
     )
-    sets: list[tuple[str, str]] = []
+    sets: list[dict] = []
     if verb == "SET":
-        while True:
-            v2 = nxt()
-            if v2[0] != "name" or v2[1] != var:
-                raise CypherUnsupported(
-                    f"batch SET targets the matched variable {var!r}, "
-                    f"got {v2[1]!r}"
-                )
-            expect(".")
-            pt = nxt()
-            if pt[0] not in ("name", "kw"):
-                raise CypherSyntaxError("expected property name after '.'")
-            prop = pt[2] if len(pt) > 2 else pt[1]
-            if prop in ("ID", "LABELS"):
-                raise CypherUnsupported(
-                    f"SET {var}.{prop}: node identity/label columns "
-                    "are immutable"
-                )
-            expect("=")
-            run = expr_tokens()
-            if any(t[0] == "name" and t[1] == var for t in run):
-                # ADDITIVE self-referencing fold (r11 — the SET twin
-                # of the batch-MERGE ON MATCH fold): n.c = n.c + expr
-                # applies as base + SUM(expr) over the rows matching
-                # the node
-                fold = _match_additive_fold(prop, run, var)
-                if fold is None:
-                    raise CypherUnsupported(
-                        f"SET {var}.{prop}: only ADDITIVE "
-                        f"self-referencing folds ({var}.{prop} = "
-                        f"{var}.{prop} + expr, or "
-                        f"coalesce({var}.{prop}, init) + expr) are "
-                        "supported in the batch form; run a plain "
-                        "MATCH…SET instead"
-                    )
-                if any(p2 == prop for p2, _ in props):
-                    raise CypherUnsupported(
-                        f"SET {var}.{prop}: a fold on a match-key "
-                        "property would change the match identity "
-                        "mid-batch — not supported in the batch form"
-                    )
-                init_run, sign, rest = fold
-                sets.append(
-                    {
-                        "prop": prop,
-                        "kind": "fold",
-                        "sign": sign,
-                        "init": (
-                            rewrite(init_run, f"SET {var}.{prop} init")
-                            if init_run
-                            else None
-                        ),
-                        "rest": rewrite(rest, f"SET {var}.{prop}"),
-                    }
-                )
-            else:
-                sets.append(
-                    {
-                        "prop": prop,
-                        "kind": "value",
-                        "sql": rewrite(run, f"SET {var}.{prop}"),
-                    }
-                )
-            if peek()[1] == ",":
-                nxt()
-                continue
-            break
+        key_names = {p for p, _ in props}
+        sets = [
+            _set_entry(p, run, var, key_names, "match-key", rewrite,
+                       f"SET {var}.{p}")
+            for p, run in cur.set_items(var, "matched", NodeField.RESERVED)
+        ]
     elif verb == "DELETE":
-        v2 = nxt()
+        v2 = cur.nxt()
         if v2[0] != "name" or v2[1] != var:
             raise CypherUnsupported(
                 f"batch DELETE targets the matched variable {var!r}, "
@@ -2186,18 +1777,15 @@ def parse_unwind_node_write(stmt: WriteStatement):
         raise CypherSyntaxError(
             f"batch node write: expected SET or DELETE, got {verb!r}"
         )
-    if peek()[0] != "eof":
-        raise CypherSyntaxError(
-            f"batch node write: unexpected trailing input: {peek()[1]!r}"
-        )
+    cur.end()
     key_sqls = [
         (p, rewrite(run, f"match key {p}")) for p, run in props
     ]
     where_sql = None
     if where_run is not None:
         wrewrite = _batch_rewriter(
-            alias,
-            params,
+            stmt.unwind[1],
+            stmt.params,
             keys_used,
             strip_var=var,
             mode="expr",
@@ -2277,57 +1865,16 @@ def execute_unwind_node_write(
         # NULL fold expr on any row nulls the result (NULL + x = NULL
         # forever in the sequential run)
         sets = spec["sets"]
-        aggs, fold_flags = [], []
-        for i, e in enumerate(sets):
-            if e["kind"] == "value":
-                aggs.append(
-                    F.max_by(F.expr(e["sql"]), F.col("__ix")).alias(
-                        f"__v{i}"
-                    )
-                )
-            else:
-                rest = F.expr(e["rest"])
-                if e["sign"] == "-":
-                    rest = -rest
-                aggs.append(F.sum(rest).alias(f"__v{i}"))
-                aggs.append(
-                    F.max(
-                        F.expr(e["rest"]).isNull().cast("int")
-                    ).alias(f"__vn{i}")
-                )
-                fold_flags.append(f"__vn{i}")
         upd = joined0.groupBy(
             tagged[NodeField.ID].alias("__sid")
-        ).agg(*aggs)
+        ).agg(*_entry_aggs(sets))
         upd = _decimals_to_double(upd).localCheckpoint()
         n_set = upd.count()
         joined = nodes.join(
             upd, nodes[NodeField.ID] == upd["__sid"], "left"
         )
         matched = F.col("__sid").isNotNull()
-        for i, e in enumerate(sets):
-            p = e["prop"]
-            if e["kind"] == "value":
-                val = F.col(f"__v{i}")
-            else:
-                base = F.col(p) if p in nfields else F.lit(None)
-                if e["init"] is not None:
-                    base = F.coalesce(base, F.expr(e["init"]))
-                val = F.when(
-                    F.col(f"__vn{i}") == 1, F.lit(None)
-                ).otherwise(base + F.col(f"__v{i}"))
-            if p in nfields:
-                val = val.cast(nfields[p])
-                joined = joined.withColumn(
-                    p, F.when(matched, val).otherwise(F.col(p))
-                )
-            else:  # schema-widening batch SET
-                joined = joined.withColumn(p, F.when(matched, val))
-        out = joined.drop(
-            "__sid",
-            *[f"__v{i}" for i in range(len(sets))],
-            *fold_flags,
-        )
+        out = _apply_entries(joined, sets, nfields, matched).drop("__sid")
         return (
             out,
             rels,
@@ -2748,100 +2295,26 @@ def validate_trailing_return(
         )
 
 
-def split_trailing_return(query: str) -> tuple[str, str | None]:
-    """Split a write statement's trailing ``RETURN items [ORDER BY/
-    SKIP/LIMIT]`` clause off the raw text (Neo4j writes may project
-    their affected entities). The write subset has no other top-level
-    RETURN (no CALL { } / EXISTS { } in write clauses), so the FIRST
-    depth-0 RETURN token starts the clause. Returns ``(write_text,
-    return_text | None)`` — return_text includes the RETURN keyword."""
-    depth, i, prev = 0, 0, ""
-    while i < len(query):
-        m = _TOKEN_RE.match(query, i)
-        if not m:
-            raise CypherSyntaxError(
-                f"cannot tokenize at: {query[i:i+20]!r}"
-            )
-        text = m.group()
-        if m.lastgroup != "ws":
-            if text in ("(", "[", "{"):
-                depth += 1
-            elif text in (")", "]", "}"):
-                depth -= 1
-            elif (
-                depth == 0
-                and m.lastgroup == "kw"
-                and text.upper() == "RETURN"
-                # a RETURN directly after '.' is a property name
-                # (``SET n.return = 1``), not the clause keyword —
-                # the tokenizer deliberately allows keyword-looking
-                # identifiers in property position
-                and prev != "."
-            ):
-                return query[: m.start()].rstrip(), query[m.start():]
-            prev = text
-        i = m.end()
-    return query, None
-
-
 def is_cypher_write(query: str) -> bool:
-    """Cheap dispatch for the write subset: a leading CREATE/MERGE, or
-    a MATCH statement containing a top-level SET / [DETACH] DELETE
-    token (names directly after ``.`` are property accesses, not
-    clauses — ``n.set`` must not trigger)."""
+    """Cheap dispatch for the write subset: a statement led by CREATE,
+    MERGE, MATCH or an ``UNWIND $param AS alias`` head whose clauses
+    (:func:`_scan`) hold a write verb before any RETURN. The clause rule
+    keeps reads whose labels, types, keys or aliases are spelled like
+    a verb (``(n:Create)``, ``[:SET]``, ``{delete: 1}``, ``AS set``)
+    on the read path."""
     try:
         toks = _tokenize(query)
     except CypherSyntaxError:
         return False
-    if not toks:
+    if toks[0][1].upper() not in ("CREATE", "MERGE", "MATCH") and (
+        _unwind_head(toks) is None
+    ):
         return False
-    first = toks[0][1].upper()
-    if first in ("CREATE", "MERGE"):
-        return True
-    if first == "UNWIND":
-        # only the bulk-write HEAD shapes route to the write path:
-        # `UNWIND $param AS alias CREATE/MERGE …` (node batches) and
-        # `UNWIND $param AS alias MATCH … CREATE/MERGE …` (edge
-        # batches — the CREATE/MERGE clause token must come BEFORE any
-        # top-level RETURN, so reads whose text merely contains the
-        # word (`RETURN x AS create`) never misroute).
-        if not (
-            len(toks) >= 5
-            and toks[1][0] == "param"
-            and toks[2][1].upper() == "AS"
-            and toks[3][0] in ("name", "kw")
-        ):
+    for _i, word in _scan(toks):
+        if word == "RETURN":
             return False
-        if toks[4][1].upper() in ("CREATE", "MERGE"):
+        if word in _WRITE_VERBS:
             return True
-        if toks[4][1].upper() != "MATCH":
-            return False
-        prev_text = ""
-        for kind, text in ((tt[0], tt[1]) for tt in toks[5:]):
-            if kind == "kw" and text == "RETURN":
-                return False
-            if (
-                kind == "name"
-                # not a property access (.create), alias (AS create),
-                # or label/type (:Create) spelled like the verb
-                and prev_text not in (".", "AS", ":")
-                and text.upper()
-                in ("CREATE", "MERGE", "SET", "DELETE", "DETACH")
-            ):
-                return True
-            prev_text = text
-        return False
-    if first != "MATCH":
-        return False
-    prev_text = ""
-    for kind, text in ((tt[0], tt[1]) for tt in toks):
-        if (
-            kind in ("name", "kw")
-            and prev_text != "."
-            and text.upper() in _WRITE_WORDS
-        ):
-            return True
-        prev_text = text
     return False
 
 
@@ -2858,7 +2331,60 @@ class _WriteParser(_Parser):
 
     Undirected/varlength CREATE relationships and multi-variable SET
     targets are rejected with explicit errors rather than silently
-    mis-executed."""
+    mis-executed. Parses an already-tokenized statement."""
+
+    def __init__(self, toks: list):
+        super().__init__("")
+        self.toks = toks
+
+    def _end(self) -> None:
+        if self.peek()[0] != "eof":
+            raise CypherSyntaxError(
+                f"unexpected trailing input: {self.peek()[1]!r}"
+            )
+
+    def _on_sets(self, var: str, role: str):
+        """MERGE's ``ON CREATE SET …`` / ``ON MATCH SET …`` sub-clauses
+        as ``(on_create, on_match)`` ``[(prop, value)]`` lists, every
+        item targeting ``var`` (the merged ``role``)."""
+        on: dict[str, list] = {"CREATE": [], "MATCH": []}
+        while self.peek()[1].upper() == "ON":
+            self.next()
+            which = self.next()[1].upper()
+            if which not in on:
+                raise CypherSyntaxError(
+                    f"expected CREATE or MATCH after ON, got {which!r}"
+                )
+            self.expect("SET")
+            while True:
+                v = self.expect_name()
+                if v != var:
+                    raise CypherUnsupported(
+                        f"ON {which} SET targets the {role} {var!r}, "
+                        f"got {v!r}"
+                    )
+                self.expect(".")
+                prop = self.expect_name(kw_ok=True)
+                self.expect("=")
+                on[which].append((prop, self.value()))
+                if not self.accept(","):
+                    break
+        return on["CREATE"], on["MATCH"]
+
+    def _set_map(self, var: str) -> list:
+        """The ``{k: expr, …}`` of ``SET var = {…}`` / ``SET var +=
+        {…}`` as ``[(var, k, value)]``, ending the statement."""
+        self.expect("{")
+        sets = []
+        while True:
+            prop = self.expect_name(kw_ok=True)
+            self.expect(":")
+            sets.append((var, prop, self.value()))
+            if not self.accept(","):
+                break
+        self.expect("}")
+        self._end()
+        return sets
 
     def parse_write(self) -> dict:
         t = self.peek()[1].upper()
@@ -2873,6 +2399,21 @@ class _WriteParser(_Parser):
             # first occurrence's node
             var_ix = {pats[0].var: 0}
             cur = 0
+
+            def place(n) -> int:
+                """The pattern index of ``n``: a repeated variable is
+                its first occurrence's node."""
+                if n.var in var_ix:
+                    if n.labels or n.props:
+                        raise CypherUnsupported(
+                            f"repeated CREATE variable {n.var!r} cannot "
+                            "redeclare labels/properties"
+                        )
+                else:
+                    var_ix[n.var] = len(pats)
+                    pats.append(n)
+                return var_ix[n.var]
+
             while True:
                 while t == "CREATE" and self.peek()[1] in ("-", "<-"):
                     r = self.rel()
@@ -2889,75 +2430,28 @@ class _WriteParser(_Parser):
                         raise CypherUnsupported(
                             "CREATE relationship must be directed (-> or <-)"
                         )
-                    if n.var in var_ix:
-                        if n.labels or n.props:
-                            raise CypherUnsupported(
-                                f"repeated CREATE variable {n.var!r} cannot "
-                                "redeclare labels/properties"
-                            )
-                        ti = var_ix[n.var]
-                    else:
-                        var_ix[n.var] = len(pats)
-                        pats.append(n)
-                        ti = var_ix[n.var]
-                    si = cur
+                    si, ti = cur, place(n)
+                    cur = ti
                     if r.direction == "<-":
                         si, ti = ti, si
                     chain_rels.append((si, ti, r))
-                    cur = var_ix[n.var]
                 if not self.accept(","):
                     break
-                n = self.node()
-                if n.var in var_ix:
-                    if n.labels or n.props:
-                        raise CypherUnsupported(
-                            f"repeated CREATE variable {n.var!r} cannot "
-                            "redeclare labels/properties"
-                        )
-                else:
-                    var_ix[n.var] = len(pats)
-                    pats.append(n)
-                cur = var_ix[n.var]
+                cur = place(self.node())
             if t == "MERGE" and len(pats) != 1:
                 raise CypherUnsupported("MERGE takes exactly one node pattern")
-            on_create: list[tuple[str, str]] = []
-            on_match: list[tuple[str, str]] = []
-            while self.peek()[1].upper() == "ON":
-                # ON CREATE SET / ON MATCH SET sub-clauses (MERGE only)
-                if t != "MERGE":
-                    raise CypherUnsupported("ON CREATE/ON MATCH is MERGE-only")
-                self.next()
-                kind2, which = self.next()
-                which = which.upper()
-                if which not in ("CREATE", "MATCH"):
-                    raise CypherSyntaxError(
-                        f"expected CREATE or MATCH after ON, got {which!r}"
-                    )
-                self.expect("SET")
-                target = on_create if which == "CREATE" else on_match
-                while True:
-                    var = self.expect_name()
-                    if var != pats[0].var:
-                        raise CypherUnsupported(
-                            f"ON {which} SET targets the merge variable "
-                            f"{pats[0].var!r}, got {var!r}"
-                        )
-                    self.expect(".")
-                    prop = self.expect_name(kw_ok=True)
-                    self.expect("=")
-                    # r9: full expressions (ON MATCH SET n.hits =
-                    # coalesce(n.hits, 0) + 1 — the counter idiom);
-                    # the executor strips the merge-var prefix so the
-                    # expression evaluates over the node frame's own
-                    # columns. ON CREATE self-references are rejected
-                    # at execution (the node doesn't exist yet).
-                    target.append((prop, self.value()))
-                    if not self.accept(","):
-                        break
-            if self.peek()[0] != "eof":
-                raise CypherSyntaxError(
-                    f"unexpected trailing input: {self.peek()[1]!r}"
-                )
+            # ON CREATE SET / ON MATCH SET sub-clauses (MERGE only).
+            # r9: full expressions (ON MATCH SET n.hits = coalesce(
+            # n.hits, 0) + 1 — the counter idiom); the executor strips
+            # the merge-var prefix so the expression evaluates over the
+            # node frame's own columns. ON CREATE self-references are
+            # rejected at execution (the node doesn't exist yet).
+            if t != "MERGE" and self.peek()[1].upper() == "ON":
+                raise CypherUnsupported("ON CREATE/ON MATCH is MERGE-only")
+            on_create, on_match = self._on_sets(
+                pats[0].var, "merge variable"
+            )
+            self._end()
             for p in pats:
                 if not p.labels:
                     raise CypherUnsupported(
@@ -3002,10 +2496,7 @@ class _WriteParser(_Parser):
                 labels = []
                 while self.accept(":"):
                     labels.append(self.expect_name(kw_ok=True))
-                if self.peek()[0] != "eof":
-                    raise CypherSyntaxError(
-                        f"unexpected trailing input: {self.peek()[1]!r}"
-                    )
+                self._end()
                 if var not in {n.var for n in nodes}:
                     raise CypherSyntaxError(
                         f"REMOVE target {var!r} is not bound"
@@ -3020,10 +2511,7 @@ class _WriteParser(_Parser):
                 if not self.accept(","):
                     break
                 var = self.expect_name()
-            if self.peek()[0] != "eof":
-                raise CypherSyntaxError(
-                    f"unexpected trailing input: {self.peek()[1]!r}"
-                )
+            self._end()
             tvars = {v for v, _, _ in sets}
             if len(tvars) != 1:
                 raise CypherUnsupported(
@@ -3052,45 +2540,21 @@ class _WriteParser(_Parser):
             self.expect(")")
             # r9: MERGE …-[r:T]->… ON CREATE SET r.p = v / ON MATCH
             # SET r.p = v — the rel twin of node-MERGE's sub-clauses
-            r_on_create: list[tuple[str, str]] = []
-            r_on_match: list[tuple[str, str]] = []
-            while self.peek()[1].upper() == "ON":
+            if self.peek()[1].upper() == "ON":
                 if t != "MERGE":
                     raise CypherUnsupported("ON CREATE/ON MATCH is MERGE-only")
-                self.next()
-                _k2, which = self.next()
-                which = which.upper()
-                if which not in ("CREATE", "MATCH"):
-                    raise CypherSyntaxError(
-                        f"expected CREATE or MATCH after ON, got {which!r}"
-                    )
-                self.expect("SET")
-                tgt = r_on_create if which == "CREATE" else r_on_match
                 if not r.var:
                     raise CypherUnsupported(
                         "name the merged relationship to use ON "
                         "CREATE/ON MATCH SET (MERGE (a)-[r:T]->(b) …)"
                     )
-                while True:
-                    var = self.expect_name()
-                    if var != r.var:
-                        raise CypherUnsupported(
-                            f"ON {which} SET targets the merged "
-                            f"relationship variable {r.var!r}, got {var!r}"
-                        )
-                    self.expect(".")
-                    prop = self.expect_name(kw_ok=True)
-                    self.expect("=")
-                    tgt.append((prop, self.value()))
-                    if not self.accept(","):
-                        break
-                _check_rel_set_props(
-                    [(r.var, p, e) for p, e in r_on_create + r_on_match]
-                )
-            if self.peek()[0] != "eof":
-                raise CypherSyntaxError(
-                    f"unexpected trailing input: {self.peek()[1]!r}"
-                )
+            r_on_create, r_on_match = self._on_sets(
+                r.var, "merged relationship variable"
+            )
+            _check_rel_set_props(
+                [(r.var, p, e) for p, e in r_on_create + r_on_match]
+            )
+            self._end()
             if a not in bound or b not in bound:
                 raise CypherSyntaxError(
                     f"CREATE relationship endpoints {a!r}/{b!r} must be "
@@ -3157,10 +2621,7 @@ class _WriteParser(_Parser):
                     if not self.accept(","):
                         break
                 self.expect(")")
-                if self.peek()[0] != "eof":
-                    raise CypherSyntaxError(
-                        f"unexpected trailing input: {self.peek()[1]!r}"
-                    )
+                self._end()
                 return out
 
             bound_vars = {n.var for n in nodes}
@@ -3290,74 +2751,34 @@ class _WriteParser(_Parser):
                 labels = []
                 while self.accept(":"):
                     labels.append(self.expect_name(kw_ok=True))
-                if self.peek()[0] != "eof":
-                    raise CypherSyntaxError(
-                        f"unexpected trailing input: {self.peek()[1]!r}"
-                    )
+                self._end()
                 if var not in {n.var for n in nodes}:
                     raise CypherSyntaxError(f"SET target {var!r} is not bound")
                 return {**base, "op": "label", "add": True, "var": var,
                         "labels": labels}
-            if (
-                self.peek()[1] == "="
-                and self.toks[self.pos + 1][1] == "{"
-            ):
-                # r9: SET n = {map} — openCypher REPLACE semantics:
-                # the listed keys set, every OTHER property of the
-                # matched entity nulls out
+            # r9: SET n = {map} — openCypher REPLACE semantics (the
+            # listed keys set, every OTHER property of the matched
+            # entity nulls out); SET n += {map} — map-merge (each key
+            # updates/creates that property, the rest keep their
+            # values: exactly a multi-prop SET). Either on a node or
+            # (r9) a relationship variable.
+            replace = (
+                self.peek()[1] == "=" and self.toks[self.pos + 1][1] == "{"
+            )
+            if replace or self.peek()[1] == "+":
                 self.next()
-                self.expect("{")
-                sets = []
-                while True:
-                    prop = self.expect_name(kw_ok=True)
-                    self.expect(":")
-                    sets.append((var, prop, self.value()))
-                    if not self.accept(","):
-                        break
-                self.expect("}")
-                if self.peek()[0] != "eof":
-                    raise CypherSyntaxError(
-                        f"unexpected trailing input: {self.peek()[1]!r}"
-                    )
+                if not replace:
+                    self.expect("=")
+                sets = self._set_map(var)
+                flag = {"replace": True} if replace else {}
                 if var in {r.var for r in rels if r.var}:
                     _check_rel_set_props(sets)
-                    return {
-                        **base, "op": "set_rel", "sets": sets,
-                        "replace": True,
-                    }
+                    return {**base, "op": "set_rel", "sets": sets, **flag}
                 if var not in {n.var for n in nodes}:
                     raise CypherSyntaxError(
                         f"SET target {var!r} is not bound"
                     )
-                return {**base, "op": "set", "sets": sets, "replace": True}
-            if self.peek()[1] == "+":
-                # SET n += {k: v, …} — openCypher map-merge: each key
-                # updates/creates that property, keys absent from the
-                # map keep their values. Exactly a multi-prop SET.
-                self.next()
-                self.expect("=")
-                self.expect("{")
-                sets = []
-                while True:
-                    prop = self.expect_name(kw_ok=True)
-                    self.expect(":")
-                    sets.append((var, prop, self.value()))
-                    if not self.accept(","):
-                        break
-                self.expect("}")
-                if self.peek()[0] != "eof":
-                    raise CypherSyntaxError(
-                        f"unexpected trailing input: {self.peek()[1]!r}"
-                    )
-                if var in {r.var for r in rels if r.var}:
-                    # r9: SET r += {map} on a relationship variable
-                    _check_rel_set_props(sets)
-                    return {**base, "op": "set_rel", "sets": sets}
-                if var not in {n.var for n in nodes}:
-                    raise CypherSyntaxError(
-                        f"SET target {var!r} is not bound"
-                    )
-                return {**base, "op": "set", "sets": sets}
+                return {**base, "op": "set", "sets": sets, **flag}
             sets: list[tuple[str, str, str]] = []
             while True:
                 self.expect(".")
@@ -3367,10 +2788,7 @@ class _WriteParser(_Parser):
                 if not self.accept(","):
                     break
                 var = self.expect_name()
-            if self.peek()[0] != "eof":
-                raise CypherSyntaxError(
-                    f"unexpected trailing input: {self.peek()[1]!r}"
-                )
+            self._end()
             tvars = {v for v, _, _ in sets}
             rvset = {r.var for r in rels if r.var}
             nvset = {n.var for n in nodes}
@@ -3416,10 +2834,7 @@ class _WriteParser(_Parser):
             t = tok.upper() if kind == "name" else tok
         if t == "DELETE":
             var = self.expect_name()
-            if self.peek()[0] != "eof":
-                raise CypherSyntaxError(
-                    f"unexpected trailing input: {self.peek()[1]!r}"
-                )
+            self._end()
             if var in {r.var for r in rels if r.var}:
                 # relationship delete: matched edges drop by their
                 # (src, dst, type) triple — parallel edges sharing the
@@ -3580,42 +2995,39 @@ def parse_statement(stmt: WriteStatement) -> dict:
     forms leave: CREATE / MERGE / MATCH…SET / REMOVE / [DETACH] DELETE,
     and ``UNWIND $batch AS row CREATE …``, expanded here to ONE
     multi-pattern CREATE (:func:`expand_unwind_batch`; an empty batch
-    is a zero-counter no-op, spec ``query`` None). Parse-as-validation
-    (CypherMessage.java:36-52 parity): syntax errors, aggregate-valued
-    writes and op-incompatible trailing RETURNs all raise here, at
-    submit (the RETURN's items still compile in the job through the
-    read transpiler)."""
-    query, ret, batch_var = stmt.head, stmt.ret, None
-    expanded, batch_handled = expand_unwind_batch(query, stmt.params)
-    if batch_handled:
+    is a zero-counter no-op, spec ``ast`` None). Parse-as-validation
+    (CypherMessage.java:36-52 parity): syntax errors, unbound
+    parameters, aggregate-valued writes and op-incompatible trailing
+    RETURNs all raise here, at submit; the job executes this AST (the
+    RETURN's items still compile in the job through the read
+    transpiler)."""
+    toks, batch_var = stmt.head, None
+    if stmt.unwind is not None:
         # the RETURN (if any) references the PRE-uniquify pattern
-        # variable — capture it before the expansion renames
-        m_bv = re.search(
-            r"CREATE\s*\(\s*([A-Za-z_]\w*)\s*[:{]", query, re.IGNORECASE
-        )
-        batch_var = m_bv.group(1) if m_bv else None
-        if ret is not None and batch_var is None:
+        # variable: the one the head's CREATE names, `CREATE (n:L …`
+        if toks[5][1] == "(" and toks[6][0] == "name" and (
+            toks[7][1] in (":", "{")
+        ):
+            batch_var = toks[6][1]
+        if stmt.ret is not None and batch_var is None:
             raise CypherUnsupported(
                 "RETURN after a batch CREATE needs a named node variable"
             )
+        expanded, _ = expand_unwind_batch(
+            _render_tokens(toks[:-1]), stmt.params
+        )
         if expanded is None:
-            return {"query": None, "ret": ret, "var": batch_var}
-    query = expanded
-    if stmt.params:
-        # write clauses bind $params by literal inlining (reads bind
-        # through Spark's named-parameter channel, but the write path
-        # builds frames, not one SQL statement); token-level so $n
-        # never clobbers $name and string-literal '$…' text survives.
-        # After a batch expansion the consumed $batch marker is gone,
-        # so leftover params are harmless.
-        query = render_write_params(query, stmt.params)
-        if ret is not None:
-            ret = render_write_params(ret, stmt.params)
-    ast = _WriteParser(query).parse_write()
+            return {"ast": None, "ret": stmt.ret, "var": batch_var}
+        toks = _tokenize(expanded)
+    # $params bind by literal inlining; after a batch expansion the
+    # consumed $batch marker is gone, so leftover params are harmless
+    ast = _WriteParser(_bind_params(toks, stmt.params)).parse_write()
     _reject_aggregates_in_ast(ast)
-    if ret is not None:
-        validate_trailing_return(ast, batch_var=batch_var, return_text=ret)
-    return {"query": query, "ret": ret, "var": batch_var, "views": stmt.views}
+    if stmt.ret is not None:
+        validate_trailing_return(
+            ast, batch_var=batch_var, return_text=stmt.ret
+        )
+    return {"ast": ast, "ret": stmt.ret, "var": batch_var, "views": stmt.views}
 
 
 def execute_cypher_write(
@@ -3631,13 +3043,12 @@ def execute_cypher_write(
     variable required), and after [DETACH] DELETE (pre-delete values).
     Items compile through the read transpiler, so aggregates /
     ORDER BY / LIMIT work everywhere."""
-    query, ret_text = spec["query"], spec["ret"]
-    if query is None:  # empty batch CREATE
+    ast, ret_text = spec["ast"], spec["ret"]
+    if ast is None:  # empty batch CREATE
         return nodes, rels, _summary(spark, "create"), _ids_return(spark, spec)
-    nodes_view, rels_view = spec["views"]
     aff_out: dict = {}
     new_nodes, new_rels, summ = _execute_write(
-        spark, nodes, rels, query, nodes_view, rels_view,
+        spark, nodes, rels, ast, spec["views"],
         aff_out=aff_out if ret_text is not None else None,
     )
     if ret_text is None:
@@ -3645,8 +3056,8 @@ def execute_cypher_write(
 
     def ret(post_nodes, post_rels):
         return _trailing_return_result(
-            spark, nodes, post_nodes, query, ret_text, nodes_view,
-            rels_view, pre_rels=rels, post_rels=post_rels,
+            spark, nodes, post_nodes, ast, ret_text, spec["views"],
+            pre_rels=rels, post_rels=post_rels,
             affected_rels=aff_out.get("rels"), batch_var=spec["var"],
             var_ids=aff_out.get("create_var_ids"),
         )
@@ -3658,10 +3069,9 @@ def _trailing_return_result(
     spark: SparkSession,
     pre_nodes: DataFrame,
     post_nodes: DataFrame,
-    write_text: str,
+    ast: dict,
     return_text: str,
-    nodes_view: str,
-    rels_view: str,
+    views: tuple[str, str],
     pre_rels: DataFrame | None = None,
     post_rels: DataFrame | None = None,
     affected_rels: DataFrame | None = None,
@@ -3678,11 +3088,7 @@ def _trailing_return_result(
     affected variable raises."""
     from neo4j_arrow_spark.cypher import cypher_to_sql
 
-    parser = _WriteParser(write_text)
-    ast = parser.parse_write()
-    validate_trailing_return(
-        ast, batch_var=batch_var, return_text=return_text
-    )
+    nodes_view, rels_view = views
     op = ast["op"]
     if op == "set":
         var = ast["sets"][0][0]
@@ -3761,27 +3167,7 @@ def _trailing_return_result(
         # one per DISTINCT endpoint pair — the documented create_rel
         # multiplicity).
         rvar = ast.get("rvar") if op != "delete_rel" else ast["var"]
-        if not rvar:
-            raise CypherUnsupported(
-                "RETURN after CREATE/MERGE relationship needs a named "
-                "rel variable ((a)-[r:T]->(b) … RETURN r.prop)"
-            )
-        # property accesses on anything but the rel variable have no
-        # binding in the affected-edge projection — refuse by name
-        # instead of letting the analyzer fail on a synthesized alias
-        prev = ("", "")
-        for t in _tokenize(return_text):
-            if (
-                t[1] == "."
-                and prev[0] in ("name", "kw")
-                and prev[1] != rvar
-            ):
-                raise CypherUnsupported(
-                    "trailing RETURN items after a relationship "
-                    "CREATE/MERGE must reference only the affected "
-                    f"rel variable {rvar!r} (got {prev[1]!r})"
-                )
-            prev = (t[0], t[1])
+        validate_rel_return(rvar, return_text)
         assert affected_rels is not None
         affected_rels.createOrReplaceTempView("__wret_arels")
         ret_sql = cypher_to_sql(
@@ -3900,27 +3286,18 @@ def _execute_write(
     spark: SparkSession,
     nodes: DataFrame,
     rels: DataFrame | None,
-    query: str,
-    nodes_view: str,
-    rels_view: str,
+    ast: dict,
+    views: tuple[str, str],
     aff_out: dict | None = None,
-    ast_override: dict | None = None,
 ) -> tuple[DataFrame, DataFrame | None, DataFrame]:
-    """``aff_out`` (when given) receives ``{"rels": frame}`` for
+    """Execute a general write AST (:func:`parse_statement`) over the
+    graph's frames; ``views`` names their (nodes, rels) views.
+    ``aff_out`` (when given) receives ``{"rels": frame}`` for
     relationship CREATE/MERGE — the affected edge rows (created rows
     post-ON-CREATE plus, for MERGE, matched rows post-ON-MATCH) that a
     trailing RETURN projects. Only computed on request so bare writes
     pay nothing."""
-    if ast_override is not None:
-        ast = ast_override
-    else:
-        parser = _WriteParser(query)
-        ast = parser.parse_write()
-        _reject_aggregates_in_ast(ast)
-        if parser.params_used:
-            raise CypherUnsupported(
-                "parameters in write clauses are not supported (v1)"
-            )
+    nodes_view, rels_view = views
     _rid = rels is not None and "REL_ID" in rels.columns
 
     op = ast["op"]
@@ -3995,9 +3372,9 @@ def _execute_write(
                             "cannot reference the node being created"
                         )
                 have = {k for k, _ in p.props}
-                p.props = list(p.props) + [
+                pats = [dataclasses.replace(p, props=list(p.props) + [
                     (k, v) for k, v in ast["on_create"] if k not in have
-                ]
+                ])]
         # Neo4j properties_set parity (r10 verdict #5): every non-NULL
         # property written by a pattern map counts, one per assignment
         # (a batch-expanded CREATE counts per element — each element
@@ -4371,14 +3748,12 @@ def _execute_write(
         # re-register only after the statement commits), matching
         # openCypher's all-items-see-the-match-state rule.
         n2, r2, s1 = _execute_write(
-            spark, nodes, rels, query, nodes_view, rels_view,
-            ast_override={**ast, "op": "set_multi",
-                          "sets": ast["node_sets"]},
+            spark, nodes, rels,
+            {**ast, "op": "set_multi", "sets": ast["node_sets"]}, views,
         )
         n3, r3, s2 = _execute_write(
-            spark, n2, r2, query, nodes_view, rels_view,
-            ast_override={**ast, "op": "set_rel",
-                          "sets": ast["rel_sets"]},
+            spark, n2, r2,
+            {**ast, "op": "set_rel", "sets": ast["rel_sets"]}, views,
         )
         p1 = s1.collect()[0].props_set
         p2 = s2.collect()[0].props_set
@@ -4533,25 +3908,36 @@ def _execute_write(
     )
 
 
-#: The write forms in dispatch order. ``parse(stmt)`` returns a spec, or
-#: None when the statement is not its shape, and raises at submit on a
-#: malformed one; ``execute(spark, nodes, rels, spec)`` returns
-#: ``(new_nodes, new_rels, summary, ret)``: the frames (the inputs
-#: themselves when unchanged), the counters row, and None or
-#: ``ret(nodes, rels)``, the trailing RETURN over the committed frames.
-_FORMS = (
-    # UNWIND $batch AS row MERGE … — the bulk UPSERT idiom (r10)
-    (parse_unwind_merge, execute_unwind_merge),
-    # UNWIND $batch AS row MATCH …, … CREATE/MERGE (a)-[:T]->(b) — the
-    # bulk EDGE-load idiom (r10)
-    (parse_unwind_rel, execute_unwind_rel),
-    # UNWIND $batch AS row MATCH (n {k: row.k}) SET …/[DETACH] DELETE n
-    (parse_unwind_node_write, execute_unwind_node_write),
-    # MATCH … WITH <pipeline> SET/DELETE/CREATE (r11)
-    (parse_pipeline_write, execute_pipeline_write),
+def _form(stmt: WriteStatement):
+    """The ``(parse, execute)`` pair of the statement's write form.
+    ``parse(stmt)`` returns a spec and raises at submit on a malformed
+    statement; ``execute(spark, nodes, rels, spec)`` returns
+    ``(new_nodes, new_rels, summary, ret)``: the frames (the inputs
+    themselves when unchanged), the counters row, and None or
+    ``ret(nodes, rels)``, the trailing RETURN over the committed
+    frames."""
+    verb_at, verb = next(
+        ((i, w) for i, w in stmt.clauses if w in _WRITE_VERBS),
+        (len(stmt.head), ""),
+    )
+    head_verb = stmt.head[4][1].upper() if stmt.unwind else ""
+    if head_verb == "MERGE":
+        # UNWIND $batch AS row MERGE … — the bulk UPSERT idiom (r10)
+        return parse_unwind_merge, execute_unwind_merge
+    if head_verb == "MATCH":
+        if verb in ("CREATE", "MERGE"):
+            # UNWIND … MATCH …, … CREATE/MERGE (a)-[:T]->(b) — the
+            # bulk EDGE-load idiom (r10)
+            return parse_unwind_rel, execute_unwind_rel
+        # UNWIND … MATCH (n {k: row.k}) SET …/[DETACH] DELETE n
+        return parse_unwind_node_write, execute_unwind_node_write
+    if stmt.head[0][1].upper() == "MATCH" and any(
+        w == "WITH" for i, w in stmt.clauses if i < verb_at
+    ):
+        # MATCH … WITH <pipeline> SET/DELETE/CREATE (r11)
+        return parse_pipeline_write, execute_pipeline_write
     # everything else, UNWIND $batch AS row CREATE … included
-    (parse_statement, execute_cypher_write),
-)
+    return parse_statement, execute_cypher_write
 
 
 def parse_write(
@@ -4563,11 +3949,25 @@ def parse_write(
     """Parse a write statement against a graph's views (parse errors
     raise here, at submit) and return its job body: ``form(spark,
     nodes, rels) -> (new_nodes, new_rels, summary, ret)`` (see
-    ``_FORMS``). The trailing RETURN is split off first, so the batch
-    forms never instantiate it per element."""
-    head, ret = split_trailing_return(query)
-    stmt = WriteStatement(head, ret, params, views, compile_read)
-    for parse, execute in _FORMS:  # the last form takes every statement
-        spec = parse(stmt)
-        if spec is not None:
-            return lambda spark, nodes, rels: execute(spark, nodes, rels, spec)
+    :func:`_form`). The statement is tokenized and its clauses scanned
+    once; the trailing RETURN is split off first, so the batch forms
+    never instantiate it per element."""
+    toks = _tokenize(query)
+    clauses = list(_scan(toks))
+    cut = next((i for i, w in clauses if w == "RETURN"), len(toks) - 1)
+    ret = None
+    if cut < len(toks) - 1:
+        ret = _render_tokens(_bind_params(toks[cut:-1], params))
+    head = toks[:cut] + [("eof", "")]
+    stmt = WriteStatement(
+        head,
+        [(i, w) for i, w in clauses if i < cut],
+        _unwind_head(head),
+        ret,
+        params,
+        views,
+        compile_read,
+    )
+    parse, execute = _form(stmt)
+    spec = parse(stmt)
+    return lambda spark, nodes, rels: execute(spark, nodes, rels, spec)

@@ -25,20 +25,23 @@ def fuzz_examples(full_count: int, quick_count: int = 25) -> int:
     return full_count if PROFILE == "full" else min(full_count, quick_count)
 
 
-def _driver_mem(jvms: int) -> str:
-    """One driver heap per JVM a test run starts: half the machine's
-    memory split evenly over them, capped at 8g. The full suite starts
-    up to five local-mode JVMs (this session, three shard sessions, the
-    oracle subprocess); at 8g each they overrun a 16 GB machine. The
-    other half is for what the heaps do not count: each JVM's off-heap
-    memory, the Python workers, the pytest processes and the page
-    cache. Splitting ALL of it over the heaps leaves none, and with no
-    swap the kernel then evicts the JVMs' own mapped code and jars and
-    the run crawls (measured on a 4-core 16 GB machine: the main
-    session at ~half its items when the 2,670 s timeout hit)."""
+def _driver_mem_mb(shares: int) -> int:
+    """One share of the test JVMs' heap budget: half the machine's
+    memory split evenly over ``shares``, capped at 8g. The full suite
+    starts up to five local-mode JVMs (this session, three shard
+    sessions, the oracle subprocess); at 8g each they overrun a 16 GB
+    machine. The other half is for what the heaps do not count: each
+    JVM's off-heap memory, the Python workers, the pytest processes and
+    the page cache. Splitting ALL of it over the heaps leaves none, and
+    with no swap the kernel then evicts the JVMs' own mapped code and
+    jars and the run crawls (measured on a 4-core 16 GB machine: the
+    main session at ~half its items when the 2,670 s timeout hit). The
+    oracle subprocess counts as two shares: it runs the sf0.01 registry
+    while the other sessions run 7-row fixtures, and the run waits for
+    it (on a 4-core 16 GB machine: 582 s at one share, 516 s at two)."""
     with open("/proc/meminfo") as f:
         kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
-    return f"{min(8 * 1024, kb // 1024 // 2 // jvms)}m"
+    return min(8 * 1024, kb // 1024 // 2 // shares)
 
 
 @pytest.fixture(scope="session")
@@ -96,8 +99,13 @@ def full_oracle_background(request):
         # r9: the suite runs up to 5 concurrent local-mode JVMs; a
         # local[32] each multiplies scheduler/GC churn for tiny tasks.
         # 16 threads keep the sf0.01 oracle queries parallel enough.
-        env=dict(os.environ, SPARK_GRAFT_CPUS=os.environ.get(
-            "SPARK_GRAFT_CPUS", "16")),
+        env=dict(
+            os.environ,
+            SPARK_GRAFT_CPUS=os.environ.get("SPARK_GRAFT_CPUS", "16"),
+            SPARK_GRAFT_DRIVER_MEM=_ORACLE_MEM.get(
+                "mem", os.environ["SPARK_GRAFT_DRIVER_MEM"]
+            ),
+        ),
     )
     try:
         yield proc
@@ -149,6 +157,8 @@ _SHARD_GROUPS = (
 )
 _SHARD_FILES = tuple(f for g in _SHARD_GROUPS for f in g)
 _SHARD = {"procs": [], "files": _SHARD_FILES}
+#: the oracle subprocess's driver heap when this run sized the heaps
+_ORACLE_MEM: dict[str, str] = {}
 
 
 def pytest_collection_modifyitems(config, items):
@@ -177,11 +187,14 @@ def pytest_collection_modifyitems(config, items):
         sel = [f for f in group if any(f in i.nodeid for i in shard)]
         if sel:
             groups.append(sel)
-    # a shard subprocess inherits its parent's value
-    os.environ.setdefault(
-        "SPARK_GRAFT_DRIVER_MEM",
-        _driver_mem(1 + len(groups) + _oracle_runs(items)),
-    )
+    # a shard subprocess inherits its parent's value; an explicit one
+    # sizes every JVM, the oracle's included
+    if "SPARK_GRAFT_DRIVER_MEM" not in os.environ:
+        oracle = _oracle_runs(items)
+        share = _driver_mem_mb(1 + len(groups) + 2 * oracle)
+        os.environ["SPARK_GRAFT_DRIVER_MEM"] = f"{share}m"
+        if oracle:
+            _ORACLE_MEM["mem"] = f"{2 * share}m"
     if not groups:
         return
     # shard sessions run 7-row-fixture, latency-bound suites — 8 local

@@ -45,6 +45,49 @@ def test_is_cypher_write_dispatch():
     assert not is_cypher_write("SELECT 1")
 
 
+@pytest.fixture()
+def verb_named_api(spark):
+    """A graph whose label, rel type and property are spelled like
+    write verbs."""
+    api = Neo4jArrowSpark(spark)
+    nodes = spark.createDataFrame(
+        [(1, ["P", "Create"], "alice", 1), (2, ["P"], "bob", 0)],
+        "ID long, LABELS array<string>, name string, delete long",
+    )
+    rels = spark.createDataFrame(
+        [(1, 2, "SET")], "START_ID long, END_ID long, TYPE string"
+    )
+    api.catalog.register("vn", nodes, rels, overwrite=True)
+    return api
+
+
+@pytest.mark.parametrize(
+    "query,expected",
+    [
+        ("MATCH (n:Create) RETURN n.name AS x", ["alice"]),
+        ("MATCH (n)-[:SET]->(m) RETURN m.name AS x", ["bob"]),
+        ("MATCH (n:P {delete: 1}) RETURN n.name AS x", ["alice"]),
+        ("MATCH (n:P) RETURN n.name AS set", ["alice", "bob"]),
+    ],
+)
+def test_verb_named_label_type_key_alias_is_a_read(
+    verb_named_api, query, expected
+):
+    """A label, rel type, map key or alias spelled like a write verb
+    is not a clause: the statement routes to the read path."""
+    assert not is_cypher_write(query)
+    rows = verb_named_api.cypher(query, graph="vn").result(60).collect()
+    assert sorted(r[0] for r in rows) == expected
+
+
+@pytest.mark.parametrize("params", [None, {}])
+def test_unbound_write_param_refused_at_submit(wapi, params):
+    with pytest.raises(CypherUnsupported, match=r"unbound parameter '\$v'"):
+        wapi.cypher(
+            "CREATE (n:P {ID: 79, age: $v})", graph="wt", params=params
+        )
+
+
 def test_create_nodes_and_scan_back(wapi):
     job = wapi.cypher(
         "CREATE (x:P {ID: 100, name: 'dave', bal: 5.5}), (y:Q {name: 'eve'})",

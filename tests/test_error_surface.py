@@ -98,7 +98,8 @@ NEGATIVES: list[tuple[str, dict | None]] = [
     ("CREATE (n:P {ID: 77, age: $v})", {"v": float("nan")}),  # non-finite param
     ("CREATE (n:P {ID: 78, age: $missing})", {"other": 1}),  # unbound param
     # -- write path: job-time (frame-op / analysis validation) --------------
-    ("MATCH (n:P) SET n.x = nosuchfn(n.age)", None),    # analysis error, wrapped
+    ("MATCH (n:P) SET n.x = nosuchfn(n.age)", None),    # unknown function, refused at submit
+    ("MATCH (n:P) SET n.x = size(n.age)", None),        # analysis error (size of a long), wrapped
     (
         "UNWIND $b AS row MATCH (n:P {ID: row.k}) SET n.x = size(row.v)",
         {"b": [{"k": 1, "v": 2}]},
