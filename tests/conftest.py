@@ -44,6 +44,21 @@ def _driver_mem_mb(shares: int) -> int:
     return min(8 * 1024, kb // 1024 // 2 // shares)
 
 
+def spark_jobs(spark, fn) -> set:
+    """The ids of the Spark jobs ``fn()`` runs: the status tracker's
+    job ids after it minus those before, with the listener bus drained
+    on both sides so every finished job is registered."""
+    sc = spark.sparkContext
+
+    def ids() -> set:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return set(sc.statusTracker().getJobIdsForGroup(None))
+
+    before = ids()
+    fn()
+    return ids() - before
+
+
 @pytest.fixture(scope="session")
 def spark():
     spark = get_session(

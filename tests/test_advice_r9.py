@@ -1,11 +1,10 @@
 """Regression tests for the round-9 ADVICE findings (all fixed r10).
 
-1. (medium) ``expand_unwind_batch`` renamed EVERY token equal to a
+1. (medium) the UNWIND batch CREATE rewrote EVERY token equal to a
    pattern variable — property keys (``{n: row.x}``) and labels
-   (``:n``) silently rewrote to ``n_u0``, a silent data miswrite.
-   Renames are now positional (variable position = directly after an
-   opening bracket), and alias substitution skips property-key and
-   label positions.
+   (``:n``) silently changed, a silent data miswrite. Only a value
+   position is now a batch reference; property-key and label
+   positions stay as written.
 2. (low) the merge ON MATCH SET / merge-rel prefix-strip regex
    rewrote ``var.prop`` inside STRING LITERALS in the value
    expression (``'see n.hits'`` → ``'see hits'``).
@@ -26,36 +25,47 @@ from neo4j_arrow_spark.api import Neo4jArrowSpark
 from neo4j_arrow_spark.cypher import CypherUnsupported
 from neo4j_arrow_spark.cypher_write import (
     _render_literal,
-    expand_unwind_batch,
     is_cypher_write,
 )
 
 
-# -- 1: positional rename in the UNWIND batch expansion (pure) -------------
+# -- 1: a batch CREATE reads only VALUE positions as batch references -------
 
 
-def test_batch_property_key_named_like_pattern_var():
-    q, handled = expand_unwind_batch(
+def test_batch_property_key_named_like_pattern_var(aapi):
+    aapi.cypher(
         "UNWIND $b AS row CREATE (n:L {n: row.x})",
-        {"b": [{"x": 1}, {"x": 2}]},
-    )
-    assert handled
-    assert "{n: 1}" in q and "{n: 2}" in q
-    assert "n_u0:L" in q and "n_u1:L" in q
+        graph="adv9",
+        params={"b": [{"x": 1}, {"x": 2}]},
+    ).result(120)
+    rows = aapi.cypher(
+        "MATCH (m:L) RETURN m.n AS n ORDER BY n", graph="adv9"
+    ).result(120).collect()
+    assert [r.n for r in rows] == [1, 2]
 
 
-def test_batch_label_named_like_pattern_var():
-    q, _ = expand_unwind_batch(
-        "UNWIND $b AS row CREATE (n:n {k: row.x})", {"b": [{"x": 1}]}
-    )
-    assert "(n_u0:n {k: 1})" in q
+def test_batch_label_named_like_pattern_var(aapi):
+    aapi.cypher(
+        "UNWIND $b AS row CREATE (n:n {k: row.x})",
+        graph="adv9",
+        params={"b": [{"x": 1}]},
+    ).result(120)
+    rows = aapi.cypher(
+        "MATCH (m:n) RETURN m.k AS k", graph="adv9"
+    ).result(120).collect()
+    assert [r.k for r in rows] == [1]
 
 
-def test_batch_property_key_named_like_alias():
-    q, _ = expand_unwind_batch(
-        "UNWIND $b AS row CREATE (n:L {row: row.x})", {"b": [{"x": 7}]}
-    )
-    assert "{row: 7}" in q
+def test_batch_property_key_named_like_alias(aapi):
+    aapi.cypher(
+        "UNWIND $b AS row CREATE (n:L {row: row.x})",
+        graph="adv9",
+        params={"b": [{"x": 7}]},
+    ).result(120)
+    rows = aapi.cypher(
+        "MATCH (m:L) RETURN m.row AS v", graph="adv9"
+    ).result(120).collect()
+    assert [r.v for r in rows] == [7]
 
 
 # -- 3: non-finite float params (pure) --------------------------------------
