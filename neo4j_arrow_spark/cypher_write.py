@@ -695,15 +695,16 @@ def _delete_nodes(nodes: DataFrame, rels: DataFrame | None, ids, detach):
 
 def _create_nodes(
     nodes: DataFrame, drive: DataFrame, pats: list, id_floor: int = 0,
-    what: str = "CREATE",
+    what: str = "CREATE", order=("__ix",),
 ):
     """CREATE one node per row of the driving frame ``drive`` and
     pattern of ``pats`` (``[(labels, [(prop, value Column)])]``). A
     pattern with an ``ID`` property takes it as its nodes' id (an id
     the graph has is refused); the other patterns' ids are allocated
-    above both max(ID) and ``id_floor``, numbered by the rows' ``__ix``
-    order and then by pattern. Returns ``(drive, rows)``: ``drive``
-    with each pattern's ids in ``__id{j}``, and the node rows
+    above both max(ID) and ``id_floor``, numbered by the rows' order
+    on the ``order`` columns (a batch's ``__ix``) and then by pattern.
+    Returns ``(drive, rows)``: ``drive`` with each pattern's ids in
+    ``__id{j}``, and the node rows
     conformed to the node schema (a value is cast to its column's
     type; a new property widens the schema)."""
     fields = _fields(nodes)
@@ -715,7 +716,7 @@ def _create_nodes(
         base = max(
             nodes.agg(F.max(NodeField.ID)).collect()[0][0] or 0, id_floor
         ) + 1
-        rank = F.row_number().over(Window.orderBy("__ix")) - 1
+        rank = F.row_number().over(Window.orderBy(*order)) - 1
     ids = [
         dict(props).get(NodeField.ID)
         if j not in auto
@@ -863,10 +864,14 @@ def _project_nodes(spark, nodes, ids, var: str, return_text: str):
     ))
 
 
-def _project_rels(spark, nodes, affected, rvar: str, return_text: str):
+def _project_rels(
+    spark, nodes, affected, rvar: str, return_text: str, rel_id=False
+):
     """A relationship write's trailing RETURN: its items over the
     ``affected`` edge rows (one RETURN row per row), through the read
-    transpiler over an anonymous-endpoint pattern."""
+    transpiler over an anonymous-endpoint pattern. With ``rel_id`` the
+    rows carry the minted ``REL_ID`` identity, which ``id(r)`` and
+    ``count(r)`` read."""
     from neo4j_arrow_spark.cypher import cypher_to_sql
 
     validate_rel_return(rvar, return_text)
@@ -877,6 +882,7 @@ def _project_rels(spark, nodes, affected, rvar: str, return_text: str):
         "__wret_nodes",
         "__wret_rels",
         rel_props=[c for c in affected.columns if c not in RelField.RESERVED],
+        rel_id=rel_id,
     )
     if f"JOIN __wret_rels AS {rvar} ON" not in sql:
         raise CypherUnsupported(
@@ -900,13 +906,13 @@ def _ids_return(spark, spec, ids=None, frame=None):
     )
 
 
-def _rels_return(spark, spec, affected):
+def _rels_return(spark, spec, affected, rel_id=False):
     """The ``ret`` of a relationship write: its trailing RETURN (None
     when it has none) over the ``affected`` edge rows."""
     if spec["ret"] is None:
         return None
     return lambda nodes, _rels: _project_rels(
-        spark, nodes, affected, spec["var"], spec["ret"]
+        spark, nodes, affected, spec["var"], spec["ret"], rel_id
     )
 
 
@@ -1027,9 +1033,7 @@ def execute_pipeline_write(
         )
     props = spec["props"]
     vals = [F.col(f"__v{i}") for i in range(len(props))]
-    frame = frame.withColumn(
-        "__ix", F.row_number().over(Window.orderBy(*vals or [F.lit(1)])) - 1
-    ).localCheckpoint()
+    frame = frame.localCheckpoint()
     n_new = frame.count()
     if n_new == 0:
         return nodes, rels, _summary(spark, "create"), _ids_return(spark, spec)
@@ -1041,7 +1045,9 @@ def execute_pipeline_write(
     # a pipeline CREATE allocates every id: an ID property is counted
     # but not used
     pat = [(p, v) for (p, _e), v in zip(props, vals) if p != NodeField.ID]
-    drive, rows = _create_nodes(nodes, frame, [(spec["labels"], pat)])
+    drive, rows = _create_nodes(
+        nodes, frame, [(spec["labels"], pat)], order=vals or [F.lit(1)]
+    )
     return (
         nodes.unionByName(rows, allowMissingColumns=True),
         rels,
@@ -2705,8 +2711,10 @@ def _batch_tokens(toks: list, alias: str):
     batch frame: in property values ``alias.key`` becomes the column
     ``__b_key`` and a bare ``alias`` (a batch of scalars) the column
     ``__bv``; a property key or label spelled like the alias stays
-    (r9 ADVICE: only a value position is a reference). Returns
-    ``(tokens, keys, bare)``."""
+    (r9 ADVICE: only a value position is a reference). A reference
+    that opens a map value stands for a literal, so it must be the
+    whole value, as the element's value is (``{k: row.x + 1}`` is
+    refused). Returns ``(tokens, keys, bare)``."""
     out, keys, bare, depth, i = [], set(), False, 0, 0
     while i < len(toks):
         t = toks[i]
@@ -2719,14 +2727,20 @@ def _batch_tokens(toks: list, alias: str):
                 )
             is_key = prev in ("{", ",") and toks[i + 1][1] == ":"
             if depth and not is_key:
+                t, n = ("name", "__bv"), 1
                 if toks[i + 1][1] == ".":
                     k = toks[i + 2]
-                    keys.add(k[2] if len(k) > 2 else k[1])
-                    out.append(("name", f"__b_{k[2] if len(k) > 2 else k[1]}"))
-                    i += 3
-                    continue
-                bare = True
-                t = ("name", "__bv")
+                    k = k[2] if len(k) > 2 else k[1]
+                    keys.add(k)
+                    t, n = ("name", f"__b_{k}"), 3
+                else:
+                    bare = True
+                nxt = toks[i + n][1]
+                if prev == ":" and nxt not in (",", "}"):
+                    raise CypherSyntaxError(f"expected '}}', got {nxt!r}")
+                out.append(t)
+                i += n
+                continue
         out.append(t)
         i += 1
     return out, keys, bare
@@ -2967,13 +2981,14 @@ def execute_cypher_write(
         # with the surrogate (REL_ID, REL_ID2) identity each edge
         # updates on its own; triple-identity frames update
         # exact-duplicate parallel edges together
-        keys = ["REL_ID", "REL_ID2"] if "REL_ID" in rels.columns else _TRIPLE
+        keys = ["REL_ID", "REL_ID2"] if rid else _TRIPLE
         out, n, _upd = _set_matched(
             rels, sets, keys, match, ast.get("replace"), keep_hit=True
         )
         rels, n_props = out.drop("__hit"), n_props + n
+        # the SET rows keep their minted identity: id(r) reads it
         ret = _rels_return(
-            spark, spec, out.filter("__hit").drop("__hit")
+            spark, spec, out.filter("__hit").drop("__hit"), rel_id=rid
         )
     return nodes, rels, _summary(spark, "set", props_set=n_props), ret
 

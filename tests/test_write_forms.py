@@ -11,6 +11,7 @@ from __future__ import annotations
 import pytest
 
 from neo4j_arrow_spark.api import Neo4jArrowSpark
+from neo4j_arrow_spark.cypher import CypherSyntaxError
 from conftest import spark_jobs
 
 GRAPH = "wforms"
@@ -135,6 +136,21 @@ def test_pipeline_detach_delete_counts_each_edge_once(fapi):
     assert (s.nodes_deleted, s.rels_deleted) == (2, 4)
     (_nodes, (rels, _cols)) = _state(fapi)
     assert rels == []
+
+
+@pytest.mark.parametrize("props", ["{ID: row.i + 100}", "{k: row.i * 2}"])
+def test_batch_create_reference_is_the_whole_value(fapi, props):
+    """A batch reference that opens a node's map value stands for the
+    element's literal, as in a literal CREATE: an expression built on
+    it is refused at submit, and nothing is written."""
+    before = _state(fapi)
+    with pytest.raises(CypherSyntaxError, match="expected '}'"):
+        fapi.cypher(
+            f"UNWIND $b AS row CREATE (a:L {props}), (b:M)",
+            graph=GRAPH,
+            params={"b": [{"i": i} for i in range(4)]},
+        ).result(120)
+    assert _state(fapi) == before
 
 
 @pytest.fixture()

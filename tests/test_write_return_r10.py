@@ -247,3 +247,25 @@ def test_delete_rel_return_pre_delete_values(rapi):
         .collect()
     )
     assert left[0].c == 0
+
+
+def test_rel_set_return_reads_rel_identity(rapi):
+    """RETURN after a relationship SET reads the edges' minted
+    identity: count(r) counts them and id(r) is the id a read gives."""
+    ids = (
+        rapi.cypher(
+            "MATCH (a:P)-[r:KNOWS]->(b:P) RETURN id(r) AS i", graph="rret"
+        )
+        .result(120)
+        .collect()
+    )
+    rows = (
+        rapi.cypher(
+            "MATCH (a:P)-[r:KNOWS]->(b:P) SET r.w = 1.0 "
+            "RETURN count(r) AS c, count(DISTINCT r) AS d, min(id(r)) AS m",
+            graph="rret",
+        )
+        .result(120)
+        .collect()
+    )
+    assert [(r.c, r.d, r.m) for r in rows] == [(1, 1, ids[0].i)]
