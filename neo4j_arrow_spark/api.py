@@ -272,10 +272,14 @@ class Neo4jArrowSpark:
         cypher_write.parse_write`); the job runs its write form and
         commits once: the frames the write changed are snapshotted
         (``_snapshot``, a lazy localCheckpoint) and the graph
-        re-registers, so reads submitted afterwards see the new state
-        and lineage doesn't stack across writes. A write that changes
-        nothing registers nothing."""
+        re-registers with its node-ID high-water mark, raised past the
+        ids the write created (:class:`~neo4j_arrow_spark.cypher_write.
+        IdMark`), so reads submitted afterwards see the new state,
+        lineage doesn't stack across writes, and the next CREATE needs
+        no max(ID) scan. A write that changes nothing registers
+        nothing."""
         from neo4j_arrow_spark.cypher_write import (
+            IdMark,
             guard_write_analysis,
             parse_write,
         )
@@ -296,7 +300,10 @@ class Neo4jArrowSpark:
         )
 
         def run() -> DataFrame:
-            nodes, rels, summary, ret = form(self.spark, g.nodes, rels_in)
+            mark = IdMark(g.nodes, g.max_id)
+            nodes, rels, summary, ret = form(
+                self.spark, g.nodes, rels_in, mark
+            )
             if nodes is not g.nodes:
                 nodes = _snapshot(nodes)
             if rels is not rels_in:
@@ -318,6 +325,7 @@ class Neo4jArrowSpark:
                     database=db,
                     username=self.username,
                     overwrite=True,
+                    max_id=mark.top,
                 )
             return result
 

@@ -91,7 +91,11 @@ class GraphCatalog:
         cache: bool = False,
         overwrite: bool = False,
         validate: bool = True,
+        max_id: int | None = None,
     ) -> Graph:
+        """Register ``name``'s frames as a new graph version.
+        ``max_id``, when known, is its node-ID high-water mark
+        (:attr:`Graph.max_id`): no node has a larger ID."""
         key = self._key(name, database, username)
         if key in self._graphs and not overwrite:
             raise GraphAlreadyExists(f"graph {key} already registered")
@@ -134,6 +138,7 @@ class GraphCatalog:
             rels_eid=rels_eid,
             database=database,
             username=username,
+            max_id=max_id,
         )
         self._graphs[key] = graph
         nodes.createOrReplaceTempView(f"{name}_nodes")

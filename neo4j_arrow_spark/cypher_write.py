@@ -18,9 +18,17 @@ form only builds that DRIVING FRAME:
 One operator per effect then applies the frame: :func:`_set_props`
 (SET on nodes or relationships — a left join on the target key and a
 conditional projection), :func:`_delete_nodes`, :func:`_create_nodes`
-(with the one id allocator), :func:`_write_rels` (relationship
-CREATE/MERGE) and one RETURN projector each for nodes and
-relationships (:func:`_project_nodes`, :func:`_project_rels`).
+(with the one id allocator, which numbers new nodes above the graph's
+node-ID high-water mark, :class:`IdMark`, so no write scans for
+max(ID)), :func:`_write_rels` (relationship CREATE/MERGE) and one
+RETURN projector each for nodes and relationships
+(:func:`_project_nodes`, :func:`_project_rels`).
+
+A write's Spark jobs follow its batch, not the graph. The batch and the
+counters row are inline tables (``VALUES``), which reach the driver
+without a job; a frame the write reads twice is a lazy local checkpoint
+that its own count fills (:func:`_counted`); and a created node joins
+the node frame without growing its partition count (:func:`_append`).
 
 A statement is tokenized and its clauses scanned once
 (:func:`parse_write`). The clause rule: a keyword (CREATE, MERGE, SET,
@@ -68,10 +76,10 @@ _WRITE_VERBS = frozenset(
 #: every clause keyword the write grammar splits a statement on
 _CLAUSES = _WRITE_VERBS | {"MATCH", "WHERE", "WITH", "RETURN", "UNWIND", "ON"}
 
-#: the Neo4j-style counters row every write reports
-_SUMMARY_SCHEMA = (
-    "op string, nodes_created long, props_set long, "
-    "nodes_deleted long, rels_deleted long, rels_created long"
+#: the Neo4j-style counters every write reports, after its ``op``
+_COUNTERS = (
+    "nodes_created", "props_set", "nodes_deleted", "rels_deleted",
+    "rels_created",
 )
 
 
@@ -85,12 +93,78 @@ def _summary(
     rels_deleted: int = 0,
     rels_created: int = 0,
 ) -> DataFrame:
-    """The one-row counters frame of a write."""
+    """The one-row counters frame of a write: an inline table, so
+    fetching it plans a local scan and starts no Python worker."""
     counts = (nodes_created, props_set, nodes_deleted, rels_deleted,
               rels_created)
-    return spark.createDataFrame(
-        [(op, *(int(c) for c in counts))], _SUMMARY_SCHEMA
+    return spark.sql(
+        f"SELECT * FROM VALUES ('{op}', "
+        + ", ".join(f"{int(c)}L" for c in counts)
+        + f") AS __s(op, {', '.join(_COUNTERS)})"
     )
+
+
+def _counted(df: DataFrame) -> tuple[DataFrame, int]:
+    """``df`` as a lazy local checkpoint, and its row count: the count's
+    one job fills the checkpoint (a DataFrame ``count()`` plans its own
+    exchange, and an eager checkpoint spends a job of its own)."""
+    df = df.localCheckpoint(eager=False)
+    return df, df._jdf.queryExecution().toRdd().count()
+
+
+def _sql_in(cols: list, rows: list, types: list) -> "F.Column":
+    """The rows whose ``cols`` hold one of the value tuples ``rows``,
+    each value cast to its column's type of ``types``: one SQL text when
+    every value is a string, a boolean or a finite number (a Column per
+    value costs a py4j call each, 1-2 ms per value), else a Column per
+    value. Several columns compare as one struct, so only the listed
+    tuples match."""
+    if all(
+        isinstance(v, (str, int)) or isinstance(v, float) and math.isfinite(v)
+        for r in rows for v in r
+    ):
+        def tup(cells):
+            return cells[0] if len(cols) == 1 else "named_struct(" + ", ".join(
+                f"'{c}', {x}" for c, x in zip(cols, cells)
+            ) + ")"
+
+        return F.expr(f"{tup([f'`{c}`' for c in cols])} IN (" + ", ".join(
+            tup([f"CAST({_render_literal(v)} AS {t})" for v, t in zip(r, types)])
+            for r in rows
+        ) + ")")
+
+    def stup(cells):
+        return cells[0] if len(cols) == 1 else F.struct(*cells)
+
+    return stup([F.col(c) for c in cols]).isin([
+        stup([F.lit(v).cast(t).alias(c) for v, t, c in zip(r, types, cols)])
+        for r in rows
+    ])
+
+
+class IdMark:
+    """The node-ID high-water mark a write allocates above: no node of
+    the graph has a larger ID. It starts as the graph version's mark
+    (``Graph.max_id``); a version registered without one pays one
+    max(ID) job, only when a CREATE needs the mark. :func:`_create_nodes`
+    raises it past every id it uses, and the commit registers the new
+    version with ``top``."""
+
+    def __init__(self, nodes: DataFrame, top: int | None):
+        self._nodes, self.top = nodes, top
+
+    def get(self) -> int:
+        if self.top is None:
+            self.top = (
+                self._nodes.agg(F.max(NodeField.ID)).collect()[0][0] or 0
+            )
+        return self.top
+
+    def forget_if_set(self, props) -> None:
+        """Drop the mark when a SET writes the ``ID`` column: the new
+        id may lie above it."""
+        if NodeField.ID in props:
+            self.top = None
 
 
 class WriteStatement(NamedTuple):
@@ -616,7 +690,7 @@ def _set_props(
 
 def _one_value(upd: DataFrame, keys: list, entity: str) -> None:
     """Refuse a SET whose update frame gives a target two value rows."""
-    if upd.groupBy(*keys).count().filter("count > 1").limit(1).count():
+    if upd.groupBy(*keys).count().filter("count > 1").take(1):
         raise ValueError(
             f"SET is ambiguous: a matched {entity} receives more than one "
             "distinct value — make the pattern/expression functional per "
@@ -670,14 +744,15 @@ def _delete_nodes(nodes: DataFrame, rels: DataFrame | None, ids, detach):
     counted once — a self-loop or an edge between two deleted nodes
     included. Returns ``(nodes, rels, nodes_deleted, rels_deleted)``;
     ``rels`` is the input frame when no relationship goes."""
-    n_del, r_del = ids.count(), 0
+    ids, n_del = _counted(ids)
+    r_del = 0
     if rels is not None:
         src = rels.join(ids, rels[RelField.START_ID] == ids["__sid"], "left_semi")
         dst = rels.join(ids, rels[RelField.END_ID] == ids["__sid"], "left_semi")
         incident = src.unionByName(
             dst.join(ids, dst[RelField.START_ID] == ids["__sid"], "left_anti")
         )
-        r_del = incident.count() if detach else incident.limit(1).count()
+        r_del = incident.count() if detach else len(incident.take(1))
         if r_del and not detach:
             raise ValueError(
                 "DELETE: node still has relationships — use DETACH DELETE"
@@ -694,38 +769,52 @@ def _delete_nodes(nodes: DataFrame, rels: DataFrame | None, ids, detach):
 
 
 def _create_nodes(
-    nodes: DataFrame, drive: DataFrame, pats: list, id_floor: int = 0,
-    what: str = "CREATE", order=("__ix",),
+    nodes: DataFrame, drive: DataFrame, n: int, pats: list, mark: IdMark,
+    rank=None, what: str = "CREATE",
 ):
-    """CREATE one node per row of the driving frame ``drive`` and
-    pattern of ``pats`` (``[(labels, [(prop, value Column)])]``). A
-    pattern with an ``ID`` property takes it as its nodes' id (an id
-    the graph has is refused); the other patterns' ids are allocated
-    above both max(ID) and ``id_floor``, numbered by the rows' order
-    on the ``order`` columns (a batch's ``__ix``) and then by pattern.
-    Returns ``(drive, rows)``: ``drive`` with each pattern's ids in
-    ``__id{j}``, and the node rows
-    conformed to the node schema (a value is cast to its column's
-    type; a new property widens the schema)."""
+    """CREATE one node per row of the driving frame ``drive`` (``n``
+    rows) and pattern of ``pats`` (``[(labels, [(prop, value
+    Column)])]``). A pattern with an ``ID`` property takes it as its
+    nodes' id. Those ids are read on the driver (wherever a CREATE can
+    set one, ``drive`` is a local frame, so the read runs no job); two
+    new nodes with one id are refused, and so is an id the graph has,
+    which only an id at or below the high-water ``mark`` can be (the one
+    case that reads the graph). The other patterns' ids are allocated
+    above the mark and every explicit id, numbered by ``rank`` (a
+    row's 0-based position; default the batch's ``__ix``) and then by
+    pattern, and ``mark`` rises past every id used. Returns ``(drive,
+    rows)``: ``drive`` with each pattern's ids in ``__id{j}``, and the
+    node rows conformed to the node schema (a value is cast to its
+    column's type; a new property widens the schema)."""
     fields = _fields(nodes)
-    auto = [
-        j for j, (_lb, props) in enumerate(pats)
-        if NodeField.ID not in dict(props)
-    ]
-    if auto:
-        base = max(
-            nodes.agg(F.max(NodeField.ID)).collect()[0][0] or 0, id_floor
-        ) + 1
-        rank = F.row_number().over(Window.orderBy(*order)) - 1
-    ids = [
-        dict(props).get(NodeField.ID)
-        if j not in auto
-        else rank * len(auto) + (base + auto.index(j))
+    given = {
+        j: dict(props)[NodeField.ID]
         for j, (_lb, props) in enumerate(pats)
-    ]
+        if NodeField.ID in dict(props)
+    }
+    auto = [j for j in range(len(pats)) if j not in given]
     drive = drive.select(
-        "*", *[c.cast("long").alias(f"__id{j}") for j, c in enumerate(ids)]
+        "*", *[c.cast("long").alias(f"__id{j}") for j, c in given.items()]
     )
+    used = [
+        v for r in drive.select(*[f"__id{j}" for j in given]).collect()
+        for v in r if v is not None
+    ] if given else []
+    if len(set(used)) < len(used):
+        raise ValueError(f"{what}: two new nodes have the same node id")
+    top = mark.get()
+    low = [v for v in used if v <= top]
+    if low and nodes.filter(
+        _sql_in([NodeField.ID], [[v] for v in low], ["bigint"])
+    ).take(1):
+        raise ValueError(f"{what}: node id already exists in the graph")
+    base = max(0, top, *used) + 1
+    rank = F.col("__ix") if rank is None else rank
+    drive = drive.select("*", *[
+        (rank * len(auto) + (base + k)).cast("long").alias(f"__id{j}")
+        for k, j in enumerate(auto)
+    ])
+    mark.top = max(top, *used, base - 1 + n * len(auto))
     rows = None
     for j, (labels, props) in enumerate(pats):
         props = dict(props)
@@ -741,12 +830,19 @@ def _create_nodes(
         rows = part if rows is None else rows.unionByName(
             part, allowMissingColumns=True
         )
-    rows = _decimals_to_double(rows)
-    if len(auto) < len(pats) and rows.join(
-        nodes.select(NodeField.ID), NodeField.ID, "left_semi"
-    ).limit(1).count():
-        raise ValueError(f"{what}: node id already exists in the graph")
-    return drive, rows
+    return drive, _decimals_to_double(rows)
+
+
+def _append(frame: DataFrame, rows: DataFrame) -> DataFrame:
+    """``frame`` with ``rows`` appended, in ``frame``'s partition count: a
+    union adds its inputs' partitions (an inline table's up to the
+    default parallelism), and every later scan would pay for them. The
+    rows go in as one partition, which the coalesce joins to one of
+    ``frame``'s."""
+    n = frame._jdf.queryExecution().toRdd().getNumPartitions()
+    return frame.unionByName(
+        rows.coalesce(1), allowMissingColumns=True
+    ).coalesce(n)
 
 
 def _rel_rows(rels, frame, rtype, src, dst, props, keep=()) -> DataFrame:
@@ -785,10 +881,11 @@ def _write_rels(
     only the rows no edge matches are created, the ``on_create`` items
     SET them, and the ``on_match`` items SET the edges that match
     (their values may read the edge's own properties). Returns
-    ``(rels, created, matched, affected)``: ``matched`` counts the
-    matched edges when ``on_match`` SETs them, and ``affected`` — when
-    asked for — is the created rows and the matched edges after their
-    SET."""
+    ``(rels, created, props_set, affected)``: ``props_set`` counts, as
+    Neo4j does, each created edge's non-NULL ``key_props`` values and
+    its ``on_create`` items, and the ``on_match`` items of each matched
+    edge; ``affected`` — when asked for — is the created rows and the
+    matched edges after their SET."""
     if rels is None:
         raise ValueError("graph has no relationship frame to extend")
     carry = [c for c in rows.columns if c.startswith("__")]
@@ -799,15 +896,26 @@ def _write_rels(
         new = new.join(_merge_probe_frame(rels, rtype, keys), keys, "left_anti")
     for prop, val in on_create:
         new = new.withColumn(prop, val)
-    new = _decimals_to_double(new.drop(*carry)).localCheckpoint()
-    n_new, n_matched, matched = new.count(), 0, None
+    new = _decimals_to_double(new.drop(*carry))
+    if key_props:
+        # one aggregate counts the rows and their non-NULL key values,
+        # and its job fills the lazy checkpoint
+        new = new.localCheckpoint(eager=False)
+        n_new, n_set = new.select(F.count(F.lit(1)), F.sum(sum(
+            F.col(p).isNotNull().cast("long") for p in key_props
+        ))).collect()[0]
+    else:
+        (new, n_new), n_set = _counted(new), 0
+    n_set, matched = (n_set or 0) + n_new * len(on_create), None
     if merge and on_match:
         upd = rows.select(
             *[F.col(k).alias(f"__k{i}") for i, k in enumerate(keys)], *carry
         )
         on = [(k, f"__k{i}") for i, k in enumerate(keys)]
         out = _set_props(rels, upd, on, on_match, keep_hit=True)
-        n_matched = rels.join(rows.select(*keys), keys, "left_semi").count()
+        n_set += len(on_match) * rels.join(
+            rows.select(*keys), keys, "left_semi"
+        ).count()
         matched = out.filter("__hit").drop("__hit")
         rels = out.drop("__hit")
     elif merge and affected:
@@ -817,7 +925,7 @@ def _write_rels(
         aff = new if matched is None else new.unionByName(
             matched, allowMissingColumns=True
         )
-    return _union_rels(rels, new), n_new, n_matched, aff
+    return _union_rels(rels, new), n_new, n_set, aff
 
 
 def validate_rel_return(rvar: str | None, return_text: str) -> None:
@@ -900,7 +1008,7 @@ def _ids_return(spark, spec, ids=None, frame=None):
     if spec["ret"] is None:
         return None
     if ids is None:
-        ids = spark.createDataFrame([], "__rid long")
+        ids = spark.sql("SELECT 0L AS __rid LIMIT 0")
     return lambda nodes, _rels: _project_nodes(
         spark, nodes if frame is None else frame, ids, spec["var"], spec["ret"]
     )
@@ -991,20 +1099,20 @@ def parse_pipeline_write(stmt: WriteStatement):
 
 
 def execute_pipeline_write(
-    spark: SparkSession, nodes: DataFrame, rels: DataFrame | None, spec: dict
+    spark: SparkSession, nodes: DataFrame, rels: DataFrame | None, spec: dict,
+    mark: IdMark,
 ):
     """Run a pipeline write: its driving frame is the compiled read
     pipeline's rows (target ids ``__wid`` and values ``__v{i}``,
-    evaluated against the PRE-statement state), and its kind's
-    operator applies it. SET takes an arbitrary row per target id;
-    CREATE makes one node per row, numbering the new ids in the rows'
-    value order."""
+    evaluated against the PRE-statement state, and read once: a lazy
+    checkpoint the first count fills), and its kind's operator applies
+    it. SET takes an arbitrary row per target id; CREATE makes one node
+    per row, numbering the new ids in the rows' value order."""
     frame = _decimals_to_double(spark.sql(spec["frame_sql"]))
+    frame = frame.localCheckpoint(eager=False)
     if spec["kind"] == "set":
         sets = spec["sets"]
-        frame = frame.localCheckpoint()
-        upd = frame.dropDuplicates(["__wid"])
-        n_set = upd.count()
+        upd, n_set = _counted(frame.dropDuplicates(["__wid"]))
         items = [(p, F.col(f"__v{i}")) for i, (p, _e) in enumerate(sets)]
         return (
             _set_props(nodes, upd, [(NodeField.ID, "__wid")], items),
@@ -1013,18 +1121,12 @@ def execute_pipeline_write(
             _ids_return(spark, spec, frame.select(F.col("__wid").alias("__rid"))),
         )
     if spec["kind"] == "delete":
-        ids = (
-            frame.select(F.col("__wid").alias("__sid"))
-            .dropDuplicates()
-            .localCheckpoint()
-        )
-        rids = None
-        if spec["ret"] is not None:
-            # pre-delete projection, one row per PIPELINE row
-            rids = frame.select(F.col("__wid").alias("__rid")).localCheckpoint()
+        ids = frame.select(F.col("__wid").alias("__sid")).dropDuplicates()
         new_nodes, new_rels, n_del, r_del = _delete_nodes(
             nodes, rels, ids, spec["detach"]
         )
+        # pre-delete projection, one row per PIPELINE row
+        rids = frame.select(F.col("__wid").alias("__rid"))
         return (
             new_nodes,
             new_rels,
@@ -1033,23 +1135,21 @@ def execute_pipeline_write(
         )
     props = spec["props"]
     vals = [F.col(f"__v{i}") for i in range(len(props))]
-    frame = frame.localCheckpoint()
-    n_new = frame.count()
+    n_new, n_props = frame.select(
+        F.count(F.lit(1)),
+        F.sum(sum((v.isNotNull().cast("long") for v in vals), F.lit(0))),
+    ).collect()[0]
     if n_new == 0:
         return nodes, rels, _summary(spark, "create"), _ids_return(spark, spec)
-    n_props = 0
-    if props:
-        n_props = frame.select(
-            F.sum(sum((v.isNotNull().cast("long") for v in vals), F.lit(0)))
-        ).collect()[0][0] or 0
     # a pipeline CREATE allocates every id: an ID property is counted
     # but not used
     pat = [(p, v) for (p, _e), v in zip(props, vals) if p != NodeField.ID]
+    rank = F.row_number().over(Window.orderBy(*(vals or [F.lit(1)]))) - 1
     drive, rows = _create_nodes(
-        nodes, frame, [(spec["labels"], pat)], order=vals or [F.lit(1)]
+        nodes, frame, n_new, [(spec["labels"], pat)], mark, rank
     )
     return (
-        nodes.unionByName(rows, allowMissingColumns=True),
+        _append(nodes, rows),
         rels,
         _summary(spark, "create", nodes_created=n_new, props_set=n_props),
         _ids_return(spark, spec, drive.select(F.col("__id0").alias("__rid"))),
@@ -1291,101 +1391,107 @@ def _set_entry(prop, run, var, key_names, key_kind, rewrite, ctx) -> dict:
 
 
 def execute_unwind_merge(
-    spark: SparkSession, nodes: DataFrame, rels: DataFrame | None, spec: dict
+    spark: SparkSession, nodes: DataFrame, rels: DataFrame | None, spec: dict,
+    mark: IdMark,
 ):
     """Set-based batch MERGE (see :func:`parse_unwind_merge` for the
-    documented semantics): ONE window pass picks the first row per
-    merge key, one anti-join against the label-filtered graph finds
-    the keys to create, and ON MATCH applies as one left join +
-    conditional projection with last-row-wins values — no per-row
-    existence probes, O(batch) work regardless of graph size on the
-    probe side (the key semi-join is the only graph-wide touch)."""
+    documented semantics) with one read of the graph, so its cost
+    follows the batch. The batch with its typed merge keys and their
+    NULL flags is an inline table, whose rows reach the driver without
+    a job: the NULL and cast refusals and the first row per key come
+    from them. The one read collects the distinct batch keys that the
+    label's nodes hold (one filter on the batch's key values or key
+    tuples, :func:`_sql_in`, so its result is bounded by the batch). The
+    creating rows, the ON MATCH rows and every counter follow on the
+    driver: the created nodes are a filter of the batch frame (ids
+    above the graph's high-water mark; an ID-keyed MERGE at or below it
+    also runs the id clash check of :func:`_create_nodes`), and ON
+    MATCH applies as one left join + conditional projection of the
+    per-key aggregates (:func:`_entry_aggs`: the last row's value wins,
+    a fold sums)."""
     if spec["n_rows"] == 0:
         return nodes, rels, _summary(spark, "merge"), _ids_return(spark, spec)
     fields = _fields(nodes)
     kprops = spec["keys"]
     kcols = [f"__k{i}" for i in range(len(kprops))]
+
+    # the batch rows with their merge keys, cast to the node columns'
+    # types. try_cast, not cast: under ANSI a malformed value would throw
+    # a raw SparkNumberFormatException mid-plan; a key the cast NULLs is
+    # refused below as a type mismatch (r10 ADVICE)
     B = _values_frame(spark, *spec["b_rows"])
-    Bk = B.select(
+    Bk = _decimals_to_double(B.select(
         "__ix",
         *[
-            # try_cast, not cast: under ANSI a malformed value would
-            # throw a raw SparkNumberFormatException mid-plan; the
-            # pre/post nullness probe below turns it into a targeted
-            # type-mismatch refusal instead (r10 ADVICE)
             F.expr(sql).try_cast(fields[p]).alias(kc)
             if p in fields
             else F.expr(sql).alias(kc)
             for (p, sql), kc in zip(kprops, kcols)
         ],
-        # pre-cast nullness per key: distinguishes a genuinely-NULL
-        # merge-key value from one the schema cast NULLED (r10 ADVICE:
-        # a string batch value against a long column must surface as a
-        # type mismatch, not the misleading NULL-merge-key error)
+        *[c for c in B.columns if c != "__ix"],
+    ))
+    rows = Bk.select(
+        "__ix",
+        *kcols,
+        # pre-cast nullness per key: a genuinely-NULL merge-key value is
+        # not one the schema cast NULLED (r10 ADVICE: a string batch
+        # value against a long column is a type mismatch)
         *[
             F.expr(sql).isNull().alias(f"__knull{i}")
             for i, (_p, sql) in enumerate(kprops)
         ],
-        *[c for c in B.columns if c != "__ix"],
-    )
-    Bk = _decimals_to_double(Bk).localCheckpoint()
-    bad = Bk.select(
-        F.max(
-            F.when(
-                F.expr(
-                    " OR ".join(f"__knull{i}" for i in range(len(kprops)))
-                ),
-                2,
-            ).when(
-                F.expr(" OR ".join(f"{kc} IS NULL" for kc in kcols)), 1
-            ).otherwise(0)
-        )
-    ).collect()[0][0]
-    if bad == 2:
+    ).collect()
+    if any(r[f"__knull{i}"] for r in rows for i in range(len(kprops))):
         raise ValueError(
             "batch MERGE: cannot merge using a NULL merge-key value"
         )
-    if bad == 1:
+    if any(r[kc] is None for r in rows for kc in kcols):
         raise ValueError(
             "batch MERGE: a merge-key value does not fit the node "
             "column's type (the cast produced NULL) — align the batch "
             "value types with the graph schema"
         )
+    key = {r["__ix"]: tuple(_hashable(r[kc]) for kc in kcols) for r in rows}
+    first: dict = {}
+    for ix in sorted(key):  # the first batch row per key decides CREATE
+        first.setdefault(key[ix], ix)
+    vals = {r["__ix"]: [r[kc] for kc in kcols] for r in rows}
     lcond = _label_cond(spec["labels"])
-    # first batch row per key decides CREATE
-    w = Window.partitionBy(*kcols).orderBy("__ix")
-    firsts = (
-        Bk.withColumn("__rn", F.row_number().over(w))
-        .filter("__rn = 1")
-        .drop("__rn")
-    )
-    if any(p not in fields for p, _ in kprops):
-        # a merge key the schema doesn't have can never match — every
-        # distinct key creates (single-MERGE parity)
-        creates = firsts
-    else:
-        existing = (
-            nodes.filter(lcond)
-            .select(*[F.col(p).alias(kc) for (p, _), kc in zip(kprops, kcols)])
-            .dropDuplicates()
-        )
-        creates = firsts.join(existing, kcols, "left_anti")
-    creates = creates.localCheckpoint()
-    n_created = creates.count()
-    # created rows: the merge keys and ON CREATE values. An ID-keyed
-    # MERGE honors the key as the node's id (r10 ADVICE: re-running the
-    # batch is idempotent; an id held by a node outside the label
-    # filter is refused), any other gets an allocated one.
+    found: set = set()
+    # a merge key the schema doesn't have can never match — every
+    # distinct key creates (single-MERGE parity)
+    if all(p in fields for p, _ in kprops):
+        # the batch keys the label's nodes hold, each once, so the
+        # collect is bounded by the batch's distinct keys, not by the
+        # nodes that match
+        props = [p for p, _ in kprops]
+        hits = nodes.filter(lcond & _sql_in(
+            props, [vals[ix] for ix in first.values()],
+            [fields[p] for p in props],
+        )).select(*props).distinct().collect()
+        found = {tuple(_hashable(v) for v in r) for r in hits}
+    creating = sorted(ix for k, ix in first.items() if k not in found)
     on = [(p, kc) for (p, _), kc in zip(kprops, kcols)]
+    ixs = ", ".join(f"{ix}L" for ix in creating)
     new_nodes = nodes
-    if n_created:
+    if creating:
+        # the created rows: a filter of the batch frame, so a new
+        # property keeps the type the whole batch gives it; the merge
+        # keys and ON CREATE values, numbered in batch order. An
+        # ID-keyed MERGE honors the key as the node's id (r10 ADVICE:
+        # re-running the batch is idempotent; an id held by a node
+        # outside the label filter is refused), any other gets an
+        # allocated one.
         pat = [(p, F.col(kc)) for p, kc in on] + [
             (p, F.expr(sql)) for p, sql in spec["on_create"]
         ]
-        _d, rows = _create_nodes(
-            nodes, creates, [(spec["labels"], pat)], what="batch MERGE"
+        _d, made = _create_nodes(
+            nodes, Bk.filter(f"__ix IN ({ixs})"), len(creating),
+            [(spec["labels"], pat)], mark,
+            rank=F.expr(f"array_position(array({ixs}), __ix) - 1"),
+            what="batch MERGE",
         )
-        new_nodes = nodes.unionByName(rows, allowMissingColumns=True)
+        new_nodes = _append(nodes, made)
     ret_ids = None
     if spec["ret"] is not None:
         # per-batch-row merged-node id, resolved on the post-CREATE
@@ -1399,29 +1505,36 @@ def execute_unwind_merge(
         ret_ids = (
             Bk.join(tagged, jcond, "inner")
             .select(tagged[NodeField.ID].alias("__rid"), Bk["__ix"])
-            .localCheckpoint()
+            .localCheckpoint(eager=False)
         )
-    n_props = n_created * len(spec["on_create"])
+    n_props = len(creating) * len(spec["on_create"])
     om = spec["on_match"]
-    if om:
-        # applications: every batch row EXCEPT the creating firsts,
-        # aggregated per key (:func:`_entry_aggs`)
-        apps = Bk.join(creates.select("__ix"), "__ix", "left_anti")
+    # applications: every batch row EXCEPT the creating firsts, per key
+    made_ix = set(creating)
+    applied = {key[ix] for ix in key if ix not in made_ix}
+    if om and applied:
+        apps = Bk.filter(f"__ix NOT IN ({ixs})") if creating else Bk
         upd = apps.groupBy(*kcols).agg(*_entry_aggs(om))
-        upd = _decimals_to_double(upd).localCheckpoint()
-        n_upd = upd.count()
-        if n_upd:
-            new_nodes = _set_props(
-                new_nodes, upd, on, _entry_values(om, _fields(new_nodes)),
-                match=lcond,
-            )
-            n_props += n_upd * len(om)
+        new_nodes = _set_props(
+            new_nodes, _decimals_to_double(upd), on,
+            _entry_values(om, _fields(new_nodes)), match=lcond,
+        )
+        n_props += len(applied) * len(om)
+        mark.forget_if_set([e["prop"] for e in om])
     return (
         new_nodes,
         rels,
-        _summary(spark, "merge", nodes_created=n_created, props_set=n_props),
+        _summary(
+            spark, "merge", nodes_created=len(creating), props_set=n_props
+        ),
         _ids_return(spark, spec, ret_ids),
     )
+
+
+def _hashable(v):
+    """A collected value as a set member (an array column's list
+    becomes a tuple)."""
+    return tuple(map(_hashable, v)) if isinstance(v, list) else v
 
 
 def parse_unwind_rel(stmt: WriteStatement):
@@ -1727,7 +1840,8 @@ def parse_unwind_node_write(stmt: WriteStatement):
 
 
 def execute_unwind_node_write(
-    spark: SparkSession, nodes: DataFrame, rels: DataFrame | None, spec: dict
+    spark: SparkSession, nodes: DataFrame, rels: DataFrame | None, spec: dict,
+    _mark: IdMark,
 ):
     """Set-based batch SET / DELETE (see
     :func:`parse_unwind_node_write`): the driving frame is the batch
@@ -1751,7 +1865,7 @@ def execute_unwind_node_write(
         ],
         *[c for c in B.columns if c != "__ix"],
     )
-    Bk = _decimals_to_double(Bk).localCheckpoint()
+    Bk = _decimals_to_double(Bk)
     tagged = nodes.withColumn("__lbl", _label_cond(spec["labels"]))
     jcond = tagged["__lbl"]
     for (p, _), kc in zip(kprops, kcols):
@@ -1768,12 +1882,12 @@ def execute_unwind_node_write(
     if spec["ret"] is not None:
         ret_ids = joined.select(
             tagged[NodeField.ID].alias("__rid"), Bk["__ix"]
-        ).localCheckpoint()
+        ).localCheckpoint(eager=False)
     if op == "set":
         sets = spec["sets"]
-        upd = joined.groupBy(sid).agg(*_entry_aggs(sets))
-        upd = _decimals_to_double(upd).localCheckpoint()
-        n_set = upd.count()
+        upd, n_set = _counted(_decimals_to_double(
+            joined.groupBy(sid).agg(*_entry_aggs(sets))
+        ))
         out = _set_props(
             nodes, upd, [(NodeField.ID, "__sid")], _entry_values(sets, nfields)
         )
@@ -1783,7 +1897,7 @@ def execute_unwind_node_write(
             _summary(spark, "set", props_set=n_set * len(sets)),
             _ids_return(spark, spec, ret_ids),
         )
-    ids = joined.select(sid).dropDuplicates().localCheckpoint()
+    ids = joined.select(sid).dropDuplicates()
     new_nodes, new_rels, n_del, r_del = _delete_nodes(
         nodes, rels, ids, spec["detach"]
     )
@@ -1797,7 +1911,8 @@ def execute_unwind_node_write(
 
 
 def execute_unwind_rel(
-    spark: SparkSession, nodes: DataFrame, rels: DataFrame | None, spec: dict
+    spark: SparkSession, nodes: DataFrame, rels: DataFrame | None, spec: dict,
+    _mark: IdMark,
 ):
     """Set-based batch edge load (see :func:`parse_unwind_rel`): the
     driving frame is the batch with each anchor resolved by ONE
@@ -1831,7 +1946,7 @@ def execute_unwind_rel(
             )
             kcols.append(kc)
         sides.append((labels, props, kcols))
-    pairs = _decimals_to_double(B.selectExpr(*exprs)).localCheckpoint()
+    pairs = _decimals_to_double(B.selectExpr(*exprs))
     for s, (labels, props, kcols) in enumerate(sides):
         idc = ("__src", "__dst")[s]
         wcols = [
@@ -1842,9 +1957,7 @@ def execute_unwind_rel(
         if any(p not in nfields for p, _ in props):
             # a key property absent from the schema matches nothing —
             # Cypher MATCH drops every row
-            pairs = pairs.join(
-                spark.createDataFrame([], f"{idc} long"), how="cross"
-            ).limit(0)
+            pairs = pairs.withColumn(idc, F.lit(None).cast("long")).limit(0)
             for _p, wc in wcols:
                 pairs = pairs.withColumn(wc, F.lit(None))
             continue
@@ -1881,7 +1994,9 @@ def execute_unwind_rel(
     if want_ret:
         # pre-dedup multiplicity: one RETURN row per batch row ×
         # anchor match (openCypher); values resolve post-statement
-        ret_pairs = pairs.select("__ix", "__src", "__dst").localCheckpoint()
+        ret_pairs = pairs.select("__ix", "__src", "__dst").localCheckpoint(
+            eager=False
+        )
     # one edge per DISTINCT endpoint pair, LAST batch row's values win
     # (pattern props and the ON CREATE/ON MATCH values alike); the ON
     # CREATE values conform with the pattern props
@@ -1899,7 +2014,7 @@ def execute_unwind_rel(
         rels, pairs, spec["rtype"], F.col("__src"), F.col("__dst"),
         col["__rp"] + col["__oc"], keep=[f"__om{i}" for i in range(len(om))],
     )
-    merged, n_new, n_matched, aff = _write_rels(
+    merged, n_new, n_set, aff = _write_rels(
         rels, rows, spec["rtype"], [p for p, _ in rp],
         merge=spec["op"] == "merge_rel", on_match=col["__om"],
         affected=want_ret,
@@ -1914,16 +2029,14 @@ def execute_unwind_rel(
         affected = (
             ret_pairs.join(aff, jc, "inner")
             .drop("__ix", "__src", "__dst")
-            .localCheckpoint()
+            .localCheckpoint(eager=False)
         )
     return (
         nodes,
         merged,
         _summary(
-            spark,
-            spec["op"],
-            rels_created=n_new,
-            props_set=n_new * len(oc) + n_matched * len(om),
+            spark, spec["op"], rels_created=n_new,
+            props_set=n_set + n_new * len(oc),
         ),
         _rels_return(spark, spec, affected),
     )
@@ -2654,7 +2767,7 @@ def _union_rels(rels: DataFrame, new: DataFrame) -> DataFrame:
     column set, so REL_IDs change — documented: identity is a content
     hash per registration, not stable across schema changes)."""
     if "REL_ID" not in rels.columns:
-        return rels.unionByName(new, allowMissingColumns=True)
+        return _append(rels, new)
     from neo4j_arrow_spark.catalog import mint_rel_ids
 
     return mint_rel_ids(
@@ -2770,25 +2883,6 @@ def _props_set(props, batch: list) -> int:
     return n
 
 
-def _id_floor(pats, batch: list) -> int:
-    """The largest integer ``ID`` the CREATE patterns set explicitly
-    (literals, or a batch column's values), 0 when none does: the
-    allocated ids start above it."""
-    ids = []
-    for p in pats:
-        v = dict(p.props).get(NodeField.ID)
-        if v is None:
-            continue
-        vals = _row_values(v, batch)
-        if vals is None and v.lstrip("-").isdigit():
-            vals = [int(v)]
-        ids += [
-            x for x in vals or ()
-            if isinstance(x, int) and not isinstance(x, bool)
-        ]
-    return max(ids, default=0)
-
-
 def _return_var(ast: dict, batch_var: str | None, return_text: str | None):
     """The variable a trailing RETURN projects: the written node or
     relationship variable."""
@@ -2878,7 +2972,8 @@ _TRIPLE = [RelField.START_ID, RelField.END_ID, RelField.TYPE]
 
 
 def execute_cypher_write(
-    spark: SparkSession, nodes: DataFrame, rels: DataFrame | None, spec: dict
+    spark: SparkSession, nodes: DataFrame, rels: DataFrame | None, spec: dict,
+    mark: IdMark,
 ):
     """Apply one general write statement (:func:`parse_statement`): a
     CREATE / MERGE of node patterns runs over the statement's literal
@@ -2896,7 +2991,7 @@ def execute_cypher_write(
     if ast is None:  # empty batch CREATE
         return nodes, rels, _summary(spark, "create"), _ids_return(spark, spec)
     if ast["op"] in ("create", "merge"):
-        return _write_patterns(spark, nodes, rels, spec)
+        return _write_patterns(spark, nodes, rels, spec, mark)
     rid = rels is not None and "REL_ID" in rels.columns
 
     def match(*items):
@@ -2916,8 +3011,7 @@ def execute_cypher_write(
         # label add/remove over the matched ids: conditional projection
         # on LABELS — array_union keeps the set semantics, array_except
         # strips; sort keeps the labels() rendering stable
-        ids = match((f"{ast['var']}.ID", "__sid")).localCheckpoint()
-        n_set = ids.count()
+        ids, n_set = _counted(match((f"{ast['var']}.ID", "__sid")))
         lit = F.array(*[F.lit(lb) for lb in ast["labels"]])
         fn = F.array_union if ast["add"] else F.array_except
         out = (
@@ -2935,7 +3029,7 @@ def execute_cypher_write(
             spark, "label", props_set=n_set * len(ast["labels"])
         ), _ids_return(spark, spec, ids.select(F.col("__sid").alias("__rid")))
     if op == "delete":
-        ids = match((f"{ast['var']}.ID", "__sid")).localCheckpoint()
+        ids = match((f"{ast['var']}.ID", "__sid"))
         new_nodes, new_rels, n_del, r_del = _delete_nodes(
             nodes, rels, ids, ast["detach"]
         )
@@ -2951,13 +3045,13 @@ def execute_cypher_write(
         rv = ast["var"]
         t = match(
             *[(f"{rv}.{c}", f"__d{i}") for i, c in enumerate(_TRIPLE)]
-        ).localCheckpoint()
+        ).localCheckpoint(eager=False)
         cond = functools.reduce(
             lambda a, b: a & b,
             [rels[c] == t[f"__d{i}"] for i, c in enumerate(_TRIPLE)],
         )
         kept = rels.join(t, cond, "left_anti")
-        r_del = rels.count() - kept.count()
+        r_del = rels.join(t, cond, "left_semi").count()
         return nodes, kept, _summary(spark, "delete", rels_deleted=r_del), (
             # r10: DELETE r RETURN … projects the PRE-delete edge rows
             _rels_return(spark, spec, rels.join(t, cond, "left_semi"))
@@ -2965,6 +3059,7 @@ def execute_cypher_write(
     n_props, ret = 0, None
     if op in ("set", "set_multi", "set_mixed"):
         sets = ast["node_sets"] if op == "set_mixed" else ast["sets"]
+        mark.forget_if_set([p for _v, p, _r in sets])
         if op == "set":
             nodes, n_props, upd = _set_matched(
                 nodes, ast["sets"], [NodeField.ID], match, ast.get("replace")
@@ -2999,13 +3094,12 @@ def _set_matched(frame, sets, keys, match, replace, keep_hit=False):
     a target given two value rows is refused, and :func:`_set_props`
     applies them. Returns ``(frame, props_set, upd)``."""
     var = sets[0][0]
-    upd = _decimals_to_double(match(
+    upd, n_set = _counted(_decimals_to_double(match(
         *[(f"{var}.{k}", f"__k{i}") for i, k in enumerate(keys)],
         *[(rhs, f"__v{i}") for i, (_v, _p, rhs) in enumerate(sets)],
-    )).localCheckpoint()
+    )))
     kcols = [f"__k{i}" for i in range(len(keys))]
     _one_value(upd, kcols, "node" if keys == [NodeField.ID] else "relationship")
-    n_set = upd.count()
     items = [(p, F.col(f"__v{i}")) for i, (_v, p, _r) in enumerate(sets)]
     out = _set_props(
         frame, upd, list(zip(keys, kcols)), items, replace=replace,
@@ -3024,10 +3118,10 @@ def _set_nodes_multi(nodes, sets, match):
     upd = _decimals_to_double(match(
         *[(f"{v}.ID", f"__sid{j}") for j, v in enumerate(vars_)],
         *[(rhs, f"__v{i}") for i, (_v, _p, rhs) in enumerate(sets)],
-    )).localCheckpoint()
+    )).localCheckpoint(eager=False)
     n_props = 0
     for prop in dict.fromkeys(p for _v, p, _r in sets):
-        pairs = functools.reduce(
+        pairs, n = _counted(functools.reduce(
             lambda a, b: a.unionByName(b),
             [
                 upd.select(
@@ -3037,9 +3131,9 @@ def _set_nodes_multi(nodes, sets, match):
                 for i, (v, p, _r) in enumerate(sets)
                 if p == prop
             ],
-        ).dropDuplicates().localCheckpoint()
+        ).dropDuplicates())
         _one_value(pairs, ["__sid"], "node")
-        n_props += pairs.count()
+        n_props += n
         nodes = _set_props(
             nodes, pairs, [(NodeField.ID, "__sid")], [(prop, F.col("__val"))]
         )
@@ -3062,25 +3156,19 @@ def _write_matched_rels(spark, nodes, rels, spec, match):
     )
     own = _own_props(ast.get("rvar") or "r", rels.columns)
     oc, om = ast["on_create"], ast["on_match"]
-    merged, n_new, n_matched, aff = _write_rels(
+    merged, n_new, n_set, aff = _write_rels(
         rels, rows, ast["rtype"], [k for k, _v in props],
         merge=ast["op"] == "merge_rel",
         on_create=[(p, own(v)) for p, v in oc],
         on_match=[(p, own(v)) for p, v in om],
         affected=spec["ret"] is not None,
     )
-    # Neo4j properties_set parity (r11): each created edge counts its
-    # non-NULL pattern-map values and its ON CREATE items
-    n_pat = sum(1 for _p, v in props if v.strip().upper() != "NULL")
     return nodes, merged, _summary(
-        spark,
-        ast["op"],
-        rels_created=n_new,
-        props_set=n_matched * len(om) + n_new * (len(oc) + n_pat),
+        spark, ast["op"], rels_created=n_new, props_set=n_set
     ), _rels_return(spark, spec, aff)
 
 
-def _write_patterns(spark, nodes, rels, spec):
+def _write_patterns(spark, nodes, rels, spec, mark):
     """CREATE / MERGE of node patterns over the statement's literal
     rows (:func:`_batch_rows`: one row, or one per batch element):
     CREATE makes every pattern's node per row — the node operator
@@ -3094,9 +3182,10 @@ def _write_patterns(spark, nodes, rels, spec):
         p = pats[0]
         mask = _label_cond(p.labels) & _props_cond(p)
         found = nodes.filter(mask)
-        if found.limit(1).count():  # scalar existence probe
+        if found.take(1):  # scalar existence probe
             ids = found.select(F.col(NodeField.ID).alias("__rid"))
             sets, n_set = ast["on_match"], 0
+            mark.forget_if_set([k for k, _v in sets])
             if sets:
                 # the values read the matched node's own columns
                 # (coalesce(n.hits, 0) + 1 — the counter idiom)
@@ -3124,8 +3213,9 @@ def _write_patterns(spark, nodes, rels, spec):
     drive, rows = _create_nodes(
         nodes,
         _values_frame(spark, *spec["drive"]),
+        len(batch),
         [(p.labels, [(k, F.expr(v)) for k, v in p.props]) for p in pats],
-        _id_floor(pats, batch),
+        mark,
     )
     chain = ast["chain_rels"]
     n_props = sum(_props_set(p.props, batch) for p in pats)
@@ -3148,7 +3238,7 @@ def _write_patterns(spark, nodes, rels, spec):
         j = [p.var for p in pats].index(spec["var"])
         ids = drive.select(F.col(f"__id{j}").alias("__rid"))
     return (
-        nodes.unionByName(rows, allowMissingColumns=True),
+        _append(nodes, rows),
         rels,
         _summary(
             spark,
@@ -3164,11 +3254,12 @@ def _write_patterns(spark, nodes, rels, spec):
 def _form(stmt: WriteStatement):
     """The ``(parse, execute)`` pair of the statement's write form.
     ``parse(stmt)`` returns a spec and raises at submit on a malformed
-    statement; ``execute(spark, nodes, rels, spec)`` returns
+    statement; ``execute(spark, nodes, rels, spec, mark)`` returns
     ``(new_nodes, new_rels, summary, ret)``: the frames (the inputs
     themselves when unchanged), the counters row, and None or
     ``ret(nodes, rels)``, the trailing RETURN over the committed
-    frames."""
+    frames. A CREATE allocates node ids above ``mark`` (an
+    :class:`IdMark`) and raises it."""
     verb_at, verb = next(
         ((i, w) for i, w in stmt.clauses if w in _WRITE_VERBS),
         (len(stmt.head), ""),
@@ -3201,7 +3292,7 @@ def parse_write(
 ):
     """Parse a write statement against a graph's views (parse errors
     raise here, at submit) and return its job body: ``form(spark,
-    nodes, rels) -> (new_nodes, new_rels, summary, ret)`` (see
+    nodes, rels, mark) -> (new_nodes, new_rels, summary, ret)`` (see
     :func:`_form`). The statement is tokenized and its clauses scanned
     once; the trailing RETURN is split off first, so the batch forms
     never instantiate it per element."""
@@ -3223,4 +3314,6 @@ def parse_write(
     )
     parse, execute = _form(stmt)
     spec = parse(stmt)
-    return lambda spark, nodes, rels: execute(spark, nodes, rels, spec)
+    return lambda spark, nodes, rels, mark: execute(
+        spark, nodes, rels, spec, mark
+    )

@@ -137,6 +137,10 @@ class Graph:
     database: str = "neo4j"
     username: str = "neo4j"
     metadata: dict = field(default_factory=dict)
+    #: the node-ID high-water mark: no node of this version has a larger
+    #: ID, and a Cypher CREATE allocates above it (None: not known; the
+    #: first CREATE computes it). Registration or a write's commit sets it.
+    max_id: int | None = None
 
     def node_properties(self) -> list[str]:
         return [c for c in self.nodes.columns if c not in NodeField.RESERVED]

@@ -92,16 +92,21 @@ def gds_write_nodes(
 
     ``validate_ids`` runs the duplicate-id check as one distributed
     aggregation (count vs distinct-count, then pinpoint offenders only
-    on failure) — not a row-by-row map like the reference.
+    on failure) — not a row-by-row map like the reference. The same
+    aggregate gives the graph its node-ID high-water mark
+    (:attr:`Graph.max_id`).
     """
     nodes = _rename(nodes, {id_field: NodeField.ID, labels_field: NodeField.LABELS})
     nodes = nodes.withColumn(NodeField.ID, F.col(NodeField.ID).cast("long"))
+    max_id = None
     if validate_ids:
         counts = nodes.agg(
             F.count(NodeField.ID).alias("n"),
             F.countDistinct(NodeField.ID).alias("d"),
             F.count(F.when(F.col(NodeField.ID).isNull(), 1)).alias("nulls"),
+            F.max(NodeField.ID).alias("top"),
         ).collect()[0]
+        max_id = counts["top"] or 0
         if counts["nulls"]:
             raise DuplicateNodeId(f"{counts['nulls']} null node ids")
         if counts["n"] != counts["d"]:
@@ -116,7 +121,8 @@ def gds_write_nodes(
                 f"duplicate node ids (showing ≤5): {[r[NodeField.ID] for r in dups]}"
             )
     return catalog.register(
-        name, nodes, None, database=database, cache=cache, overwrite=True
+        name, nodes, None, database=database, cache=cache, overwrite=True,
+        max_id=max_id,
     )
 
 
@@ -173,6 +179,7 @@ def gds_write_relationships(
         database=database,
         cache=cache,
         overwrite=True,
+        max_id=graph.max_id,
     )
 
 

@@ -52,6 +52,18 @@ def test_write_nodes_then_rels(spark, cat, node_df, rel_df):
     assert g.rel_count() == 3
 
 
+def test_write_nodes_sets_the_id_mark(spark, cat, node_df, rel_df):
+    """The id check's aggregate gives the graph its node-ID high-water
+    mark, and attaching relationships keeps it."""
+    g = gds_write_nodes(cat, "wm", node_df, id_field="nodeId", labels_field="labels", cache=False)
+    assert g.max_id == 2
+    g = gds_write_relationships(
+        cat, "wm", rel_df, source_field="src", target_field="dst",
+        type_field="relType", cache=False,
+    )
+    assert g.max_id == 2
+
+
 def test_duplicate_ids_rejected(spark, cat):
     dup = spark.createDataFrame(
         [(1, ["A"]), (1, ["B"])], "ID long, LABELS array<string>"

@@ -12,6 +12,7 @@ import pytest
 
 from neo4j_arrow_spark.api import Neo4jArrowSpark
 from neo4j_arrow_spark.cypher import CypherSyntaxError
+from neo4j_arrow_spark.cypher_write import _sql_in
 from conftest import spark_jobs
 
 GRAPH = "wforms"
@@ -88,7 +89,7 @@ EFFECTS = {
          ("create", 2, 2, 0, 0, 0)),
     ],
     "rel_create": [
-        # the MATCH form counts the pattern map, the batch form does not
+        # both forms count the created edge's non-NULL pattern-map values
         ("match",
          "MATCH (a {ID: 2}), (b {ID: 1}) CREATE (a)-[:T {w: 1.5}]->(b)",
          None, ("create_rel", 0, 1, 0, 0, 1)),
@@ -96,7 +97,7 @@ EFFECTS = {
          "UNWIND $b AS row MATCH (a {ID: row.s}), (b {ID: row.d}) "
          "CREATE (a)-[:T {w: row.w}]->(b)",
          {"b": [{"s": 2, "d": 1, "w": 1.5}]},
-         ("create_rel", 0, 0, 0, 0, 1)),
+         ("create_rel", 0, 1, 0, 0, 1)),
     ],
     "rel_merge": [
         # (1,2) matches and (2,1) is created
@@ -170,21 +171,23 @@ def uapi(spark):
     api.catalog.drop("wjobs")
 
 
-#: Spark jobs per write of the benchmark's shapes on ``uapi``
+#: Spark jobs per write of the benchmark's shapes on ``uapi``: the batch
+#: MERGE reads the graph in one job, and neither write's counters row
+#: runs a job
 WRITE_JOBS = [
     (
         "merge",
         "UNWIND $batch AS row MERGE (n:User {uid: row.uid}) "
         "ON CREATE SET n.score = row.s ON MATCH SET n.score = row.s",
         {"batch": [{"uid": u, "s": u / 2} for u in range(30, 50)]},
-        19,
+        6,
     ),
     (
         "create",
         "MATCH (a:User {uid: $a}), (b:User {uid: $b}) "
         "CREATE (a)-[:FOLLOWS]->(b)",
         {"a": 3, "b": 5},
-        6,
+        5,
     ),
 ]
 
@@ -193,10 +196,144 @@ WRITE_JOBS = [
     "query,params,most", [w[1:] for w in WRITE_JOBS], ids=[w[0] for w in WRITE_JOBS]
 )
 def test_benchmark_write_spark_jobs(spark, uapi, query, params, most):
-    jobs = spark_jobs(
-        spark,
-        lambda: uapi.cypher(query, graph="wjobs", params=params)
-        .result(120)
-        .collect(),
+    # the second run writes to the graph the first one committed
+    for _ in range(2):
+        done = []
+        jobs = spark_jobs(spark, lambda: done.append(
+            uapi.cypher(query, graph="wjobs", params=params).result(120)
+        ) or done[0].collect())
+        assert len(jobs) <= most
+        # the counters row is an inline table, not a Python-side RDD
+        plan = done[0]._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+
+
+@pytest.mark.parametrize(
+    "query,params",
+    [
+        ("CREATE (a:L {ID: toInteger(4)}), (b:M)", None),
+        (
+            "UNWIND $b AS row CREATE (a:L {ID: toInteger(row.i)}), (b:M)",
+            {"b": [{"i": 4}, {"i": 5}]},
+        ),
+    ],
+)
+def test_explicit_ids_count_in_the_allocator(fapi, query, params):
+    """An ID written through an expression is one the allocator skips:
+    the other pattern's nodes are numbered above it."""
+    fapi.cypher(query, graph=GRAPH, params=params).result(120)
+    g = fapi.catalog.get(GRAPH)
+    ids = [r.ID for r in g.nodes.collect()]
+    assert len(ids) == len(set(ids))
+    assert g.max_id == max(ids)
+
+
+def test_two_new_nodes_with_one_id_are_refused(fapi):
+    before = _state(fapi)
+    with pytest.raises(RuntimeError, match="two new nodes have the same node id"):
+        fapi.cypher(
+            "UNWIND $b AS row CREATE (a:L {ID: row.i})",
+            graph=GRAPH,
+            params={"b": [{"i": 7}, {"i": 7}]},
+        ).result(120)
+    assert _state(fapi) == before
+
+
+def test_commit_carries_the_id_mark(fapi):
+    """The commit registers the raised high-water mark, and ids are not
+    reused after the top node is deleted."""
+    fapi.cypher("CREATE (x:C), (y:C)", graph=GRAPH).result(120)
+    assert fapi.catalog.get(GRAPH).max_id == 5
+    fapi.cypher("MATCH (n) WHERE n.ID = 5 DELETE n", graph=GRAPH).result(120)
+    fapi.cypher("CREATE (z:C)", graph=GRAPH).result(120)
+    g = fapi.catalog.get(GRAPH)
+    assert sorted(r.ID for r in g.nodes.collect()) == [1, 2, 3, 4, 6]
+    assert g.max_id == 6
+
+
+@pytest.mark.parametrize(
+    "query",
+    [
+        "MATCH (n) WHERE n.ID = 2 SET n.ID = 5",
+        "MERGE (n:P {name: 'a'}) ON MATCH SET n.ID = 5",
+        "UNWIND $b AS row MERGE (n:P {name: row.nm}) ON MATCH SET n.ID = row.i",
+    ],
+)
+def test_set_id_above_the_mark(fapi, query):
+    """A SET that moves a node's ID above the high-water mark: the next
+    CREATE still allocates a free id."""
+    fapi.cypher("CREATE (w:C)", graph=GRAPH).result(120)  # the mark is 4
+    fapi.cypher(
+        query, graph=GRAPH, params={"b": [{"nm": "a", "i": 5}]}
+    ).result(120)
+    fapi.cypher("CREATE (x:C)", graph=GRAPH).result(120)
+    ids = [r.ID for r in fapi.catalog.get(GRAPH).nodes.collect()]
+    assert sorted(ids) == [1, 3, 4, 5, 6]
+
+
+def test_merges_keep_the_partition_count(uapi):
+    """A commit does not grow the node frame's partition count: every
+    later scan would pay for the extra partitions."""
+    query = WRITE_JOBS[0][1]
+    registered = uapi.catalog.get("wjobs").nodes.rdd.getNumPartitions()
+    for i in range(20):
+        batch = [{"uid": u, "s": 1.0} for u in (i, 100 + 2 * i, 101 + 2 * i)]
+        s = uapi.cypher(query, graph="wjobs", params={"batch": batch}).result(120)
+        assert s.collect()[0].nodes_created == 2
+    nodes = uapi.catalog.get("wjobs").nodes
+    assert nodes.rdd.getNumPartitions() == registered
+    ids = [r.ID for r in nodes.collect()]
+    assert len(ids) == len(set(ids)) == 80
+
+
+def test_batch_merge_types_a_new_property_from_the_whole_batch(fapi):
+    """A property new to the schema takes the type the whole batch gives
+    it, not the type of the creating rows alone: the matched row's 2.5
+    stays 2.5."""
+    fapi.cypher(
+        "UNWIND $b AS row MERGE (n:P {name: row.nm}) "
+        "ON CREATE SET n.s = row.s ON MATCH SET n.s = row.s",
+        graph=GRAPH,
+        params={"b": [{"nm": "a", "s": 2.5}, {"nm": "z", "s": 1}]},
+    ).result(120)
+    nodes = fapi.catalog.get(GRAPH).nodes
+    assert dict(nodes.dtypes)["s"] == "double"
+    got = {r.name: r.s for r in nodes.collect()}
+    assert got == {"b": None, "a": 2.5, "c": None, "z": 1.0}
+
+
+def test_batch_merge_matches_whole_key_tuples(fapi):
+    """A two-key MERGE matches a node only on both keys: each batch
+    tuple below mixes the keys of two different nodes."""
+    s = fapi.cypher(
+        "UNWIND $b AS row MERGE (n:P {name: row.nm, v: row.v}) "
+        "ON MATCH SET n.hit = 1",
+        graph=GRAPH,
+        params={"b": [{"nm": "a", "v": 10}, {"nm": "b", "v": 20},
+                      {"nm": "a", "v": 20}]},
+    ).result(120)
+    assert (s.collect()[0].nodes_created, s.collect()[0].props_set) == (2, 1)
+    got = sorted(
+        (r.name, r.v, r.hit) for r in fapi.catalog.get(GRAPH).nodes.collect()
+        if r.name in ("a", "b")
     )
-    assert len(jobs) <= most
+    assert got == [("a", 10, None), ("a", 20, 1), ("b", 10, None),
+                   ("b", 20, None)]
+
+
+@pytest.mark.parametrize(
+    "rows,want",
+    [
+        ([[["x"], 1]], []),
+        ([[["x"], 2], [["y"], 1]], [(("x",), 2)]),
+    ],
+    ids=["none", "one"],
+)
+def test_sql_in_without_sql_literals(spark, rows, want):
+    """Values without SQL literal text (an array here) compare through
+    Columns, by whole tuple."""
+    df = spark.createDataFrame(
+        [(["y"], 2), (["x"], 2)], "a array<string>, b long"
+    )
+    got = df.filter(_sql_in(["a", "b"], rows, ["array<string>", "bigint"]))
+    assert [(tuple(r.a), r.b) for r in got.collect()] == want
