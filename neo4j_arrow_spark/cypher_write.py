@@ -5,15 +5,17 @@ it (``plugin/src/main/java/org/neo4j/arrow/action/CypherActionHandler.
 java:154-155`` returns only the read job type) — this module ships the
 capability the reference left on the table, expressed Spark-first.
 
-A write is its clauses run over a table of bindings. Each statement
-form only builds that DRIVING FRAME:
+A write is its clauses run over a table of bindings. Each of the four
+statement forms (:func:`_form`) only builds that DRIVING FRAME:
 
-- an ``UNWIND $p AS row …`` form: the batch as one inline VALUES
-  frame (:func:`_values_frame`), joined to its MATCH anchors;
-- a ``MATCH`` or ``MATCH … WITH`` pipeline form: the read compiler's
-  rows for the pattern and WHERE (the matched set never round-trips
-  the driver);
-- a literal ``CREATE`` / ``MERGE``: one row.
+- ``UNWIND $p AS row MERGE …`` and ``UNWIND $p AS row MATCH …``: the
+  batch as one inline VALUES frame (:func:`_values_frame`), which the
+  MATCH form joins once per anchor (one for SET or [DETACH] DELETE,
+  two for a relationship CREATE/MERGE) and filters by its WHERE;
+- ``MATCH … WITH`` pipelines and the general statement's ``MATCH``:
+  the read compiler's rows (the matched set never leaves Spark);
+- a literal ``CREATE`` / ``MERGE``: one row, one per batch element
+  of ``UNWIND … CREATE``.
 
 One operator per effect then applies the frame: :func:`_set_props`
 (SET on nodes or relationships — a left join on the target key and a
@@ -160,12 +162,6 @@ class IdMark:
             )
         return self.top
 
-    def forget_if_set(self, props) -> None:
-        """Drop the mark when a SET writes the ``ID`` column: the new
-        id may lie above it."""
-        if NodeField.ID in props:
-            self.top = None
-
 
 class WriteStatement(NamedTuple):
     """A write statement as every form's parse sees it: tokenized once,
@@ -180,15 +176,16 @@ class WriteStatement(NamedTuple):
     compile_read: Callable[[str], str]  # read Cypher → SQL over them
 
 
-def _check_rel_set_props(sets) -> None:
-    """Parse-as-validation for SET on a relationship variable: the
-    endpoint/type/identity columns are immutable."""
-    reserved = set(RelField.RESERVED) | {"REL_ID", "REL_ID2"}
-    for v, prop, _rhs in sets:
+def _check_reserved(items, rel: bool = False) -> None:
+    """Refuse, at submit, an item ``(var, prop)`` that changes a reserved
+    column of an existing node (``ID``, ``LABELS``) or, with ``rel``,
+    relationship: a node's new ID would orphan its relationships, and
+    the ID high-water mark (:class:`IdMark`) only rises on CREATE."""
+    reserved = RelField.RESERVED if rel else NodeField.RESERVED
+    for var, prop in items:
         if prop in reserved:
             raise CypherUnsupported(
-                f"SET {v}.{prop}: relationship endpoint/type/identity "
-                "columns are immutable"
+                f"SET {var}.{prop}: the {prop} column is immutable"
             )
 
 
@@ -573,10 +570,9 @@ class _TokCursor:
         self.expect(")")
         return var, labels, props
 
-    def set_items(self, var: str, role: str, immutable=()) -> list:
+    def set_items(self, var: str, role: str) -> list:
         """``var.p = expr, …`` as ``[(p, run)]``: every item targets
-        ``var`` (the form's ``role`` variable), none an ``immutable``
-        column."""
+        ``var`` (the form's ``role`` variable)."""
         items = []
         while True:
             v = self.nxt()
@@ -587,17 +583,13 @@ class _TokCursor:
                 )
             self.expect(".")
             prop = self.name("property name")
-            if prop in immutable:
-                raise CypherUnsupported(
-                    f"SET {var}.{prop}: the {prop} column is immutable"
-                )
             self.expect("=")
             items.append((prop, self.expr_tokens()))
             if self.peek()[1] != ",":
                 return items
             self.nxt()
 
-    def on_sets(self, var: str, role: str, immutable=()):
+    def on_sets(self, var: str, role: str):
         """MERGE's ``ON CREATE SET …`` / ``ON MATCH SET …`` sub-clauses
         as ``(on_create, on_match)`` item lists."""
         out: dict[str, list] = {"CREATE": [], "MATCH": []}
@@ -610,7 +602,7 @@ class _TokCursor:
                     f"got {which!r}"
                 )
             self.expect("SET")
-            out[which] += self.set_items(var, role, immutable)
+            out[which] += self.set_items(var, role)
         return out["CREATE"], out["MATCH"]
 
 
@@ -948,6 +940,18 @@ def validate_rel_return(rvar: str | None, return_text: str) -> None:
         prev = (t[0], t[1])
 
 
+def _sql_over(spark, sql: str, **frames) -> DataFrame:
+    """``spark.sql`` of ``sql``, in which each name of ``frames`` stands
+    for its DataFrame: pyspark registers each under a temp view name of
+    its own and drops it once the result is analyzed. Jobs run on
+    threads, and a shared view name would let one write's RETURN read
+    another write's frame."""
+    sql = sql.replace("{", "{{").replace("}", "}}")
+    for name in frames:
+        sql = sql.replace(name, "{" + name + "}")
+    return spark.sql(sql, **frames)
+
+
 def _project_nodes(spark, nodes, ids, var: str, return_text: str):
     """A node write's trailing RETURN: its items over ``nodes``
     restricted to the ids of ``ids`` (column ``__rid``, one RETURN row
@@ -956,8 +960,6 @@ def _project_nodes(spark, nodes, ids, var: str, return_text: str):
     SKIP and LIMIT work."""
     from neo4j_arrow_spark.cypher import cypher_to_sql
 
-    nodes.createOrReplaceTempView("__wret_nodes")
-    ids.select("__rid").createOrReplaceTempView("__wret_ids")
     sql = cypher_to_sql(
         f"MATCH ({var}) {return_text}", "__wret_nodes", "__wret_nodes"
     )
@@ -967,9 +969,14 @@ def _project_nodes(spark, nodes, ids, var: str, return_text: str):
             "trailing RETURN items must reference only the written node "
             f"variable {var!r}"
         )
-    return spark.sql(sql.replace(
-        anchor, f"{anchor} JOIN __wret_ids ON {var}.ID = __wret_ids.__rid", 1
-    ))
+    return _sql_over(
+        spark,
+        sql.replace(anchor, (
+            f"{anchor} JOIN __wret_ids ON {var}.ID = __wret_ids.__rid"
+        ), 1),
+        __wret_nodes=nodes,
+        __wret_ids=ids.select("__rid"),
+    )
 
 
 def _project_rels(
@@ -983,8 +990,6 @@ def _project_rels(
     from neo4j_arrow_spark.cypher import cypher_to_sql
 
     validate_rel_return(rvar, return_text)
-    nodes.createOrReplaceTempView("__wret_nodes")
-    affected.createOrReplaceTempView("__wret_rels")
     sql = cypher_to_sql(
         f"MATCH (__wa)-[{rvar}]->(__wb) {return_text}",
         "__wret_nodes",
@@ -997,7 +1002,7 @@ def _project_rels(
             "trailing RETURN items after a relationship write must "
             f"reference only the rel variable {rvar!r}"
         )
-    return spark.sql(sql)
+    return _sql_over(spark, sql, __wret_nodes=nodes, __wret_rels=affected)
 
 
 def _ids_return(spark, spec, ids=None, frame=None):
@@ -1054,10 +1059,8 @@ def parse_pipeline_write(stmt: WriteStatement):
 
     if verb == "SET":
         var = cur.peek()[1]
-        sets = [
-            (p, text(run))
-            for p, run in cur.set_items(var, "carried", NodeField.RESERVED)
-        ]
+        sets = [(p, text(run)) for p, run in cur.set_items(var, "carried")]
+        _check_reserved([(var, p) for p, _e in sets])
         for p, e in sets:
             _reject_aggregates(e, f"pipeline SET {var}.{p}")
         spec = {"kind": "set", "var": var, "sets": sets}
@@ -1188,40 +1191,22 @@ def _batch_rewriter(
     keys_used: set,
     forbidden: frozenset = frozenset(),
     forbid_msg: str = "",
-    strip_var: str | None = None,
     mode: str = "value",
     extra_bound: frozenset = frozenset(),
 ):
     """Build the batch-form value rewriter: ``alias.key`` tokens become
     ``__b_<key>`` column references (collected into ``keys_used``),
     non-batch ``$params`` inline as literals token-wise, names in
-    ``forbidden`` raise with ``forbid_msg``, ``strip_var.prop`` loses
-    its prefix (the anchor's node columns are unqualified on the
-    joined frame), and the result parses through the read transpiler's
-    grammar to SQL — ``mode='value'`` for arithmetic values,
-    ``mode='expr'`` for boolean predicates (WHERE)."""
-
-    stripped: set[str] = set()
+    ``forbidden`` raise with ``forbid_msg`` (``{var}`` formats to the
+    name), the ``extra_bound`` names are columns of the driving frame,
+    and the result parses through the read transpiler's grammar to SQL
+    — ``mode='value'`` for arithmetic values, ``mode='expr'`` for
+    boolean predicates (WHERE)."""
 
     def rewrite(run: list, ctx: str) -> str:
         out, i = [], 0
         while i < len(run):
             kind, text = run[i][0], run[i][1]
-            if kind == "name" and strip_var is not None and text == strip_var:
-                if i + 1 < len(run) and run[i + 1][1] == ".":
-                    if i + 2 >= len(run):
-                        raise CypherSyntaxError(
-                            f"batch write: dangling {strip_var}."
-                        )
-                    pt = run[i + 2]
-                    stripped.add(pt[2] if len(pt) > 2 else pt[1])
-                    out.append(pt)
-                    i += 3
-                    continue
-                raise CypherUnsupported(
-                    f"{ctx}: reference the matched node's properties "
-                    f"({strip_var}.<prop>), not the bare variable"
-                )
             if kind == "name" and text == alias:
                 if i + 1 < len(run) and run[i + 1][1] == ".":
                     if i + 2 >= len(run):
@@ -1240,7 +1225,7 @@ def _batch_rewriter(
                 )
             if kind == "name" and text in forbidden:
                 raise CypherUnsupported(
-                    f"{ctx}: " + forbid_msg.replace("{var!r}", repr(text))
+                    f"{ctx}: " + forbid_msg.format(var=text)
                 )
             if kind == "param":
                 # non-batch $params inline as literals
@@ -1250,12 +1235,10 @@ def _batch_rewriter(
             out.append(run[i])
             i += 1
         sub = _Parser._from_tokens(out, "spark", None)
-        # both the batch columns AND any stripped node columns are
-        # bound scalars — without this the expression grammar would
-        # treat a bare column name as a node variable (name → name.ID)
-        sub.unwind_aliases = (
-            {f"__b_{k}" for k in keys_used} | stripped | set(extra_bound)
-        )
+        # the batch and anchor columns are bound scalars — without this
+        # the expression grammar would treat a bare column name as a
+        # node variable (name → name.ID)
+        sub.unwind_aliases = {f"__b_{k}" for k in keys_used} | extra_bound
         sql = sub.expr() if mode == "expr" else sub.value()
         if sub.peek()[1] != "":
             raise CypherSyntaxError(f"{ctx}: unsupported value expression")
@@ -1307,6 +1290,7 @@ def parse_unwind_merge(stmt: WriteStatement):
         )
     on_create, on_match = cur.on_sets(var, "merge")
     cur.end()
+    _check_reserved([(var, p) for p, _run in on_match])
 
     # rewrite alias.key → __b_<key> across every expression, collecting
     # the referenced batch keys; bare alias / self-references checked
@@ -1520,7 +1504,6 @@ def execute_unwind_merge(
             _entry_values(om, _fields(new_nodes)), match=lcond,
         )
         n_props += len(applied) * len(om)
-        mark.forget_if_set([e["prop"] for e in om])
     return (
         new_nodes,
         rels,
@@ -1537,508 +1520,349 @@ def _hashable(v):
     return tuple(map(_hashable, v)) if isinstance(v, list) else v
 
 
-def parse_unwind_rel(stmt: WriteStatement):
-    """``UNWIND $batch AS row MATCH (a:L1 {k: row.x}), (b:L2 {k:
-    row.y}) CREATE/MERGE (a)-[r:T {w: row.w}]->(b)`` — the canonical
-    Neo4j bulk EDGE-load idiom, set-based. Returns a spec for
-    :func:`execute_unwind_rel`.
+def parse_unwind_match(stmt: WriteStatement):
+    """``UNWIND $batch AS row MATCH (n:L {k: row.k}) [WHERE …]`` then
+    ``SET n.p = expr, …`` or ``[DETACH] DELETE n`` on its one anchor, or
+    ``UNWIND $batch AS row MATCH (a:L1 {k: row.x}), (b:L2 {k: row.y})
+    [WHERE …] CREATE/MERGE (a)-[r:T {w: row.w}]->(b) [ON CREATE SET …]
+    [ON MATCH SET …]`` between its two — the Neo4j batch UPDATE,
+    DELETE-by-key and EDGE-load idioms, set-based. Returns a spec for
+    :func:`execute_unwind_match`.
 
-    Semantics (documented): per batch row, each anchor resolves by
-    label + property equality (a row matching several nodes on a side
-    joins combinatorially, like Cypher MATCH; rows matching nothing
-    drop silently, like Cypher MATCH). Edges land one per DISTINCT
-    endpoint pair (the engine's documented create_rel multiplicity),
-    with the LAST batch row's property values winning per pair; MERGE
-    additionally skips pairs whose (endpoints, type, pattern props)
-    already exist. ON CREATE/ON MATCH SET and trailing RETURN are v1
-    refusals here. The batch is ONE inline-table frame
-    (:func:`_batch_rows`), so there is no parse limit on batch size."""
+    Semantics (documented): per batch row each anchor resolves by
+    label + property equality (a row matching several nodes joins
+    combinatorially, a row matching none drops, like Cypher MATCH), and
+    the WHERE, over the anchors' properties and the batch values,
+    filters those rows before the write (Cypher clause order). SET
+    applies the LAST row's values per node (a value that reads the node
+    must be an additive fold); DELETE removes every matched node,
+    DETACH its edges too; a relationship lands once per DISTINCT
+    endpoint pair with the LAST row's values, and MERGE skips the pairs
+    whose (endpoints, type, pattern props) exist. The batch is ONE
+    inline-table frame (:func:`_batch_rows`), so there is no parse
+    limit on batch size."""
     batch = _batch_param(stmt.params, *stmt.unwind)
-    cur = _TokCursor(stmt.head, "batch rel write", 5)
+    verb = next((w for _i, w in stmt.clauses if w in _WRITE_VERBS), "")
+    rel = verb in ("CREATE", "MERGE")
+    what = "batch rel write" if rel else "batch node write"
+    cur = _TokCursor(stmt.head, what, 5)
 
     def anchor():
         var, labels, props = cur.node_pattern()
         if var is None:
             raise CypherSyntaxError(
-                "batch rel write: anchor patterns need a variable"
+                f"{what}: anchor {'patterns need' if rel else 'needs'} a "
+                "variable"
             )
         if not props:
             raise CypherUnsupported(
-                f"batch rel write: anchor ({var}…) needs at least one "
-                "key property to resolve against the batch"
+                f"{what}: {f'anchor ({var}…)' if rel else 'the anchor'} "
+                "needs at least one key property to resolve against the "
+                "batch"
             )
         return var, labels, props
 
-    a = anchor()
-    if cur.at("WHERE"):
-        raise CypherSyntaxError(
-            "batch rel write: WHERE goes after the LAST anchor "
-            "pattern (MATCH (a {…}), (b {…}) WHERE …)"
-        )
-    cur.expect(",")
-    b = anchor()
+    anchors = [anchor()]
+    if rel:
+        if cur.at("WHERE"):
+            raise CypherSyntaxError(
+                "batch rel write: WHERE goes after the LAST anchor "
+                "pattern (MATCH (a {…}), (b {…}) WHERE …)"
+            )
+        cur.expect(",")
+        anchors.append(anchor())
     if cur.peek()[1] == ",":
         raise CypherUnsupported(
             "batch rel write supports exactly two anchor patterns (v1)"
-        )
-    where_run: list | None = None
-    if cur.at("WHERE"):
-        # r10 verdict #4: WHERE over the anchors' properties and/or
-        # batch values — evaluated on the joined (batch row × a-match
-        # × b-match) frame, before the edge write (Cypher order)
-        cur.nxt()
-        where_run = cur.expr_tokens()
-    verb = cur.nxt()[1].upper()
-    if verb not in ("CREATE", "MERGE"):
-        raise CypherSyntaxError(
-            f"batch rel write: expected CREATE or MERGE, got {verb!r}"
-        )
-    cur.expect("(")
-    e1 = cur.nxt()[1]
-    cur.expect(")")
-    d1 = cur.nxt()[1]
-    if d1 not in ("-", "<-"):
-        raise CypherSyntaxError("expected a relationship pattern")
-    cur.expect("[")
-    rvar = None
-    if cur.peek()[0] == "name":
-        rvar = cur.nxt()[1]
-    cur.expect(":")
-    rtype = cur.name("relationship type")
-    rprops = cur.prop_map()
-    cur.expect("]")
-    d2 = cur.nxt()[1]
-    cur.expect("(")
-    e2 = cur.nxt()[1]
-    cur.expect(")")
-    if d1 == "-" and d2 == "->":
-        src_var, dst_var = e1, e2
-    elif d1 == "<-" and d2 == "-":
-        src_var, dst_var = e2, e1
-    else:
-        raise CypherUnsupported(
-            "batch rel write: the relationship must be directed "
-            "(-> or <-)"
-        )
-    by_var = {a[0]: a, b[0]: b}
-    if src_var not in by_var or dst_var not in by_var or src_var == dst_var:
-        raise CypherSyntaxError(
-            f"batch rel write: endpoints {e1!r}/{e2!r} must be the two "
-            "MATCH anchor variables"
-        )
-    # ON CREATE SET / ON MATCH SET on the batch rel MERGE (r11):
-    # targets the rel variable; values are batch keys / params /
-    # literals (self-references keep a targeted refusal). Applied
-    # set-based: ON CREATE folds into the created rows (last row per
-    # pair wins, like the pattern props), ON MATCH is one conditional
-    # projection over the matched identities.
-    if cur.at("ON") and verb != "MERGE":
-        raise CypherSyntaxError(
-            "ON CREATE/ON MATCH SET is only valid after MERGE"
-        )
-    if cur.at("ON") and rvar is None:
-        raise CypherUnsupported(
-            "name the merged relationship to use ON CREATE/ON "
-            "MATCH SET ((a)-[r:T]->(b) …)"
-        )
-    r_on_create, r_on_match = cur.on_sets(
-        rvar, "merged rel", RelField.RESERVED
-    )
-    cur.end()
-    keys_used: set[str] = set()
-    forbidden = frozenset(
-        v for v in (a[0], b[0], rvar) if v
-    )
-    rewrite = _batch_rewriter(
-        stmt.unwind[1],
-        stmt.params,
-        keys_used,
-        forbidden=forbidden,
-        forbid_msg=(
-            "the value cannot reference pattern variable {var!r} in "
-            "the batch form"
-        ),
-    )
-    anchors = [
-        (v, labels, [(p, rewrite(run, f"{v}.{p}")) for p, run in props])
-        for v, labels, props in (by_var[src_var], by_var[dst_var])
-    ]
-    rprop_sqls = [
-        (p, rewrite(run, f"relationship property {p}"))
-        for p, run in rprops
-    ]
-    roc_sqls = [
-        (p, rewrite(run, f"ON CREATE SET {rvar}.{p}"))
-        for p, run in r_on_create
-    ]
-    rom_sqls = [
-        (p, rewrite(run, f"ON MATCH SET {rvar}.{p}"))
-        for p, run in r_on_match
-    ]
-    # pattern props define the merge identity; an ON CREATE value for
-    # the same property loses to the pattern (single merge_rel parity)
-    rp_key_names = {p for p, _ in rprop_sqls}
-    roc_sqls = [(p, s) for p, s in roc_sqls if p not in rp_key_names]
-    if any(p in rp_key_names for p, _ in rom_sqls):
-        raise CypherUnsupported(
-            "ON MATCH SET on a batch rel MERGE cannot modify a "
-            "pattern (merge-key) property — it would change the "
-            "match identity"
-        )
-    where_sql, wprops = None, []
-    if where_run is not None:
-        # anchor property accesses (a.age) become per-side columns
-        # (__w0_age) the executor adds to the anchor frames; the rest
-        # goes through the expr rewriter (row.* keys, $params) — any
-        # remaining bare pattern variable refuses by name there
-        side_of = {src_var: 0, dst_var: 1}
-        wseen: set[tuple[int, str]] = set()
-        wtrans, i = [], 0
-        while i < len(where_run):
-            t = where_run[i]
-            if (
-                t[0] == "name"
-                and t[1] in side_of
-                and i + 2 < len(where_run)
-                and where_run[i + 1][1] == "."
-            ):
-                pt = where_run[i + 2]
-                p = pt[2] if len(pt) > 2 else pt[1]
-                s = side_of[t[1]]
-                wseen.add((s, p))
-                wtrans.append(("name", f"__w{s}_{p}"))
-                i += 3
-                continue
-            wtrans.append(t)
-            i += 1
-        wprops = sorted(wseen)
-        wrewrite = _batch_rewriter(
-            stmt.unwind[1],
-            stmt.params,
-            keys_used,
-            forbidden=forbidden,
-            forbid_msg=(
-                "the WHERE predicate cannot reference pattern "
-                "variable {var!r} bare — use {var!r}.<prop>"
-            ),
-            mode="expr",
-            extra_bound=frozenset(f"__w{s}_{p}" for s, p in wprops),
-        )
-        where_sql = wrewrite(wtrans, "batch rel WHERE")
-    if stmt.ret is not None:
-        validate_rel_return(rvar, stmt.ret)
-    return {
-        "ret": stmt.ret,
-        "op": "create_rel" if verb == "CREATE" else "merge_rel",
-        "anchors": anchors,  # [src, dst] in edge direction
-        "rtype": rtype,
-        "var": rvar,
-        "rprops": rprop_sqls,
-        "on_create": roc_sqls,
-        "on_match": rom_sqls,
-        "where": where_sql,
-        "wprops": wprops,  # [(side, prop)] the WHERE references
-        "b_rows": _batch_rows(batch, keys_used, "batch rel write"),
-        "n_rows": len(batch),
-    }
-
-
-def parse_unwind_node_write(stmt: WriteStatement):
-    """``UNWIND $batch AS row MATCH (n:L {k: row.k}) SET n.p = expr[,
-    …]`` and ``… [DETACH] DELETE n`` — the batch UPDATE / DELETE-by-key
-    idioms, set-based. Returns a spec for
-    :func:`execute_unwind_node_write`.
-
-    Semantics (documented): per batch row the anchor resolves by
-    label + property equality (rows matching nothing drop silently —
-    MATCH semantics); for SET the LAST batch row's values win per key
-    (sequential-equivalent for non-self-referential values —
-    self-references refuse); DELETE removes every matched node, DETACH
-    dropping incident edges first. The batch is ONE inline-table frame
-    (:func:`_batch_rows`), so there is no parse limit on batch size."""
-    batch = _batch_param(stmt.params, *stmt.unwind)
-    cur = _TokCursor(stmt.head, "batch node write", 5)
-    var, labels, props = cur.node_pattern()
-    if var is None:
-        raise CypherSyntaxError("batch node write: anchor needs a variable")
-    if not props:
-        raise CypherUnsupported(
-            "batch node write: the anchor needs at least one key "
-            "property to resolve against the batch"
-        )
-    if cur.peek()[1] == ",":
-        raise CypherUnsupported(
-            "batch SET/DELETE supports exactly one anchor pattern (v1)"
+            if rel
+            else "batch SET/DELETE supports exactly one anchor pattern (v1)"
         )
     where_run = None
     if cur.at("WHERE"):
-        # r10: WHERE over the anchor's properties and/or batch values —
-        # evaluated on the joined (batch row × matched node) frame
         cur.nxt()
         where_run = cur.expr_tokens()
     verb = cur.nxt()[1].upper()
     detach = verb == "DETACH"
     if detach:
         verb = cur.nxt()[1].upper()
+    var, items, rtype, rprops = anchors[0][0], [], None, []
+    on_create, on_match = [], []
+    if verb not in (("CREATE", "MERGE") if rel else ("SET", "DELETE")):
+        raise CypherSyntaxError(
+            f"{what}: expected {'CREATE or MERGE' if rel else 'SET or DELETE'}"
+            f", got {verb!r}"
+        )
+    if verb == "SET":
+        items = cur.set_items(var, "matched")
+        _check_reserved([(var, p) for p, _run in items])
+    elif verb == "DELETE":
+        v = cur.nxt()
+        if v[0] != "name" or v[1] != var:
+            raise CypherUnsupported(
+                f"batch DELETE targets the matched variable {var!r}, "
+                f"got {v[1]!r}"
+            )
+    else:
+        cur.expect("(")
+        e1 = cur.nxt()[1]
+        cur.expect(")")
+        d1 = cur.nxt()[1]
+        if d1 not in ("-", "<-"):
+            raise CypherSyntaxError("expected a relationship pattern")
+        cur.expect("[")
+        var = cur.nxt()[1] if cur.peek()[0] == "name" else None
+        cur.expect(":")
+        rtype = cur.name("relationship type")
+        rprops = cur.prop_map()
+        cur.expect("]")
+        d2 = cur.nxt()[1]
+        cur.expect("(")
+        e2 = cur.nxt()[1]
+        cur.expect(")")
+        if (d1, d2) not in (("-", "->"), ("<-", "-")):
+            raise CypherUnsupported(
+                "batch rel write: the relationship must be directed "
+                "(-> or <-)"
+            )
+        by_var = {a[0]: a for a in anchors}
+        if e1 not in by_var or e2 not in by_var or e1 == e2:
+            raise CypherSyntaxError(
+                f"batch rel write: endpoints {e1!r}/{e2!r} must be the two "
+                "MATCH anchor variables"
+            )
+        # the anchors in edge direction: source, then destination
+        anchors = [by_var[e] for e in ((e1, e2) if d2 == "->" else (e2, e1))]
+        # ON CREATE SET / ON MATCH SET target the rel variable (r11):
+        # ON CREATE folds into the created rows like the pattern props,
+        # ON MATCH is one conditional projection over the matched edges
+        if cur.at("ON") and verb != "MERGE":
+            raise CypherSyntaxError(
+                "ON CREATE/ON MATCH SET is only valid after MERGE"
+            )
+        if cur.at("ON") and var is None:
+            raise CypherUnsupported(
+                "name the merged relationship to use ON CREATE/ON "
+                "MATCH SET ((a)-[r:T]->(b) …)"
+            )
+        on_create, on_match = cur.on_sets(var, "merged rel")
+        _check_reserved(
+            [(var, p) for p, _run in on_create + on_match], rel=True
+        )
+    cur.end()
     keys_used: set[str] = set()
+    forbidden = frozenset(v for v in [a[0] for a in anchors] + [var] if v)
     rewrite = _batch_rewriter(
         stmt.unwind[1],
         stmt.params,
         keys_used,
-        forbidden=frozenset([var]),
-        forbid_msg=(
-            "the value cannot reference the matched variable {var!r} — "
-            "per-key folds are not supported in the batch form (v1); "
-            "run a plain MATCH…SET instead"
-        ),
+        forbidden,
+        "the value cannot reference pattern variable {var!r} in the batch "
+        "form"
+        if rel
+        else "the value cannot reference the matched variable {var!r} — "
+        "per-key folds are not supported in the batch form (v1); run a "
+        "plain MATCH…SET instead",
     )
-    sets: list[dict] = []
-    if verb == "SET":
-        key_names = {p for p, _ in props}
-        sets = [
-            _set_entry(p, run, var, key_names, "match-key", rewrite,
-                       f"SET {var}.{p}")
-            for p, run in cur.set_items(var, "matched", NodeField.RESERVED)
-        ]
-    elif verb == "DELETE":
-        v2 = cur.nxt()
-        if v2[0] != "name" or v2[1] != var:
-            raise CypherUnsupported(
-                f"batch DELETE targets the matched variable {var!r}, "
-                f"got {v2[1]!r}"
-            )
-    else:
-        raise CypherSyntaxError(
-            f"batch node write: expected SET or DELETE, got {verb!r}"
-        )
-    cur.end()
-    key_sqls = [
-        (p, rewrite(run, f"match key {p}")) for p, run in props
+    key_names = {p for p, _run in anchors[0][2]}
+    sets = [
+        _set_entry(p, run, var, key_names, "match-key", rewrite,
+                   f"SET {var}.{p}")
+        for p, run in items
     ]
-    where_sql = None
+    anchors = [
+        (v, labels, [
+            (p, rewrite(run, f"{v}.{p}" if rel else f"match key {p}"))
+            for p, run in props
+        ])
+        for v, labels, props in anchors
+    ]
+    rprops = [
+        (p, rewrite(run, f"relationship property {p}")) for p, run in rprops
+    ]
+    # pattern props define the merge identity; an ON CREATE value for
+    # the same property loses to the pattern (single merge_rel parity)
+    key_names = {p for p, _sql in rprops}
+    on_create = [
+        (p, rewrite(run, f"ON CREATE SET {var}.{p}")) for p, run in on_create
+    ]
+    on_create = [(p, sql) for p, sql in on_create if p not in key_names]
+    on_match = [
+        (p, rewrite(run, f"ON MATCH SET {var}.{p}")) for p, run in on_match
+    ]
+    if any(p in key_names for p, _sql in on_match):
+        raise CypherUnsupported(
+            "ON MATCH SET on a batch rel MERGE cannot modify a "
+            "pattern (merge-key) property — it would change the "
+            "match identity"
+        )
+    where_sql, wprops = None, set()
     if where_run is not None:
-        wrewrite = _batch_rewriter(
+        # an anchor's property access (a.age) becomes the driving
+        # frame's column of that anchor (__a0_age); the rest goes
+        # through the rewriter (row.* keys, $params), where a bare
+        # pattern variable refuses by name
+        side = {a[0]: s for s, a in enumerate(anchors)}
+        toks = []
+        for t in where_run:
+            v = toks[-2][1] if len(toks) > 1 and toks[-1][1] == "." else None
+            if v in side and toks[-2][0] == "name":
+                p = t[2] if len(t) > 2 else t[1]
+                wprops.add((side[v], p))
+                toks[-2:] = [("name", f"__a{side[v]}_{p}")]
+            else:
+                toks.append(t)
+        where_sql = _batch_rewriter(
             stmt.unwind[1],
             stmt.params,
             keys_used,
-            strip_var=var,
+            forbidden,
+            "the WHERE predicate cannot reference pattern variable "
+            "{var!r} bare — use {var!r}.<prop>"
+            if rel
+            else "reference the matched node's properties ({var}.<prop>), "
+            "not the bare variable",
             mode="expr",
-        )
-        where_sql = wrewrite(where_run, "batch WHERE")
+            extra_bound=frozenset(f"__a{s}_{p}" for s, p in wprops),
+        )(toks, "batch rel WHERE" if rel else "batch WHERE")
+    if rel and stmt.ret is not None:
+        validate_rel_return(var, stmt.ret)
     return {
-        "op": verb.lower(),
+        "op": verb.lower() + ("_rel" if rel else ""),
         "var": var,
-        "labels": labels,
-        "keys": key_sqls,
-        "sets": sets,
-        "where": where_sql,
-        "detach": detach,
         "ret": stmt.ret,
-        "b_rows": _batch_rows(batch, keys_used, "batch node write"),
+        "anchors": anchors,  # a relationship's in edge direction
+        "where": where_sql,
+        "wprops": sorted(wprops),  # [(anchor, prop)] the WHERE reads
+        "sets": sets,
+        "detach": detach,
+        "rtype": rtype,
+        "rprops": rprops,
+        "on_create": on_create,
+        "on_match": on_match,
+        "b_rows": _batch_rows(batch, keys_used, what),
         "n_rows": len(batch),
     }
 
 
-def execute_unwind_node_write(
+def execute_unwind_match(
     spark: SparkSession, nodes: DataFrame, rels: DataFrame | None, spec: dict,
     _mark: IdMark,
 ):
-    """Set-based batch SET / DELETE (see
-    :func:`parse_unwind_node_write`): the driving frame is the batch
-    joined to the label-filtered nodes it matches (and filtered by the
-    WHERE); SET aggregates it per node (:func:`_entry_aggs`), DELETE
-    takes its distinct node ids. A trailing RETURN projects the
-    per-batch-row matched nodes."""
-    op = spec["op"]
-    nfields = _fields(nodes)
-    kprops = spec["keys"]
-    if spec["n_rows"] == 0 or any(p not in nfields for p, _ in kprops):
-        # an empty batch, or a key property the schema lacks: no match
-        return nodes, rels, _summary(spark, op), _ids_return(spark, spec)
-    kcols = [f"__k{i}" for i in range(len(kprops))]
-    B = _values_frame(spark, *spec["b_rows"])
-    Bk = B.select(
-        "__ix",
-        *[
-            F.expr(sql).cast(nfields[p]).alias(kc)
-            for (p, sql), kc in zip(kprops, kcols)
-        ],
-        *[c for c in B.columns if c != "__ix"],
-    )
-    Bk = _decimals_to_double(Bk)
-    tagged = nodes.withColumn("__lbl", _label_cond(spec["labels"]))
-    jcond = tagged["__lbl"]
-    for (p, _), kc in zip(kprops, kcols):
-        jcond = jcond & (tagged[p] == Bk[kc])
-    # one (batch row × matched node) frame — the WHERE (which may mix
-    # node properties and batch values) filters it, and everything
-    # downstream (ids for RETURN, last-applicable-row-per-node update,
-    # delete targets) derives from it
-    joined = Bk.join(tagged, jcond, "inner")
-    if spec.get("where"):
-        joined = joined.filter(F.expr(spec["where"]))
-    sid = tagged[NodeField.ID].alias("__sid")
-    ret_ids = None
-    if spec["ret"] is not None:
-        ret_ids = joined.select(
-            tagged[NodeField.ID].alias("__rid"), Bk["__ix"]
-        ).localCheckpoint(eager=False)
-    if op == "set":
-        sets = spec["sets"]
-        upd, n_set = _counted(_decimals_to_double(
-            joined.groupBy(sid).agg(*_entry_aggs(sets))
-        ))
-        out = _set_props(
-            nodes, upd, [(NodeField.ID, "__sid")], _entry_values(sets, nfields)
-        )
-        return (
-            out,
-            rels,
-            _summary(spark, "set", props_set=n_set * len(sets)),
-            _ids_return(spark, spec, ret_ids),
-        )
-    ids = joined.select(sid).dropDuplicates()
-    new_nodes, new_rels, n_del, r_del = _delete_nodes(
-        nodes, rels, ids, spec["detach"]
-    )
-    return (
-        new_nodes,
-        new_rels,
-        _summary(spark, "delete", nodes_deleted=n_del, rels_deleted=r_del),
-        # DELETE projects the PRE-delete values (openCypher)
-        _ids_return(spark, spec, ret_ids, frame=nodes),
-    )
-
-
-def execute_unwind_rel(
-    spark: SparkSession, nodes: DataFrame, rels: DataFrame | None, spec: dict,
-    _mark: IdMark,
-):
-    """Set-based batch edge load (see :func:`parse_unwind_rel`): the
-    driving frame is the batch with each anchor resolved by ONE
-    equi-join against the label-filtered node frame (broadcastable —
-    the batch side is small), filtered by the WHERE (Cypher clause
-    order) and deduped to one row per endpoint pair with last-row-wins
-    values; the relationship operator (:func:`_write_rels`) creates or
-    merges it. A trailing RETURN projects one POST-STATEMENT affected
-    edge per batch row × anchor match — openCypher multiplicity,
-    set-based values."""
-    if rels is None:
+    """Set-based batch SET / DELETE / relationship CREATE-MERGE (see
+    :func:`parse_unwind_match`). The driving frame is the batch with its
+    anchor keys cast to the node columns' types, equi-joined once per
+    anchor ``s`` to the label-filtered node frame (broadcastable: the
+    batch side is small), whose id and WHERE properties it carries as
+    ``__a{s}_<column>``, and then filtered by the WHERE; a key property
+    the schema lacks matches nothing. SET aggregates the frame per node
+    (:func:`_entry_aggs`), DELETE takes its distinct ids, and a
+    relationship write its last row per endpoint pair
+    (:func:`_rel_rows`, :func:`_write_rels`). A trailing RETURN has one
+    row per driving row: the node's post-SET or pre-DELETE values, or
+    the edge's post-statement values."""
+    op, rel = spec["op"], spec["op"].endswith("_rel")
+    if rel and rels is None:
         raise ValueError("graph has no relationship frame to extend")
-    if spec["n_rows"] == 0:
-        return (
-            nodes, rels, _summary(spark, spec["op"]),
-            _rels_return(spark, spec, rels.limit(0)),
-        )
     nfields = _fields(nodes)
+    anchors = spec["anchors"]
+    if spec["n_rows"] == 0 or any(
+        p not in nfields for _v, _l, props in anchors for p, _s in props
+    ):
+        # an empty batch, or a key property the schema lacks: no match
+        return nodes, rels, _summary(spark, op), (
+            _rels_return(spark, spec, rels.limit(0)) if rel
+            else _ids_return(spark, spec)
+        )
     B = _values_frame(spark, *spec["b_rows"])
-    # per-anchor key columns, cast to the node column's type
-    sides = []
-    exprs = ["__ix"] + [c for c in B.columns if c != "__ix"]
-    for s, (var, labels, props) in enumerate(spec["anchors"]):
-        kcols = []
-        for i, (p, sql) in enumerate(props):
-            kc = f"__s{s}k{i}"
-            exprs.append(
-                f"CAST(({sql}) AS {nfields[p]}) AS {kc}"
-                if p in nfields
-                else f"({sql}) AS {kc}"
-            )
-            kcols.append(kc)
-        sides.append((labels, props, kcols))
-    pairs = _decimals_to_double(B.selectExpr(*exprs))
-    for s, (labels, props, kcols) in enumerate(sides):
-        idc = ("__src", "__dst")[s]
-        wcols = [
-            (p, f"__w{s}_{p}")
-            for (s2, p) in spec.get("wprops") or []
-            if s2 == s
+    drive = _decimals_to_double(B.select("*", *[
+        F.expr(sql).cast(nfields[p]).alias(f"__k{s}_{i}")
+        for s, (_v, _l, props) in enumerate(anchors)
+        for i, (p, sql) in enumerate(props)
+    ]))
+    for s, (_v, labels, props) in enumerate(anchors):
+        cols = [NodeField.ID, *(p for p, _sql in props)] + [
+            p for s2, p in spec["wprops"] if s2 == s
         ]
-        if any(p not in nfields for p, _ in props):
-            # a key property absent from the schema matches nothing —
-            # Cypher MATCH drops every row
-            pairs = pairs.withColumn(idc, F.lit(None).cast("long")).limit(0)
-            for _p, wc in wcols:
-                pairs = pairs.withColumn(wc, F.lit(None))
-            continue
-        nf = nodes.filter(_label_cond(labels)).select(
-            F.col(NodeField.ID).alias(idc),
-            *[F.col(p).alias(f"__s{s}p{i}") for i, (p, _) in enumerate(props)],
-            # WHERE-referenced anchor props ride along; a prop the
-            # schema lacks reads as NULL (openCypher)
-            *[
-                (F.col(p) if p in nfields else F.lit(None)).alias(wc)
-                for p, wc in wcols
-            ],
+        # a property the WHERE reads and the schema lacks is NULL
+        nf = nodes.filter(_label_cond(labels)).select(*[
+            (F.col(p) if p in nfields else F.lit(None)).alias(f"__a{s}_{p}")
+            for p in dict.fromkeys(cols)
+        ])
+        drive = drive.join(nf, functools.reduce(lambda x, y: x & y, [
+            drive[f"__k{s}_{i}"] == nf[f"__a{s}_{p}"]
+            for i, (p, _sql) in enumerate(props)
+        ]))
+    if spec["where"]:
+        drive = drive.filter(F.expr(spec["where"]))
+    if not rel:
+        ids = drive.select(F.col("__a0_ID").alias("__rid"))
+        if op == "set":
+            sets = spec["sets"]
+            upd, n_set = _counted(_decimals_to_double(
+                drive.groupBy(F.col("__a0_ID").alias("__sid"))
+                .agg(*_entry_aggs(sets))
+            ))
+            return (
+                _set_props(
+                    nodes, upd, [(NodeField.ID, "__sid")],
+                    _entry_values(sets, nfields),
+                ),
+                rels,
+                _summary(spark, "set", props_set=n_set * len(sets)),
+                _ids_return(spark, spec, ids),
+            )
+        new_nodes, new_rels, n_del, r_del = _delete_nodes(
+            nodes, rels,
+            drive.select(F.col("__a0_ID").alias("__sid")).dropDuplicates(),
+            spec["detach"],
         )
-        cond = functools.reduce(
-            lambda a, b: a & b,
-            [pairs[kc] == nf[f"__s{s}p{i}"] for i, kc in enumerate(kcols)],
+        return (
+            new_nodes,
+            new_rels,
+            _summary(spark, "delete", nodes_deleted=n_del, rels_deleted=r_del),
+            # DELETE projects the PRE-delete values (openCypher)
+            _ids_return(spark, spec, ids, frame=nodes),
         )
-        pairs = pairs.join(nf, cond, "inner")
-    if spec.get("where"):
-        # Cypher clause order: the predicate filters the MATCHed
-        # (batch row × a × b) combinations before any edge is written
-        pairs = pairs.filter(F.expr(spec["where"]))
+    # one edge per DISTINCT endpoint pair, whose pattern props and ON
+    # CREATE / ON MATCH values are the LAST batch row's
+    ends = ["__a0_ID", "__a1_ID"]
     rp, oc, om = spec["rprops"], spec["on_create"], spec["on_match"]
     vals = {"__rp": rp, "__oc": oc, "__om": om}
-    pairs = pairs.select(
-        "__ix", "__src", "__dst",
-        *[
-            F.expr(sql).alias(f"{pre}{i}")
-            for pre, items in vals.items()
-            for i, (_p, sql) in enumerate(items)
-        ],
-    )
-    want_ret = spec["ret"] is not None
-    if want_ret:
-        # pre-dedup multiplicity: one RETURN row per batch row ×
-        # anchor match (openCypher); values resolve post-statement
-        ret_pairs = pairs.select("__ix", "__src", "__dst").localCheckpoint(
-            eager=False
-        )
-    # one edge per DISTINCT endpoint pair, LAST batch row's values win
-    # (pattern props and the ON CREATE/ON MATCH values alike); the ON
-    # CREATE values conform with the pattern props
-    w = Window.partitionBy("__src", "__dst").orderBy(F.col("__ix").desc())
-    pairs = (
-        pairs.withColumn("__rn", F.row_number().over(w))
-        .filter("__rn = 1")
-        .drop("__rn", "__ix")
-    )
+    pairs = drive.select("__ix", *ends, *[
+        F.expr(sql).alias(f"{pre}{i}")
+        for pre, items in vals.items()
+        for i, (_p, sql) in enumerate(items)
+    ])
+    w = Window.partitionBy(*ends).orderBy(F.col("__ix").desc())
     col = {
         pre: [(p, F.col(f"{pre}{i}")) for i, (p, _s) in enumerate(items)]
         for pre, items in vals.items()
     }
     rows = _rel_rows(
-        rels, pairs, spec["rtype"], F.col("__src"), F.col("__dst"),
+        rels,
+        pairs.withColumn("__rn", F.row_number().over(w)).filter("__rn = 1"),
+        spec["rtype"], F.col(ends[0]), F.col(ends[1]),
         col["__rp"] + col["__oc"], keep=[f"__om{i}" for i in range(len(om))],
     )
     merged, n_new, n_set, aff = _write_rels(
-        rels, rows, spec["rtype"], [p for p, _ in rp],
-        merge=spec["op"] == "merge_rel", on_match=col["__om"],
-        affected=want_ret,
+        rels, rows, spec["rtype"], [p for p, _ in rp], op == "merge_rel",
+        on_match=col["__om"], affected=spec["ret"] is not None,
     )
-    affected = None
-    if want_ret:
-        # the affected edge of each endpoint pair, joined back to the
-        # pre-dedup rows for openCypher row multiplicity
-        jc = (aff[RelField.START_ID] == ret_pairs["__src"]) & (
-            aff[RelField.END_ID] == ret_pairs["__dst"]
-        )
-        affected = (
-            ret_pairs.join(aff, jc, "inner")
-            .drop("__ix", "__src", "__dst")
-            .localCheckpoint(eager=False)
-        )
+    if aff is not None:
+        # the affected edge of each endpoint pair, once per driving row
+        # (openCypher multiplicity)
+        ret_pairs = pairs.select(*ends).localCheckpoint(eager=False)
+        aff = ret_pairs.join(aff, (
+            (aff[RelField.START_ID] == ret_pairs[ends[0]])
+            & (aff[RelField.END_ID] == ret_pairs[ends[1]])
+        )).drop(*ends).localCheckpoint(eager=False)
     return (
         nodes,
         merged,
         _summary(
-            spark, spec["op"], rels_created=n_new,
-            props_set=n_set + n_new * len(oc),
+            spark, op, rels_created=n_new, props_set=n_set + n_new * len(oc)
         ),
-        _rels_return(spark, spec, affected),
+        _rels_return(spark, spec, aff),
     )
 
 
@@ -2408,7 +2232,6 @@ class _WriteParser(_Parser):
             tv = next(iter(tvars))
             if tv in {r.var for r in rels if r.var}:
                 # r9: REMOVE r.prop — a rel-frame SET to NULL
-                _check_rel_set_props(sets)
                 return {**base, "op": "set_rel", "sets": sets}
             if tv not in {n.var for n in nodes}:
                 raise CypherSyntaxError(f"REMOVE target {tvars} is not bound")
@@ -2437,9 +2260,6 @@ class _WriteParser(_Parser):
                     )
             r_on_create, r_on_match = self._on_sets(
                 r.var, "merged relationship variable"
-            )
-            _check_rel_set_props(
-                [(r.var, p, e) for p, e in r_on_create + r_on_match]
             )
             self._end()
             if a not in bound or b not in bound:
@@ -2659,7 +2479,6 @@ class _WriteParser(_Parser):
                 sets = self._set_map(var)
                 flag = {"replace": True} if replace else {}
                 if var in {r.var for r in rels if r.var}:
-                    _check_rel_set_props(sets)
                     return {**base, "op": "set_rel", "sets": sets, **flag}
                 if var not in {n.var for n in nodes}:
                     raise CypherSyntaxError(
@@ -2696,7 +2515,6 @@ class _WriteParser(_Parser):
                         "statement (v1)"
                     )
                 if rel_sets:
-                    _check_rel_set_props(rel_sets)
                     return {
                         **base,
                         "op": "set_mixed",
@@ -2709,7 +2527,6 @@ class _WriteParser(_Parser):
             if tv in rvset:
                 # r9: SET r.prop = … on a relationship variable —
                 # routes to the rel-frame update (op set_rel)
-                _check_rel_set_props(sets)
                 return {**base, "op": "set_rel", "sets": sets}
             if tv not in nvset:
                 raise CypherSyntaxError(f"SET target {tvars} is not bound")
@@ -2953,6 +2770,18 @@ def parse_statement(stmt: WriteStatement) -> dict:
         drive = _batch_rows(batch, (), "CREATE")
     ast = _WriteParser(_bind_params(toks, stmt.params), bound).parse_write()
     _reject_aggregates_in_ast(ast)
+    # the items that change existing entities (MERGE's ON CREATE only
+    # creates its node)
+    rvars = {r.var for r in ast.get("rels") or [] if r.var}
+    items = [(v, p) for v, p, _r in ast.get("sets") or []]
+    if ast["op"] == "merge":
+        items += [(ast["patterns"][0].var, p) for p, _v in ast["on_match"]]
+    elif ast["op"] in ("create_rel", "merge_rel"):
+        rvars.add(ast["rvar"])
+        items += [(ast["rvar"], p) for p, _v in ast["on_create"]]
+        items += [(ast["rvar"], p) for p, _v in ast["on_match"]]
+    _check_reserved([i for i in items if i[0] not in rvars])
+    _check_reserved([i for i in items if i[0] in rvars], rel=True)
     if stmt.ret is not None:
         validate_trailing_return(
             ast, batch_var=batch_var, return_text=stmt.ret
@@ -3059,7 +2888,6 @@ def execute_cypher_write(
     n_props, ret = 0, None
     if op in ("set", "set_multi", "set_mixed"):
         sets = ast["node_sets"] if op == "set_mixed" else ast["sets"]
-        mark.forget_if_set([p for _v, p, _r in sets])
         if op == "set":
             nodes, n_props, upd = _set_matched(
                 nodes, ast["sets"], [NodeField.ID], match, ast.get("replace")
@@ -3185,7 +3013,6 @@ def _write_patterns(spark, nodes, rels, spec, mark):
         if found.take(1):  # scalar existence probe
             ids = found.select(F.col(NodeField.ID).alias("__rid"))
             sets, n_set = ast["on_match"], 0
-            mark.forget_if_set([k for k, _v in sets])
             if sets:
                 # the values read the matched node's own columns
                 # (coalesce(n.hits, 0) + 1 — the counter idiom)
@@ -3252,29 +3079,29 @@ def _write_patterns(spark, nodes, rels, spec, mark):
 
 
 def _form(stmt: WriteStatement):
-    """The ``(parse, execute)`` pair of the statement's write form.
-    ``parse(stmt)`` returns a spec and raises at submit on a malformed
-    statement; ``execute(spark, nodes, rels, spec, mark)`` returns
-    ``(new_nodes, new_rels, summary, ret)``: the frames (the inputs
-    themselves when unchanged), the counters row, and None or
-    ``ret(nodes, rels)``, the trailing RETURN over the committed
+    """The ``(parse, execute)`` pair of the statement's write form, one
+    of four: the batch MERGE (``UNWIND … MERGE``), the batch MATCH write
+    (``UNWIND … MATCH`` one or two anchors, then SET, [DETACH] DELETE or
+    a relationship CREATE/MERGE), the pipeline write (``MATCH … WITH …``)
+    and the general statement. ``parse(stmt)`` returns a spec and raises
+    at submit on a malformed statement; ``execute(spark, nodes, rels,
+    spec, mark)`` returns ``(new_nodes, new_rels, summary, ret)``: the
+    frames (the inputs themselves when unchanged), the counters row, and
+    None or ``ret(nodes, rels)``, the trailing RETURN over the committed
     frames. A CREATE allocates node ids above ``mark`` (an
     :class:`IdMark`) and raises it."""
-    verb_at, verb = next(
-        ((i, w) for i, w in stmt.clauses if w in _WRITE_VERBS),
-        (len(stmt.head), ""),
+    verb_at = next(
+        (i for i, w in stmt.clauses if w in _WRITE_VERBS), len(stmt.head)
     )
     head_verb = stmt.head[4][1].upper() if stmt.unwind else ""
     if head_verb == "MERGE":
         # UNWIND $batch AS row MERGE … — the bulk UPSERT idiom (r10)
         return parse_unwind_merge, execute_unwind_merge
     if head_verb == "MATCH":
-        if verb in ("CREATE", "MERGE"):
-            # UNWIND … MATCH …, … CREATE/MERGE (a)-[:T]->(b) — the
-            # bulk EDGE-load idiom (r10)
-            return parse_unwind_rel, execute_unwind_rel
-        # UNWIND … MATCH (n {k: row.k}) SET …/[DETACH] DELETE n
-        return parse_unwind_node_write, execute_unwind_node_write
+        # UNWIND … MATCH (n {k: row.k}) SET / [DETACH] DELETE n, and
+        # UNWIND … MATCH (a …), (b …) CREATE / MERGE (a)-[:T]->(b): the
+        # batch update, delete and edge-load idioms (r10)
+        return parse_unwind_match, execute_unwind_match
     if stmt.head[0][1].upper() == "MATCH" and any(
         w == "WITH" for i, w in stmt.clauses if i < verb_at
     ):

@@ -11,7 +11,7 @@ from __future__ import annotations
 import pytest
 
 from neo4j_arrow_spark.api import Neo4jArrowSpark
-from neo4j_arrow_spark.cypher import CypherSyntaxError
+from neo4j_arrow_spark.cypher import CypherSyntaxError, CypherUnsupported
 from neo4j_arrow_spark.cypher_write import _sql_in
 from conftest import spark_jobs
 
@@ -192,8 +192,43 @@ WRITE_JOBS = [
 ]
 
 
+#: Spark jobs per one-row batch MATCH write on ``uapi``, its counters
+#: fetch included: at most what the separate batch node and batch rel
+#: forms ran
+BATCH_MATCH_JOBS = [
+    (
+        "rel_create",
+        "UNWIND $b AS row MATCH (a:User {uid: row.s}), (b:User {uid: row.d}) "
+        "CREATE (a)-[:FOLLOWS {w: row.w}]->(b)",
+        {"b": [{"s": 3, "d": 5, "w": 1.5}]},
+        8,
+    ),
+    (
+        "rel_merge",
+        "UNWIND $b AS row MATCH (a:User {uid: row.s}), (b:User {uid: row.d}) "
+        "MERGE (a)-[r:FOLLOWS]->(b) ON CREATE SET r.w = row.w",
+        {"b": [{"s": 3, "d": 5, "w": 1.5}]},
+        9,
+    ),
+    (
+        "set",
+        "UNWIND $b AS row MATCH (n:User {uid: row.u}) SET n.score = row.s",
+        {"b": [{"u": 3, "s": 0.5}]},
+        6,
+    ),
+    (
+        "detach_delete",
+        "UNWIND $b AS row MATCH (n:User {uid: row.u}) DETACH DELETE n",
+        {"b": [{"u": 3}]},
+        16,
+    ),
+]
+
+
 @pytest.mark.parametrize(
-    "query,params,most", [w[1:] for w in WRITE_JOBS], ids=[w[0] for w in WRITE_JOBS]
+    "query,params,most",
+    [w[1:] for w in WRITE_JOBS + BATCH_MATCH_JOBS],
+    ids=[w[0] for w in WRITE_JOBS + BATCH_MATCH_JOBS],
 )
 def test_benchmark_write_spark_jobs(spark, uapi, query, params, most):
     # the second run writes to the graph the first one committed
@@ -251,24 +286,73 @@ def test_commit_carries_the_id_mark(fapi):
     assert g.max_id == 6
 
 
-@pytest.mark.parametrize(
-    "query",
-    [
-        "MATCH (n) WHERE n.ID = 2 SET n.ID = 5",
-        "MERGE (n:P {name: 'a'}) ON MATCH SET n.ID = 5",
-        "UNWIND $b AS row MERGE (n:P {name: row.nm}) ON MATCH SET n.ID = row.i",
-    ],
-)
-def test_set_id_above_the_mark(fapi, query):
-    """A SET that moves a node's ID above the high-water mark: the next
-    CREATE still allocates a free id."""
-    fapi.cypher("CREATE (w:C)", graph=GRAPH).result(120)  # the mark is 4
+#: statements that would change an existing entity's reserved column:
+#: a node's ID (its edges would point at no node) or LABELS (labels
+#: change through SET n:L), a relationship's endpoints or identity
+RESERVED_WRITES = [
+    "MATCH (n) WHERE n.ID = 2 SET n.ID = 50",
+    "MATCH (n) WHERE n.ID = 2 SET n = {ID: 50}",
+    "MATCH (n) WHERE n.ID = 2 SET n += {ID: 50}",
+    "MATCH (n) WHERE n.ID = 2 FOREACH (x IN [50] | SET n.ID = x)",
+    "MATCH (n), (m) WHERE n.ID = 2 AND m.ID = 1 SET n.ID = 50, m.v = 1",
+    "MERGE (n:P {name: 'a'}) ON MATCH SET n.ID = 50",
+    "UNWIND $b AS row MERGE (n:P {name: row.nm}) ON MATCH SET n.ID = row.i",
+    "UNWIND $b AS row MATCH (n {ID: row.i}) SET n.ID = 50",
+    "MATCH (n) WHERE n.ID = 2 WITH n SET n.ID = 50",
+    "MATCH (n) WHERE n.ID = 2 SET n.LABELS = ['Z']",
+    "MATCH (n) WHERE n.ID = 2 REMOVE n.ID",
+    "MATCH (a)-[r:K]->(b) WHERE a.ID = 1 SET r.START_ID = 3",
+    "UNWIND $b AS row MATCH (a {ID: row.i}), (b {ID: 1}) "
+    "MERGE (a)-[r:K]->(b) ON MATCH SET r.END_ID = 3",
+]
+
+
+@pytest.mark.parametrize("query", RESERVED_WRITES)
+def test_reserved_columns_are_refused(fapi, query):
+    """Every form refuses, at submit, an item that changes an existing
+    entity's reserved column, and leaves the graph as it was."""
+    before = _state(fapi)
+    with pytest.raises(CypherUnsupported, match=r"\.(ID|LABELS|START_ID|"
+                       r"END_ID): the \w+ column is immutable"):
+        fapi.cypher(
+            query, graph=GRAPH, params={"b": [{"nm": "a", "i": 2}]}
+        )
+    assert _state(fapi) == before
+
+
+def test_merge_on_create_may_set_the_id(fapi):
+    """ON CREATE only creates: its ID is the new node's."""
     fapi.cypher(
-        query, graph=GRAPH, params={"b": [{"nm": "a", "i": 5}]}
+        "MERGE (n:P {name: 'z'}) ON CREATE SET n.ID = 50", graph=GRAPH
     ).result(120)
-    fapi.cypher("CREATE (x:C)", graph=GRAPH).result(120)
-    ids = [r.ID for r in fapi.catalog.get(GRAPH).nodes.collect()]
-    assert sorted(ids) == [1, 3, 4, 5, 6]
+    g = fapi.catalog.get(GRAPH)
+    assert sorted(r.ID for r in g.nodes.collect()) == [1, 2, 3, 50]
+    assert g.max_id == 50
+
+
+def test_concurrent_write_returns_are_their_own(spark):
+    """Writes on different graphs run on their own threads at once, and
+    each RETURN projects its own write: no two projections share a
+    temp view."""
+    api = Neo4jArrowSpark(spark)
+    names = [f"wret{i}" for i in range(8)]
+    for name in names:
+        api.catalog.register(name, spark.createDataFrame(
+            [(1, ["X"], 0)], "ID long, LABELS array<string>, k long"
+        ), None, overwrite=True)
+    try:
+        for _round in range(4):
+            jobs = [
+                api.cypher(
+                    f"CREATE (n:X {{k: {i}}}) RETURN n.k AS k", graph=name
+                )
+                for i, name in enumerate(names)
+            ]
+            got = [[r.k for r in job.result(120).collect()] for job in jobs]
+            assert got == [[i] for i in range(len(names))]
+    finally:
+        for name in names:
+            api.catalog.drop(name)
 
 
 def test_merges_keep_the_partition_count(uapi):
