@@ -16,7 +16,10 @@ subsumed by operating on the distinct directed edge set.
 
 Spark plan (all equi-joins; no disjunctive join, no per-row traversal):
 
-1. ``E`` = distinct (src, dst) after the optional type filter;
+1. ``E`` = distinct (src, dst) after the optional type filter — one
+   dedup exchange, which every later branch reads (the closure's
+   pairs, the remap joins, both incident sides): the plan builds the
+   edge frame once;
 2. ``members(origin, member)`` = undirected adjacency ∪ identity;
 3. ``incident(member, src, dst)`` = each edge keyed by both endpoints;
 4. 2-hop set = ``members ⋈ incident ON member``, distinct
@@ -45,14 +48,29 @@ DEFAULT_LIST_SIZE = 2048  # ARROW_MAX_LIST_SIZE, Config.java:73-75
 
 
 def _distinct_edges(rels: DataFrame, filters: Sequence[str] | None) -> DataFrame:
+    """The distinct (src, dst) edge set, the one edge frame every branch
+    of the expansion reads.
+
+    An edge with a NULL endpoint fails the job with a message naming
+    it: it is not an edge of any graph (``gds_write_relationships``
+    refuses it as an ``UnresolvedEndpoint``), and dropping it would
+    hide the bad input. The check rides in the projection, so it costs
+    no Spark job. The explicit non-null filter after it is what lets
+    the branches share one dedup exchange: without it, each branch's
+    join infers its own ``isnotnull`` filter (on src in one, dst in
+    another), pushes it below the dedup, and plans a copy of the
+    exchange of its own."""
     e = rels
     if filters:
         e = e.filter(F.col(RelField.TYPE).isin(list(filters)))
+    s, d = F.col(RelField.START_ID), F.col(RelField.END_ID)
+    null_end = F.when(
+        s.isNull() | d.isNull(),
+        F.raise_error(F.format_string("khop: edge (%s, %s) has a NULL endpoint", s, d)),
+    )
     return (
-        e.select(
-            F.col(RelField.START_ID).alias("src"),
-            F.col(RelField.END_ID).alias("dst"),
-        )
+        e.select(null_end.otherwise(s).alias("src"), null_end.otherwise(d).alias("dst"))
+        .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
         .dropDuplicates(["src", "dst"])
     )
 
@@ -102,15 +120,26 @@ def khop_flat(
     which lets the plan skip a semi-join shuffle against ``nodes``.
     Pass False when ``nodes`` is a strict subset of the endpoints.
 
-    Shuffle budget at k=2 (the thing that matters at 100 TB): exactly
-    four — edge dedup, member dedup, the member equi-join, and nothing
-    for the output. ``incident`` is constructed duplicate-free (edges
-    are distinct and the dst-keyed copy excludes self-loops), so it
-    needs no shuffle; AQE skew-join splits hot members (supernodes).
+    Shuffle budget at k=2 (the thing that matters at 100 TB): the edge
+    dedup, the member dedup, the member equi-join, and nothing for the
+    output. The edge dedup runs once: every branch reads the one
+    ``_distinct_edges`` frame through the same exchange (the closure's
+    pairs are taken before the remap joins, which only the incident
+    sides need). The output needs no dedup: ``A`` (edges keyed by src)
+    and ``B`` (keyed by dst) are each duplicate-free because the edges
+    are distinct, and the anti-join that makes them disjoint also drops
+    every self-loop from ``B`` — a loop (v, v) reaches ``B`` only when v
+    is a member, and then its src is one — so ``inc_dst`` needs no
+    self-loop filter of its own. AQE skew-join splits hot members
+    (supernodes).
+
+    An edge with a NULL endpoint fails the job, naming the edge
+    (:func:`_distinct_edges`).
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    edges = _distinct_edges(rels, filters)
+    base = _distinct_edges(rels, filters)
+    edges = base
 
     # ``node_id`` remap (the client's khop(node_id=...) re-key,
     # neo4j_arrow.py:256-268 / GdsReadJob.java:281-283) happens BEFORE
@@ -148,10 +177,12 @@ def khop_flat(
     identity = nodes.select(
         F.col(NodeField.ID).alias("origin"), F.col(NodeField.ID).alias("member")
     )
-    pairs = edges.select(
+    # built from the edge frame before the remap joins, so that the
+    # closure and the incident sides read one and the same dedup exchange
+    pairs = base.select(
         F.col("src").alias("origin"), F.col("dst").alias("member")
     ).unionByName(
-        edges.select(F.col("dst").alias("origin"), F.col("src").alias("member"))
+        base.select(F.col("dst").alias("origin"), F.col("src").alias("member"))
     )
     und = pairs.dropDuplicates(["origin", "member"])
     par = nodes.sparkSession.sparkContext.defaultParallelism
@@ -197,17 +228,16 @@ def khop_flat(
     # Duplicate-free decomposition — the output NEVER shuffles:
     #   A  = edges whose src is a member of N*(o)     (unique per origin:
     #        members is unique on (origin,member), edges on (src,dst))
-    #   B  = edges whose dst is a member, minus self-loops (unique too)
+    #   B  = edges whose dst is a member (unique too)
     #   A ∩ B = edges with BOTH endpoints in N*(o) → remove from B via
-    #   an anti-join on (origin, src) against members.
+    #   an anti-join on (origin, src) against members. A self-loop in B
+    #   has its src in N*(o), so the anti-join drops it too.
     # A ∪ B' is then a disjoint union — no final dropDuplicates, so the
     # (potentially enormous) 2-hop output avoids its own shuffle; only
     # the small member/edge frames ever exchange.
     carry = ["_srcm", "_dstm"] if idmap is not None else []
     inc_src = edges.select(F.col("src").alias("member"), "src", "dst", *carry)
-    inc_dst = edges.filter(F.col("src") != F.col("dst")).select(
-        F.col("dst").alias("member"), "src", "dst", *carry
-    )
+    inc_dst = edges.select(F.col("dst").alias("member"), "src", "dst", *carry)
     if idmap is not None:
         # origin remap on the |members| frame (≤ |V| + 2|E| rows at
         # k=2; Σ reach at k>=3) — the check itself is applied on the
@@ -296,7 +326,14 @@ def khop(
     + raise_error) instead of silently shrinking the edge set — the
     reference surfaces missing remap properties as NOT_FOUND errors
     (GdsReadJob.java:281-283). raise_error is evaluated inside the
-    remap projection, so the check costs no extra Spark job.
+    remap projection, so the check costs no extra Spark job. So is the
+    check that fails an edge with a NULL endpoint, with or without a
+    remap.
+
+    Shuffle budget: :func:`khop_flat`'s (at k=2 the edge dedup — one
+    exchange, which the remap joins share with the expansion — the
+    member dedup and the member equi-join) plus one exchange on origin
+    for the chunking.
     """
     flat = khop_flat(nodes, rels, filters, k=k, node_id=node_id)
     # One exchange total: the window shuffles on origin, and the

@@ -76,6 +76,26 @@ _BASE_CONF = {
     "spark.sql.python.filterPushdown.enabled": "true",
     "spark.ui.enabled": "false",
     "spark.ui.showConsoleProgress": "false",
+    # Janino compiles each distinct generated class once per JVM and
+    # keeps it in an LRU cache of 100 entries by default. One k-hop
+    # needs ~60 entries and a mixed read/write cycle ~135, so at 100 the
+    # cycle evicted its own classes and re-compiled them on every run
+    # (0.5-0.8 s of compile time per cycle of the cypher_rw benchmark,
+    # 4 cores).
+    # A whole cypher_rw run, set-ups included, compiles ~250 distinct
+    # entries; an entry holds ~5 KB of source and ~5.5 KB of bytecode
+    # (2.4 classes of ~2.3 KB), so 1,000 entries cost ~10-15 MB of JVM
+    # memory and leave room for a wider query mix. Static: read
+    # once, when the JVM's first class is generated.
+    "spark.sql.codegen.cache.maxEntries": "1000",
+    # The cache is keyed by the generated source. By default a
+    # whole-stage class is named after its codegen stage id, and AQE
+    # numbers stages in the order it plans them, which follows the order
+    # earlier stages finish: the same stage of a re-run k-hop came back
+    # under a new name and missed the cache (a re-registered 40-node
+    # graph's k-hop compiled 25, 21 and 10 classes on its 2nd-4th runs;
+    # 0, 0 and 8 without the id).
+    "spark.sql.codegen.useIdInClassName": "false",
 }
 
 

@@ -59,6 +59,23 @@ def spark_jobs(spark, fn) -> set:
     return ids() - before
 
 
+def register_users(api, name: str, extra_rels=()) -> None:
+    """Register the benchmark's graph shape at 40 users as ``name``:
+    User nodes 0-39 (``uid`` = ID, ``score`` = float(ID)) and one
+    FOLLOWS edge i -> (7i + 1) mod 40 per node, plus ``extra_rels``
+    (START_ID, END_ID, TYPE) rows."""
+    spark = api.spark
+    nodes = spark.createDataFrame(
+        [(i, ["User"], i, float(i)) for i in range(40)],
+        "ID long, LABELS array<string>, uid long, score double",
+    )
+    rels = spark.createDataFrame(
+        [(i, (i * 7 + 1) % 40, "FOLLOWS") for i in range(40)] + list(extra_rels),
+        "START_ID long, END_ID long, TYPE string",
+    )
+    api.catalog.register(name, nodes, rels, overwrite=True)
+
+
 @pytest.fixture(scope="session")
 def spark():
     spark = get_session(

@@ -13,7 +13,7 @@ import pytest
 from neo4j_arrow_spark.api import Neo4jArrowSpark
 from neo4j_arrow_spark.cypher import CypherSyntaxError, CypherUnsupported
 from neo4j_arrow_spark.cypher_write import _sql_in
-from conftest import spark_jobs
+from conftest import register_users, spark_jobs
 
 GRAPH = "wforms"
 
@@ -158,15 +158,7 @@ def test_batch_create_reference_is_the_whole_value(fapi, props):
 def uapi(spark):
     """The benchmark's write shapes on a 40-user graph."""
     api = Neo4jArrowSpark(spark)
-    nodes = spark.createDataFrame(
-        [(i, ["User"], i, float(i)) for i in range(40)],
-        "ID long, LABELS array<string>, uid long, score double",
-    )
-    rels = spark.createDataFrame(
-        [(i, (i * 7 + 1) % 40, "FOLLOWS") for i in range(40)],
-        "START_ID long, END_ID long, TYPE string",
-    )
-    api.catalog.register("wjobs", nodes, rels, overwrite=True)
+    register_users(api, "wjobs")
     yield api
     api.catalog.drop("wjobs")
 

@@ -2,7 +2,9 @@
 
 Times selected registry queries through the same GC-barriered noop-sink
 methodology as bench.py (best of N reps), without touching
-BENCH_FULL.json / BENCH_RECORD.json. Optionally dumps
+BENCH_FULL.json / BENCH_RECORD.json. Next to each rep's time it prints
+the number of classes Janino compiled for it (codegen cache misses: a
+warm rep should compile few). Optionally dumps
 ``.explain('formatted')`` per query.
 
 Usage:
@@ -42,23 +44,29 @@ def main() -> None:
     if missing:
         raise SystemExit(f"unknown queries: {missing}")
 
+    codegen = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def compiles() -> int:
+        return codegen.METRIC_COMPILATION_TIME().getCount()
+
     out: dict[str, float] = {}
     for name in args.queries:
         fn = qs[name]
-        times = []
+        times, classes = [], []
         for _ in range(args.reps):
             gc.collect()
             spark.sparkContext._jvm.System.gc()
             spark.sparkContext.setJobDescription(name)
-            t0 = time.perf_counter()
+            c0, t0 = compiles(), time.perf_counter()
             df = fn(spark, args.sf)
             df.write.format("noop").mode("overwrite").save()
             times.append(time.perf_counter() - t0)
+            classes.append(compiles() - c0)
             unpersist_intermediates(df)
             spark.sparkContext.setJobDescription(None)
         out[name] = round(min(times), 3)
-        print(f"{name}: best {out[name]}s reps={[round(t, 2) for t in times]}",
-              flush=True)
+        print(f"{name}: best {out[name]}s reps={[round(t, 2) for t in times]} "
+              f"compiled={classes}", flush=True)
         if args.plans:
             os.makedirs(args.plans, exist_ok=True)
             df = fn(spark, args.sf)
