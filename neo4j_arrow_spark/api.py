@@ -207,15 +207,9 @@ class Neo4jArrowSpark:
             rel_props=None if g.rels is None else [
                 c for c in g.rels.columns if c not in RelField.RESERVED
             ],
-            # registration mints (REL_ID, REL_ID2) into the
-            # companion `<graph>_rels_eid` view (catalog.register),
-            # giving true openCypher edge identity; the transpiler
-            # reads the eid view ONLY when the query references
-            # edge identity, so identity-free queries never pay the
-            # minting shuffle. Frames with no eid view fall back to
-            # (START_ID, END_ID, TYPE) triple mode.
-            rel_id=g.rels_eid is not None,
-            rels_eid_view=f"{graph}_rels_eid",
+            # registration mints (REL_ID, REL_ID2) into the rels
+            # frame (catalog.register): true openCypher edge identity
+            rel_id=g.rels is not None,
             # property-column → Spark type map: lets
             # type-polymorphic emissions (isEmpty) dispatch on the
             # registered type; a name carried by BOTH frames with
@@ -237,7 +231,7 @@ class Neo4jArrowSpark:
             frames.append((g.rels, tuple(RelField.RESERVED)))
         for df, reserved in frames:
             for f in df.schema.fields:
-                if f.name in reserved or f.name in ("REL_ID", "REL_ID2"):
+                if f.name in reserved:
                     continue
                 ty = f.dataType.simpleString()
                 if f.name in out and out[f.name] != ty:
@@ -286,27 +280,19 @@ class Neo4jArrowSpark:
 
         graph = self._resolve_graph(db, graph)
         g = self.catalog.get(graph, db, self.username)
-        # writes operate on the identity-minted frame/view so any
-        # multi-rel-slot read part keeps true openCypher edge identity;
-        # a changed rel frame (pre-minted) re-registers without a
-        # second minting pass
-        eid = g.rels_eid is not None
-        rels_in = g.rels_eid if eid else g.rels
         form = parse_write(
             query,
             params,
-            (f"{graph}_nodes", f"{graph}_rels" + ("_eid" if eid else "")),
+            (f"{graph}_nodes", f"{graph}_rels"),
             lambda q: self._compile_read(q, graph, g),
         )
 
         def run() -> DataFrame:
             mark = IdMark(g.nodes, g.max_id)
-            nodes, rels, summary, ret = form(
-                self.spark, g.nodes, rels_in, mark
-            )
+            nodes, rels, summary, ret = form(self.spark, g.nodes, g.rels, mark)
             if nodes is not g.nodes:
                 nodes = _snapshot(nodes)
-            if rels is not rels_in:
+            if rels is not g.rels:
                 rels = _snapshot(rels)
             # a trailing RETURN projects over the committed frames (its
             # job fills their snapshots) and runs before the commit, so
@@ -314,14 +300,11 @@ class Neo4jArrowSpark:
             result = (
                 summary if ret is None else ret(nodes, rels).localCheckpoint()
             )
-            if nodes is not g.nodes or rels is not rels_in:
-                # unchanged rels keep the plain frame: registering the
-                # minted one would make every identity-free read of
-                # `<graph>_rels` pay the minting shuffle
+            if nodes is not g.nodes or rels is not g.rels:
                 self.catalog.register(
                     graph,
                     nodes,
-                    g.rels if rels is rels_in else rels,
+                    rels,
                     database=db,
                     username=self.username,
                     overwrite=True,
@@ -420,25 +403,34 @@ class Neo4jArrowSpark:
             return data
         return ingest.from_arrow(self.spark, data)
 
-    def _deferred(self, job_type: str, consume, timeout: float | None = None) -> Job:
+    def _deferred(
+        self, job_type: str, consume, roles=("data",),
+        timeout: float | None = None,
+    ) -> Job:
         """Two-phase write parity: the reference tickets a write job
         first and the data arrives later via ``do_put`` (``put()``,
         neo4j_arrow.py:325-344; WriteJob.java:47-50). The job thread
-        blocks until :meth:`put` supplies the data — bounded by
-        ``timeout`` (default :attr:`put_timeout`): an orphaned ticket
-        fails to ERROR and releases its thread instead of leaking."""
+        blocks until :meth:`put` has supplied one stream per name of
+        ``roles``, then runs ``consume`` over them in that order. The
+        wait is bounded by ``timeout`` (default :attr:`put_timeout`):
+        an orphaned ticket fails to ERROR and releases its thread
+        instead of leaking."""
         import threading
 
-        holder: dict = {"evt": threading.Event(), "data": None}
+        holder: dict = {
+            "evt": threading.Event(), "lock": threading.Lock(),
+            "data": dict.fromkeys(roles),
+        }
         wait_s = self.put_timeout if timeout is None else timeout
 
         def run() -> DataFrame:
             if not holder["evt"].wait(wait_s):
+                missing = [r for r, d in holder["data"].items() if d is None]
                 raise TimeoutError(
-                    f"{job_type}: no put() within {wait_s:g}s — "
-                    "ticket orphaned, job failed"
+                    f"{job_type}: no put() of {', '.join(missing)} within "
+                    f"{wait_s:g}s — ticket orphaned, job failed"
                 )
-            return consume(self._as_df(holder["data"]))
+            return consume(*[self._as_df(holder["data"][r]) for r in roles])
 
         job = self.registry.submit(job_type, run)
         job._put_holder = holder  # type: ignore[attr-defined]
@@ -464,32 +456,28 @@ class Neo4jArrowSpark:
         DataFrames, which carry no schema metadata."""
         if isinstance(job, str):
             job = self.registry.get(job)
-        streams = getattr(job, "_put_streams", None)
-        if streams is not None:
-            role = stream_type
-            if role is None:
-                md = getattr(getattr(data, "schema", None), "metadata", None) or {}
-                raw = md.get(b"stream.type", md.get("stream.type"))
-                role = raw.decode() if isinstance(raw, bytes) else raw
-            if role not in ("node", "rels"):
-                # invalid-metadata rejection parity (BulkImportJob.java:192-198)
-                raise ValueError(
-                    "bulk import streams need stream.type metadata "
-                    "'node' or 'rels' (or pass stream_type=...)"
-                )
-            with streams["lock"]:
-                streams[role] = data
-                if streams["node"] is not None and streams["rels"] is not None:
-                    streams["evt"].set()
-            return self._sizes(data)
         holder = getattr(job, "_put_holder", None)
         if holder is None:
             raise ValueError(
                 f"job {job.ticket} is not awaiting a put() "
                 "(it was submitted with inline data)"
             )
-        holder["data"] = data
-        holder["evt"].set()
+        streams = holder["data"]
+        role = next(iter(streams)) if len(streams) == 1 else stream_type
+        if role is None:
+            md = getattr(getattr(data, "schema", None), "metadata", None) or {}
+            raw = md.get(b"stream.type", md.get("stream.type"))
+            role = raw.decode() if isinstance(raw, bytes) else raw
+        if role not in streams:
+            # invalid-metadata rejection parity (BulkImportJob.java:192-198)
+            raise ValueError(
+                "bulk import streams need stream.type metadata "
+                "'node' or 'rels' (or pass stream_type=...)"
+            )
+        with holder["lock"]:
+            streams[role] = data
+            if all(d is not None for d in streams.values()):
+                holder["evt"].set()
         return self._sizes(data)
 
     def gds_write_nodes(
@@ -534,7 +522,7 @@ class Neo4jArrowSpark:
                 self.catalog, graph, df, source_field, target_field, type_field,
                 database=database or self.database,
             )
-            return g.rels
+            return g.rels.drop(RelField.REL_ID, RelField.REL_ID2)
 
         if rels is None:
             return self._deferred("gds.write.relationships", consume)
@@ -554,7 +542,8 @@ class Neo4jArrowSpark:
         """K3 (client: neo4j_arrow.py:454-467). Inline frames, or the
         reference's two-stream flow: omit both and send each stream via
         :meth:`put` with ``stream.type`` metadata (``node``/``rels``,
-        BulkImportJob.java:82-97) — the job runs once both arrive."""
+        BulkImportJob.java:82-97) — the job runs once both arrive, and
+        fails to ERROR if they have not within :attr:`put_timeout`."""
         def consume2(nodes_df: DataFrame, rels_df: DataFrame) -> DataFrame:
             g = ingest.bulk_import(
                 self.spark, self.catalog, database_path, nodes_df, rels_df,
@@ -563,24 +552,7 @@ class Neo4jArrowSpark:
             return g.nodes
 
         if nodes is None and rels is None:
-            import threading
-
-            streams: dict = {
-                "evt": threading.Event(),
-                "lock": threading.Lock(),
-                "node": None,
-                "rels": None,
-            }
-
-            def run() -> DataFrame:
-                streams["evt"].wait()
-                return consume2(
-                    self._as_df(streams["node"]), self._as_df(streams["rels"])
-                )
-
-            job = self.registry.submit("import.bulk", run)
-            job._put_streams = streams  # type: ignore[attr-defined]
-            return job
+            return self._deferred("import.bulk", consume2, ("node", "rels"))
         if nodes is None or rels is None:
             raise ValueError("pass both nodes and rels inline, or neither")
         return self.registry.submit(

@@ -8,6 +8,15 @@ both frames (the "in-memory projection" semantics) and exposes them as
 temp views ``<name>_nodes`` / ``<name>_rels`` so ``spark.sql`` works
 over graphs (the S1 cypher-read capability, SURVEY.md §2.1).
 
+Each graph version has ONE relationship frame, and it carries the
+surrogate ``(REL_ID, REL_ID2)`` edge identity (:func:`mint_rel_ids`):
+registration mints it into a frame that lacks it and keeps a
+pre-minted frame (a write's output) as it is. ``<name>_rels`` therefore
+has the same columns before and after any write. A read that does not
+reference identity pays nothing for it: Catalyst's column pruning
+removes the minting ``Window`` from its plan. A cached graph caches the
+rows and mints over them, so such a read scans the cache.
+
 Registration is synchronous — the reference's write-visibility race
 (``README.md:214-218``: job reports done before the catalog entry is
 usable) is deliberately fixed here.
@@ -43,7 +52,12 @@ def mint_rel_ids(rels: "DataFrame") -> "DataFrame":
     ``r1 <> r2`` uniqueness predicate silently drop a valid row pair.
     Comparing the pair pushes expected collisions past 1e18 edges.
     ``id(r)`` returns REL_ID alone (a documented 64-bit readout);
-    uniqueness predicates always compare both columns."""
+    uniqueness predicates always compare both columns.
+
+    :meth:`GraphCatalog.register` mints every relationship frame that
+    lacks the columns, so each graph's one rels frame carries them. The
+    ``Window`` sits under a projection, so a query that selects neither
+    column loses it to column pruning and never pays the shuffle."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
@@ -94,6 +108,9 @@ class GraphCatalog:
         max_id: int | None = None,
     ) -> Graph:
         """Register ``name``'s frames as a new graph version.
+        ``rels`` gains the ``(REL_ID, REL_ID2)`` identity
+        (:func:`mint_rel_ids`) unless it already carries it; with
+        ``cache`` the rows are cached and identity minted over them.
         ``max_id``, when known, is its node-ID high-water mark
         (:attr:`Graph.max_id`): no node has a larger ID."""
         key = self._key(name, database, username)
@@ -113,29 +130,21 @@ class GraphCatalog:
             validate_nodes(nodes)
             if rels is not None:
                 validate_rels(rels)
-        # Two rel views: `<name>_rels` is the PLAIN frame (no identity
-        # minting — no window, no all-columns shuffle on read), and
-        # `<name>_rels_eid` carries the surrogate (REL_ID, REL_ID2)
-        # identity. The Cypher transpiler picks the eid view ONLY when
-        # the query actually references edge identity (multi-rel-slot
-        # uniqueness, id(r), count(r)); every other query reads the
-        # plain view and never pays the minting shuffle+window — the
-        # r7 read-path tax, removed.
-        rels_eid = None
-        if rels is not None:
-            if "REL_ID" in rels.columns and "REL_ID2" in rels.columns:
-                rels_eid = rels  # pre-minted (e.g. a write's output)
-            else:
-                rels_eid = mint_rel_ids(rels)
+        from neo4j_arrow_spark.operators.dedup import _with_intermediates
+
         if cache:
             nodes = nodes.cache()
             if rels is not None:
                 rels = rels.cache()
+        if rels is not None and not {"REL_ID", "REL_ID2"} <= set(rels.columns):
+            # minted over the cached rows, not cached minted: a minted
+            # cache fill would add a shuffle job to a cached graph's
+            # first read; drop() releases the cached rows
+            rels = _with_intermediates(mint_rel_ids(rels), [rels])
         graph = Graph(
             name=name,
             nodes=nodes,
             rels=rels,
-            rels_eid=rels_eid,
             database=database,
             username=username,
             max_id=max_id,
@@ -144,7 +153,6 @@ class GraphCatalog:
         nodes.createOrReplaceTempView(f"{name}_nodes")
         if rels is not None:
             rels.createOrReplaceTempView(f"{name}_rels")
-            rels_eid.createOrReplaceTempView(f"{name}_rels_eid")
         return graph
 
     def get(self, name: str, database: str = "neo4j", username: str = "neo4j") -> Graph:
@@ -159,14 +167,16 @@ class GraphCatalog:
         graph = self._graphs.pop(key, None)
         if graph is None:
             raise GraphNotFound(f"no graph {key}")
+        from neo4j_arrow_spark.operators.dedup import unpersist_intermediates
+
         # release hook parity: ArrowGraphStore.java:19-32 unpins memory
         graph.nodes.unpersist()
         if graph.rels is not None:
             graph.rels.unpersist()
+            unpersist_intermediates(graph.rels)
         self.spark.catalog.dropTempView(f"{name}_nodes")
         if graph.rels is not None:
             self.spark.catalog.dropTempView(f"{name}_rels")
-            self.spark.catalog.dropTempView(f"{name}_rels_eid")
 
     def list(self) -> list[tuple[str, str, str]]:
         """list_flights parity (Producer.java:412-416): enumerate streams."""

@@ -2068,9 +2068,8 @@ class _Parser:
     def _rel_identity(self, var: str) -> str:
         """A fixed-length relationship variable used as a VALUE
         (``id(r)``, ``count(r)``, ``count(DISTINCT r)``, ``r1 <> r2``)
-        resolves to the surrogate REL_ID identity column (minted at
-        catalog registration — the transpiler's eid-view pass picks the
-        identity-carrying view whenever this emission appears). Neo4j
+        resolves to the surrogate REL_ID identity column (minted into
+        the graph's rels frame at catalog registration). Neo4j
         returns the store's internal edge id; REL_ID is the honest
         Spark analogue (documented: a 64-bit content hash, stable
         within a registration, not a Neo4j id).
@@ -2085,7 +2084,7 @@ class _Parser:
         if not self.rel_id:
             raise CypherUnsupported(
                 f"relationship identity for {var!r} needs the minted "
-                "identity view (register the graph through "
+                "identity columns (register the graph through "
                 "GraphCatalog; schema-less rel frames carry no "
                 "edge identity)"
             )
@@ -2960,8 +2959,8 @@ class _Parser:
             # a bare fixed-length relationship variable as a whole
             # item. RETURN r projects the rel-object struct (no edge
             # identity needed — handled here, before expression
-            # parsing, so identity-free queries stay on the plain
-            # view); WITH r (carrying the rel) is unsupported.
+            # parsing, so the emission reads no identity column);
+            # WITH r (carrying the rel) is unsupported.
             self.next()
             if not self._in_return:
                 raise CypherUnsupported(
@@ -4774,13 +4773,13 @@ def _path_edge_identity_conds(
     """Per-path relationship uniqueness for varlength-expanded hops
     (r8): openCypher forbids reusing an edge within one path. Identity
     here is the physical row — (START, END, TYPE) plus EVERY rel
-    property, compared null-safely — NOT the surrogate REL_ID: minting
-    would put every bounded-varlength query on the eid view's
-    full-edge shuffle. Same-triple parallel edges with any differing
-    property stay distinct; only EXACT-duplicate twins are conflated
-    (documented, test-pinned divergence). Pairs wholly between fixed
-    slots of varlength-free chains are excluded — those carry the
-    REL_ID-mode conds from _rel_uniqueness_conds."""
+    property, compared null-safely — NOT the surrogate REL_ID: reading
+    it would keep the minting Window, and its full-edge shuffle, in
+    every bounded-varlength plan. Same-triple parallel edges with any
+    differing property stay distinct; only EXACT-duplicate twins are
+    conflated (documented, test-pinned divergence). Pairs wholly
+    between fixed slots of varlength-free chains are excluded — those
+    carry the REL_ID-mode conds from _rel_uniqueness_conds."""
     eq = "<=>" if dialect == "spark" else "IS NOT DISTINCT FROM"
     out: list[str] = []
     for x in range(len(slots)):
@@ -5002,7 +5001,6 @@ def cypher_to_sql(
     max_hops: int | None = None,
     node_props: list[str] | None = None,
     rel_id: bool = False,
-    rels_eid_view: str | None = None,
     rel_props: list[str] | None = None,
     prop_types: dict[str, str] | None = None,
 ) -> str:
@@ -5017,31 +5015,14 @@ def cypher_to_sql(
     are added to ``params_out`` when provided, so callers can check
     the binding set before execution.
 
-    ``rels_eid_view`` names the identity-minted companion view
-    (catalog registers ``<name>_rels_eid`` with the surrogate
-    (REL_ID, REL_ID2) columns). When given with ``rel_id=True`` the
-    transpile is TWO-PASS: pass 1 emits against the eid view assuming
-    identity is available; if the emitted SQL never actually
-    references an identity column (single-rel-slot queries, the vast
-    majority), pass 2 re-emits against the plain view with
-    ``rel_id=False`` — so identity-free queries never pay the minting
-    window's full-edge-table shuffle (the r7 read-path tax)."""
-    if rel_id and rels_eid_view is not None:
-        scratch: set[str] = set()
-        sql = _cypher_to_sql_once(
-            query, nodes_view, rels_eid_view, dialect, scratch,
-            max_hops, node_props, rel_id=True, rel_props=rel_props,
-            prop_types=prop_types,
-        )
-        if re.search(r"\.REL_ID", sql) is None:
-            sql = _cypher_to_sql_once(
-                query, nodes_view, rels_view, dialect, scratch,
-                max_hops, node_props, rel_id=False, rel_props=rel_props,
-                prop_types=prop_types,
-            )
-        if params_out is not None:
-            params_out.update(scratch)
-        return sql
+    ``rel_id=True`` says ``rels_view`` carries the surrogate
+    ``(REL_ID, REL_ID2)`` identity (every catalog graph's rels view
+    does): relationship values and uniqueness read it, so
+    exact-duplicate parallel edges stay distinct. The transpile is one
+    pass; a query that never reads identity emits no identity column,
+    and Catalyst prunes the minting ``Window`` from its plan. Without
+    it (triple mode) a relationship is its ``(START_ID, END_ID, TYPE)``
+    triple."""
     return _cypher_to_sql_once(
         query, nodes_view, rels_view, dialect, params_out,
         max_hops, node_props, rel_id, rel_props=rel_props,
@@ -7087,10 +7068,6 @@ def _varlength_sql(ast: dict, nodes_view: str, rels_view: str) -> str:
         if ast["skip"] is not None:
             sql += f"\nOFFSET {ast['skip']}"
     return sql
-
-
-def n0Var(nodes: list[_NodePat]) -> str:
-    return nodes[0].var
 
 
 def _dir_sql(d: str) -> str:

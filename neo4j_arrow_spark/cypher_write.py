@@ -2541,8 +2541,7 @@ class _WriteParser(_Parser):
             self._end()
             if var in {r.var for r in rels if r.var}:
                 # relationship delete: matched edges drop by their
-                # (src, dst, type) triple — parallel edges sharing the
-                # triple all go (the frame has no per-edge identity)
+                # surrogate (REL_ID, REL_ID2) identity
                 if detach:
                     raise CypherUnsupported(
                         "DETACH applies to node deletes; relationships "
@@ -2571,20 +2570,16 @@ def _decimals_to_double(df: DataFrame) -> DataFrame:
 
 
 def _union_rels(rels: DataFrame, new: DataFrame) -> DataFrame:
-    """Union created relationship rows into the graph's rel frame.
-    When the frame carries the surrogate REL_ID column (catalog
-    registration mints it), the ids are re-minted over the WHOLE union:
-    the minting is content-deterministic (hash of columns + duplicate-
-    group index), so minting new rows separately would collide with an
-    existing identical edge — re-minting the union gives every
-    duplicate-group member a distinct index. A plain union for
-    schema-less (triple-identity) frames. allowMissingColumns: a
+    """Union created relationship rows into the graph's rel frame,
+    re-minting the surrogate (REL_ID, REL_ID2) identity over the WHOLE
+    union: the minting is content-deterministic (hash of columns +
+    duplicate-group index), so minting new rows separately would collide
+    with an existing identical edge — re-minting the union gives every
+    duplicate-group member a distinct index. allowMissingColumns: a
     schema-widening CREATE adds new rel property columns, pre-existing
     edges backfill NULL (note the re-mint then hashes the widened
     column set, so REL_IDs change — documented: identity is a content
     hash per registration, not stable across schema changes)."""
-    if "REL_ID" not in rels.columns:
-        return _append(rels, new)
     from neo4j_arrow_spark.catalog import mint_rel_ids
 
     return mint_rel_ids(
@@ -2796,8 +2791,9 @@ def parse_statement(stmt: WriteStatement) -> dict:
     }
 
 
-#: the (src, dst, type) identity of a relationship row
-_TRIPLE = [RelField.START_ID, RelField.END_ID, RelField.TYPE]
+#: a relationship's surrogate identity, which every registered rels
+#: frame carries (catalog.register mints it)
+_EDGE_ID = [RelField.REL_ID, RelField.REL_ID2]
 
 
 def execute_cypher_write(
@@ -2821,14 +2817,13 @@ def execute_cypher_write(
         return nodes, rels, _summary(spark, "create"), _ids_return(spark, spec)
     if ast["op"] in ("create", "merge"):
         return _write_patterns(spark, nodes, rels, spec, mark)
-    rid = rels is not None and "REL_ID" in rels.columns
 
     def match(*items):
         """The MATCH's rows projecting ``items`` ``(expr, alias)``."""
         return spark.sql(_plain_sql(
             _read_ast(
                 ast["nodes"], ast["rels"], ast["where"],
-                [(e, a, False) for e, a in items], ast["chains"], rel_id=rid,
+                [(e, a, False) for e, a in items], ast["chains"], rel_id=True,
             ),
             *spec["views"],
         ))
@@ -2868,22 +2863,25 @@ def execute_cypher_write(
             spark, spec, ids.select(F.col("__sid").alias("__rid")), frame=nodes
         )
     if op == "delete_rel":
-        # matched edges drop by their (src, dst, type) triple
+        # matched edges drop by their surrogate identity: a parallel
+        # edge the MATCH did not select stays
         if rels is None:
             raise ValueError("graph has no relationship frame")
         rv = ast["var"]
         t = match(
-            *[(f"{rv}.{c}", f"__d{i}") for i, c in enumerate(_TRIPLE)]
+            *[(f"{rv}.{c}", f"__d{i}") for i, c in enumerate(_EDGE_ID)]
         ).localCheckpoint(eager=False)
         cond = functools.reduce(
             lambda a, b: a & b,
-            [rels[c] == t[f"__d{i}"] for i, c in enumerate(_TRIPLE)],
+            [rels[c] == t[f"__d{i}"] for i, c in enumerate(_EDGE_ID)],
         )
         kept = rels.join(t, cond, "left_anti")
         r_del = rels.join(t, cond, "left_semi").count()
         return nodes, kept, _summary(spark, "delete", rels_deleted=r_del), (
             # r10: DELETE r RETURN … projects the PRE-delete edge rows
-            _rels_return(spark, spec, rels.join(t, cond, "left_semi"))
+            _rels_return(
+                spark, spec, rels.join(t, cond, "left_semi"), rel_id=True
+            )
         )
     n_props, ret = 0, None
     if op in ("set", "set_multi", "set_mixed"):
@@ -2901,17 +2899,15 @@ def execute_cypher_write(
         sets = ast["rel_sets"] if op == "set_mixed" else ast["sets"]
         if rels is None:
             raise ValueError("graph has no relationship frame")
-        # with the surrogate (REL_ID, REL_ID2) identity each edge
-        # updates on its own; triple-identity frames update
-        # exact-duplicate parallel edges together
-        keys = ["REL_ID", "REL_ID2"] if rid else _TRIPLE
+        # keyed by the surrogate identity, each edge updates on its
+        # own, exact-duplicate parallel edges included
         out, n, _upd = _set_matched(
-            rels, sets, keys, match, ast.get("replace"), keep_hit=True
+            rels, sets, _EDGE_ID, match, ast.get("replace"), keep_hit=True
         )
         rels, n_props = out.drop("__hit"), n_props + n
         # the SET rows keep their minted identity: id(r) reads it
         ret = _rels_return(
-            spark, spec, out.filter("__hit").drop("__hit"), rel_id=rid
+            spark, spec, out.filter("__hit").drop("__hit"), rel_id=True
         )
     return nodes, rels, _summary(spark, "set", props_set=n_props), ret
 

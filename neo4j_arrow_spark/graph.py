@@ -17,7 +17,7 @@ are enforced by validation, not by type — Spark has only variable
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -123,20 +123,16 @@ class Graph:
     ``GdsWriteJob`` (``plugin/.../job/GdsWriteJob.java:356-384``) — a CSR
     adjacency + property columns. In Spark the flat edge DataFrame IS the
     physical format (joins don't need CSR), so a Graph is just the two
-    frames plus metadata.
+    frames, its catalog key and its node-ID high-water mark.
     """
 
     name: str
     nodes: DataFrame
+    #: the one relationship frame; catalog registration gives it the
+    #: surrogate (REL_ID, REL_ID2) edge-identity columns
     rels: DataFrame | None = None
-    #: rels + the surrogate (REL_ID, REL_ID2) edge-identity columns —
-    #: set by catalog registration; read only by queries that actually
-    #: reference edge identity (the plain ``rels`` frame is the default
-    #: read path, so the minting window never taxes identity-free reads)
-    rels_eid: DataFrame | None = None
     database: str = "neo4j"
     username: str = "neo4j"
-    metadata: dict = field(default_factory=dict)
     #: the node-ID high-water mark: no node of this version has a larger
     #: ID, and a Cypher CREATE allocates above it (None: not known; the
     #: first CREATE computes it). Registration or a write's commit sets it.

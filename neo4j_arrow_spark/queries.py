@@ -17,6 +17,7 @@ Cross-engine determinism rules used throughout:
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -61,67 +62,78 @@ def _sql_literal(v) -> str:
 CYPHER_TEXTS: dict[str, tuple[str, dict | None, str]] = {}
 
 
-def _cypher_query(
+def _graph(spark: SparkSession, sf_dir: str):
+    tables = load_tables(
+        spark, sf_dir, ("customer", "supplier", "nation", "orders", "lineitem")
+    )
+    return graph_frames_from_tpch(spark, tables)
+
+
+def _graph_query(
     name: str,
     cypher_text: str,
+    kind: str,
+    prefix: str,
+    frames,
+    nodes_sql: str,
+    rels_sql: str,
+    rel_props: list[str],
     params: dict | None = None,
     node_props: list[str] | None = None,
     prop_types: dict[str, str] | None = None,
 ):
-    """Register a Cypher-subset query: transpiled once to ANSI SQL
-    (neo4j_arrow_spark.cypher), run by Spark over the derived graph
-    views and by DuckDB over the same views as CTEs — the oracle checks
-    the transpiler AND the engine in one go.
+    """Register a Cypher-subset query over one derived graph: transpiled
+    once per dialect to SQL over the views ``<prefix>nodes`` /
+    ``<prefix>rels`` (neo4j_arrow_spark.cypher), run by Spark over
+    ``frames(spark, sf_dir)`` and by DuckDB over ``nodes_sql`` /
+    ``rels_sql`` as CTEs — the oracle checks the transpiler AND the
+    engine in one go.
 
     ``params`` binds ``$name`` Cypher parameters: Spark binds them as
     named parameters at execution (plan text stays constant across
     bindings); the oracle inlines the values as literals because the
-    driver runs oracle SQL with no binding channel."""
+    driver runs oracle SQL with no binding channel.
+
+    The rels view carries the surrogate (REL_ID, REL_ID2) identity, as
+    a catalog graph's does: on Spark it is :func:`mint_rel_ids` over
+    the plain frame, whose ``Window`` Catalyst prunes from queries that
+    read no identity. Any unique numbering works for the oracle:
+    identity only feeds same-row inequality predicates (and id(r),
+    whose raw value no registry query outputs), so Spark's hash and
+    DuckDB's row_number need not agree. The DuckDB CTE numbers rows
+    only when the SQL names the identity columns (an undirected slot
+    carries them through its union even when nothing reads them), and
+    then AS MATERIALIZED: DuckDB inlines plain CTEs per reference, and
+    row_number() OVER () would then number each scan independently —
+    two rel slots comparing REL_IDs from different numberings exclude
+    arbitrary pairs (caught by cypher_comma_patterns). Materializing
+    pins ONE numbering for the whole query."""
     from neo4j_arrow_spark.cypher import cypher_to_sql
 
-    CYPHER_TEXTS[name] = (cypher_text, params, "tpch")
-    sql = cypher_to_sql(
-        cypher_text, "gnodes", "grels", dialect="spark",
-        node_props=node_props, rel_id=True, rels_eid_view="grels_eid",
-        rel_props=["weight"], prop_types=prop_types,
-    )
-    duck_sql = cypher_to_sql(
-        cypher_text, "gnodes", "grels", dialect="duckdb",
-        node_props=node_props, rel_id=True, rels_eid_view="grels_eid",
-        rel_props=["weight"], prop_types=prop_types,
+    CYPHER_TEXTS[name] = (cypher_text, params, kind)
+    nv, rv = f"{prefix}nodes", f"{prefix}rels"
+    sql, duck_sql = (
+        cypher_to_sql(
+            cypher_text, nv, rv, dialect=dialect, node_props=node_props,
+            rel_id=True, rel_props=rel_props, prop_types=prop_types,
+        )
+        for dialect in ("spark", "duckdb")
     )
     if params:
         for k in sorted(params, key=len, reverse=True):
             duck_sql = duck_sql.replace(f"${k}", _sql_literal(params[k]))
-    # grels is the PLAIN edge view; grels_eid carries the surrogate
-    # (REL_ID, REL_ID2) identity (true openCypher relationship
-    # identity — exact-duplicate parallel edges stay distinct). The
-    # transpiler picks grels_eid only when the query references edge
-    # identity, so identity-free queries skip the minting cost on both
-    # engines. Any unique numbering works for the oracle: identity only
-    # feeds same-row inequality predicates (and id(r), whose raw value
-    # no registry query outputs), so Spark's hash and DuckDB's
-    # row_number need not agree.
-    # AS MATERIALIZED: DuckDB inlines plain CTEs per reference, and
-    # row_number() OVER () would then number each scan independently —
-    # two rel slots comparing REL_IDs from different numberings exclude
-    # arbitrary pairs (caught by cypher_comma_patterns). Materializing
-    # pins ONE numbering for the whole query. DuckDB skips unreferenced
-    # CTEs, so defining grels_eid unconditionally costs nothing.
-    oracle = (
-        f"WITH gnodes AS ({NODES_SQL}),\n"
-        f"grels AS ({RELS_SQL}),\n"
-        f"grels_eid AS MATERIALIZED (SELECT *, row_number() OVER () "
-        f"AS REL_ID, row_number() OVER () AS REL_ID2 "
-        f"FROM ({RELS_SQL}))\n{duck_sql}"
+    names_id = re.search(r"\bREL_ID\b", sql) is not None
+    rels_cte = (
+        f"{rv} AS MATERIALIZED (SELECT *, row_number() OVER () AS REL_ID, "
+        f"row_number() OVER () AS REL_ID2 FROM ({rels_sql}))"
+        if names_id else f"{rv} AS ({rels_sql})"
     )
-    needs_eid = ".REL_ID" in sql
-
+    oracle = f"WITH {nv} AS ({nodes_sql}),\n{rels_cte}\n{duck_sql}"
     recursive = "WITH RECURSIVE" in sql
-    # NOTE (r11 session-3 A/B, measured and REJECTED): persisting
-    # grels / grels_eid for NON-recursive queries whose SQL references
-    # the view 2-6 times loses 1.3-2.8x across every group tried
-    # (cypher_cycle_closure 0.81 -> 2.23s with a persisted eid;
+    # NOTE (r11 session-3 A/B, measured and REJECTED): persisting the
+    # rel view for NON-recursive queries whose SQL references it 2-6
+    # times loses 1.3-2.8x across every group tried
+    # (cypher_cycle_closure 0.81 -> 2.23s with a persisted minted view;
     # cypher_shortest_path 1.32 -> 1.97s with persisted rels at 6
     # references). Each reference is individually column-pruned and
     # filter-pushed into the derivation by Catalyst, and the repeated
@@ -135,35 +147,27 @@ def _cypher_query(
     @query(name, oracle=oracle)
     def run(
         spark: SparkSession, sf_dir: str, _sql=sql, _params=params,
-        _eid=needs_eid, _rec=recursive,
+        _id=names_id, _rec=recursive,
     ) -> DataFrame:
-        nodes, rels = _graph(spark, sf_dir)
+        from neo4j_arrow_spark.catalog import mint_rel_ids
+        from neo4j_arrow_spark.recursive_exec import run_recursive_sql
+
+        nodes, rels = frames(spark, sf_dir)
         handles = []
         if _rec:
             rels = rels.persist()
             handles.append(rels)
-        nodes.createOrReplaceTempView("gnodes")
-        rels.createOrReplaceTempView("grels")
-        if _eid:
-            from neo4j_arrow_spark.catalog import mint_rel_ids
-
-            eid = mint_rel_ids(rels)
-            if _rec:
-                eid = eid.persist()
-                handles.append(eid)
-            eid.createOrReplaceTempView("grels_eid")
-        if _rec:
-            # marked recursive blocks run as a driver-paced union loop
-            # (one lazy-localCheckpoint+count job per level) instead of
-            # UnionLoopExec's repartition+count(+collect) per level —
-            # see recursive_exec; identical rows by construction
-            from neo4j_arrow_spark.recursive_exec import run_recursive_sql
-
-            df = run_recursive_sql(spark, _sql, args=_params)
-        else:
-            df = (
-                spark.sql(_sql, args=_params) if _params else spark.sql(_sql)
-            )
+        rels = mint_rel_ids(rels)
+        if _rec and _id:
+            rels = rels.persist()
+            handles.append(rels)
+        nodes.createOrReplaceTempView(nv)
+        rels.createOrReplaceTempView(rv)
+        # marked recursive blocks run as a driver-paced union loop
+        # (one lazy-localCheckpoint+count job per level) instead of
+        # UnionLoopExec's repartition+count(+collect) per level — see
+        # recursive_exec; identical rows by construction
+        df = run_recursive_sql(spark, _sql, args=_params)
         if handles:
             from neo4j_arrow_spark.operators.dedup import _with_intermediates
 
@@ -172,6 +176,20 @@ def _cypher_query(
 
     run.__name__ = name
     return run
+
+
+def _cypher_query(
+    name: str,
+    cypher_text: str,
+    params: dict | None = None,
+    node_props: list[str] | None = None,
+    prop_types: dict[str, str] | None = None,
+):
+    """:func:`_graph_query` over the TPC-H graph."""
+    return _graph_query(
+        name, cypher_text, "tpch", "g", _graph, NODES_SQL, RELS_SQL,
+        ["weight"], params, node_props, prop_types,
+    )
 
 
 # -- orders graph: keyword-spelled label + temporal properties --------------
@@ -232,64 +250,11 @@ def _order_graph(spark: SparkSession, sf_dir: str):
 
 
 def _cypher_order_query(name: str, cypher_text: str):
-    """Like :func:`_cypher_query` but over the orders graph."""
-    from neo4j_arrow_spark.cypher import cypher_to_sql
-
-    CYPHER_TEXTS[name] = (cypher_text, None, "orders")
-    sql = cypher_to_sql(
-        cypher_text, "ognodes", "ogrels", dialect="spark", rel_id=True,
-        rels_eid_view="ogrels_eid", rel_props=["weight"],
+    """:func:`_graph_query` over the orders graph."""
+    return _graph_query(
+        name, cypher_text, "orders", "og", _order_graph, ORDER_NODES_SQL,
+        ORDER_RELS_SQL, ["weight"],
     )
-    duck_sql = cypher_to_sql(
-        cypher_text, "ognodes", "ogrels", dialect="duckdb", rel_id=True,
-        rels_eid_view="ogrels_eid", rel_props=["weight"],
-    )
-    oracle = (
-        f"WITH ognodes AS ({ORDER_NODES_SQL}),\n"
-        f"ogrels AS ({ORDER_RELS_SQL}),\n"
-        f"ogrels_eid AS MATERIALIZED (SELECT *, row_number() OVER () "
-        f"AS REL_ID, row_number() OVER () AS REL_ID2 "
-        f"FROM ({ORDER_RELS_SQL}))\n{duck_sql}"
-    )
-    needs_eid = ".REL_ID" in sql
-    recursive = "WITH RECURSIVE" in sql
-
-    @query(name, oracle=oracle)
-    def run(
-        spark: SparkSession, sf_dir: str, _sql=sql, _eid=needs_eid,
-        _rec=recursive,
-    ) -> DataFrame:
-        nodes, rels = _order_graph(spark, sf_dir)
-        handles = []
-        if _rec:
-            # recursive emissions re-read the rel view once per level
-            # sequentially — persist for the statement's duration, same
-            # as _cypher_query's _rec branch (non-recursive references
-            # stay derivation-per-branch: the r11 A/B showed persisting
-            # those loses 1.3-2.8x)
-            rels = rels.persist()
-            handles.append(rels)
-        nodes.createOrReplaceTempView("ognodes")
-        rels.createOrReplaceTempView("ogrels")
-        if _eid:
-            from neo4j_arrow_spark.catalog import mint_rel_ids
-
-            eid = mint_rel_ids(rels)
-            if _rec:
-                eid = eid.persist()
-                handles.append(eid)
-            eid.createOrReplaceTempView("ogrels_eid")
-        from neo4j_arrow_spark.recursive_exec import run_recursive_sql
-
-        df = run_recursive_sql(spark, _sql)
-        if handles:
-            from neo4j_arrow_spark.operators.dedup import _with_intermediates
-
-            df = _with_intermediates(df, handles)
-        return df
-
-    run.__name__ = name
-    return run
 
 
 _cypher_order_query(
@@ -399,62 +364,11 @@ def _dup_graph(spark: SparkSession, sf_dir: str):
 
 
 def _cypher_dup_query(name: str, cypher_text: str):
-    """Like :func:`_cypher_query` but over the duplicate-edge graph."""
-    from neo4j_arrow_spark.cypher import cypher_to_sql
-
-    CYPHER_TEXTS[name] = (cypher_text, None, "dup")
-    sql = cypher_to_sql(
-        cypher_text, "dgnodes", "dgrels", dialect="spark", rel_id=True,
-        rels_eid_view="dgrels_eid", rel_props=[],
+    """:func:`_graph_query` over the duplicate-edge graph."""
+    return _graph_query(
+        name, cypher_text, "dup", "dg", _dup_graph, DUP_NODES_SQL,
+        DUP_RELS_SQL, [],
     )
-    duck_sql = cypher_to_sql(
-        cypher_text, "dgnodes", "dgrels", dialect="duckdb", rel_id=True,
-        rels_eid_view="dgrels_eid", rel_props=[],
-    )
-    oracle = (
-        f"WITH dgnodes AS ({DUP_NODES_SQL}),\n"
-        f"dgrels AS ({DUP_RELS_SQL}),\n"
-        f"dgrels_eid AS MATERIALIZED (SELECT *, row_number() OVER () "
-        f"AS REL_ID, row_number() OVER () AS REL_ID2 "
-        f"FROM ({DUP_RELS_SQL}))\n{duck_sql}"
-    )
-    needs_eid = ".REL_ID" in sql
-    recursive = "WITH RECURSIVE" in sql
-
-    @query(name, oracle=oracle)
-    def run(
-        spark: SparkSession, sf_dir: str, _sql=sql, _eid=needs_eid,
-        _rec=recursive,
-    ) -> DataFrame:
-        nodes, rels = _dup_graph(spark, sf_dir)
-        handles = []
-        if _rec:
-            # same statement-scoped persist as _cypher_query's _rec
-            # branch: the driver-paced loop re-reads the rel view once
-            # per level
-            rels = rels.persist()
-            handles.append(rels)
-        nodes.createOrReplaceTempView("dgnodes")
-        rels.createOrReplaceTempView("dgrels")
-        if _eid:
-            from neo4j_arrow_spark.catalog import mint_rel_ids
-
-            eid = mint_rel_ids(rels)
-            if _rec:
-                eid = eid.persist()
-                handles.append(eid)
-            eid.createOrReplaceTempView("dgrels_eid")
-        from neo4j_arrow_spark.recursive_exec import run_recursive_sql
-
-        df = run_recursive_sql(spark, _sql)
-        if handles:
-            from neo4j_arrow_spark.operators.dedup import _with_intermediates
-
-            df = _with_intermediates(df, handles)
-        return df
-
-    run.__name__ = name
-    return run
 
 
 _cypher_dup_query(
@@ -2814,13 +2728,6 @@ _sql_query(
     """,
     ("lineitem",),
 )
-
-
-def _graph(spark: SparkSession, sf_dir: str):
-    tables = load_tables(
-        spark, sf_dir, ("customer", "supplier", "nation", "orders", "lineitem")
-    )
-    return graph_frames_from_tpch(spark, tables)
 
 
 # --------------------------------------------------------------------------

@@ -58,19 +58,11 @@ cumulative row count ([RECURSION_ROW_LIMIT_EXCEEDED]) and
 ``pyspark.errors.SparkRuntimeException`` carrying the native error
 class, so callers' exception handling is uniform across paths.
 
-Escape hatches (the driver loop rides Spark-internal surface):
-
-- ``spark.neo4j_arrow_spark.recursion`` = ``driver`` (default) |
-  ``native`` routes marked blocks back to plain ``spark.sql`` — the
-  markers are comments, so the text executes natively unchanged. Set
-  ``native`` on deployments where per-level ``localCheckpoint`` blocks
-  are unacceptable (an executor loss mid-recursion kills the statement;
-  native UnionLoop recomputes lost partitions) or after a Spark upgrade
-  that changes the internal API.
-- If the internal surface itself breaks (``internalCreateDataFrame`` /
-  ``queryExecution.toRdd`` missing or failing on a future Spark), the
-  runner falls back to native execution of the original statement
-  instead of surfacing a Py4J stack.
+The driver loop rides Spark-internal surface. If that surface breaks
+(``internalCreateDataFrame`` / ``queryExecution.toRdd`` missing or
+failing on a future Spark), the runner falls back to native execution
+of the original statement instead of surfacing a Py4J stack: the
+markers are comments, so the text executes natively unchanged.
 """
 
 from __future__ import annotations
@@ -165,14 +157,6 @@ def run_recursive_sql(
 
     m = _BLOCK.search(sql)
     if m is None:
-        return q(sql)
-    mode = (
-        spark.conf.get("spark.neo4j_arrow_spark.recursion", "driver")
-        or "driver"
-    ).lower()
-    if mode == "native":
-        # deployment opt-out (module docstring): the markers are plain
-        # comments, so the statement runs unchanged through UnionLoop
         return q(sql)
     original_sql = sql
     row_limit = int(

@@ -76,8 +76,3 @@ def load_tables(
 ) -> dict[str, DataFrame]:
     return {name: load_table(spark, sf_dir, name) for name in names}
 
-
-def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TPCH_TABLES) -> None:
-    """Expose the tables as temp views for spark.sql (S1 capability)."""
-    for name in names:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -133,19 +133,3 @@ def graph_frames_from_tpch(
     rels = cust_nation.unionByName(supp_nation).unionByName(buys)
     return nodes, rels
 
-
-def register_tpch_graph(
-    spark: SparkSession,
-    catalog,
-    sf_dir: str,
-    name: str = "tpch",
-    cache: bool = False,
-):
-    """Load tables, derive the graph, register in the catalog."""
-    from neo4j_arrow_spark.sources.tpch import load_tables
-
-    tables = load_tables(
-        spark, sf_dir, ("customer", "supplier", "nation", "orders", "lineitem")
-    )
-    nodes, rels = graph_frames_from_tpch(spark, tables)
-    return catalog.register(name, nodes, rels, cache=cache, overwrite=True)

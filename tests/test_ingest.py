@@ -42,13 +42,12 @@ def test_write_nodes_then_rels(spark, cat, node_df, rel_df):
         cat, "wg", rel_df, source_field="src", target_field="dst",
         type_field="relType", cache=False,
     )
-    # r8: the plain rels frame stays unminted (no identity-window read
-    # tax); the surrogate 128-bit identity lives on the companion
-    # rels_eid frame/view that only identity-referencing queries read
-    assert g.rels.columns == ["START_ID", "END_ID", "TYPE", "weight"]
-    assert g.rels_eid.columns == [
+    # registration mints the surrogate 128-bit identity into the one
+    # rels frame (and its `wg_rels` view)
+    assert g.rels.columns == [
         "START_ID", "END_ID", "TYPE", "weight", "REL_ID", "REL_ID2",
     ]
+    assert spark.table("wg_rels").columns == g.rels.columns
     assert g.rel_count() == 3
 
 

@@ -149,6 +149,26 @@ def test_bulk_import_two_stream_metadata(spark, tmp_path):
     client.put(job2, bad, stream_type="node")  # explicit override works
 
 
+def test_bulk_import_put_timeout_errors_job(spark, tmp_path):
+    """An orphaned two-stream bulk import fails to ERROR within
+    ``put_timeout``, whether it got no stream or only its node stream,
+    instead of pinning its job thread."""
+    import pyarrow as pa
+
+    from neo4j_arrow_spark.api import Neo4jArrowSpark
+
+    client = Neo4jArrowSpark(spark)
+    client.put_timeout = 1
+    idle = client.bulk_import("bulkto1", str(tmp_path / "bulkto1"))
+    half = client.bulk_import("bulkto2", str(tmp_path / "bulkto2"))
+    client.put(half, pa.table({"ID": [1], "LABELS": [["A"]]}), stream_type="node")
+    for job, missing in ((idle, "node, rels"), (half, "rels")):
+        assert job.wait(30), "the job still waits for its streams"
+        assert job.status.value == "ERROR"
+        assert f"no put() of {missing} within 1s" in job.error
+    assert "bulkto1" not in client.catalog and "bulkto2" not in client.catalog
+
+
 # -- credential validation (reference auth-layer parity) --------------------
 
 def test_basic_auth_validator_roundtrip(spark):

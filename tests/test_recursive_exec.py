@@ -37,10 +37,9 @@ def _views(spark, nodes_rows, rels_rows):
         rels_rows, "START_ID long, END_ID long, TYPE string, w double"
     )
     nodes.createOrReplaceTempView("rxnodes")
-    rels.createOrReplaceTempView("rxrels")
     from neo4j_arrow_spark.catalog import mint_rel_ids
 
-    mint_rel_ids(rels).createOrReplaceTempView("rxrels_eid")
+    mint_rel_ids(rels).createOrReplaceTempView("rxrels")
 
 
 def _graph():
@@ -85,8 +84,7 @@ MODES = [
 def test_runner_matches_native_execution(spark, cypher):
     _views(spark, *_graph())
     sql = cypher_to_sql(
-        cypher, "rxnodes", "rxrels", rel_id=True,
-        rels_eid_view="rxrels_eid", rel_props=["w"],
+        cypher, "rxnodes", "rxrels", rel_id=True, rel_props=["w"],
     )
     assert _BLOCK.search(sql), "expected a marked recursive block"
     native = sorted(map(tuple, spark.sql(sql).collect()))
@@ -125,34 +123,6 @@ def test_row_limit_backstop_trips(spark):
             run_recursive_sql(spark, sql).collect()
     finally:
         spark.conf.set(key, prev)
-
-
-def test_native_mode_flag_matches_driver_loop(spark):
-    """spark.neo4j_arrow_spark.recursion=native routes the marked
-    statement to plain spark.sql — identical rows, no driver loop."""
-    import neo4j_arrow_spark.recursive_exec as rx
-
-    _views(spark, *_graph())
-    sql = cypher_to_sql(
-        "MATCH (a:P {name: 'n0'})-[:E*]->(b) "
-        "RETURN b.name AS name, count(*) AS walks",
-        "rxnodes", "rxrels",
-    )
-    driver_rows = sorted(map(tuple, run_recursive_sql(spark, sql).collect()))
-    key = "spark.neo4j_arrow_spark.recursion"
-    spark.conf.set(key, "native")
-    try:
-        import unittest.mock as mock
-
-        with mock.patch.object(
-            rx, "_union_loop", side_effect=AssertionError("must not loop")
-        ):
-            native_rows = sorted(
-                map(tuple, run_recursive_sql(spark, sql).collect())
-            )
-    finally:
-        spark.conf.unset(key)
-    assert native_rows == driver_rows
 
 
 def test_internal_api_breakage_falls_back_to_native(spark):
