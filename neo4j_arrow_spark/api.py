@@ -207,8 +207,8 @@ class Neo4jArrowSpark:
             rel_props=None if g.rels is None else [
                 c for c in g.rels.columns if c not in RelField.RESERVED
             ],
-            # registration mints (REL_ID, REL_ID2) into the rels
-            # frame (catalog.register): true openCypher edge identity
+            # every edge carries its stored REL_ID (catalog.register):
+            # true openCypher edge identity
             rel_id=g.rels is not None,
             # property-column → Spark type map: lets
             # type-polymorphic emissions (isEmpty) dispatch on the
@@ -266,12 +266,12 @@ class Neo4jArrowSpark:
         cypher_write.parse_write`); the job runs its write form and
         commits once: the frames the write changed are snapshotted
         (``_snapshot``, a lazy localCheckpoint) and the graph
-        re-registers with its node-ID high-water mark, raised past the
-        ids the write created (:class:`~neo4j_arrow_spark.cypher_write.
-        IdMark`), so reads submitted afterwards see the new state,
-        lineage doesn't stack across writes, and the next CREATE needs
-        no max(ID) scan. A write that changes nothing registers
-        nothing."""
+        re-registers with its node-ID and relationship high-water
+        marks, raised past the ids the write created (:class:`~neo4j_
+        arrow_spark.cypher_write.IdMark`), so reads submitted afterwards
+        see the new state, lineage doesn't stack across writes, and the
+        next CREATE needs no max scan. A write that changes nothing
+        registers nothing."""
         from neo4j_arrow_spark.cypher_write import (
             IdMark,
             guard_write_analysis,
@@ -288,7 +288,7 @@ class Neo4jArrowSpark:
         )
 
         def run() -> DataFrame:
-            mark = IdMark(g.nodes, g.max_id)
+            mark = IdMark(g)
             nodes, rels, summary, ret = form(self.spark, g.nodes, g.rels, mark)
             if nodes is not g.nodes:
                 nodes = _snapshot(nodes)
@@ -309,7 +309,7 @@ class Neo4jArrowSpark:
                     username=self.username,
                     overwrite=True,
                     max_id=mark.top,
-                )
+                ).max_rel_id = mark.rel_top
             return result
 
         return self.registry.submit("cypher.write", guard_write_analysis(run))
@@ -522,7 +522,7 @@ class Neo4jArrowSpark:
                 self.catalog, graph, df, source_field, target_field, type_field,
                 database=database or self.database,
             )
-            return g.rels.drop(RelField.REL_ID, RelField.REL_ID2)
+            return g.rels.drop(RelField.REL_ID)
 
         if rels is None:
             return self._deferred("gds.write.relationships", consume)

@@ -8,14 +8,15 @@ both frames (the "in-memory projection" semantics) and exposes them as
 temp views ``<name>_nodes`` / ``<name>_rels`` so ``spark.sql`` works
 over graphs (the S1 cypher-read capability, SURVEY.md §2.1).
 
-Each graph version has ONE relationship frame, and it carries the
-surrogate ``(REL_ID, REL_ID2)`` edge identity (:func:`mint_rel_ids`):
-registration mints it into a frame that lacks it and keeps a
-pre-minted frame (a write's output) as it is. ``<name>_rels`` therefore
-has the same columns before and after any write. A read that does not
-reference identity pays nothing for it: Catalyst's column pruning
-removes the minting ``Window`` from its plan. A cached graph caches the
-rows and mints over them, so such a read scans the cache.
+Each graph version has ONE relationship frame, and every edge in it
+carries a stored 64-bit ``REL_ID`` (:func:`number_rels`): registration
+numbers a frame that lacks the column, once and with no shuffle, and
+keeps a frame that has it (a write's commit) as it is. A write numbers
+the edges it creates above the graph's relationship high-water mark
+(:attr:`Graph.max_rel_id`), as node IDs are numbered, and never
+renumbers the others; so ``id(r)`` is stable within a graph version and
+across writes, and ``<name>_rels`` has the same columns before and
+after any write.
 
 Registration is synchronous — the reference's write-visibility race
 (``README.md:214-218``: job reports done before the catalog entry is
@@ -25,51 +26,44 @@ usable) is deliberately fixed here.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
-from neo4j_arrow_spark.graph import Graph, validate_nodes, validate_rels
+from neo4j_arrow_spark.graph import Graph, RelField, validate_nodes, validate_rels
 
 
 class GraphNotFound(KeyError):
     pass
 
 
-def mint_rel_ids(rels: "DataFrame") -> "DataFrame":
-    """Surrogate relationship identity (true openCypher edge identity:
-    exact duplicate parallel edges are distinct relationships). The id
-    must be CONTENT-DETERMINISTIC — a multi-slot pattern references the
-    rels view more than once, and each reference re-evaluates the plan;
-    an order-dependent id (monotonically_increasing_id after a shuffle)
-    would number the two evaluations differently and the uniqueness
-    predicate would excise arbitrary pairs. ``xxhash64(seed, all
-    columns, within-duplicate-group row_number)`` is stable as a
-    relation across re-evaluations (identical rows are interchangeable,
-    so which twin gets k=1 is unobservable) and needs one all-columns
-    hash partition — parallel at any scale, no global sort.
-
-    Identity is 128-bit: TWO independently-seeded hashes (``REL_ID``,
-    ``REL_ID2``). A single 64-bit hash expects collisions around 1e10
-    edges — inside the 100-TB design target — and a collision makes the
-    ``r1 <> r2`` uniqueness predicate silently drop a valid row pair.
-    Comparing the pair pushes expected collisions past 1e18 edges.
-    ``id(r)`` returns REL_ID alone (a documented 64-bit readout);
-    uniqueness predicates always compare both columns.
-
-    :meth:`GraphCatalog.register` mints every relationship frame that
-    lacks the columns, so each graph's one rels frame carries them. The
-    ``Window`` sits under a projection, so a query that selects neither
-    column loses it to column pruning and never pays the shuffle."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    cols = [c for c in rels.columns if c not in ("REL_ID", "REL_ID2")]
-    base = rels.select(*cols)
-    w = Window.partitionBy(*cols).orderBy(F.lit(1))
-    rn = F.row_number().over(w)
-    return base.select(
-        "*",
-        F.xxhash64(F.lit(1), *cols, rn).alias("REL_ID"),
-        F.xxhash64(F.lit(2), *cols, rn).alias("REL_ID2"),
+def number_rels(
+    rels: DataFrame, cache: bool = False
+) -> tuple[DataFrame, int | None]:
+    """``rels`` with a 64-bit ``REL_ID`` per row, and a bound on the ids.
+    The ids are ``monotonically_increasing_id()``, which numbers each
+    partition's rows with no shuffle. A multi-slot pattern reads the
+    frame more than once, and each read evaluates it again, so the ids
+    are taken only over rows that re-evaluate identically, in the same
+    partitions and order: with ``cache`` the numbered rows are cached
+    (the cache fill is the one evaluation); a plan with no exchange (a
+    file or local scan, a cached frame) re-evaluates identically and is
+    numbered in place; any other plan is a lazy local checkpoint first.
+    Partition ``p``'s ids are ``(p << 33) + k``, so with ``n``
+    partitions no id reaches ``n << 33``; the bound is that, less one,
+    where ``n`` is known with no job (None otherwise). A file scan
+    numbered in place keeps its TYPE-partition pruning for every read
+    that does not name ``REL_ID``."""
+    exchange = "Exchange" in (
+        rels._jdf.queryExecution().executedPlan().toString()
     )
+    if exchange and not (cache or rels.is_cached):
+        rels, exchange = rels.localCheckpoint(eager=False), False
+    top = None
+    if not exchange:
+        top = (rels._jdf.queryExecution().toRdd().getNumPartitions() << 33) - 1
+    rels = rels.select(
+        "*", F.monotonically_increasing_id().alias(RelField.REL_ID)
+    )
+    return (rels.cache() if cache else rels), top
 
 
 class GraphAlreadyExists(ValueError):
@@ -108,11 +102,11 @@ class GraphCatalog:
         max_id: int | None = None,
     ) -> Graph:
         """Register ``name``'s frames as a new graph version.
-        ``rels`` gains the ``(REL_ID, REL_ID2)`` identity
-        (:func:`mint_rel_ids`) unless it already carries it; with
-        ``cache`` the rows are cached and identity minted over them.
-        ``max_id``, when known, is its node-ID high-water mark
-        (:attr:`Graph.max_id`): no node has a larger ID."""
+        ``rels`` is numbered (:func:`number_rels`, whose bound becomes
+        :attr:`Graph.max_rel_id`) unless it already carries ``REL_ID``;
+        ``cache`` caches the frames. ``max_id``, when known, is its
+        node-ID high-water mark (:attr:`Graph.max_id`): no node has a
+        larger ID."""
         key = self._key(name, database, username)
         if key in self._graphs and not overwrite:
             raise GraphAlreadyExists(f"graph {key} already registered")
@@ -130,17 +124,14 @@ class GraphCatalog:
             validate_nodes(nodes)
             if rels is not None:
                 validate_rels(rels)
-        from neo4j_arrow_spark.operators.dedup import _with_intermediates
-
         if cache:
             nodes = nodes.cache()
-            if rels is not None:
+        rel_top = None
+        if rels is not None:
+            if RelField.REL_ID not in rels.columns:
+                rels, rel_top = number_rels(rels, cache)
+            elif cache:
                 rels = rels.cache()
-        if rels is not None and not {"REL_ID", "REL_ID2"} <= set(rels.columns):
-            # minted over the cached rows, not cached minted: a minted
-            # cache fill would add a shuffle job to a cached graph's
-            # first read; drop() releases the cached rows
-            rels = _with_intermediates(mint_rel_ids(rels), [rels])
         graph = Graph(
             name=name,
             nodes=nodes,
@@ -148,6 +139,7 @@ class GraphCatalog:
             database=database,
             username=username,
             max_id=max_id,
+            max_rel_id=rel_top,
         )
         self._graphs[key] = graph
         nodes.createOrReplaceTempView(f"{name}_nodes")
@@ -167,13 +159,10 @@ class GraphCatalog:
         graph = self._graphs.pop(key, None)
         if graph is None:
             raise GraphNotFound(f"no graph {key}")
-        from neo4j_arrow_spark.operators.dedup import unpersist_intermediates
-
         # release hook parity: ArrowGraphStore.java:19-32 unpins memory
         graph.nodes.unpersist()
         if graph.rels is not None:
             graph.rels.unpersist()
-            unpersist_intermediates(graph.rels)
         self.spark.catalog.dropTempView(f"{name}_nodes")
         if graph.rels is not None:
             self.spark.catalog.dropTempView(f"{name}_rels")

@@ -416,7 +416,7 @@ class _Parser:
             if self.rel_props is None:
                 return False
             return prop not in self.rel_props and prop not in (
-                "START_ID", "END_ID", "TYPE", "REL_ID", "REL_ID2",
+                "START_ID", "END_ID", "TYPE", "REL_ID",
             )
         return False
 
@@ -794,8 +794,8 @@ class _Parser:
     #: node/rel variables of a MATCH that follows WITH — full
     #: ``var.prop`` access again, alongside the aliases
     post_vars: frozenset[str] = frozenset()
-    #: relationship identity mode: True when the rels view carries a
-    #: surrogate REL_ID column (minted at graph registration) — then
+    #: relationship identity mode: True when the rels view carries the
+    #: stored REL_ID column (every catalog graph's does) — then
     #: within-clause uniqueness compares REL_ID (true openCypher:
     #: exact-duplicate parallel edges are distinct relationships);
     #: False = schema-less triple mode ((START_ID, END_ID, TYPE)
@@ -1683,7 +1683,7 @@ class _Parser:
                         and var not in self.node_pat_vars
                     ):
                         # id(r) on a relationship variable — the
-                        # surrogate edge identity
+                        # stored edge identity
                         return self._rel_identity(var)
                     if fn in ("ID", "LABELS") and var not in self.node_pat_vars:
                         raise CypherSyntaxError(
@@ -2068,11 +2068,12 @@ class _Parser:
     def _rel_identity(self, var: str) -> str:
         """A fixed-length relationship variable used as a VALUE
         (``id(r)``, ``count(r)``, ``count(DISTINCT r)``, ``r1 <> r2``)
-        resolves to the surrogate REL_ID identity column (minted into
-        the graph's rels frame at catalog registration). Neo4j
-        returns the store's internal edge id; REL_ID is the honest
-        Spark analogue (documented: a 64-bit content hash, stable
-        within a registration, not a Neo4j id).
+        resolves to the REL_ID column. Neo4j returns the id its store
+        allocated to the edge; REL_ID is the Spark analogue: a 64-bit
+        id numbered once per edge, at catalog registration or by the
+        CREATE that made it, and stored with the edge, so it is stable
+        within a graph version and across writes (it is not a Neo4j
+        id).
 
         Reference gets this free via Neo4j
         (plugin/.../job/TransactionApiJob.java:41-220)."""
@@ -2083,10 +2084,9 @@ class _Parser:
             )
         if not self.rel_id:
             raise CypherUnsupported(
-                f"relationship identity for {var!r} needs the minted "
-                "identity columns (register the graph through "
-                "GraphCatalog; schema-less rel frames carry no "
-                "edge identity)"
+                f"relationship identity for {var!r} needs a REL_ID "
+                "column, and this rels view has none (transpiled with "
+                "rel_id=False)"
             )
         return f"{var}.REL_ID"
 
@@ -2379,7 +2379,7 @@ class _Parser:
             und = r.direction == "-"
             slots.append((ev, und, list(r.rtypes), 0))
             if und:
-                rid = " REL_ID, REL_ID2," if self.rel_id else ""
+                rid = " REL_ID," if self.rel_id else ""
                 hop_src = (
                     f"(SELECT{rid} START_ID, END_ID, TYPE,"
                     " START_ID AS _OS, END_ID AS _OE FROM __RELS__"
@@ -4653,7 +4653,7 @@ def _rel_source(
         # rel-uniqueness predicate compares edge identity, not the
         # view's swapped endpoints (two distinct anti-parallel edges
         # must stay distinct — r6 semantic-fuzz finding)
-        rid = " REL_ID, REL_ID2," if rel_id else ""
+        rid = " REL_ID," if rel_id else ""
         return (
             f"(SELECT{rid} START_ID, END_ID, TYPE{extra},"
             f" START_ID AS _OS, END_ID AS _OE FROM {rels_view}"
@@ -4697,7 +4697,7 @@ def _collect_undirected_prop_refs(ast: dict) -> None:
         # bare-rel struct projection) and the identity columns are
         # carried by the union view itself — never ride-alongs
         r.extra_props = sorted(
-            want - _REL_VIEW_COLS - {"_OS", "_OE", "REL_ID", "REL_ID2"}
+            want - _REL_VIEW_COLS - {"_OS", "_OE", "REL_ID"}
         )
 
 
@@ -4773,9 +4773,9 @@ def _path_edge_identity_conds(
     """Per-path relationship uniqueness for varlength-expanded hops
     (r8): openCypher forbids reusing an edge within one path. Identity
     here is the physical row — (START, END, TYPE) plus EVERY rel
-    property, compared null-safely — NOT the surrogate REL_ID: reading
-    it would keep the minting Window, and its full-edge shuffle, in
-    every bounded-varlength plan. Same-triple parallel edges with any
+    property, compared null-safely — NOT REL_ID, which these conds
+    avoided while reading it cost a full-edge shuffle (they also serve
+    rels views that have no REL_ID). Same-triple parallel edges with any
     differing property stay distinct; only EXACT-duplicate twins are
     conflated (documented, test-pinned divergence). Pairs wholly
     between fixed slots of varlength-free chains are excluded — those
@@ -4839,16 +4839,10 @@ def _rel_uniqueness_conds(
             if t1 and t2 and not (set(t1) & set(t2)):
                 continue  # disjoint declared types can never collide
             if rel_id:
-                # surrogate edge identity (true openCypher: exact
+                # stored edge identity (true openCypher: exact
                 # duplicates are distinct relationships); the undirected
-                # union view carries the columns through the flip. The
-                # identity is the 128-bit (REL_ID, REL_ID2) pair — see
-                # catalog.mint_rel_ids — so a 64-bit hash collision
-                # between distinct edges cannot excise a valid pair.
-                out.append(
-                    f"({rv1}.REL_ID <> {rv2}.REL_ID"
-                    f" OR {rv1}.REL_ID2 <> {rv2}.REL_ID2)"
-                )
+                # union view carries the column through the flip
+                out.append(f"{rv1}.REL_ID <> {rv2}.REL_ID")
                 continue
             s1, e1 = ident(rv1, und1)
             s2, e2 = ident(rv2, und2)
@@ -5015,14 +5009,11 @@ def cypher_to_sql(
     are added to ``params_out`` when provided, so callers can check
     the binding set before execution.
 
-    ``rel_id=True`` says ``rels_view`` carries the surrogate
-    ``(REL_ID, REL_ID2)`` identity (every catalog graph's rels view
-    does): relationship values and uniqueness read it, so
-    exact-duplicate parallel edges stay distinct. The transpile is one
-    pass; a query that never reads identity emits no identity column,
-    and Catalyst prunes the minting ``Window`` from its plan. Without
-    it (triple mode) a relationship is its ``(START_ID, END_ID, TYPE)``
-    triple."""
+    ``rel_id=True`` says ``rels_view`` carries the stored ``REL_ID``
+    edge id (every catalog graph's rels view does): relationship values
+    and uniqueness read it, so exact-duplicate parallel edges stay
+    distinct. Without it (triple mode) a relationship is its
+    ``(START_ID, END_ID, TYPE)`` triple."""
     return _cypher_to_sql_once(
         query, nodes_view, rels_view, dialect, params_out,
         max_hops, node_props, rel_id, rel_props=rel_props,

@@ -22,9 +22,11 @@ One operator per effect then applies the frame: :func:`_set_props`
 conditional projection), :func:`_delete_nodes`, :func:`_create_nodes`
 (with the one id allocator, which numbers new nodes above the graph's
 node-ID high-water mark, :class:`IdMark`, so no write scans for
-max(ID)), :func:`_write_rels` (relationship CREATE/MERGE) and one
-RETURN projector each for nodes and relationships
-(:func:`_project_nodes`, :func:`_project_rels`).
+max(ID)), :func:`_write_rels` (relationship CREATE/MERGE, whose new
+edges :func:`_with_rel_ids` numbers above the same allocator's
+relationship mark; no other edge is renumbered) and one RETURN
+projector each for nodes and relationships (:func:`_project_nodes`,
+:func:`_project_rels`).
 
 A write's Spark jobs follow its batch, not the graph. The batch and the
 counters row are inline tables (``VALUES``), which reach the driver
@@ -145,22 +147,45 @@ def _sql_in(cols: list, rows: list, types: list) -> "F.Column":
 
 
 class IdMark:
-    """The node-ID high-water mark a write allocates above: no node of
-    the graph has a larger ID. It starts as the graph version's mark
-    (``Graph.max_id``); a version registered without one pays one
-    max(ID) job, only when a CREATE needs the mark. :func:`_create_nodes`
-    raises it past every id it uses, and the commit registers the new
-    version with ``top``."""
+    """The high-water marks a write allocates above: no node of the
+    graph has a larger ``ID`` than ``top``, and no relationship a larger
+    ``REL_ID`` than ``rel_top``. Each starts as the graph version's mark
+    (``Graph.max_id``, ``Graph.max_rel_id``); a version registered
+    without one pays one max job, only when a CREATE needs that mark.
+    :func:`_create_nodes` and :func:`_with_rel_ids` raise them past
+    every id they use, and the commit registers the new version with
+    both."""
 
-    def __init__(self, nodes: DataFrame, top: int | None):
-        self._nodes, self.top = nodes, top
+    def __init__(self, g):
+        self._g, self.top, self.rel_top = g, g.max_id, g.max_rel_id
 
     def get(self) -> int:
         if self.top is None:
-            self.top = (
-                self._nodes.agg(F.max(NodeField.ID)).collect()[0][0] or 0
-            )
+            self.top = _max_of(self._g.nodes, NodeField.ID)
         return self.top
+
+    def get_rel(self) -> int:
+        if self.rel_top is None:
+            self.rel_top = _max_of(self._g.rels, RelField.REL_ID)
+        return self.rel_top
+
+
+def _max_of(frame: DataFrame, col: str) -> int:
+    return frame.agg(F.max(col)).collect()[0][0] or 0
+
+
+def _with_rel_ids(rows: DataFrame, n: int, mark: IdMark) -> DataFrame:
+    """The ``n`` new relationship ``rows`` with a ``REL_ID`` each, the
+    ids numbered in one partition above the mark, which rises past
+    them. ``rows`` must re-evaluate identically (a local checkpoint or
+    an inline table), so every read of the ids sees the same ones."""
+    base = 0
+    if n:  # an empty CREATE needs no mark
+        base = mark.get_rel() + 1
+        mark.rel_top = base + n - 1
+    return rows.coalesce(1).select(
+        "*", (F.monotonically_increasing_id() + base).alias(RelField.REL_ID)
+    )
 
 
 class WriteStatement(NamedTuple):
@@ -860,6 +885,7 @@ def _write_rels(
     rels: DataFrame | None,
     rows: DataFrame,
     rtype: str,
+    mark: IdMark,
     key_props=(),
     merge: bool = False,
     on_create=(),
@@ -868,11 +894,13 @@ def _write_rels(
 ):
     """CREATE — or with ``merge``, MERGE — the relationship ``rows``
     (:func:`_rel_rows`; their ``__`` columns are values the ON SET
-    items read). MERGE's identity is the endpoints, the type and
-    ``key_props``, and a key property the schema lacks matches nothing:
-    only the rows no edge matches are created, the ``on_create`` items
-    SET them, and the ``on_match`` items SET the edges that match
-    (their values may read the edge's own properties). Returns
+    items read), each created edge numbered above ``mark``
+    (:func:`_with_rel_ids`). MERGE's identity is the endpoints, the
+    type and ``key_props``, and a key property the schema lacks matches
+    nothing: only the rows no edge matches are created, the
+    ``on_create`` items SET them, and the ``on_match`` items SET the
+    edges that match (their values may read the edge's own properties).
+    Returns
     ``(rels, created, props_set, affected)``: ``props_set`` counts, as
     Neo4j does, each created edge's non-NULL ``key_props`` values and
     its ``on_create`` items, and the ``on_match`` items of each matched
@@ -898,6 +926,7 @@ def _write_rels(
         ))).collect()[0]
     else:
         (new, n_new), n_set = _counted(new), 0
+    new = _with_rel_ids(new, n_new, mark)
     n_set, matched = (n_set or 0) + n_new * len(on_create), None
     if merge and on_match:
         upd = rows.select(
@@ -917,7 +946,7 @@ def _write_rels(
         aff = new if matched is None else new.unionByName(
             matched, allowMissingColumns=True
         )
-    return _union_rels(rels, new), n_new, n_set, aff
+    return _append(rels, new), n_new, n_set, aff
 
 
 def validate_rel_return(rvar: str | None, return_text: str) -> None:
@@ -979,14 +1008,11 @@ def _project_nodes(spark, nodes, ids, var: str, return_text: str):
     )
 
 
-def _project_rels(
-    spark, nodes, affected, rvar: str, return_text: str, rel_id=False
-):
+def _project_rels(spark, nodes, affected, rvar: str, return_text: str):
     """A relationship write's trailing RETURN: its items over the
     ``affected`` edge rows (one RETURN row per row), through the read
-    transpiler over an anonymous-endpoint pattern. With ``rel_id`` the
-    rows carry the minted ``REL_ID`` identity, which ``id(r)`` and
-    ``count(r)`` read."""
+    transpiler over an anonymous-endpoint pattern. The rows carry their
+    stored ``REL_ID``, which ``id(r)`` and ``count(r)`` read."""
     from neo4j_arrow_spark.cypher import cypher_to_sql
 
     validate_rel_return(rvar, return_text)
@@ -995,7 +1021,7 @@ def _project_rels(
         "__wret_nodes",
         "__wret_rels",
         rel_props=[c for c in affected.columns if c not in RelField.RESERVED],
-        rel_id=rel_id,
+        rel_id=True,
     )
     if f"JOIN __wret_rels AS {rvar} ON" not in sql:
         raise CypherUnsupported(
@@ -1019,13 +1045,13 @@ def _ids_return(spark, spec, ids=None, frame=None):
     )
 
 
-def _rels_return(spark, spec, affected, rel_id=False):
+def _rels_return(spark, spec, affected):
     """The ``ret`` of a relationship write: its trailing RETURN (None
     when it has none) over the ``affected`` edge rows."""
     if spec["ret"] is None:
         return None
     return lambda nodes, _rels: _project_rels(
-        spark, nodes, affected, spec["var"], spec["ret"], rel_id
+        spark, nodes, affected, spec["var"], spec["ret"]
     )
 
 
@@ -1746,7 +1772,7 @@ def parse_unwind_match(stmt: WriteStatement):
 
 def execute_unwind_match(
     spark: SparkSession, nodes: DataFrame, rels: DataFrame | None, spec: dict,
-    _mark: IdMark,
+    mark: IdMark,
 ):
     """Set-based batch SET / DELETE / relationship CREATE-MERGE (see
     :func:`parse_unwind_match`). The driving frame is the batch with its
@@ -1845,8 +1871,9 @@ def execute_unwind_match(
         col["__rp"] + col["__oc"], keep=[f"__om{i}" for i in range(len(om))],
     )
     merged, n_new, n_set, aff = _write_rels(
-        rels, rows, spec["rtype"], [p for p, _ in rp], op == "merge_rel",
-        on_match=col["__om"], affected=spec["ret"] is not None,
+        rels, rows, spec["rtype"], mark, [p for p, _ in rp],
+        op == "merge_rel", on_match=col["__om"],
+        affected=spec["ret"] is not None,
     )
     if aff is not None:
         # the affected edge of each endpoint pair, once per driving row
@@ -2541,7 +2568,7 @@ class _WriteParser(_Parser):
             self._end()
             if var in {r.var for r in rels if r.var}:
                 # relationship delete: matched edges drop by their
-                # surrogate (REL_ID, REL_ID2) identity
+                # REL_ID
                 if detach:
                     raise CypherUnsupported(
                         "DETACH applies to node deletes; relationships "
@@ -2569,26 +2596,6 @@ def _decimals_to_double(df: DataFrame) -> DataFrame:
     return df.select(*casts)
 
 
-def _union_rels(rels: DataFrame, new: DataFrame) -> DataFrame:
-    """Union created relationship rows into the graph's rel frame,
-    re-minting the surrogate (REL_ID, REL_ID2) identity over the WHOLE
-    union: the minting is content-deterministic (hash of columns +
-    duplicate-group index), so minting new rows separately would collide
-    with an existing identical edge — re-minting the union gives every
-    duplicate-group member a distinct index. allowMissingColumns: a
-    schema-widening CREATE adds new rel property columns, pre-existing
-    edges backfill NULL (note the re-mint then hashes the widened
-    column set, so REL_IDs change — documented: identity is a content
-    hash per registration, not stable across schema changes)."""
-    from neo4j_arrow_spark.catalog import mint_rel_ids
-
-    return mint_rel_ids(
-        rels.drop("REL_ID", "REL_ID2").unionByName(
-            new, allowMissingColumns=True
-        )
-    )
-
-
 def _merge_probe_frame(rels: DataFrame, rtype: str, keys: list) -> DataFrame:
     """The merge_rel existence probe's right side: the rel frame
     TYPE-filtered before the key projection. Every candidate row
@@ -2606,13 +2613,12 @@ def _props_cond(p) -> "F.Column":
     return cond
 
 
-def _read_ast(nodes, rels, where, items, chains=None, rel_id=False) -> dict:
+def _read_ast(nodes, rels, where, items, chains=None) -> dict:
     """Synthesize a READ ast projecting ``items`` over the write's
     MATCH pattern — the whole matched-id computation rides the proven
-    read transpiler. ``rel_id`` mirrors the graph frame's surrogate
-    edge-id mode so within-clause uniqueness matches the read path."""
+    read transpiler, with the read path's ``REL_ID`` edge identity."""
     return {
-        "rel_id": rel_id,
+        "rel_id": True,
         "shortest": False,
         "nodes": nodes,
         "rels": rels,
@@ -2791,11 +2797,6 @@ def parse_statement(stmt: WriteStatement) -> dict:
     }
 
 
-#: a relationship's surrogate identity, which every registered rels
-#: frame carries (catalog.register mints it)
-_EDGE_ID = [RelField.REL_ID, RelField.REL_ID2]
-
-
 def execute_cypher_write(
     spark: SparkSession, nodes: DataFrame, rels: DataFrame | None, spec: dict,
     mark: IdMark,
@@ -2823,14 +2824,14 @@ def execute_cypher_write(
         return spark.sql(_plain_sql(
             _read_ast(
                 ast["nodes"], ast["rels"], ast["where"],
-                [(e, a, False) for e, a in items], ast["chains"], rel_id=True,
+                [(e, a, False) for e, a in items], ast["chains"],
             ),
             *spec["views"],
         ))
 
     op = ast["op"]
     if op in ("create_rel", "merge_rel"):
-        return _write_matched_rels(spark, nodes, rels, spec, match)
+        return _write_matched_rels(spark, nodes, rels, spec, match, mark)
     if op == "label":
         # label add/remove over the matched ids: conditional projection
         # on LABELS — array_union keeps the set semantics, array_except
@@ -2863,25 +2864,19 @@ def execute_cypher_write(
             spark, spec, ids.select(F.col("__sid").alias("__rid")), frame=nodes
         )
     if op == "delete_rel":
-        # matched edges drop by their surrogate identity: a parallel
-        # edge the MATCH did not select stays
+        # matched edges drop by their REL_ID: a parallel edge the MATCH
+        # did not select stays
         if rels is None:
             raise ValueError("graph has no relationship frame")
-        rv = ast["var"]
         t = match(
-            *[(f"{rv}.{c}", f"__d{i}") for i, c in enumerate(_EDGE_ID)]
+            (f"{ast['var']}.{RelField.REL_ID}", "__d")
         ).localCheckpoint(eager=False)
-        cond = functools.reduce(
-            lambda a, b: a & b,
-            [rels[c] == t[f"__d{i}"] for i, c in enumerate(_EDGE_ID)],
-        )
+        cond = rels[RelField.REL_ID] == t["__d"]
         kept = rels.join(t, cond, "left_anti")
         r_del = rels.join(t, cond, "left_semi").count()
         return nodes, kept, _summary(spark, "delete", rels_deleted=r_del), (
             # r10: DELETE r RETURN … projects the PRE-delete edge rows
-            _rels_return(
-                spark, spec, rels.join(t, cond, "left_semi"), rel_id=True
-            )
+            _rels_return(spark, spec, rels.join(t, cond, "left_semi"))
         )
     n_props, ret = 0, None
     if op in ("set", "set_multi", "set_mixed"):
@@ -2899,16 +2894,14 @@ def execute_cypher_write(
         sets = ast["rel_sets"] if op == "set_mixed" else ast["sets"]
         if rels is None:
             raise ValueError("graph has no relationship frame")
-        # keyed by the surrogate identity, each edge updates on its
-        # own, exact-duplicate parallel edges included
+        # keyed by REL_ID, each edge updates on its own,
+        # exact-duplicate parallel edges included
         out, n, _upd = _set_matched(
-            rels, sets, _EDGE_ID, match, ast.get("replace"), keep_hit=True
+            rels, sets, [RelField.REL_ID], match, ast.get("replace"),
+            keep_hit=True,
         )
         rels, n_props = out.drop("__hit"), n_props + n
-        # the SET rows keep their minted identity: id(r) reads it
-        ret = _rels_return(
-            spark, spec, out.filter("__hit").drop("__hit"), rel_id=True
-        )
+        ret = _rels_return(spark, spec, out.filter("__hit").drop("__hit"))
     return nodes, rels, _summary(spark, "set", props_set=n_props), ret
 
 
@@ -2964,7 +2957,7 @@ def _set_nodes_multi(nodes, sets, match):
     return nodes, n_props
 
 
-def _write_matched_rels(spark, nodes, rels, spec, match):
+def _write_matched_rels(spark, nodes, rels, spec, match, mark):
     """``MATCH … CREATE/MERGE (a)-[r:T {…}]->(b)``: one relationship
     per DISTINCT matched endpoint pair, through the relationship
     operator. MERGE's ON CREATE / ON MATCH values may read the edge's
@@ -2981,7 +2974,7 @@ def _write_matched_rels(spark, nodes, rels, spec, match):
     own = _own_props(ast.get("rvar") or "r", rels.columns)
     oc, om = ast["on_create"], ast["on_match"]
     merged, n_new, n_set, aff = _write_rels(
-        rels, rows, ast["rtype"], [k for k, _v in props],
+        rels, rows, ast["rtype"], mark, [k for k, _v in props],
         merge=ast["op"] == "merge_rel",
         on_create=[(p, own(v)) for p, v in oc],
         on_match=[(p, own(v)) for p, v in om],
@@ -3045,7 +3038,7 @@ def _write_patterns(spark, nodes, rels, spec, mark):
     if chain:
         if rels is None:
             raise ValueError("graph has no relationship frame to extend")
-        rels = _union_rels(rels, functools.reduce(
+        rels = _append(rels, _with_rel_ids(functools.reduce(
             lambda a, b: a.unionByName(b, allowMissingColumns=True),
             [
                 _rel_rows(
@@ -3054,7 +3047,7 @@ def _write_patterns(spark, nodes, rels, spec, mark):
                 )
                 for si, ti, r in chain
             ],
-        ))
+        ), len(chain) * len(batch), mark))
         n_props += sum(_props_set(r.props, batch) for _si, _ti, r in chain)
     ids = None
     if spec["ret"] is not None:

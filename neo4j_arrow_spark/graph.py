@@ -38,12 +38,12 @@ class RelField:
     START_ID = "START_ID"
     END_ID = "END_ID"
     TYPE = "TYPE"
-    #: surrogate relationship id minted at catalog registration (true
-    #: openCypher edge identity for uniqueness predicates) — reserved
-    #: so property scans/writes never treat it as a user property
+    #: the stored 64-bit relationship id, numbered once per edge (at
+    #: catalog registration, or by the write that creates the edge):
+    #: openCypher edge identity for ``id(r)`` and uniqueness predicates,
+    #: reserved so property scans/writes never treat it as a property
     REL_ID = "REL_ID"
-    REL_ID2 = "REL_ID2"
-    RESERVED = (START_ID, END_ID, TYPE, REL_ID, REL_ID2)
+    RESERVED = (START_ID, END_ID, TYPE, REL_ID)
 
 
 #: Spark types accepted as graph property types — the translation of the
@@ -123,13 +123,14 @@ class Graph:
     ``GdsWriteJob`` (``plugin/.../job/GdsWriteJob.java:356-384``) — a CSR
     adjacency + property columns. In Spark the flat edge DataFrame IS the
     physical format (joins don't need CSR), so a Graph is just the two
-    frames, its catalog key and its node-ID high-water mark.
+    frames, its catalog key and its node and relationship high-water
+    marks.
     """
 
     name: str
     nodes: DataFrame
-    #: the one relationship frame; catalog registration gives it the
-    #: surrogate (REL_ID, REL_ID2) edge-identity columns
+    #: the one relationship frame; every edge carries its stored
+    #: ``REL_ID`` (catalog registration numbers a frame without one)
     rels: DataFrame | None = None
     database: str = "neo4j"
     username: str = "neo4j"
@@ -137,6 +138,11 @@ class Graph:
     #: ID, and a Cypher CREATE allocates above it (None: not known; the
     #: first CREATE computes it). Registration or a write's commit sets it.
     max_id: int | None = None
+    #: the relationship high-water mark: no edge of this version has a
+    #: larger ``REL_ID``, and a CREATE numbers its edges above it (None:
+    #: not known; the first relationship CREATE computes it). Registration
+    #: or a write's commit sets it.
+    max_rel_id: int | None = None
 
     def node_properties(self) -> list[str]:
         return [c for c in self.nodes.columns if c not in NodeField.RESERVED]

@@ -144,7 +144,8 @@ def gds_write_relationships(
     Endpoint validation = two anti-joins against the node table (the
     reference resolves per-row through its NodeMapping,
     GdsWriteJob.java:479-493). Anti-join is a one-pass distributed
-    check; at scale it shuffles on the natural key only.
+    check; at scale it shuffles on the natural key only. A ``REL_ID``
+    column the client sends is dropped: registration numbers the edges.
     """
     graph = catalog.get(name, database=database)
     rels = _rename(
@@ -155,7 +156,7 @@ def gds_write_relationships(
             type_field: RelField.TYPE,
         },
     )
-    rels = rels.withColumn(
+    rels = rels.drop(RelField.REL_ID).withColumn(
         RelField.START_ID, F.col(RelField.START_ID).cast("long")
     ).withColumn(RelField.END_ID, F.col(RelField.END_ID).cast("long"))
     if validate_endpoints:
@@ -219,7 +220,11 @@ def bulk_import(
     The reference's queue-fed BatchImporter collapses to two parquet
     writes: relationships partitioned by TYPE so type-filtered scans
     prune whole directories (the partition-pruning upgrade the
-    reference lacks — SURVEY.md §4.1). With
+    reference lacks — SURVEY.md §4.1). As a store allocates
+    relationship ids, the rels write numbers each edge's ``REL_ID``
+    (``monotonically_increasing_id``, in the write's one pass) and
+    stores it with the edge, in place of any ``REL_ID`` the client
+    sent, so every read of the database sees the same ids. With
     ``partition_nodes_by_label`` the node table additionally gets a
     ``_primary_label`` partition column (first label): scans filtering
     on it skip whole directories — the 100 TB answer for
@@ -242,6 +247,9 @@ def bulk_import(
         )
         nodes_writer = nodes.write.mode("overwrite").partitionBy("_primary_label")
     nodes_writer.parquet(os.path.join(database_path, "nodes"))
+    rels = rels.drop(RelField.REL_ID).select(
+        "*", F.monotonically_increasing_id().alias(RelField.REL_ID)
+    )
     rels.write.mode("overwrite").partitionBy(RelField.TYPE).parquet(
         os.path.join(database_path, "rels")
     )

@@ -94,20 +94,20 @@ def _graph_query(
     bindings); the oracle inlines the values as literals because the
     driver runs oracle SQL with no binding channel.
 
-    The rels view carries the surrogate (REL_ID, REL_ID2) identity, as
-    a catalog graph's does: on Spark it is :func:`mint_rel_ids` over
-    the plain frame, whose ``Window`` Catalyst prunes from queries that
-    read no identity. Any unique numbering works for the oracle:
+    When the SQL names ``REL_ID`` (an undirected slot carries it
+    through its union even when nothing reads it), the rels view
+    carries it as a catalog graph's does: on Spark the frame is
+    numbered by the catalog's :func:`~neo4j_arrow_spark.catalog.
+    number_rels`, and the DuckDB CTE numbers its rows with one
+    ``row_number()`` column. Any unique numbering works for the oracle:
     identity only feeds same-row inequality predicates (and id(r),
-    whose raw value no registry query outputs), so Spark's hash and
-    DuckDB's row_number need not agree. The DuckDB CTE numbers rows
-    only when the SQL names the identity columns (an undirected slot
-    carries them through its union even when nothing reads them), and
-    then AS MATERIALIZED: DuckDB inlines plain CTEs per reference, and
-    row_number() OVER () would then number each scan independently —
-    two rel slots comparing REL_IDs from different numberings exclude
-    arbitrary pairs (caught by cypher_comma_patterns). Materializing
-    pins ONE numbering for the whole query."""
+    whose raw value no registry query outputs), so the two numberings
+    need not agree. The DuckDB CTE is AS MATERIALIZED: DuckDB inlines
+    plain CTEs per reference, and row_number() OVER () would then
+    number each scan independently — two rel slots comparing REL_IDs
+    from different numberings exclude arbitrary pairs (caught by
+    cypher_comma_patterns). Materializing pins ONE numbering for the
+    whole query."""
     from neo4j_arrow_spark.cypher import cypher_to_sql
 
     CYPHER_TEXTS[name] = (cypher_text, params, kind)
@@ -124,8 +124,8 @@ def _graph_query(
             duck_sql = duck_sql.replace(f"${k}", _sql_literal(params[k]))
     names_id = re.search(r"\bREL_ID\b", sql) is not None
     rels_cte = (
-        f"{rv} AS MATERIALIZED (SELECT *, row_number() OVER () AS REL_ID, "
-        f"row_number() OVER () AS REL_ID2 FROM ({rels_sql}))"
+        f"{rv} AS MATERIALIZED (SELECT *, row_number() OVER () AS REL_ID "
+        f"FROM ({rels_sql}))"
         if names_id else f"{rv} AS ({rels_sql})"
     )
     oracle = f"WITH {nv} AS ({nodes_sql}),\n{rels_cte}\n{duck_sql}"
@@ -149,7 +149,7 @@ def _graph_query(
         spark: SparkSession, sf_dir: str, _sql=sql, _params=params,
         _id=names_id, _rec=recursive,
     ) -> DataFrame:
-        from neo4j_arrow_spark.catalog import mint_rel_ids
+        from neo4j_arrow_spark.catalog import number_rels
         from neo4j_arrow_spark.recursive_exec import run_recursive_sql
 
         nodes, rels = frames(spark, sf_dir)
@@ -157,10 +157,8 @@ def _graph_query(
         if _rec:
             rels = rels.persist()
             handles.append(rels)
-        rels = mint_rel_ids(rels)
-        if _rec and _id:
-            rels = rels.persist()
-            handles.append(rels)
+        if _id:
+            rels = number_rels(rels)[0]
         nodes.createOrReplaceTempView(nv)
         rels.createOrReplaceTempView(rv)
         # marked recursive blocks run as a driver-paced union loop
@@ -315,7 +313,7 @@ _cypher_order_query(
 # nation→region membership edges, UNIONed twice: every edge is an EXACT
 # duplicate parallel pair. openCypher treats the twins as distinct
 # relationships — the fixture that proves count(DISTINCT r) / id(r)
-# honor the surrogate (REL_ID, REL_ID2) identity instead of collapsing
+# honor the stored REL_ID identity instead of collapsing
 # on content. Reference gets these semantics free from Neo4j
 # (plugin/.../job/TransactionApiJob.java:41-220).
 
@@ -2181,7 +2179,7 @@ _REL_SET_SQL = """
 @query("cypher_rel_set_roundtrip", oracle=_REL_SET_SQL)
 def cypher_rel_set_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """r9: SET on a RELATIONSHIP variable — the matched edges project
-    their surrogate (REL_ID, REL_ID2) identity plus the new value
+    their stored REL_ID identity plus the new value
     through the read transpiler, and the update is one left join +
     conditional projection over the rel frame (exactly node SET's
     shape). Nation 0's supplier edges get weight×10; the per-nation

@@ -256,7 +256,7 @@ def engines(spark):
     rels = spark.createDataFrame(
         [(i, *r) for i, r in enumerate(RELS)],
         "REL_ID long, START_ID long, END_ID long, TYPE string, w double",
-    ).selectExpr("*", "REL_ID AS REL_ID2")
+    )
     nodes.createOrReplaceTempView("fznodes")
     rels.createOrReplaceTempView("fzrels")
     con = duckdb.connect()
@@ -280,8 +280,6 @@ def engines(spark):
         )
         + ") t(REL_ID, START_ID, END_ID, TYPE, w)"
     )
-    con.execute("ALTER TABLE fzrels ADD COLUMN REL_ID2 BIGINT")
-    con.execute("UPDATE fzrels SET REL_ID2 = REL_ID")
     return spark, con
 
 

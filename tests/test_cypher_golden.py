@@ -15,7 +15,7 @@ comment computing what openCypher would return and why the engine
 differs (unbounded multiplicity-sensitive shapes enumerate hop-guarded
 walks, not edge-unique paths; minlen >= 2 frontier reachability is
 walk-reachability). Relationship identity is TRUE openCypher since r7:
-the fixture rels carry the surrogate REL_ID column registration mints,
+the fixture rels carry the REL_ID column every catalog graph's edges do,
 so exact/parallel duplicate edges are distinct relationships (the old
 triple-identity divergence is gone — g08 asserts the openCypher rows).
 
@@ -67,7 +67,7 @@ def golden(spark):
     rels = spark.createDataFrame(
         RELS,
         "REL_ID long, START_ID long, END_ID long, TYPE string, w double",
-    ).selectExpr("*", "REL_ID AS REL_ID2")
+    )
     nodes.createOrReplaceTempView("goldnodes")
     rels.createOrReplaceTempView("goldrels")
 
@@ -167,7 +167,7 @@ def test_g07_rel_uniqueness_two_slots(golden):
 
 
 def test_g08_parallel_edges_true_identity(golden):
-    # r7: relationship identity is the surrogate REL_ID, so the
+    # r7: relationship identity is the REL_ID column, so the
     # parallel pair e1/e2 are DISTINCT relationships — r1=e1,r2=e2 and
     # r1=e2,r2=e1 both match at b=bob: 2 rows (alice, bob, alice),
     # exactly openCypher. (Under the old (START, END, TYPE) triple

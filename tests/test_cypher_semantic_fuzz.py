@@ -8,7 +8,7 @@ over the fixture graph, a ~100-line pure-Python openCypher evaluator
 expected rows, and the transpiled Spark result must match exactly.
 
 Relationship identity is TRUE openCypher since r7: the fixture rels
-carry the surrogate REL_ID column that catalog registration mints, so
+carry the REL_ID column every catalog graph's edges carry, so
 the evaluator keys within-clause uniqueness on the edge ROW (its list
 index) — exact-duplicate parallel edges are distinct relationships
 (the fixture includes one such pair to pin this). Everything else —
@@ -262,7 +262,7 @@ def fixture_views(spark):
     rels = spark.createDataFrame(
         [(i, *e) for i, e in enumerate(EDGES)],
         "REL_ID long, START_ID long, END_ID long, TYPE string, w double",
-    ).selectExpr("*", "REL_ID AS REL_ID2")
+    )
     nodes.createOrReplaceTempView("sfznodes")
     rels.createOrReplaceTempView("sfzrels")
     return spark

@@ -42,11 +42,9 @@ def test_write_nodes_then_rels(spark, cat, node_df, rel_df):
         cat, "wg", rel_df, source_field="src", target_field="dst",
         type_field="relType", cache=False,
     )
-    # registration mints the surrogate 128-bit identity into the one
-    # rels frame (and its `wg_rels` view)
-    assert g.rels.columns == [
-        "START_ID", "END_ID", "TYPE", "weight", "REL_ID", "REL_ID2",
-    ]
+    # registration numbers each edge's REL_ID into the one rels frame
+    # (and its `wg_rels` view)
+    assert g.rels.columns == ["START_ID", "END_ID", "TYPE", "weight", "REL_ID"]
     assert spark.table("wg_rels").columns == g.rels.columns
     assert g.rel_count() == 3
 

@@ -37,9 +37,9 @@ def _views(spark, nodes_rows, rels_rows):
         rels_rows, "START_ID long, END_ID long, TYPE string, w double"
     )
     nodes.createOrReplaceTempView("rxnodes")
-    from neo4j_arrow_spark.catalog import mint_rel_ids
+    from neo4j_arrow_spark.catalog import number_rels
 
-    mint_rel_ids(rels).createOrReplaceTempView("rxrels")
+    number_rels(rels)[0].createOrReplaceTempView("rxrels")
 
 
 def _graph():

@@ -28,7 +28,7 @@ def capi(spark):
     api.catalog.drop("wc")
 
 
-#: node-only writes, one per form that used to register the minted rels
+#: node-only writes, one per form that used to re-register the rels
 #: (query, params, the written x values)
 NODE_ONLY_WRITES = [
     ("MATCH (n:P) WHERE n.ID = 1 SET n.x = 5", None, [5]),

@@ -250,15 +250,17 @@ def test_delete_rel_return_pre_delete_values(rapi):
 
 
 def test_rel_set_return_reads_rel_identity(rapi):
-    """RETURN after a relationship SET reads the edges' minted
-    identity: count(r) counts them and id(r) is the id a read gives."""
-    ids = (
-        rapi.cypher(
-            "MATCH (a:P)-[r:KNOWS]->(b:P) RETURN id(r) AS i", graph="rret"
+    """RETURN after a relationship SET or CREATE reads the edges'
+    stored identity: count(r) counts them and id(r) is the id a read
+    gives; a created edge is numbered when it is created."""
+    def ids():
+        return sorted(
+            r.i for r in rapi.cypher(
+                "MATCH (a:P)-[r:KNOWS]->(b:P) RETURN id(r) AS i", graph="rret"
+            ).result(120).collect()
         )
-        .result(120)
-        .collect()
-    )
+
+    old = ids()
     rows = (
         rapi.cypher(
             "MATCH (a:P)-[r:KNOWS]->(b:P) SET r.w = 1.0 "
@@ -268,4 +270,14 @@ def test_rel_set_return_reads_rel_identity(rapi):
         .result(120)
         .collect()
     )
-    assert [(r.c, r.d, r.m) for r in rows] == [(1, 1, ids[0].i)]
+    assert [(r.c, r.d, r.m) for r in rows] == [(1, 1, old[0])]
+    for ret in ("count(r) AS c, min(id(r)) AS i", "1 AS c, id(r) AS i"):
+        rows = rapi.cypher(
+            "MATCH (a:P), (b:P) WHERE a.ID = 1 AND b.ID = 3 "
+            f"CREATE (a)-[r:KNOWS]->(b) RETURN {ret}",
+            graph="rret",
+        ).result(120).collect()
+        assert [r.c for r in rows] == [1], ret
+        now = ids()
+        assert set(old) < set(now) and set(now) - set(old) == {rows[0].i}, ret
+        old = now

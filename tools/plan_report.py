@@ -48,10 +48,9 @@ def main() -> None:
             if n:
                 joins.append(f"{label}×{n}")
         n_ex = len(re.findall(r"Exchange hashpartitioning", plan))
-        # Window operators: the r7 REL_ID tax showed up as a Window +
-        # all-columns Exchange prepended to every cypher plan — this
-        # column is the direct absence-of-tax evidence (identity
-        # minting must appear ONLY in queries that reference identity)
+        # Window operators: relationship identity is a stored REL_ID
+        # column, so no plan computes it; a Window here comes from the
+        # query itself (row_number, windowed aggregates)
         n_win = len(re.findall(r"\bWindow\b", plan))
         pushed = [m for m in re.findall(r"PushedFilters: \[([^\]]*)\]", plan) if m.strip()]
         wscg = len(set(re.findall(r"\*\((\d+)\)", plan)))
