@@ -4773,11 +4773,11 @@ def _path_edge_identity_conds(
     """Per-path relationship uniqueness for varlength-expanded hops
     (r8): openCypher forbids reusing an edge within one path. Identity
     here is the physical row — (START, END, TYPE) plus EVERY rel
-    property, compared null-safely — NOT REL_ID, which these conds
-    avoided while reading it cost a full-edge shuffle (they also serve
-    rels views that have no REL_ID). Same-triple parallel edges with any
-    differing property stay distinct; only EXACT-duplicate twins are
-    conflated (documented, test-pinned divergence). Pairs wholly
+    property, compared null-safely — NOT REL_ID, because these conds
+    also serve rels views that have no REL_ID (triple mode). Same-triple
+    parallel edges with any differing property stay distinct; only
+    EXACT-duplicate twins are conflated (documented, test-pinned
+    divergence). Pairs wholly
     between fixed slots of varlength-free chains are excluded — those
     carry the REL_ID-mode conds from _rel_uniqueness_conds."""
     eq = "<=>" if dialect == "spark" else "IS NOT DISTINCT FROM"
